@@ -155,10 +155,32 @@ def audit(
     mode is reported through ``unauditable_out`` so vacuous coverage is
     visible, not silent; tools/window_audit.py --rounds (round-10) audits
     one representative loop round for those."""
+    out: dict[str, int] = {}
+    for name, df in plan_only_frames(spark, sf_dir, names, fail_out):
+        if schema_out is not None:
+            schema_out[name] = df.schema
+        c, u, r = _walk_plan(df)
+        if c:
+            out[name] = c
+        if u and unauditable_out is not None:
+            unauditable_out[name] = u
+        if r and rank_out is not None:
+            rank_out[name] = r
+    return out
+
+
+def plan_only_frames(
+    spark,
+    sf_dir: str,
+    names: list[str] | None = None,
+    fail_out: dict[str, str] | None = None,
+):
+    """Yield ``(name, frame)`` for every registered query (or ``names``),
+    each built in plan-only mode against an empty cache. A builder that
+    raises is recorded in ``fail_out`` and skipped."""
     from repcheck_data_integration_spark.operators import ckpt
 
     registry.load_all_modules()
-    out: dict[str, int] = {}
     prior = ckpt.PLAN_ONLY
     ckpt.PLAN_ONLY = True
     try:
@@ -177,18 +199,9 @@ def audit(
                 if fail_out is not None:
                     fail_out[name] = f"{type(e).__name__}: {e}"
                 continue
-            if schema_out is not None:
-                schema_out[name] = df.schema
-            c, u, r = _walk_plan(df)
-            if c:
-                out[name] = c
-            if u and unauditable_out is not None:
-                unauditable_out[name] = u
-            if r and rank_out is not None:
-                rank_out[name] = r
+            yield name, df
     finally:
         ckpt.PLAN_ONLY = prior
-    return out
 
 
 def audit_hooks(spark) -> dict[str, tuple[int, int]]:
