@@ -116,64 +116,6 @@ DRIVER_PRIORITY: list[str] = [
     "events_markov_transitions",
     "events_user_paths",
     "events_rate_spike",
-    # ---- rows below this line are the pre-r11 ordering, displaced
-    # past the 50-query window by the r11 prefix (kept for provenance;
-    # ordered_queries() de-duplicates nothing — names appear once) ----
-    # round-10 changed-op re-check (BIGINT-wrap-free rank-sum):
-    "agg_gini_revenue",
-    # round-10 continuation changed-op re-checks (the fact-scaled
-    # partitioned-window sweep rewired these 14 plans — changed ops go
-    # BEFORE first-time backlog per the rotation policy, displacing 14
-    # backlog rows to r11; all 14 re-gated green in both session shapes
-    # and driver_sim-prevalidated. ml_conformal_interval / ml_qini_uplift
-    # double as first-time rows; ts_theil_sen_sampled is also first-time):
-    "ml_auc_roc",
-    "agg_median_exact",
-    "agg_abc_pareto",
-    "agg_lorenz_deciles",
-    "ml_lift_gains",
-    "ml_sprt_ab",
-    "ml_conformal_interval",
-    "ml_qini_uplift",
-    "emb_quantile_normalize",
-    "sample_domain_cap",
-    "sample_class_balance",
-    "tpch_q2_min_supplier",
-    "ts_theil_sen",
-    "ts_theil_sen_sampled",
-    # never-sampled backlog in registration order (next 30 of the
-    # remaining 80; 14 rows displaced by the changed-op block move to
-    # r11 — never rotate a failure out, changed ops never ship
-    # unsampled):
-    "agg_cuped",
-    "ts_granger_causality",
-    "ts_changepoint_binseg",
-    "rec_slope_one",
-    "ml_spearman_corr",
-    "ml_mann_whitney_u",
-    "agg_anova_oneway",
-    "agg_hhi_concentration",
-    "ts_ljung_box",
-    "ml_boosted_stumps",
-    "ts_pacf",
-    "ml_kendall_tau",
-    "ml_auc_pr",
-    "agg_trimmed_mean",
-    "ts_dominant_period",
-    "ts_adf_test",
-    "ml_two_proportion_ztest",
-    "ml_lasso_cd",
-    "ml_brier_decomposition",
-    "ts_dow_profile",
-    "events_gesd_outliers",
-    "priv_randomized_response",
-    "emb_pair_cosine_histogram",
-    "events_logrank_test",
-    "ts_seasonal_strength",
-    "ml_cmh_test",
-    "agg_delta_method_ratio",
-    "ts_runs_test",
-    "agg_paired_ttest",
 ]
 
 

@@ -479,12 +479,8 @@ def test_auc_prunes_scan_to_three_columns(spark):
     # only shows in PLAN_ONLY mode (the audit switch keeps the full tree)
     from repcheck_data_integration_spark.operators import ckpt
 
-    prior = ckpt.PLAN_ONLY
-    ckpt.PLAN_ONLY = True
-    try:
+    with ckpt.plan_only():
         p = plan(spark, "ml_auc_roc")
-    finally:
-        ckpt.PLAN_ONLY = prior
     rs = p.split("ReadSchema")[1][:250]
     assert "o_orderpriority" in rs and "o_totalprice" in rs
     assert "o_orderdate" not in rs and "o_custkey" not in rs
@@ -1044,13 +1040,10 @@ def test_lorenz_pruned_partial_agg(spark):
     from repcheck_data_integration_spark import registry
     from repcheck_data_integration_spark.operators import ckpt
 
-    ckpt.PLAN_ONLY = True
-    try:
+    with ckpt.plan_only():
         df = registry.QUERIES["agg_lorenz_deciles"](spark, SF)
         assert count_unauditable_nodes(df) == 0
         assert count_unpartitioned_windows(df) == 0
-    finally:
-        ckpt.PLAN_ONLY = False
     p = plan(spark, "agg_lorenz_deciles")
     assert "CartesianProduct" not in p
     assert p.count("HashAggregate") >= 2  # decile partial+final
@@ -1122,20 +1115,17 @@ def test_brier_departitioned_no_fact_rank(spark):
     from repcheck_data_integration_spark.operators import ckpt
 
     spark.catalog.clearCache()
-    ckpt.PLAN_ONLY = True
-    try:
+    with ckpt.plan_only():
         df = registry.QUERIES["ml_brier_decomposition"](spark, SF)
         assert count_unauditable_nodes(df) == 0
         assert count_unpartitioned_windows(df) == 0
-    finally:
-        ckpt.PLAN_ONLY = False
     p = plan(spark, "ml_brier_decomposition")
     assert "CartesianProduct" not in p
 
 
 def test_prefix_family_departition_visible_full_tree(spark):
     """Round-9 (ADVICE r8 #1): every prefix_offsets consumer is audited
-    with build-time checkpoints DISABLED (ckpt.PLAN_ONLY), so the walk
+    with build-time checkpoints DISABLED (ckpt.plan_only()), so the walk
     sees the complete pre-checkpoint tree — 0 unauditable leaves AND 0
     unpartitioned windows per query. This is the non-vacuous version of
     the round-8 departition pins: a future unpartitioned window hidden
@@ -1161,15 +1151,12 @@ def test_prefix_family_departition_visible_full_tree(spark):
         "agg_percentile_exact_distributed",
         "text_pmi_collocations",
     ]
-    ckpt.PLAN_ONLY = True
-    try:
+    with ckpt.plan_only():
         for name in prefix_consumers:
             spark.catalog.clearCache()
             df = registry.QUERIES[name](spark, SF)
             assert count_unauditable_nodes(df) == 0, name
             assert count_unpartitioned_windows(df) == 0, name
-    finally:
-        ckpt.PLAN_ONLY = False
 
 
 def test_shared_components_memoized_single_build(spark):
@@ -1243,12 +1230,55 @@ def test_shared_stream_components_memoized_single_build(spark):
     assert len(ckpt._COMPONENTS_CACHE) == 2
     # PLAN_ONLY is served from the memo too (round-11): the audit's
     # leaf-pin test, not a per-consumer rebuild, guards visibility
-    ckpt.PLAN_ONLY = True
-    try:
+    with ckpt.plan_only():
         full = ckpt.shared_stream_components(spark, SF)
         assert full is a
+
+
+def test_plan_only_scope_nests_and_memo_outlives_it(spark, tmp_path):
+    """ckpt.plan_only() restores the value it found, on normal exit and
+    on exception, so scopes nest; pin() is the identity inside a scope
+    and an RDD-backed checkpoint outside one; a memo first built inside a
+    scope is built with pins enabled and served as the same object
+    outside it."""
+    from repcheck_data_integration_spark import tables
+    from repcheck_data_integration_spark.operators import ckpt
+
+    def leaf(df):
+        return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+
+    assert not ckpt.PLAN_ONLY
+    with ckpt.plan_only():
+        with ckpt.plan_only(False):
+            assert not ckpt.PLAN_ONLY
+        assert ckpt.PLAN_ONLY
+        with pytest.raises(RuntimeError):
+            with ckpt.plan_only(False):
+                raise RuntimeError("inner")
+        assert ckpt.PLAN_ONLY
+        df = spark.range(3)
+        assert ckpt.pin(df) is df
+    assert not ckpt.PLAN_ONLY
+    assert leaf(ckpt.pin(spark.range(3))) == "LogicalRDD"
+
+    (tmp_path / "documents.parquet").mkdir()
+    sf = str(tmp_path)
+    seen = []
+
+    def build(s, _):
+        seen.append(ckpt.PLAN_ONLY)
+        return s.range(3)
+
+    try:
+        with ckpt.plan_only():
+            inside = ckpt._memo(spark, sf, "components", build)
+        assert ckpt._memo(spark, sf, "components", build) is inside
+        assert seen == [False]
+        assert leaf(inside) == "LogicalRDD"
     finally:
-        ckpt.PLAN_ONLY = False
+        for k in [k for k in ckpt._COMPONENTS_CACHE if k[1] == sf]:
+            del ckpt._COMPONENTS_CACHE[k]
+        tables.FIXED_COSTS.pop(f"components:{tmp_path.name}", None)
 
 
 def test_gesd_rounds_on_cached_bounded_series(spark):

@@ -18,12 +18,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import drain  # noqa: E402
 from repcheck_data_integration_spark.session import get_spark  # noqa: E402
 from repcheck_data_integration_spark.tables import load  # noqa: E402
-
-
-def drain(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:

@@ -55,25 +55,17 @@ def normalize(text: str) -> str:
 
 
 def fingerprint(name: str, body: str) -> str:
-    h = hashlib.sha256()
-    for part in (name, registry.ORACLE.get(name, ""), normalize(body)):
-        h.update(part.encode())
-        h.update(b"\0")
-    return h.hexdigest()[:16]
+    text = "\0".join((name, registry.ORACLE.get(name, ""), normalize(body), ""))
+    return hashlib.sha256(text.encode()).hexdigest()[:16]
 
 
 def fingerprints(spark, sf_dir: str) -> dict[str, str]:
     """{query_name: hash} for every registered query."""
+    out: dict[str, str] = {}
     fails: dict[str, str] = {}
-    out = {
-        name: fingerprint(
-            name,
-            df.schema.json()
-            + "\0"
-            + df._jdf.queryExecution().optimizedPlan().toString(),
-        )
-        for name, df in plan_only_frames(spark, sf_dir, fail_out=fails)
-    }
+    for name, df in plan_only_frames(spark, sf_dir, fail_out=fails):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        out[name] = fingerprint(name, df.schema.json() + "\0" + plan)
     out.update({n: fingerprint(n, "error: " + e) for n, e in fails.items()})
     return out
 

@@ -25,16 +25,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import drain
 from repcheck_data_integration_spark import registry
 from repcheck_data_integration_spark.session import get_spark
 from repcheck_data_integration_spark.tables import load, load_bucketed
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/tmp/repcheck_sf10")
 TRIALS = int(os.environ.get("SPARK_GRAFT_TRIALS", "4"))
-
-
-def drain(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def region_bits(spark):

@@ -20,14 +20,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import drain  # noqa: E402
 from repcheck_data_integration_spark import registry  # noqa: E402
 from repcheck_data_integration_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def drain(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:

@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
+from bench import drain  # noqa: E402
 from repcheck_data_integration_spark import registry  # noqa: E402
 from repcheck_data_integration_spark.session import get_spark  # noqa: E402
 from repcheck_data_integration_spark import tables  # noqa: E402
@@ -287,15 +288,18 @@ def run(factor: int) -> dict[str, tuple[float, int]]:
         # min of two trials, same rationale as bench.py: single-shot
         # timings on this runner swing 2-5x (GC / page faults), which at
         # probe scale turns a 1.3s query into a fake 4s "superlinear" row
+        # timed with the noop-sink drain: a bare .count() lets Catalyst
+        # prune the output projections
         trials = []
-        n = 0
         for _ in range(2):
             t0 = time.time()
-            n = registry.QUERIES[name](spark, SF_DIR).count()
+            drain(registry.QUERIES[name](spark, SF_DIR))
             trials.append(time.time() - t0)
             # per-query isolation: drop cached/persisted/checkpointed
             # blocks so one trial's leftovers don't feed the next
             spark.catalog.clearCache()
+        n = registry.QUERIES[name](spark, SF_DIR).count()
+        spark.catalog.clearCache()
         out[name] = (round(min(trials), 2), n)
         print(f"  {factor}x {name}: {n} rows in {out[name][0]}s", file=sys.stderr)
         import gc

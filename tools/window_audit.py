@@ -57,7 +57,7 @@ def count_unauditable_nodes(df) -> int:
     window count CANNOT see into (ADVICE r8 #1: an eager localCheckpoint
     hides its upstream windows from the audit exactly the way .persist()
     did before round 8's InMemoryRelation recursion). A sound audit of a
-    checkpointing query builds it with operators.ckpt.PLAN_ONLY = True
+    checkpointing query builds it inside operators.ckpt.plan_only()
     (audit() does) so this returns 0; a non-zero count means the pin
     `count_unpartitioned_windows(df) == 0` is partially vacuous."""
     _, u, _ = _walk_plan(df)
@@ -134,11 +134,14 @@ def audit(
     that has at least one. Queries whose builder fails (env-gated stubs)
     are skipped — they can't hide a window.
 
-    Builds every query with operators.ckpt.PLAN_ONLY = True (round-9,
-    ADVICE r8 #1/#3): build-time eager localCheckpoints are suppressed so
+    Builds every query inside operators.ckpt.plan_only() (round-9,
+    ADVICE r8 #1/#3): build-time pin() checkpoints are suppressed so
     (a) the audit sees the FULL pre-checkpoint tree instead of an opaque
-    LogicalRDD, and (b) the pin()-routed checkpoint side effects never
-    fire during a mere audit. ``rank_out`` (round-10) collects, in the
+    LogicalRDD, and (b) no pin() checkpoint job fires during a mere
+    audit. The components memos (ckpt.shared_components /
+    shared_stream_components) are not pins: each builds once per session,
+    pins enabled, when its first consumer is audited, and later consumers
+    read the memo. ``rank_out`` (round-10) collects, in the
     same single plan walk, the per-query count of Window nodes carrying
     an IntegerType ranking function — see count_int_rank_windows.
     ``schema_out`` / ``fail_out`` (round-11) collect each query's analyzed
@@ -170,9 +173,7 @@ def audit(
 
 
 def plan_only_frames(
-    spark,
-    sf_dir: str,
-    names: list[str] | None = None,
+    spark, sf_dir: str, names: list[str] | None = None,
     fail_out: dict[str, str] | None = None,
 ):
     """Yield ``(name, frame)`` for every registered query (or ``names``),
@@ -181,27 +182,23 @@ def plan_only_frames(
     from repcheck_data_integration_spark.operators import ckpt
 
     registry.load_all_modules()
-    prior = ckpt.PLAN_ONLY
-    ckpt.PLAN_ONLY = True
-    try:
-        for name in names or list(registry.QUERIES):
-            # Round-8 blindness fix: a PRIOR query's .persist() of a shared
-            # subtree makes the optimizer substitute InMemoryRelation into
-            # every later identical subplan — the Window nodes inside it
-            # vanish from the optimized plan and the audit under-counts
-            # (ml_brier_decomposition's persisted fact-rank hid
-            # ml_isotonic_calibration's 10 windows for two rounds). Sweep
-            # each query against an empty cache.
-            spark.catalog.clearCache()
-            try:
+    for name in names or list(registry.QUERIES):
+        # Round-8 blindness fix: a PRIOR query's .persist() of a shared
+        # subtree makes the optimizer substitute InMemoryRelation into
+        # every later identical subplan — the Window nodes inside it
+        # vanish from the optimized plan and the audit under-counts
+        # (ml_brier_decomposition's persisted fact-rank hid
+        # ml_isotonic_calibration's 10 windows for two rounds). Sweep
+        # each query against an empty cache.
+        spark.catalog.clearCache()
+        try:
+            with ckpt.plan_only():
                 df = registry.QUERIES[name](spark, sf_dir)
-            except Exception as e:
-                if fail_out is not None:
-                    fail_out[name] = f"{type(e).__name__}: {e}"
-                continue
-            yield name, df
-    finally:
-        ckpt.PLAN_ONLY = prior
+        except Exception as e:
+            if fail_out is not None:
+                fail_out[name] = f"{type(e).__name__}: {e}"
+            continue
+        yield name, df
 
 
 def audit_hooks(spark) -> dict[str, tuple[int, int]]:
