@@ -35,6 +35,8 @@ shared components memo.
 
 from __future__ import annotations
 
+import os
+import time
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
@@ -119,9 +121,6 @@ def _memo(
     UNAUDITABLE_LEAF_PINS with one-round audit hooks). The build itself
     runs with pins enabled, so the memoized frame is identical no matter
     who touches it first."""
-    import os
-    import time
-
     from .. import tables
 
     try:
