@@ -35,7 +35,8 @@ def registry_sweep(spark):
     window. audit() collects the unpartitioned-window, int-rank and
     truncated-leaf inventories, the analyzed schemas, and any builder
     failures in a single per-query clearCache pass (the round-8 audit
-    discipline is per QUERY, so sharing across TESTS loses nothing)."""
+    discipline is per QUERY, so sharing across TESTS loses nothing). It
+    also collects each query's physical node-class counts."""
     import sys
     from pathlib import Path
 
@@ -46,6 +47,7 @@ def registry_sweep(spark):
     ranks: dict[str, int] = {}
     schemas: dict[str, object] = {}
     fails: dict[str, str] = {}
+    nodes: dict[str, object] = {}
     found = audit(
         spark,
         SF_SMOKE,
@@ -53,6 +55,7 @@ def registry_sweep(spark):
         rank_out=ranks,
         schema_out=schemas,
         fail_out=fails,
+        nodes_out=nodes,
     )
     return {
         "windows": found,
@@ -60,4 +63,5 @@ def registry_sweep(spark):
         "unauditable": unaud,
         "schemas": schemas,
         "fails": fails,
+        "nodes": nodes,
     }

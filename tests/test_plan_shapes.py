@@ -1732,6 +1732,52 @@ def test_unpartitioned_window_inventory_pinned(registry_sweep):
     assert not rgone, f"stale int-rank whitelist rows (remove): {rgone}"
 
 
+# Every SortAggregate in the registry's physical plans (counted in the
+# registry sweep, partial and final levels both). An aggregate whose buffer
+# is not fixed-width mutable — a min/max over a struct or a STRING — plans
+# as a SortAggregate, which sorts each task's whole input; 4d220f2's
+# min(lang_true) put the nb/McNemar family back on this path unnoticed.
+SORT_AGGREGATE_WHITELIST = {
+    # struct top-1 per group, the form for keys that cannot be packed
+    "agg_minmax_by": 2,  # latest order per customer
+    "dedup_semantic_contamination": 2,  # nearest eval vector per train row
+    "events_longest_streak": 2,  # longest streak per user
+    "llm_preference_pairs": 2,  # chosen and rejected in one aggregate
+    "ml_kmeans_refine": 2,  # nearest centroid per vector
+    "mm_audio_energy": 2,  # peak window per document
+    "pipeline_dpo_prep": 2,  # llm_preference_pairs inside the pipeline
+    "text_repetition_stats": 2,  # top token per document
+    "tpch_q2_min_supplier": 2,  # cheapest supplier per brand
+    "win_max_concurrency": 2,  # peak day per supplier
+    # min/max over a STRING column
+    "dq_profile": 4,  # one-row profile of string columns
+    "fn_collation_group": 2,  # binary min() picks the casing variant
+    "graph_bfs_distance": 82,  # min(node) seed, copied into every round
+    "resolve_survivorship": 4,  # golden segment beside a countDistinct
+}
+
+
+def test_sort_aggregate_inventory_pinned(registry_sweep):
+    """Pin every query's SortAggregate count from the shared registry
+    sweep, so a new struct or STRING min/max cannot relapse a hash
+    aggregate to a sort-based one without a reason recorded above."""
+    found = {
+        name: counts["SortAggregateExec"]
+        for name, counts in registry_sweep["nodes"].items()
+        if counts["SortAggregateExec"]
+    }
+    new = {k: v for k, v in found.items() if k not in SORT_AGGREGATE_WHITELIST}
+    gone = {k: v for k, v in SORT_AGGREGATE_WHITELIST.items() if k not in found}
+    changed = {
+        k: (SORT_AGGREGATE_WHITELIST[k], v)
+        for k, v in found.items()
+        if k in SORT_AGGREGATE_WHITELIST and SORT_AGGREGATE_WHITELIST[k] != v
+    }
+    assert not new, f"NEW SortAggregates (use functions/top1.py): {new}"
+    assert not changed, f"SortAggregate count drift (re-audit): {changed}"
+    assert not gone, f"stale SortAggregate whitelist rows (remove): {gone}"
+
+
 # Round-10 (VERDICT r9 #5): the unauditable tail shrank 16 -> 6. Literal
 # createDataFrame grids now build through tables.literal_frame
 # (LocalRelation, not LogicalRDD), fixed unrolls route through ckpt.pin

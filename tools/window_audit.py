@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -69,16 +70,39 @@ def count_unauditable_nodes(df) -> int:
 _INT_RANK_MARKS = ("row_number(", "rank(", "ntile(")
 
 
-def _walk_plan(df) -> tuple[int, int, int]:
-    """(unpartitioned window count, unauditable truncated-leaf count,
-    int-rank window count)."""
-    n = 0
-    unauditable = 0
-    int_rank = 0
-    stack = [df._jdf.queryExecution().optimizedPlan()]
+def _nodes(root):
+    """Yield ``(class name, node)`` for every node under ``root``, into
+    cached and AQE-wrapped subtrees. Inner subquery plans (scalar
+    subqueries etc.) live in expressions; none of the registry queries
+    use them for windows, and traversing expression trees over py4j is
+    ~100x slower — skipped deliberately."""
+    stack = [root]
     while stack:
         node = stack.pop()
         cls = node.getClass().getSimpleName()
+        yield cls, node
+        if cls == "InMemoryRelation":
+            # round-8 blindness fix, self-persist form: a query that
+            # persists its own subtree gets InMemoryRelation substituted
+            # into its own optimized plan, hiding every Window inside it
+            # (ml_brier_decomposition audited 0 while carrying a global
+            # fact rank). Recurse into the cached PHYSICAL plan.
+            stack.append(node.cachedPlan())
+        elif cls == "InMemoryTableScanExec":
+            stack.append(node.relation())
+        elif cls == "AdaptiveSparkPlanExec":
+            # cached plans are AQE-wrapped with no TreeNode children;
+            # the real tree hangs off initialPlan
+            stack.append(node.initialPlan())
+        ch = node.children()
+        stack += [ch.apply(i) for i in range(ch.size())]
+
+
+def _walk_plan(df) -> tuple[int, int, int]:
+    """(unpartitioned window count, unauditable truncated-leaf count,
+    int-rank window count)."""
+    n = unauditable = int_rank = 0
+    for cls, node in _nodes(df._jdf.queryExecution().optimizedPlan()):
         # logical Window (pre-substitution) and physical WindowExec (inside
         # a cached plan) both carry partitionSpec
         if cls in ("Window", "WindowExec"):
@@ -94,31 +118,17 @@ def _walk_plan(df) -> tuple[int, int, int]:
             # a localCheckpoint (or any RDD-backed leaf) severs lineage:
             # whatever plan produced the RDD is gone from this tree
             unauditable += 1
-        elif cls == "InMemoryRelation":
-            # round-8 blindness fix, self-persist form: a query that
-            # persists its own subtree gets InMemoryRelation substituted
-            # into its own optimized plan, hiding every Window inside it
-            # (ml_brier_decomposition audited 0 while carrying a global
-            # fact rank). Recurse into the cached PHYSICAL plan and count
-            # WindowExec there.
-            try:
-                stack.append(node.cachedPlan())
-            except Exception:
-                pass
-        elif cls == "AdaptiveSparkPlanExec":
-            # cached plans are AQE-wrapped with no TreeNode children;
-            # the real tree hangs off initialPlan
-            try:
-                stack.append(node.initialPlan())
-            except Exception:
-                pass
-        ch = node.children()
-        for i in range(ch.size()):
-            stack.append(ch.apply(i))
-        # inner subquery plans (scalar subqueries etc.) live in expressions;
-        # none of the registry queries use them for windows, and traversing
-        # expression trees over py4j is ~100x slower — skip deliberately.
     return n, unauditable, int_rank
+
+
+def count_physical_nodes(df) -> Counter:
+    """{node class: count} over the physical plan Spark would run, before
+    adaptive re-optimization: ``executedPlan()`` with the AQE wrapper
+    unwrapped to its initial plan, so the Exchange and Sort nodes that
+    EnsureRequirements adds are counted (``sparkPlan()`` has none yet).
+    Cached subtrees count through their cached physical plan."""
+    plan = df._jdf.queryExecution().executedPlan()
+    return Counter(cls for cls, _ in _nodes(plan))
 
 
 def audit(
@@ -129,6 +139,7 @@ def audit(
     rank_out: dict[str, int] | None = None,
     schema_out: dict[str, object] | None = None,
     fail_out: dict[str, str] | None = None,
+    nodes_out: dict[str, Counter] | None = None,
 ) -> dict[str, int]:
     """{query_name: unpartitioned_window_count} for every registered query
     that has at least one. Queries whose builder fails (env-gated stubs)
@@ -149,6 +160,8 @@ def audit(
     only need schemas (tests/test_driver_canon.py) share this one
     registry pass instead of re-building all 439 query frames — the
     pytest suite paid three full sweeps (~450 s) for what is one.
+    ``nodes_out`` collects each query's physical node-class counts
+    (count_physical_nodes) in the same sweep.
     Iterative loops are the documented
     exception (ADVICE r9): their convergence probes (connected
     components, PageRank, BPE) still execute jobs at CONSTRUCTION time
@@ -169,6 +182,8 @@ def audit(
             unauditable_out[name] = u
         if r and rank_out is not None:
             rank_out[name] = r
+        if nodes_out is not None:
+            nodes_out[name] = count_physical_nodes(df)
     return out
 
 
