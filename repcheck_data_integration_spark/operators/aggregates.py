@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from .ckpt import pin
 from ..registry import register
 from ..functions.exact import scaled_long
+from ..functions.top1 import DESC, Top1
 from ..tables import literal_frame, load, load_bucketed
 
 
@@ -31,12 +32,11 @@ def agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     153-154). Argmax is made deterministic by taking the lexicographic max of
     (date, key) — ties on date resolve to the highest key on both engines."""
     o = load(spark, sf_dir, "orders")
+    latest = Top1(o, [("o_orderdate", DESC), ("o_orderkey", DESC)])
     return o.groupBy("o_custkey").agg(
         F.min("o_orderdate").alias("first_order_date"),
-        F.max("o_orderdate").alias("latest_order_date"),
-        F.max(
-            F.struct(F.col("o_orderdate").alias("d"), F.col("o_orderkey").alias("k"))
-        )["k"].alias("latest_orderkey"),
+        latest["o_orderdate"].alias("latest_order_date"),
+        latest["o_orderkey"].alias("latest_orderkey"),
     )
 
 

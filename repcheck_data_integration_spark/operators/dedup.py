@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.top1 import packed
 from ..registry import register
 from ..tables import load
 
@@ -1558,10 +1559,9 @@ def dedup_paragraphs_keep_first(
     (the fixture corpus has no newline paragraphing); each doc reports
     how much of it survives: n_segs, n_kept, chars_kept, kept_frac.
 
-    Determinism: the survivor of a hash group is the minimum of the
-    PACKED position doc_id * 1e6 + seg_idx — a total order as one exact
-    BIGINT min, no window sort; kept_frac is one division through the
-    stable-round4 form.
+    Determinism: the survivor of a hash group is the (doc_id, seg_idx)
+    top-1 packed in one exact BIGINT (functions/top1.py), no window sort;
+    kept_frac is one division through the stable-round4 form.
 
     Scale shape: segments travel as md5 from the scan projection on;
     the first-occurrence rule is one map-side-combinable min aggregate
@@ -1583,14 +1583,11 @@ def dedup_paragraphs_keep_first(
         F.md5(seg).alias("sh"),
         F.length(seg).cast("long").alias("seg_len"),
     )
-    firsts = segs.groupBy("sh").agg(
-        F.min(F.col("doc_id") * 1000000 + F.col("seg_idx")).alias(
-            "first_pos"
-        )
-    )
-    kept = (
-        F.col("doc_id") * 1000000 + F.col("seg_idx") == F.col("first_pos")
-    ).cast("int")
+    # doc_id ≤ packed_headroom(10**6) ≈ 9.2e12; seg_idx < 10**6 holds
+    # below 1.2e8 characters per document
+    pos = packed(F.col("doc_id"), F.col("seg_idx"), 1000000)
+    firsts = segs.groupBy("sh").agg(F.min(pos).alias("first_pos"))
+    kept = (pos == F.col("first_pos")).cast("int")
     return (
         segs.join(firsts, "sh")
         .groupBy("doc_id")

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.top1 import ASC, DESC, Top1
 from ..registry import register
 from ..tables import load
 
@@ -753,10 +754,10 @@ def _register_preference_pairs() -> None:
         vote_matching.py:160-168, turned into pairwise training data.
 
         Deterministic by construction: integer scores (integer division,
-        no floats anywhere), chosen = max(struct(score, -doc_id)) (ties →
-        lowest doc_id), rejected = min(struct(score, -doc_id)) (ties →
-        HIGHEST doc_id, so an all-tied group still yields chosen ≠
-        rejected). Groups of one are dropped.
+        no floats anywhere), chosen = top-1 by (score DESC, doc_id ASC),
+        rejected = top-1 by (score ASC, doc_id DESC) (ties → HIGHEST
+        doc_id, so an all-tied group still yields chosen ≠ rejected).
+        Groups of one are dropped.
 
         Scale shape: per-row scoring is native-expression only (no
         explode — distinct count via array_distinct on the token array),
@@ -778,30 +779,16 @@ def _register_preference_pairs() -> None:
                 ).alias("score_q"),
             )
         )
-        g = s.groupBy("prompt_id").agg(
-            F.max(
-                F.struct(
-                    F.col("score_q").alias("q"),
-                    (-F.col("doc_id")).alias("neg_id"),
-                )
-            ).alias("ch"),
-            F.min(
-                F.struct(
-                    F.col("score_q").alias("q"),
-                    (-F.col("doc_id")).alias("neg_id"),
-                )
-            ).alias("rj"),
+        ch = Top1(s, [("score_q", DESC), ("doc_id", ASC)])
+        rj = Top1(s, [("score_q", ASC), ("doc_id", DESC)])
+        return s.groupBy("prompt_id").agg(
+            ch["doc_id"].alias("chosen_doc_id"),
+            rj["doc_id"].alias("rejected_doc_id"),
+            ch["score_q"].alias("chosen_q"),
+            rj["score_q"].alias("rejected_q"),
+            (ch["score_q"] - rj["score_q"]).alias("margin"),
             F.count(F.lit(1)).alias("n_candidates"),
-        )
-        return g.filter(F.col("n_candidates") >= 2).select(
-            "prompt_id",
-            (-F.col("ch.neg_id")).cast("long").alias("chosen_doc_id"),
-            (-F.col("rj.neg_id")).cast("long").alias("rejected_doc_id"),
-            F.col("ch.q").cast("long").alias("chosen_q"),
-            F.col("rj.q").cast("long").alias("rejected_q"),
-            (F.col("ch.q") - F.col("rj.q")).cast("long").alias("margin"),
-            F.col("n_candidates").cast("long").alias("n_candidates"),
-        )
+        ).filter(F.col("n_candidates") >= 2)
 
 
 _register_preference_pairs()

@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.top1 import ASC, DESC, Top1
 from ..registry import register
 from ..tables import load
 
@@ -553,15 +554,13 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     win = frames.groupBy("doc_id", "window_id").agg(
         F.sum(F.col("s") * F.col("s")).alias("energy")
     )
-    # peak window via lexicographic max of (energy, -window_id): ties on
-    # energy resolve to the EARLIEST window on both engines
+    # ties on energy resolve to the EARLIEST window on both engines
+    peak = Top1(win, [("energy", DESC), ("window_id", ASC)])
     return win.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_windows"),
         F.sum(
             (F.col("energy") < SILENCE_THRESH).cast("long")
         ).cast("long").alias("n_silent"),
-        F.max("energy").cast("long").alias("peak_energy"),
-        (-F.max(
-            F.struct(F.col("energy"), (-F.col("window_id")).alias("nw"))
-        )["nw"]).cast("long").alias("peak_window_id"),
+        peak["energy"].alias("peak_energy"),
+        peak["window_id"].alias("peak_window_id"),
     )

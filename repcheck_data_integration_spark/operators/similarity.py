@@ -24,6 +24,14 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.exact import scaled_long
+from ..functions.top1 import (
+    ASC,
+    DESC,
+    Top1,
+    packed_min,
+    unpack_id,
+    unpack_score,
+)
 from ..registry import register
 from ..tables import literal_frame, load
 from .dedup import (
@@ -350,50 +358,19 @@ def ml_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding", vec_norm(F.col("embedding")).alias("__en")
     ).join(F.broadcast(cents))
     # Top-1-per-vector as ONE map-side-combining aggregate instead of a
-    # row_number window: min(struct(-cos, label, embedding)) is
-    # lexicographic, so it picks max cos then min label — exactly the
-    # window's (cos DESC, label ASC) rn=1 row, with NULL cos pushed last
-    # via the +inf coalesce like DESC NULLS LAST. Beats the window twice:
+    # row_number window over (cos DESC, label ASC). Beats the window twice:
     # the k-way-expanded relation partial-aggregates map-side instead of
     # being shuffled and sorted whole, and the assignment tower is no
     # longer executed twice (members used to re-run it; the count now
     # rides the centroid aggregate via cell_centroids_with_count).
-    # NaN divergence (ADVICE r10): the old window's orderBy(cos.desc())
-    # ranked a NaN cos FIRST (Spark sorts NaN greatest), while -NaN = NaN
-    # sorts LAST under this min. Reachable only if an embedding carries
-    # NaN values (fixture data is NaN-free; gate-verified identical) —
-    # a NaN-bearing corpus would need the window form or a NaN guard.
-    assign = (
-        ac.select(
-            "vec_id",
-            "embedding",
-            "label",
-            (
-                dot_double(F.col("embedding"), F.col("centroid"))
-                / (F.col("__en") * F.col("__cn"))
-            ).alias("cos"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.min(
-                F.struct(
-                    F.coalesce(-F.col("cos"), F.lit(float("inf"))).alias(
-                        "nc"
-                    ),
-                    F.col("label").alias("l"),
-                    F.col("embedding").alias("emb"),
-                )
-            ).alias("s")
-        )
-        .select(
-            "vec_id",
-            F.col("s.emb").alias("embedding"),
-            F.col("s.l").alias("cluster"),
-        )
+    scored = ac.withColumn(
+        "cos",
+        dot_double(F.col("embedding"), F.col("centroid"))
+        / (F.col("__en") * F.col("__cn")),
     )
-    ncm = cell_centroids_with_count(
-        assign.select(F.col("cluster").alias("label"), "embedding")
-    ).select(
+    pick = Top1(scored, [("cos", DESC), ("label", ASC)], carry=["embedding"])
+    assign = scored.groupBy("vec_id").agg(pick["label"], pick["embedding"])
+    ncm = cell_centroids_with_count(assign.drop("vec_id")).select(
         F.col("label").alias("cluster"),
         F.col("centroid").alias("ncentroid"),
         F.col("n_members").cast("long").alias("n_members"),
@@ -1019,18 +996,10 @@ def pq_codebook(e: DataFrame, pos: DataFrame) -> DataFrame:
         .select("code", "p", F.col("vs").alias("ss"))
     )
     sub = F.floor(F.col("p") / PQ_SUB_DIM).cast("long").alias("sub")
-    # Round-11 (guide §2.3 aggregate-before-you-shuffle): the nearest-seed
-    # pick was a row_number window over the ×PQ_K-expanded per-subvector
-    # distance relation — a fact-scaled Sort+Exchange+Sort tower (even
-    # with WindowGroupLimit's partial top-1, every task sorts its slice).
-    # argmin by (d0 ASC, code ASC) IS min(d0 * PQ_K + code) for integer
-    # d0 ≥ 0 and code ∈ [0, PQ_K): d1 < d2 ⇒ d1·K + (K−1) < d2·K, and
-    # equal d ties break on the smaller code — the window's exact pick.
-    # The packed min is LONG-safe with 4 extra bits on top of d0, whose
-    # own long-sum headroom (Σ₈ diff², diff = 2·10⁶·|v|) already assumes
-    # |v| ≲ 500; packing tightens that to |v| ≲ 130 — two orders above
-    # any unit-ish embedding. Two-level HashAggregate, zero sorts; the
-    # same rewrite applies in pq_encode below.
+    # Nearest seed by (d0 ASC, code ASC) as a packed-LONG top-1, not a
+    # row_number window over the ×PQ_K-expanded distance relation. d0 =
+    # Σ₈ (2·10⁶·|v|)² stays inside packed_headroom(PQ_K) ≈ 5.8e17 for
+    # |v| ≲ 130, two orders above any unit-ish embedding.
     assign0 = (
         pos.join(F.broadcast(seeds), "p")
         .groupBy("vec_id", sub, "code")
@@ -1040,8 +1009,11 @@ def pq_codebook(e: DataFrame, pos: DataFrame) -> DataFrame:
             ).alias("d0")
         )
         .groupBy("vec_id", "sub")
-        .agg(F.min(F.col("d0") * PQ_K + F.col("code")).alias("pk"))
-        .select("vec_id", "sub", (F.col("pk") % PQ_K).cast("int").alias("code"))
+        .agg(
+            unpack_id(packed_min(F.col("d0"), F.col("code"), PQ_K), PQ_K)
+            .cast("int")
+            .alias("code")
+        )
     )
     return (
         pos.join(
@@ -1063,25 +1035,17 @@ def pq_encode(pos: DataFrame, cb: DataFrame) -> DataFrame:
     exact integer distances, ties to the lower code."""
     sub = F.floor(F.col("p") / PQ_SUB_DIM).cast("long").alias("sub")
     diff = F.col("vs") - F.col("ms")
-    # Round-11: packed-long argmin instead of the row_number window —
-    # min(dist * PQ_K + code) is the window's exact (dist ASC, code ASC)
-    # top-1 for integer dist ≥ 0, code ∈ [0, PQ_K); both dist and code
-    # unpack exactly (code = pk mod K, dist = pk div K, both
-    # non-negative). See pq_codebook.assign0 for the overflow headroom
-    # argument. Plan: two-level HashAggregate with map-side combine on
-    # both levels, zero Sort/Window nodes (before: Sort+Exchange+Sort+
-    # WindowGroupLimit over the ×PQ_K-expanded relation).
+    # (dist ASC, code ASC) packed-LONG top-1; dist has d0's headroom bound
+    # (pq_codebook), since centroids are means of member values.
+    pk = packed_min(F.col("dist"), F.col("code"), PQ_K)
     return (
         pos.join(F.broadcast(cb), "p")
         .groupBy("vec_id", sub, "code")
         .agg(F.sum(diff * diff).alias("dist"))
         .groupBy("vec_id", "sub")
-        .agg(F.min(F.col("dist") * PQ_K + F.col("code")).alias("pk"))
-        .select(
-            "vec_id",
-            "sub",
-            (F.col("pk") % PQ_K).cast("int").alias("code"),
-            F.expr(f"pk DIV {PQ_K}").alias("dist"),
+        .agg(
+            unpack_id(pk, PQ_K).cast("int").alias("code"),
+            unpack_score(pk, PQ_K).alias("dist"),
         )
     )
 
@@ -1660,10 +1624,10 @@ def dedup_semantic_contamination(
     it broadcasts and the corpus never shuffles its vectors — each train
     row scores |eval| pairs IN PLACE and partial aggregation collapses
     them to one row per train_id before the (tiny) final shuffle. The
-    argmax is a single max(struct(cos, -eval_id)) hash agg — no pair
-    window, and the negated id makes ties deterministic (lowest eval_id
-    wins, matching the oracle's rank order). Cosine is the sequential
-    double fold (dedup.dot_double), bit-identical to DuckDB."""
+    argmax is a single top-1 aggregate by (cos DESC, eval_id ASC) — no
+    pair window; ties go to the lowest eval_id, matching the oracle's
+    rank order. Cosine is the sequential double fold (dedup.dot_double),
+    bit-identical to DuckDB."""
     e = load(spark, sf_dir, "embeddings")
     is_eval = (F.col("vec_id") % SEMCON_EVAL_MOD == 0) & (
         F.col("vec_id") < SEMCON_EVAL_CAP
@@ -1683,24 +1647,14 @@ def dedup_semantic_contamination(
     cos = dot_double(F.col("t_emb"), F.col("e_emb")) / (
         F.col("__trn") * F.col("__evn")
     )
-    best = (
-        tr.join(F.broadcast(ev))
-        .select("train_id", "eval_id", cos.alias("cos"))
-        .groupBy("train_id")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("cos").alias("cos"),
-                    (-F.col("eval_id")).alias("neg_eval"),
-                )
-            ).alias("m")
-        )
+    pairs = tr.join(F.broadcast(ev)).select(
+        "train_id", "eval_id", cos.alias("cos")
     )
-    return best.select(
-        "train_id",
-        (-F.col("m.neg_eval")).cast("long").alias("nearest_eval_id"),
-        stable_round4(F.col("m.cos")).alias("max_cosine"),
-        (F.col("m.cos") >= SEMCON_THETA).alias("contaminated"),
+    m = Top1(pairs, [("cos", DESC), ("eval_id", ASC)])
+    return pairs.groupBy("train_id").agg(
+        m["eval_id"].alias("nearest_eval_id"),
+        stable_round4(m["cos"]).alias("max_cosine"),
+        (m["cos"] >= SEMCON_THETA).alias("contaminated"),
     )
 
 

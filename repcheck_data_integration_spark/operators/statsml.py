@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..functions.exact import scaled_long
+from ..functions.top1 import packed_min, unpack_id
 from ..tables import load
 from .dedup import SQL_SHINGLES, sql_stable_round4, stable_round4, tokens
 
@@ -979,8 +980,7 @@ def nb_doc_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     # idx = |{langs ≤ cand}| via a |langs|² self-join count (the
     # rank()-ties-share spelling from the round-10 sweep; langs are
     # distinct so count == rank). Bounded: |langs| is the language
-    # alphabet, never data-scaled. idx ≤ 256 is asserted below (packing
-    # reserves 8 bits).
+    # alphabet, never data-scaled; packed_min below asserts idx < 256.
     from .ckpt import pin
 
     # The rank map feeds TWO branches (the scores crossjoin and the
@@ -999,17 +999,7 @@ def nb_doc_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang_rank = pin(
         _langs.join(F.broadcast(_lc2), F.col("cand2") <= F.col("cand"))
         .groupBy("cand")
-        .agg(F.count(F.lit(1)).alias("idx"))
-        .select(
-            "cand",
-            F.coalesce(
-                F.assert_true(
-                    F.col("idx") <= 256,
-                    F.lit("nb packed argmax: >256 languages"),
-                ).cast("long"),
-                F.col("idx") - 1,
-            ).alias("idx"),
-        )
+        .agg((F.count(F.lit(1)) - 1).alias("idx"))
     )
     lang_idx = lang_consts.join(F.broadcast(lang_rank), "cand")
     scores = (
@@ -1028,33 +1018,14 @@ def nb_doc_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("s"),
         )
     )
-    # argmax as min over ONE packed LONG (round-11, VERDICT r10 #8):
-    # packed = (-s) * 256 + idx is lexicographic (-s ASC, idx ASC) for
-    # idx ∈ [0, 256) — i.e. highest s, then smallest cand (idx is the
-    # ascending lang rank), exactly the old min(struct(-s, cand)) and the
-    # oracle's row_number(ORDER BY s DESC, cand). A LONG min is
-    # HashAggregate-mutable where the struct min planned as a
-    # SortAggregate pair around the exchange (partial sorted-agg per
-    # task). Headroom: |s| ≤ pq + tot·|dq| + |psum| ≲ 1e14 for 1e6
-    # tokens/doc at 1e6 log-scale; ×256 = 2.6e16 ≪ 2^63 (pinned with
-    # adversarial values in tests/test_statsml.py).
-    # lang_true rides the GROUP KEY, not a min() aggregate: min over a
-    # STRING is not HashAggregate-mutable (the r10 minhash lesson), so
-    # riding it through min(lang_true) silently re-planned the whole
-    # aggregate as the SortAggregate pair this rewrite exists to remove
-    # (caught in plans/r11 re-capture). The (doc_id, lang_true) key is
-    # functionally doc_id (lang_true is constant per doc); the price is
-    # one extra exchange of the 3-column doc-sized pred frame in
-    # consumers that join on doc_id alone — drain-measured flat at 10×,
-    # vs a per-task sort of the docs×langs stream saved here.
+    # (s DESC, cand ASC) top-1 as a packed LONG over the ascending lang
+    # rank idx; |s| ≤ pq + tot·|dq| + |psum| ≲ 1e14 (1e6 tokens/doc at
+    # 1e6 log-scale) ≪ packed_headroom(256) ≈ 3.6e16. lang_true rides the
+    # group key (functions/top1.py relapse rule; it is constant per doc).
     pred = scores.groupBy("doc_id", "lang_true").agg(
-        F.min((-F.col("s")) * 256 + F.col("idx")).alias("pk"),
+        unpack_id(packed_min(-F.col("s"), F.col("idx"), 256), 256).alias("idx")
     )
-    return pred.select(
-        "doc_id",
-        "lang_true",
-        F.pmod(F.col("pk"), F.lit(256)).alias("idx"),
-    ).join(
+    return pred.join(
         F.broadcast(lang_rank), "idx"
     ).select(
         "doc_id", "lang_true", F.col("cand").alias("lang_pred")

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.top1 import ASC, DESC, Top1
 from ..registry import register
 from ..tables import literal_frame, load
 from .ckpt import pin
@@ -132,30 +133,19 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repetition signals (the Gopher-style quality filters): distinct-token
     ratio and most-frequent-token share per document. Both reduce from the
     (doc, term) count relation in ONE more aggregation — the argmax is a
-    min(struct(-cnt, tok)) single-agg, not a second window pass, so the
-    whole operator is explode → two hash aggregations. Docs with zero
+    top-1 aggregate by (cnt DESC, tok ASC), not a second window pass, so
+    the whole operator is explode → two aggregations. Docs with zero
     tokens vanish (explode of an empty array), matching the SQL unnest."""
     tc = term_counts(load(spark, sf_dir, "documents"))
-    top = F.min(
-        F.struct((-F.col("cnt")).alias("negc"), F.col("tok").alias("tok"))
-    )
-    agg = tc.groupBy("doc_id").agg(
-        F.sum("cnt").alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_distinct"),
-        top.alias("top"),
-    )
-    return agg.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("n_distinct").cast("long").alias("n_distinct"),
-        stable_round4(F.col("n_distinct") * 1.0 / F.col("n_tokens")).alias(
-            "distinct_ratio"
-        ),
-        F.col("top.tok").alias("top_token"),
-        (-F.col("top.negc")).cast("long").alias("top_count"),
-        stable_round4(-F.col("top.negc") * 1.0 / F.col("n_tokens")).alias(
-            "top_share"
-        ),
+    top = Top1(tc, [("cnt", DESC), ("tok", ASC)])
+    n_tokens, n_distinct = F.sum("cnt"), F.count(F.lit(1))
+    return tc.groupBy("doc_id").agg(
+        n_tokens.alias("n_tokens"),
+        n_distinct.alias("n_distinct"),
+        stable_round4(n_distinct * 1.0 / n_tokens).alias("distinct_ratio"),
+        top["tok"].alias("top_token"),
+        top["cnt"].alias("top_count"),
+        stable_round4(top["cnt"] * 1.0 / n_tokens).alias("top_share"),
     )
 
 

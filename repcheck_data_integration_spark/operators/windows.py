@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..functions.exact import scaled_long
+from ..functions.top1 import ASC, DESC, Top1
 from ..tables import load
 
 
@@ -603,9 +604,9 @@ def win_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     arriving and another departing on the same day never double-counts),
     and the prefix sum over day order IS the concurrency curve.
 
-    The argmax is a single struct-max aggregate (max conc, then max
-    negated day = earliest peak day) — no self-join back onto the curve;
-    the oracle states the same argmax as the explicit join-on-max form.
+    The argmax is a single top-1 aggregate by (conc DESC, day_id ASC) —
+    no self-join back onto the curve; the oracle states the same argmax
+    as the explicit join-on-max form.
 
     Scale: deltas are 2x the fact rows but collapse at the first
     (supplier, day) partial agg; the window and the final agg share the
@@ -637,15 +638,8 @@ def win_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("conc"),
     )
-    peak = run.groupBy("l_suppkey").agg(
-        F.max(
-            F.struct(
-                F.col("conc").alias("c"), (-F.col("day_id")).alias("nd")
-            )
-        ).alias("pk")
-    )
-    return peak.select(
-        "l_suppkey",
-        F.col("pk.c").cast("long").alias("max_in_transit"),
-        (-F.col("pk.nd")).cast("long").alias("first_peak_day"),
+    peak = Top1(run, [("conc", DESC), ("day_id", ASC)])
+    return run.groupBy("l_suppkey").agg(
+        peak["conc"].alias("max_in_transit"),
+        peak["day_id"].alias("first_peak_day"),
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.exact import exact_sum, sql_exact_sum, scaled_long
+from ..functions.top1 import ASC, Top1
 from ..registry import register
 from ..tables import load
 
@@ -36,10 +37,8 @@ from ..tables import load
 def q2_min_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 shape: correlated minimum — cheapest supplier per brand over the
     shipped part-supplier link. The oracle keeps the rank-window form;
-    the Spark side computes the identical argmin as a MIN over a
-    (s_acctbal, s_suppkey, s_name) struct (lexicographic struct ordering
-    IS the window's tie-break chain; s_name is never reached because
-    s_suppkey is unique) — a map-side-combining aggregate instead of a
+    the Spark side computes the identical argmin as a top-1 aggregate by
+    (s_acctbal, s_suppkey) — a map-side-combining aggregate instead of a
     ``PARTITION BY p_brand`` rank window whose ~25 brand partitions each
     sort a partsupp-scaled slice in one task and overflow the int rank
     counter past 2^31 link rows per brand (round-10 partitioned-window
@@ -47,18 +46,12 @@ def q2_min_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
     p = load(spark, sf_dir, "part")
     s = load(spark, sf_dir, "supplier")
-    st = F.struct(F.col("s_acctbal"), F.col("s_suppkey"), F.col("s_name"))
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy("p_brand")
-        .agg(F.min(st).alias("m"))
-        .select(
-            "p_brand",
-            F.col("m.s_suppkey").alias("s_suppkey"),
-            F.col("m.s_name").alias("s_name"),
-            F.col("m.s_acctbal").alias("s_acctbal"),
-        )
+    link = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).join(
+        F.broadcast(s), li.l_suppkey == s.s_suppkey
+    )
+    m = Top1(link, [("s_acctbal", ASC), ("s_suppkey", ASC)], carry=["s_name"])
+    return link.groupBy("p_brand").agg(
+        m["s_suppkey"], m["s_name"], m["s_acctbal"]
     )
 
 

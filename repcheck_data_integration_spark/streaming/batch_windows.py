@@ -19,6 +19,7 @@ from pyspark.sql.window import Window as W
 
 from ..registry import register
 from ..functions.exact import scaled_long
+from ..functions.top1 import ASC, DESC, Top1
 from ..tables import load
 
 TUMBLE_S = 600
@@ -1096,16 +1097,10 @@ def events_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("run_len"),
         F.min("day_id").alias("run_start"),
     )
-    best = runs.groupBy("user_id").agg(
-        F.max("run_len").alias("longest"),
-        F.min(
-            F.struct((-F.col("run_len")).alias("neg"), F.col("run_start"))
-        ).alias("pick"),
-    )
-    return best.select(
-        "user_id",
-        F.col("longest").cast("long").alias("longest_streak_days"),
-        F.col("pick.run_start").cast("long").alias("best_streak_start"),
+    best = Top1(runs, [("run_len", DESC), ("run_start", ASC)])
+    return runs.groupBy("user_id").agg(
+        best["run_len"].alias("longest_streak_days"),
+        best["run_start"].alias("best_streak_start"),
     )
 
 

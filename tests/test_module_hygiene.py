@@ -42,3 +42,51 @@ def test_no_duplicate_module_constants():
         "module-level constants assigned more than once (later assignment"
         " shadows every earlier op's call-time read): " + ", ".join(offenders)
     )
+
+
+def _struct_argmaxes(path: str) -> list[int]:
+    """Lines of ``F.min``/``F.max`` calls over an ``F.struct(...)`` call or
+    over a name the module binds to one."""
+    def is_f(node, names) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in names
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+        )
+
+    nodes = list(ast.walk(ast.parse(open(path).read())))
+    structs = {
+        t.id
+        for n in nodes
+        if isinstance(n, ast.Assign) and is_f(n.value, ("struct",))
+        for t in n.targets
+        if isinstance(t, ast.Name)
+    }
+    return [
+        n.lineno
+        for n in nodes
+        if is_f(n, ("min", "max"))
+        and any(
+            is_f(a, ("struct",)) or isinstance(a, ast.Name) and a.id in structs
+            for a in n.args
+        )
+    ]
+
+
+def test_struct_argmax_only_in_top1():
+    """Every top-1-per-group pick goes through functions/top1.py, which
+    owns the key negation, NULL/NaN placement and field decoding that a
+    hand-built min/max(struct) has to restate."""
+    own = os.path.join(PKG, "functions", "top1.py")
+    offenders = [
+        f"{os.path.relpath(path, PKG)}:{line}"
+        for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+        if path != own
+        for line in _struct_argmaxes(path)
+    ]
+    assert not offenders, (
+        "min/max over a struct outside functions/top1.py (use top1.Top1): "
+        + ", ".join(offenders)
+    )

@@ -259,13 +259,18 @@ def test_naive_bayes_separates_disjoint_vocab_langs(spark, tmp_path):
 
 
 def test_nb_packed_argmax_matches_struct_argmax(spark):
-    """Round-11 wrap/tie pin for nb_doc_pred's packed-long argmax:
-    min((-s) * 256 + idx) must equal the lexicographic (-s ASC, idx ASC)
-    struct-min — i.e. highest s wins, ties to the smallest idx — at
-    adversarial magnitudes near the documented 2.6e16 headroom (|s| up
-    to 1e14 at 1e6 tokens/doc × 1e6 log-scale), at s = 0, and on exact
+    """Round-11 wrap/tie pin for nb_doc_pred's packed-long argmax: the
+    call it makes, top1.packed_min(-s, idx, 256), must equal the
+    lexicographic (-s ASC, idx ASC) struct-min — i.e. highest s wins,
+    ties to the smallest idx — at the documented score bound (|s| up to
+    1e14 at 1e6 tokens/doc × 1e6 log-scale), at s = 0, and on exact
     ties. Pure expression pin over a literal frame (no fixture)."""
     from pyspark.sql import functions as F
+
+    from repcheck_data_integration_spark.functions.top1 import (
+        packed_min,
+        unpack_id,
+    )
 
     rows = [
         # (doc, s, idx): doc 1 — tie on the max s=-5 → idx 1 wins
@@ -281,8 +286,8 @@ def test_nb_packed_argmax_matches_struct_argmax(spark):
     ]
     df = spark.createDataFrame(rows, ["doc", "s", "idx"])
     packed = df.groupBy("doc").agg(
-        F.min((-F.col("s")) * 256 + F.col("idx")).alias("pk")
-    ).select("doc", F.pmod(F.col("pk"), F.lit(256)).alias("idx"))
+        unpack_id(packed_min(-F.col("s"), F.col("idx"), 256), 256).alias("idx")
+    )
     struct = df.groupBy("doc").agg(
         F.min(F.struct((-F.col("s")).alias("n"), F.col("idx").alias("i")))
         .alias("m")
