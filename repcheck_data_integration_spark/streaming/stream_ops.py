@@ -7,8 +7,12 @@ Here that becomes real incremental processing:
 - file-source readStream over the events fixture (at scale: Kafka/queue),
 - watermarked tumbling-window aggregation (late data dropped after 10 min),
 - dropDuplicates within the watermark,
-- foreachBatch + merge_upsert: exactly-once keyed MERGE into a parquet
-  target — the streaming twin of the reference's upsert loop.
+- foreachBatch epoch folds: every state maintainer (keyed upsert,
+  rollups, SCD2, history dedup, sketches, attribution) folds each
+  micro-batch into its parquet state through one replay guard → prior
+  read → fold → atomic epoch commit (fold_epoch), so an at-least-once
+  replay applies once — the streaming twin of the reference's re-runnable
+  upsert.
 
 All exercised synchronously in tests via availableNow/processAllAvailable
 with a memory sink.
@@ -23,7 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.exact import scaled_long
-from ..operators.upsert import merge_upsert
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string,"
@@ -77,51 +80,205 @@ def run_to_memory(df: DataFrame, name: str) -> StreamingQuery:
     return q
 
 
-def stream_upsert_to_parquet(
-    events: DataFrame, target_path: str, checkpoint: str
+# ---------------------------------------------------------------------------
+# Epoch-fold sink: the one guard → prior → fold → commit of every maintainer
+# ---------------------------------------------------------------------------
+
+def rollup_applied_epoch(target_path: str, run_id: str | None = None) -> int:
+    """Last epoch applied to the rollup at ``target_path`` (-1 if none).
+    The symlink's target name carries the epoch — the marker and the data
+    commit in the same atomic rename, so they can never disagree.
+
+    ``run_id`` guards against a REUSED target dir with a FRESH checkpoint:
+    epoch ids are monotonic only per checkpoint, so after a checkpoint
+    reset epochs restart at 0 and a bare epoch compare would silently skip
+    every early batch as a "replay". When the recorded run id differs from
+    the caller's, nothing from THIS run has been applied → -1 (the batch
+    folds into the existing state and re-stamps the run id)."""
+    if run_id is not None:
+        marker = os.path.join(target_path + ".versions", "_run_id")
+        try:
+            with open(marker) as fh:
+                if fh.read().strip() != run_id:
+                    return -1
+        except OSError:
+            return -1
+    if os.path.islink(target_path):
+        base = os.path.basename(os.readlink(target_path))
+        if base.startswith("epoch="):
+            return int(base.split("=", 1)[1])
+    return -1
+
+
+# superseded versions kept per target: one epoch of grace so a concurrent
+# reader mid-scan on the just-superseded version doesn't lose files under
+# it (the single-writer foreachBatch itself never needs more than 0).
+KEEP_SUPERSEDED_VERSIONS = 1
+
+
+def commit_epoch_version(
+    target_path: str,
+    epoch_id: int,
+    df: DataFrame,
+    run_id: str | None = None,
+) -> None:
+    """Write ``df`` as the new state of ``target_path``, stamped with
+    ``epoch_id``: parquet into a fresh version dir, atomic symlink swap
+    (the commit point — a crash leaves old or new state, never partial),
+    then GC of all but the newest ``KEEP_SUPERSEDED_VERSIONS`` superseded
+    dirs — readers racing the swap get one full epoch to finish their
+    scan. Called only through fold_epoch."""
+    import shutil
+
+    versions_root = target_path + ".versions"
+    ver_dir = os.path.join(versions_root, f"epoch={epoch_id:020d}")
+    df.write.mode("overwrite").parquet(ver_dir)
+    if run_id is not None:
+        os.makedirs(versions_root, exist_ok=True)
+        with open(os.path.join(versions_root, "_run_id"), "w") as fh:
+            fh.write(run_id)
+    if os.path.exists(target_path) and not os.path.islink(target_path):
+        # a plain seed dir: fold_epoch read it as the prior, so its rows
+        # are in ver_dir by now
+        shutil.rmtree(target_path)
+    tmp_link = target_path + ".lnk"
+    if os.path.lexists(tmp_link):
+        os.remove(tmp_link)
+    os.symlink(ver_dir, tmp_link)
+    os.replace(tmp_link, target_path)  # atomic swap = commit point
+    current = f"epoch={epoch_id:020d}"
+    superseded = sorted(
+        d for d in os.listdir(versions_root)
+        if d.startswith("epoch=") and d != current
+    )
+    for old in superseded[: max(0, len(superseded) - KEEP_SUPERSEDED_VERSIONS)]:
+        shutil.rmtree(os.path.join(versions_root, old), ignore_errors=True)
+
+
+def fold_epoch(
+    target_path: str,
+    batch: DataFrame,
+    epoch_id: int,
+    fold,
+    run_id: str | None = None,
+) -> None:
+    """Fold one micro-batch into the state at ``target_path``: the single
+    epoch-fold decision behind every foreachBatch maintainer.
+
+    1. Replay guard: an epoch ≤ the state's applied epoch for this run
+       (rollup_applied_epoch) is already in the state — skip it.
+    2. Prior state: ``spark.read.parquet(target_path)`` when the path
+       exists (a previous epoch's symlink or a plain seed directory), else
+       None.
+    3. ``fold(batch, prior)`` returns the new state.
+    4. commit_epoch_version writes it and swaps the symlink.
+
+    Exactly-once under retries: foreachBatch delivers at least once — a
+    micro-batch that fails between the state commit and the checkpoint
+    commit is REPLAYED with the same epoch_id, and an additive fold would
+    apply its delta twice. The applied epoch rides the state's physical
+    layout: each epoch writes ``<target>.versions/epoch=<id>`` and then
+    atomically repoints the ``target_path`` symlink (os.replace of a
+    symlink is atomic on POSIX — a crash leaves the old or the new state,
+    never a partial one), so the marker and the data commit together. A
+    plain seed directory is replaced only after the version holding its
+    folded rows is written."""
+    if epoch_id <= rollup_applied_epoch(target_path, run_id):
+        return  # replayed epoch: already folded in
+    prior = (
+        batch.sparkSession.read.parquet(target_path)
+        if os.path.exists(target_path)
+        else None
+    )
+    commit_epoch_version(target_path, epoch_id, fold(batch, prior), run_id)
+
+
+def fold_merge_batch(target_path: str, fold, run_id: str | None = None):
+    """The foreachBatch function that folds every micro-batch into
+    ``target_path`` through fold_epoch. ``run_id`` (normally the
+    checkpoint location) scopes the replay guard to one stream run."""
+    return lambda batch, epoch_id: fold_epoch(
+        target_path, batch, epoch_id, fold, run_id
+    )
+
+
+def start_foreach_batch(
+    stream: DataFrame, merge, checkpoint: str
 ) -> StreamingQuery:
-    """foreachBatch MERGE: each micro-batch is keyed-upserted into the
-    parquet target — the Structured-Streaming twin of snk_upsert. (With a
-    transactional table format this is MERGE INTO; plain parquet rewrite
-    here keeps the container dependency-free.)"""
-
-    def upsert_batch(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        agg = batch.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.max("event_id").alias("last_event_id"),
-        )
-        if os.path.exists(target_path):
-            target = spark.read.parquet(target_path)
-            prev = target.select(
-                "user_id",
-                F.col("n_events").alias("prev_n"),
-                F.col("last_event_id").alias("prev_last"),
-            )
-            joined = agg.join(prev, "user_id", "full_outer")
-            merged = joined.select(
-                "user_id",
-                (
-                    F.coalesce(F.col("n_events"), F.lit(0))
-                    + F.coalesce(F.col("prev_n"), F.lit(0))
-                ).alias("n_events"),
-                F.greatest(
-                    F.coalesce(F.col("last_event_id"), F.lit(-1)),
-                    F.coalesce(F.col("prev_last"), F.lit(-1)),
-                ).alias("last_event_id"),
-            )
-        else:
-            merged = agg
-        tmp = target_path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        out = spark.read.parquet(tmp)
-        out.write.mode("overwrite").parquet(target_path)
-
+    """Run ``merge`` over every micro-batch of ``stream`` as an
+    availableNow foreachBatch query checkpointed at ``checkpoint``."""
     return (
-        events.writeStream.foreachBatch(upsert_batch)
+        stream.writeStream.foreachBatch(merge)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
+    )
+
+
+def add_into(
+    delta: DataFrame,
+    prior: DataFrame | None,
+    keys: list[str],
+    maxed: tuple[str, ...] = (),
+) -> DataFrame:
+    """Fold an additive ``delta`` into ``prior`` per ``keys``: every other
+    column sums (the ``maxed`` ones take the max), so the state equals the
+    aggregate over all batches however the stream was cut. Union then
+    re-aggregate — one shuffle with map-side partial sums, NULL keys group
+    together as in the delta's own groupBy. Keys come first, then the
+    delta's value columns in order; LONG inputs stay LONG."""
+    if prior is None:
+        return delta
+    return (
+        delta.unionByName(prior)
+        .groupBy(*keys)
+        .agg(
+            *[
+                (F.max if c in maxed else F.sum)(c).alias(c)
+                for c in delta.columns
+                if c not in keys
+            ]
+        )
+    )
+
+
+def append_unseen(
+    rows: DataFrame, prior: DataFrame | None, key: str
+) -> DataFrame:
+    """Append to ``prior`` the ``rows`` whose ``key`` it does not hold yet
+    (first arrival wins across batches)."""
+    if prior is None:
+        return rows
+    return prior.unionByName(rows.join(prior.select(key), key, "anti"))
+
+
+def make_upsert_merge_batch(target_path: str, run_id: str | None = None):
+    """Keyed upsert of per-user event counts — the streaming twin of the
+    reference's re-runnable upsert (snk_upsert's contract): each
+    micro-batch's (n_events, last_event_id) per user_id folds into the
+    parquet target, counts adding and the last event id taking the max.
+    Replay-safe through fold_epoch (with a transactional table format this
+    is MERGE INTO; the epoch-versioned parquet keeps the container
+    dependency-free)."""
+
+    def fold(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
+        delta = batch.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.max("event_id").alias("last_event_id"),
+        )
+        return add_into(delta, prior, ["user_id"], maxed=("last_event_id",))
+
+    return fold_merge_batch(target_path, fold, run_id)
+
+
+def stream_upsert_to_parquet(
+    events: DataFrame, target_path: str, checkpoint: str
+) -> StreamingQuery:
+    """Run make_upsert_merge_batch over an events stream."""
+    return start_foreach_batch(
+        events,
+        make_upsert_merge_batch(target_path, run_id=checkpoint),
+        checkpoint,
     )
 
 
@@ -311,108 +468,19 @@ def stream_hourly_rollup(
     integer addition cannot. Daily (or any coarser) rollups re-aggregate
     the hourly table (see daily_from_hourly) instead of rescanning the
     fact stream — the compositional-reaggregation property tested in
-    operators/graph.py applies.
-
-    Exactly-once under retries: foreachBatch gives at-least-once delivery —
-    a micro-batch that fails between the target write and the checkpoint
-    commit is REPLAYED with the same epoch_id, and a naive additive merge
-    would apply its delta twice. The merge is made idempotent by stamping
-    the applied epoch into the rollup's physical layout: each epoch writes
-    a fresh version directory ``<target>.versions/epoch=<id>`` and then
-    atomically repoints the ``target_path`` symlink (os.replace of a
-    symlink is atomic on POSIX — a crash leaves either the old or the new
-    rollup, never a partial one, and no stale .tmp). A replayed epoch whose
-    id ≤ the symlink's current epoch is skipped outright."""
-    return (
-        events.writeStream.foreachBatch(
-            make_hourly_merge_batch(target_path, run_id=checkpoint)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    operators/graph.py applies. Exactly-once under replay via fold_epoch."""
+    return start_foreach_batch(
+        events,
+        make_hourly_merge_batch(target_path, run_id=checkpoint),
+        checkpoint,
     )
-
-
-def rollup_applied_epoch(target_path: str, run_id: str | None = None) -> int:
-    """Last epoch applied to the rollup at ``target_path`` (-1 if none).
-    The symlink's target name carries the epoch — the marker and the data
-    commit in the same atomic rename, so they can never disagree.
-
-    ``run_id`` guards against a REUSED target dir with a FRESH checkpoint:
-    epoch ids are monotonic only per checkpoint, so after a checkpoint
-    reset epochs restart at 0 and a bare epoch compare would silently skip
-    every early batch as a "replay". When the recorded run id differs from
-    the caller's, nothing from THIS run has been applied → -1 (the batch
-    folds into the existing state and re-stamps the run id)."""
-    if run_id is not None:
-        marker = os.path.join(target_path + ".versions", "_run_id")
-        try:
-            with open(marker) as fh:
-                if fh.read().strip() != run_id:
-                    return -1
-        except OSError:
-            return -1
-    if os.path.islink(target_path):
-        base = os.path.basename(os.readlink(target_path))
-        if base.startswith("epoch="):
-            return int(base.split("=", 1)[1])
-    return -1
-
-
-# superseded versions kept per target: one epoch of grace so a concurrent
-# reader mid-scan on the just-superseded version doesn't lose files under
-# it (the single-writer foreachBatch itself never needs more than 0).
-KEEP_SUPERSEDED_VERSIONS = 1
-
-
-def commit_epoch_version(
-    target_path: str,
-    epoch_id: int,
-    df: DataFrame,
-    run_id: str | None = None,
-) -> None:
-    """Write ``df`` as the new state of ``target_path``, stamped with
-    ``epoch_id``: parquet into a fresh version dir, atomic symlink swap
-    (the commit point — a crash leaves old or new state, never partial),
-    then GC of all but the newest ``KEEP_SUPERSEDED_VERSIONS`` superseded
-    dirs — readers racing the swap get one full epoch to finish their
-    scan. Shared by every foreachBatch maintainer that needs idempotent
-    replay (rollup, SCD2, history dedup)."""
-    import shutil
-
-    versions_root = target_path + ".versions"
-    ver_dir = os.path.join(versions_root, f"epoch={epoch_id:020d}")
-    df.write.mode("overwrite").parquet(ver_dir)
-    if run_id is not None:
-        os.makedirs(versions_root, exist_ok=True)
-        with open(os.path.join(versions_root, "_run_id"), "w") as fh:
-            fh.write(run_id)
-    if os.path.exists(target_path) and not os.path.islink(target_path):
-        shutil.rmtree(target_path)  # migrate a legacy plain-dir target
-    tmp_link = target_path + ".lnk"
-    if os.path.lexists(tmp_link):
-        os.remove(tmp_link)
-    os.symlink(ver_dir, tmp_link)
-    os.replace(tmp_link, target_path)  # atomic swap = commit point
-    current = f"epoch={epoch_id:020d}"
-    superseded = sorted(
-        d for d in os.listdir(versions_root)
-        if d.startswith("epoch=") and d != current
-    )
-    for old in superseded[: max(0, len(superseded) - KEEP_SUPERSEDED_VERSIONS)]:
-        shutil.rmtree(os.path.join(versions_root, old), ignore_errors=True)
 
 
 def make_hourly_merge_batch(target_path: str, run_id: str | None = None):
-    """Build the idempotent foreachBatch merge for ``stream_hourly_rollup``
-    (module-level so tests can drive epoch replays directly). ``run_id``
-    (normally the checkpoint location) scopes the replay guard to THIS
-    stream run — see rollup_applied_epoch."""
+    """The idempotent foreachBatch merge for ``stream_hourly_rollup``
+    (module-level so tests can drive epoch replays directly)."""
 
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        if epoch_id <= rollup_applied_epoch(target_path, run_id):
-            return  # replayed epoch, delta already in the rollup: skip
+    def fold(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
         delta = batch.groupBy(
             F.date_trunc("hour", "ts").alias("hour"),
             "event_type",
@@ -422,33 +490,9 @@ def make_hourly_merge_batch(target_path: str, run_id: str | None = None):
                 "value_cents"
             ),
         )
-        if os.path.exists(target_path):
-            prev = spark.read.parquet(target_path).select(
-                "hour",
-                "event_type",
-                F.col("n_events").alias("p_n"),
-                F.col("value_cents").alias("p_v"),
-            )
-            merged = (
-                delta.join(prev, ["hour", "event_type"], "full_outer")
-                .select(
-                    "hour",
-                    "event_type",
-                    (
-                        F.coalesce(F.col("n_events"), F.lit(0))
-                        + F.coalesce(F.col("p_n"), F.lit(0))
-                    ).alias("n_events"),
-                    (
-                        F.coalesce(F.col("value_cents"), F.lit(0))
-                        + F.coalesce(F.col("p_v"), F.lit(0))
-                    ).alias("value_cents"),
-                )
-            )
-        else:
-            merged = delta
-        commit_epoch_version(target_path, epoch_id, merged, run_id)
+        return add_into(delta, prior, ["hour", "event_type"])
 
-    return merge_batch
+    return fold_merge_batch(target_path, fold, run_id)
 
 
 def make_scd2_merge_batch(
@@ -462,17 +506,16 @@ def make_scd2_merge_batch(
     micro-batch of keyed updates folds into the versioned dimension with
     the SAME ``scd2_apply`` the batch operator uses (operators/temporal.py)
     — incremental maintenance equals re-running batch SCD2 over the update
-    stream in epoch order, asserted in tests. Replay-safe via the shared
-    epoch-stamped commit (skip epochs ≤ the symlink's)."""
+    stream in epoch order, asserted in tests. The seed dimension must
+    already sit at ``target_path`` (plain parquet dir or a previous run's
+    symlink); without one the fold raises ``ValueError``."""
+    from pyspark.sql import Window as W
+
     from ..operators.temporal import scd2_apply
 
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import Window as W
-
-        if epoch_id <= rollup_applied_epoch(target_path, run_id):
-            return  # replayed epoch already folded in
-        spark = batch.sparkSession
-        dim = spark.read.parquet(target_path)
+    def fold(batch: DataFrame, dim: DataFrame | None) -> DataFrame:
+        if dim is None:
+            raise ValueError(f"no seed dimension at {target_path}")
         # one update per key per epoch: micro-batch semantics keep the
         # LATEST effective state (intermediate same-batch states are
         # skipped, like any snapshot-based CDC fold); deterministic
@@ -486,13 +529,12 @@ def make_scd2_merge_batch(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        new_dim = scd2_apply(
+        return scd2_apply(
             dim, latest, key=key, effective_col=effective_col,
             compare_cols=compare_cols,
         )
-        commit_epoch_version(target_path, epoch_id, new_dim, run_id)
 
-    return merge_batch
+    return fold_merge_batch(target_path, fold, run_id)
 
 
 def stream_scd2(
@@ -503,21 +545,16 @@ def stream_scd2(
     effective_col: str,
     compare_cols: list[str],
 ) -> StreamingQuery:
-    """Continuous SCD2 dimension maintenance: the seed dimension must
-    already sit at ``target_path`` (plain parquet dir or a previous run's
-    symlink); each micro-batch of updates closes/opens versions
-    incrementally — the streaming twin of snk_scd2, no dimension rescan
-    beyond the current state."""
-    return (
-        updates.writeStream.foreachBatch(
-            make_scd2_merge_batch(
-                target_path, key, effective_col, compare_cols,
-                run_id=checkpoint,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Continuous SCD2 dimension maintenance (make_scd2_merge_batch over an
+    updates stream): each micro-batch closes/opens versions incrementally —
+    the streaming twin of snk_scd2, no dimension rescan beyond the current
+    state."""
+    return start_foreach_batch(
+        updates,
+        make_scd2_merge_batch(
+            target_path, key, effective_col, compare_cols, run_id=checkpoint
+        ),
+        checkpoint,
     )
 
 
@@ -567,55 +604,24 @@ def make_dedup_merge_batch(target_path: str, run_id: str | None = None):
     complement to dropDuplicates-within-watermark (whose state is
     watermark-bounded): each micro-batch keeps only content hashes never
     seen in any earlier batch, by anti-joining the batch against the
-    accumulated seen-set and committing seen-set + survivors through the
-    same epoch-stamped atomic-swap machinery as the rollup (replayed
-    epochs skip, a crash leaves old or new state, never partial).
+    accumulated seen-set and committing seen-set + survivors through
+    fold_epoch (replayed epochs skip, a crash leaves old or new state,
+    never partial).
 
     At 100 TB the seen-set is a content-hash-bucketed table and the
     anti-join is hash-partition-local; here it is the version-dir parquet
     commit_epoch_version maintains. In-batch duplicates resolve to the
     lowest doc_id (same keep-lowest rule as dedup_exact)."""
 
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        spark = batch.sparkSession
-        if epoch_id <= rollup_applied_epoch(target_path, run_id):
-            return  # replayed epoch: already folded in
-        hashed = batch.select(
-            "doc_id", F.md5("text").alias("content_hash")
+    def fold(batch: DataFrame, seen: DataFrame | None) -> DataFrame:
+        first_in_batch = (
+            batch.select("doc_id", F.md5("text").alias("content_hash"))
+            .groupBy("content_hash")
+            .agg(F.min("doc_id").alias("doc_id"))
         )
-        first_in_batch = hashed.groupBy("content_hash").agg(
-            F.min("doc_id").alias("doc_id")
-        )
-        if os.path.islink(target_path):
-            seen = spark.read.parquet(target_path)
-            fresh = first_in_batch.join(
-                seen.select("content_hash"), "content_hash", "anti"
-            )
-            merged = seen.unionByName(
-                fresh.select("content_hash", "doc_id")
-            )
-        else:
-            merged = first_in_batch.select("content_hash", "doc_id")
-        commit_epoch_version(target_path, epoch_id, merged, run_id)
+        return append_unseen(first_in_batch, seen, "content_hash")
 
-    return merge_batch
-
-
-def stream_dedup_history(
-    docs_stream: DataFrame, target_path: str, checkpoint: str
-):
-    """Run the unbounded-history dedup as an availableNow foreachBatch
-    query over a documents-shaped stream."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            make_dedup_merge_batch(target_path, run_id=checkpoint)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_merge_batch(target_path, fold, run_id)
 
 
 # ---------------------------------------------------------------------------
@@ -686,13 +692,9 @@ def make_minhash_dedup_merge_batch(target_path: str, run_id: str | None = None):
     equi-join as the batch op, cost ∝ colliding pairs, no n² anywhere.
     Docs too short to shingle are kept verbatim and excluded from state
     (they can never collide)."""
+    from ..operators.dedup import banded_candidates, connected_components
 
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        from ..operators.dedup import banded_candidates, connected_components
-
-        if epoch_id <= rollup_applied_epoch(target_path, run_id):
-            return  # replayed epoch: already folded in
-        spark = batch.sparkSession
+    def fold(batch: DataFrame, state: DataFrame | None) -> DataFrame:
         sigs = minhash_signatures(batch).localCheckpoint(eager=True)
         bands = _sig_bands(sigs)
 
@@ -709,8 +711,7 @@ def make_minhash_dedup_merge_batch(target_path: str, run_id: str | None = None):
             .filter(_mh_agreement("sa", "sb") >= MIN_MH_MATCH)
             .select("doc1", "doc2")
         )
-        if os.path.islink(target_path):
-            state = spark.read.parquet(target_path)
+        if state is not None:
             sbands = _sig_bands(state)
             # batch-probes-state collisions through the same salted path
             # (two-frame form): the left/batch side keys the salt split,
@@ -735,7 +736,6 @@ def make_minhash_dedup_merge_batch(target_path: str, run_id: str | None = None):
                 .distinct()
             )
         else:
-            state = None
             ext_all = verified.select(
                 F.col("doc1").alias("doc_id"),
                 F.lit(None).cast("long").alias("cand_canon"),
@@ -789,27 +789,10 @@ def make_minhash_dedup_merge_batch(target_path: str, run_id: str | None = None):
                     ),
                 )
             )
-            merged = state2.unionByName(new_rows.select(*state.columns))
-        else:
-            merged = new_rows
-        commit_epoch_version(target_path, epoch_id, merged, run_id)
+            return state2.unionByName(new_rows.select(*state.columns))
+        return new_rows
 
-    return merge_batch
-
-
-def stream_dedup_minhash_history(
-    docs_stream: DataFrame, target_path: str, checkpoint: str
-):
-    """Run the unbounded-history near-dup dedup as an availableNow
-    foreachBatch query over a documents-shaped stream."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            make_minhash_dedup_merge_batch(target_path, run_id=checkpoint)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_merge_batch(target_path, fold, run_id)
 
 
 def minhash_components_batch(docs: DataFrame) -> DataFrame:
@@ -866,10 +849,7 @@ def make_histogram_merge_batch(target_path: str, run_id: str | None = None):
     hundred rows), independent of stream length."""
     from ..operators.aggregates import HDR_SUB
 
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        if epoch_id <= rollup_applied_epoch(target_path, run_id):
-            return  # replayed epoch: already folded in
+    def fold(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
         cents = F.greatest(
             scaled_long(F.col("value"), 100), F.lit(1)
         )
@@ -889,40 +869,9 @@ def make_histogram_merge_batch(target_path: str, run_id: str | None = None):
         delta = b.groupBy(
             (F.col("e") * HDR_SUB + F.col("m")).alias("bucket_id")
         ).agg(F.count(F.lit(1)).alias("cnt"))
-        if os.path.islink(target_path):
-            prev = spark.read.parquet(target_path).select(
-                "bucket_id", F.col("cnt").alias("p_cnt")
-            )
-            merged = (
-                delta.join(prev, "bucket_id", "full_outer")
-                .select(
-                    "bucket_id",
-                    (
-                        F.coalesce(F.col("cnt"), F.lit(0))
-                        + F.coalesce(F.col("p_cnt"), F.lit(0))
-                    ).alias("cnt"),
-                )
-            )
-        else:
-            merged = delta
-        commit_epoch_version(target_path, epoch_id, merged, run_id)
+        return add_into(delta, prior, ["bucket_id"])
 
-    return merge_batch
-
-
-def stream_quantile_histogram(
-    events_stream: DataFrame, target_path: str, checkpoint: str
-):
-    """Run the incremental HDR histogram as an availableNow foreachBatch
-    query over an events-shaped stream."""
-    return (
-        events_stream.writeStream.foreachBatch(
-            make_histogram_merge_batch(target_path, run_id=checkpoint)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_merge_batch(target_path, fold, run_id)
 
 
 # ---------------------------------------------------------------------------
@@ -936,7 +885,7 @@ def make_curation_merge_batch(target_path: str, run_id: str | None = None):
     text_classifier_score kernel), (2) exact-deduped WITHIN the batch
     (keep lowest doc_id per content hash), (3) anti-joined against the
     accumulated kept-corpus state so nothing already kept re-enters, and
-    (4) appended through the epoch-stamped atomic commit. First arrival
+    (4) appended through fold_epoch's atomic commit. First arrival
     wins across batches (with ascending doc_id batches this equals the
     batch pipeline's keep-lowest rule — asserted in tests).
 
@@ -947,10 +896,7 @@ def make_curation_merge_batch(target_path: str, run_id: str | None = None):
     from ..operators.textstats import qc_sum_w
     from ..operators.dedup import tokens
 
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        if epoch_id <= rollup_applied_epoch(target_path, run_id):
-            return  # replayed epoch: already folded in
+    def fold(batch: DataFrame, state: DataFrame | None) -> DataFrame:
         toks = tokens(F.col("text"))
         gated = (
             batch.select(
@@ -966,34 +912,9 @@ def make_curation_merge_batch(target_path: str, run_id: str | None = None):
             F.min_by("n_tokens", "doc_id").alias("n_tokens"),
             F.min_by("sum_w", "doc_id").alias("sum_w"),
         )
-        if os.path.islink(target_path):
-            state = spark.read.parquet(target_path)
-            fresh = first.join(
-                state.select("content_hash"), "content_hash", "anti"
-            )
-            merged = state.unionByName(
-                fresh.select(*state.columns)
-            )
-        else:
-            merged = first.select(
-                "content_hash", "doc_id", "n_tokens", "sum_w"
-            )
-        commit_epoch_version(target_path, epoch_id, merged, run_id)
+        return append_unseen(first, state, "content_hash")
 
-    return merge_batch
-
-
-def stream_curation(docs_stream: DataFrame, target_path: str, checkpoint: str):
-    """Run the incremental curation as an availableNow foreachBatch query
-    over a documents-shaped stream."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            make_curation_merge_batch(target_path, run_id=checkpoint)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_merge_batch(target_path, fold, run_id)
 
 
 # --- incremental linear attribution ----------------------------------------
@@ -1021,29 +942,19 @@ def make_attribution_merge_batch(
     equals the batch operator's output, asserted in tests.
 
     Two state components (``<target>_rollup``, ``<target>_touch``), each
-    epoch-stamped and run-scoped independently; the delta is computed
-    from the PREVIOUS touch state, so a crash between the two commits
-    replays consistently (rollup skips its applied epoch, touch re-commits
-    the same value)."""
+    folded through fold_epoch (epoch-stamped and run-scoped
+    independently). The rollup commits first, inside the touch fold, and
+    credits against the PREVIOUS touch state, so a crash between the two
+    commits replays consistently (the rollup skips its applied epoch, the
+    touch state re-commits the same value)."""
+    from pyspark.sql.window import Window as W
+
     from .batch_windows import ATTR_WINDOW_S
 
     rollup_t = target_path + "_rollup"
     touch_t = target_path + "_touch"
 
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        b_touch = batch.filter(
-            F.col("event_type").isin("click", "view")
-        ).select(
-            F.col("event_id").alias("t_id"),
-            F.col("user_id").alias("t_user"),
-            F.col("ts").alias("t_ts"),
-            F.col("event_type").alias("t_type"),
-        )
-        if os.path.islink(touch_t):
-            hist = spark.read.parquet(touch_t).unionByName(b_touch)
-        else:
-            hist = b_touch
+    def credit_delta(batch: DataFrame, hist: DataFrame) -> DataFrame:
         p = batch.filter(F.col("event_type") == "purchase").select(
             F.col("event_id").alias("p_id"),
             "user_id",
@@ -1062,8 +973,6 @@ def make_attribution_merge_batch(
             (F.col("user_id") == F.col("t_user")) & before & age_ok,
             "left",
         )
-        from pyspark.sql.window import Window as W
-
         c = j.select(
             "p_id",
             "cents",
@@ -1077,7 +986,7 @@ def make_attribution_merge_batch(
         credit = F.when(
             F.col("t_id").isNull(), F.col("cents") * 1000000
         ).otherwise(F.expr("(cents * 1000000L) div n_touches"))
-        delta = (
+        return (
             c.select("p_id", "touch_type", credit.alias("credit"))
             .groupBy("touch_type")
             .agg(
@@ -1086,54 +995,34 @@ def make_attribution_merge_batch(
                 F.sum("credit").alias("credited_microcents"),
             )
         )
-        if epoch_id > rollup_applied_epoch(rollup_t, run_id):
-            if os.path.islink(rollup_t):
-                prev = spark.read.parquet(rollup_t).select(
-                    "touch_type",
-                    F.col("n_purchases").alias("pp"),
-                    F.col("n_credits").alias("pc"),
-                    F.col("credited_microcents").alias("pm"),
-                )
-                merged = delta.join(prev, "touch_type", "full_outer").select(
-                    "touch_type",
-                    (
-                        F.coalesce("n_purchases", F.lit(0))
-                        + F.coalesce("pp", F.lit(0))
-                    ).alias("n_purchases"),
-                    (
-                        F.coalesce("n_credits", F.lit(0))
-                        + F.coalesce("pc", F.lit(0))
-                    ).alias("n_credits"),
-                    (
-                        F.coalesce("credited_microcents", F.lit(0))
-                        + F.coalesce("pm", F.lit(0))
-                    ).alias("credited_microcents"),
-                )
-            else:
-                merged = delta
-            commit_epoch_version(rollup_t, epoch_id, merged, run_id)
-        if epoch_id > rollup_applied_epoch(touch_t, run_id):
+
+    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
+        def fold_touch(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
+            b_touch = batch.filter(
+                F.col("event_type").isin("click", "view")
+            ).select(
+                F.col("event_id").alias("t_id"),
+                F.col("user_id").alias("t_user"),
+                F.col("ts").alias("t_ts"),
+                F.col("event_type").alias("t_type"),
+            )
+            hist = b_touch if prior is None else prior.unionByName(b_touch)
+            fold_epoch(
+                rollup_t,
+                batch,
+                epoch_id,
+                lambda b, rollup: add_into(
+                    credit_delta(b, hist), rollup, ["touch_type"]
+                ),
+                run_id,
+            )
             horizon = hist.agg(F.max("t_ts").alias("mx"))
-            pruned = hist.join(F.broadcast(horizon)).filter(
+            return hist.join(F.broadcast(horizon)).filter(
                 F.col("t_ts").cast("double")
                 >= F.col("mx").cast("double")
                 - (ATTR_WINDOW_S + ATTR_LATE_SLACK_S)
             ).drop("mx")
-            commit_epoch_version(touch_t, epoch_id, pruned, run_id)
+
+        fold_epoch(touch_t, batch, epoch_id, fold_touch, run_id)
 
     return merge_batch
-
-
-def stream_attribution_linear(
-    events: DataFrame, target_path: str, checkpoint: str
-) -> StreamingQuery:
-    """Run incremental linear attribution as an availableNow foreachBatch
-    query over an events-shaped stream."""
-    return (
-        events.writeStream.foreachBatch(
-            make_attribution_merge_batch(target_path, run_id=checkpoint)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

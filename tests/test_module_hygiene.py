@@ -90,3 +90,57 @@ def test_struct_argmax_only_in_top1():
         "min/max over a struct outside functions/top1.py (use top1.Top1): "
         + ", ".join(offenders)
     )
+
+
+# the epoch-fold sink (streaming/stream_ops.py): the only functions that may
+# check the replay guard, commit an epoch or start a foreachBatch query
+EPOCH_FOLD_OWNERS = {"fold_epoch", "start_foreach_batch"}
+EPOCH_FOLD_CALLS = {
+    "rollup_applied_epoch", "commit_epoch_version", "foreachBatch"
+}
+
+
+def _epoch_fold_calls(path: str) -> list[tuple[str | None, int]]:
+    """(enclosing top-level function, line) of every call to the replay
+    guard, the epoch commit or ``.foreachBatch``."""
+    found = []
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            if owner is None and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = (
+                    f.id if isinstance(f, ast.Name)
+                    else f.attr if isinstance(f, ast.Attribute)
+                    else None
+                )
+                if name in EPOCH_FOLD_CALLS:
+                    found.append((owner, child.lineno))
+            visit(child, owner)
+
+    visit(ast.parse(open(path).read()), None)
+    return found
+
+
+def test_epoch_fold_only_in_shared_sink():
+    """Every foreachBatch maintainer folds through stream_ops.fold_epoch
+    (replay guard → prior read → fold → commit) and starts through
+    stream_ops.start_foreach_batch; a maintainer that spells the guard,
+    the commit or the starter itself drifts from the one contract."""
+    own = os.path.join(PKG, "streaming", "stream_ops.py")
+    offenders = [
+        f"{os.path.relpath(path, PKG)}:{line}"
+        for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+        for owner, line in _epoch_fold_calls(path)
+        if path != own or owner not in EPOCH_FOLD_OWNERS
+    ]
+    assert not offenders, (
+        "replay guard / epoch commit / foreachBatch outside"
+        " stream_ops.fold_epoch and start_foreach_batch: "
+        + ", ".join(offenders)
+    )

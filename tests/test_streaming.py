@@ -4,6 +4,7 @@ dedup / foreachBatch-merge, driven synchronously with availableNow."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -303,53 +304,173 @@ def test_hourly_rollup_incremental_equals_batch(spark, tmp_path):
     assert daily == direct
 
 
-def test_hourly_rollup_replay_is_idempotent(spark, tmp_path):
-    """At-least-once replay safety: re-applying a micro-batch with an
-    already-committed epoch_id must be a no-op (the additive merge would
-    otherwise double-count), and the epoch marker must ride the atomic
-    symlink swap. Simulates the crash-between-write-and-checkpoint retry
-    by calling the foreachBatch function directly with repeated epochs."""
-    target = str(tmp_path / "hourly")
-    merge = stream_ops.make_hourly_merge_batch(target)
+# state schema per maintainer component (suffix of the target path)
+REPLAY_STATE_SCHEMAS = {
+    "upsert": {
+        "": "struct<user_id:bigint,n_events:bigint,last_event_id:bigint>",
+    },
+    "hourly": {
+        "": "struct<hour:timestamp,event_type:string,n_events:bigint,"
+        "value_cents:bigint>",
+    },
+    "scd2": {
+        "": "struct<id:bigint,seg:string,valid_from:timestamp,"
+        "valid_to:timestamp,is_current:boolean>",
+    },
+    "dedup": {"": "struct<content_hash:string,doc_id:bigint>"},
+    "minhash_dedup": {
+        "": "struct<doc_id:bigint,"
+        + "".join(f"mh{j}:string," for j in range(8))
+        + "canonical_id:bigint>",
+    },
+    "histogram": {"": "struct<bucket_id:bigint,cnt:bigint>"},
+    "curation": {
+        "": "struct<content_hash:string,doc_id:bigint,n_tokens:bigint,"
+        "sum_w:bigint>",
+    },
+    "attribution": {
+        "_rollup": "struct<touch_type:string,n_purchases:bigint,"
+        "n_credits:bigint,credited_microcents:bigint>",
+        "_touch": "struct<t_id:bigint,t_user:bigint,t_ts:timestamp,"
+        "t_type:string>",
+    },
+}
+
+
+def _replay_case(spark, name, target):
+    """(foreachBatch merge, epoch-0 batch, epoch-1 batch) for one
+    maintainer; the SCD2 case also writes its seed dimension."""
+    import datetime as dt
+
     events = load(spark, SF, "events")
-    b0 = events.filter(F.col("event_id") % 2 == 0)
-    b1 = events.filter(F.col("event_id") % 2 == 1)
+    docs = load(spark, SF, "documents").select("doc_id", "text")
+    if name == "scd2":
+        from repcheck_data_integration_spark.operators.temporal import (
+            HIGH_DATE,
+        )
+
+        high = dt.datetime.fromisoformat(HIGH_DATE.replace(" ", "T"))
+        spark.createDataFrame(
+            [(k, "A", dt.datetime(2020, 1, 1), high, True) for k in (1, 2, 3)],
+            "id long, seg string, valid_from timestamp, valid_to timestamp,"
+            " is_current boolean",
+        ).write.parquet(target)
+        upd = "id long, seg string, eff timestamp"
+        return (
+            stream_ops.make_scd2_merge_batch(
+                target, key="id", effective_col="eff", compare_cols=["seg"]
+            ),
+            spark.createDataFrame([(1, "X", dt.datetime(2024, 1, 1))], upd),
+            spark.createDataFrame(
+                [(1, "Y", dt.datetime(2024, 6, 1)),
+                 (4, "N", dt.datetime(2024, 6, 1))],
+                upd,
+            ),
+        )
+    make, frame, key = {
+        "upsert": (stream_ops.make_upsert_merge_batch, events, "event_id"),
+        "hourly": (stream_ops.make_hourly_merge_batch, events, "event_id"),
+        "dedup": (stream_ops.make_dedup_merge_batch, docs, "doc_id"),
+        "minhash_dedup": (
+            stream_ops.make_minhash_dedup_merge_batch, docs, "doc_id"
+        ),
+        "histogram": (
+            stream_ops.make_histogram_merge_batch, events, "event_id"
+        ),
+        "curation": (stream_ops.make_curation_merge_batch, docs, "doc_id"),
+        "attribution": (
+            stream_ops.make_attribution_merge_batch, events, "event_id"
+        ),
+    }[name]
+    return (
+        make(target),
+        frame.filter(F.col(key) % 2 == 0),
+        frame.filter(F.col(key) % 2 == 1),
+    )
+
+
+@pytest.mark.parametrize("name", sorted(REPLAY_STATE_SCHEMAS))
+def test_maintainer_replay_is_idempotent(spark, tmp_path, name):
+    """At-least-once replay safety for every foreachBatch maintainer:
+    re-applying a micro-batch with an already-committed epoch_id must be a
+    no-op (an additive fold would otherwise double-count), for every state
+    component, and the epoch marker must ride the atomic symlink swap.
+    Simulates the crash-between-write-and-checkpoint retry by calling the
+    foreachBatch function directly with repeated epochs."""
+    target = str(tmp_path / name)
+    merge, b0, b1 = _replay_case(spark, name, target)
+    schemas = REPLAY_STATE_SCHEMAS[name]
+
+    def state():
+        return {
+            sfx: sorted(spark.read.parquet(target + sfx).collect(), key=repr)
+            for sfx in schemas
+        }
 
     merge(b0, 0)
-    assert stream_ops.rollup_applied_epoch(target) == 0
-    once = sorted(map(tuple, spark.read.parquet(target).collect()))
-
+    once = state()
     merge(b0, 0)  # replay of epoch 0 → must not double-apply
-    assert sorted(map(tuple, spark.read.parquet(target).collect())) == once
+    assert state() == once
+    for sfx in schemas:
+        assert stream_ops.rollup_applied_epoch(target + sfx) == 0
 
     merge(b1, 1)
-    assert stream_ops.rollup_applied_epoch(target) == 1
-    after1 = sorted(map(tuple, spark.read.parquet(target).collect()))
+    for sfx in schemas:
+        assert stream_ops.rollup_applied_epoch(target + sfx) == 1
+    after1 = state()
+    assert after1 != once
     merge(b1, 1)  # replay of epoch 1 likewise
+    assert state() == after1
     merge(b0, 0)  # stale epoch replayed out of order likewise
-    assert sorted(map(tuple, spark.read.parquet(target).collect())) == after1
+    assert state() == after1
 
-    # the merged rollup equals the one-shot batch aggregate
-    expected = sorted(
-        map(
-            tuple,
-            events.groupBy(
-                F.date_trunc("hour", "ts").alias("hour"), "event_type"
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias(
-                    "value_cents"
-                ),
-            )
-            .collect(),
-        )
+    for sfx, schema in schemas.items():
+        path = target + sfx
+        assert spark.read.parquet(path).schema.simpleString() == schema
+        # no stale tmp artifacts; live version + one superseded (reader grace)
+        assert not os.path.exists(path + ".tmp")
+        vers = [
+            d for d in os.listdir(path + ".versions") if d.startswith("epoch=")
+        ]
+        assert len(vers) == 1 + stream_ops.KEEP_SUPERSEDED_VERSIONS
+
+
+def test_plain_directory_prior_state_is_folded(spark, tmp_path):
+    """One prior-state rule: a plain parquet directory at the target (the
+    seed form) is read like a committed epoch. A batch repeating seeded
+    content keeps it excluded, and the seeded row survives the commit that
+    replaces the directory with the epoch symlink. A maintainer that needs
+    a prior state and finds none fails with a named error."""
+    import hashlib
+
+    target = str(tmp_path / "seen")
+    docs = "doc_id long, text string"
+    spark.createDataFrame([(7, "alpha")], docs).select(
+        F.md5("text").alias("content_hash"), "doc_id"
+    ).write.parquet(target)
+    stream_ops.make_dedup_merge_batch(target)(
+        spark.createDataFrame([(1, "alpha"), (2, "beta")], docs), 0
     )
-    assert after1 == expected
-    # no stale tmp artifacts; live version + one superseded (reader grace)
-    assert not os.path.exists(target + ".tmp")
-    vers = [d for d in os.listdir(target + ".versions") if d.startswith("epoch=")]
-    assert len(vers) == 1 + stream_ops.KEEP_SUPERSEDED_VERSIONS
+    got = {
+        (r["content_hash"], r["doc_id"])
+        for r in spark.read.parquet(target).collect()
+    }
+    md5 = {t: hashlib.md5(t.encode()).hexdigest() for t in ("alpha", "beta")}
+    assert got == {(md5["alpha"], 7), (md5["beta"], 2)}
+    assert os.path.islink(target)
+
+    no_dim = str(tmp_path / "no_dim")
+    merge = stream_ops.make_scd2_merge_batch(
+        no_dim, key="id", effective_col="eff", compare_cols=["seg"]
+    )
+    missing = re.escape(f"no seed dimension at {no_dim}")
+    with pytest.raises(ValueError, match=missing):
+        merge(
+            spark.createDataFrame(
+                [(1, "X", None)], "id long, seg string, eff timestamp"
+            ),
+            0,
+        )
 
 
 def test_stream_scd2_incremental_equals_batch(spark, tmp_path):
