@@ -32,9 +32,13 @@ from window_audit import plan_only_frames  # noqa: E402
 
 # Run-dependent text in a plan string: expression ids, the plan ids of
 # exchanges inside cached physical plans, the per-process suffix of
-# tables.load_bucketed table names, and absolute file paths.
+# tables.load_bucketed table names, absolute file paths, and the
+# process-wide counters in the fresh names of lambda variables and of
+# common-subexpression aliases (they depend on how many queries were built
+# before this one, so on registration order).
 _NORMALIZE = (
     (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"(lambda [A-Za-z]+|_common_expr)_\d+"), r"\1"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"(bkt_\w+?)_p\d+\b"), r"\1"),
     (re.compile(r"(?:file:)?(?<![\w.])/[\w.\-=]+(?:/[\w.\-=]+)*"), "<path>"),
