@@ -177,15 +177,6 @@ HEADLINE = [
     "agg_percentile_exact_distributed",
 ]
 
-# Rows added in round 9 — excluded from the same-set subtotal so the
-# round-over-round diff (VERDICT r8 #8) compares identical query sets.
-_R9_ADDITIONS = {
-    "split_leakage_safe",
-    "dq_split_contamination",
-    "agg_percentile_exact_distributed",
-}
-
-
 def drain(df) -> None:
     """Fully materialize every output column JVM-side. A bare .count() lets
     Catalyst prune the final projections (pure-map queries would be timed
@@ -285,11 +276,6 @@ def main() -> None:
         "unit": "sec",
         "queries": {k: v for k, v in slowest},
         "n_queries": len(per_query),
-        # subtotal over the round-8 HEADLINE set (r9 additions excluded)
-        # so BENCH_r09 vs BENCH_r08 compares identical sets
-        "value_r8_set": round(
-            sum(v for k, v in per_query.items() if k not in _R9_ADDITIONS), 3
-        ),
         "fixed_costs": fixed,
         "fixed_costs_warmup_sf_total": warmup_fixed,
         "sf": float(sf) if sf else None,

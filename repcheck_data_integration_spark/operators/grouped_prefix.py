@@ -31,7 +31,7 @@ Two helpers, both generalizing operators/prefix.py to grouped inputs:
   bucket offsets (same three-level scan), then a count-over-frame
   window partitioned by (group, bucket). Optional [lo, hi] rank-range
   pruning filters to the straddling buckets BEFORE the window — the
-  bucketed-selection shape of statsml2._median_center_avg, grouped.
+  bucketed-selection shape of timeseries._median_center_avg, grouped.
 
 Contract: the GROUP domain must be bounded (priorities, dims, sources,
 labels — never a per-entity key); the per-group min/max/count probe and

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load
+from .sampling import hash_bucket, sql_hash_bucket
 
 
 @register(
@@ -157,8 +158,6 @@ def join_map_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # join_cidr_lookup — longest-prefix-match IP routing as equi-join cascade
 # --------------------------------------------------------------------------
-
-from .sampling import hash_bucket, sql_hash_bucket  # noqa: E402
 
 # client IPs are hashed 28-bit values (top octet in [0, 16)), so the
 # derived 10.x.0.0 networks below receive real traffic; md5 is the house

@@ -10,12 +10,13 @@ an exception buried in a driver loop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..functions.exact import scaled_long
 from ..tables import load
+from .dedup import sql_stable_round4, stable_round4
 
 
 @register(
@@ -833,3 +834,162 @@ def dq_rater_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 10000.0
         ).alias("fleiss_kappa"),
     )
+
+
+# --------------------------------------------------------------------------
+# dq_t_closeness
+# --------------------------------------------------------------------------
+
+TC_BUCKETS = 10
+TC_WIDTH = 50000.0
+TC_THRESHOLD = 0.2
+
+
+@register(
+    "dq_t_closeness",
+    oracle=f"""
+    WITH base AS (
+        SELECT o_orderpriority, o_orderstatus,
+               CAST(least(floor(o_totalprice / {TC_WIDTH!r}),
+                          {TC_BUCKETS - 1}) AS INT) AS b
+        FROM orders),
+    gcnt AS (
+        SELECT o_orderpriority, o_orderstatus, b, count(*) AS c
+        FROM base GROUP BY 1, 2, 3),
+    grp AS (
+        SELECT o_orderpriority, o_orderstatus, count(*) AS n_g
+        FROM base GROUP BY 1, 2),
+    gall AS (SELECT b, count(*) AS cg FROM base GROUP BY 1),
+    tot AS (SELECT count(*) AS n FROM base),
+    dense AS (
+        SELECT g.o_orderpriority, g.o_orderstatus, g.n_g, s.i AS b
+        FROM grp g CROSS JOIN generate_series(0, {TC_BUCKETS - 1}) s(i)),
+    filled AS (
+        SELECT d.o_orderpriority, d.o_orderstatus, d.n_g, d.b,
+               COALESCE(gc.c, 0) AS c, COALESCE(gl.cg, 0) AS cg
+        FROM dense d
+        LEFT JOIN gcnt gc ON gc.o_orderpriority = d.o_orderpriority
+                         AND gc.o_orderstatus = d.o_orderstatus
+                         AND gc.b = d.b
+        LEFT JOIN gall gl ON gl.b = d.b),
+    cum AS (
+        SELECT o_orderpriority, o_orderstatus, n_g, b,
+               sum(c) OVER (PARTITION BY o_orderpriority, o_orderstatus
+                            ORDER BY b) AS cq,
+               sum(cg) OVER (PARTITION BY o_orderpriority, o_orderstatus
+                             ORDER BY b) AS cp
+        FROM filled),
+    emd AS (
+        SELECT o_orderpriority, o_orderstatus, n_g, t.n,
+               sum(abs(cq * t.n - cp * n_g)) AS ssum
+        FROM cum CROSS JOIN tot t
+        WHERE b < {TC_BUCKETS - 1}
+        GROUP BY 1, 2, 3, 4)
+    SELECT o_orderpriority, o_orderstatus,
+           CAST(n_g AS BIGINT) AS n_rows,
+           {sql_stable_round4(
+               f'CAST(ssum AS DOUBLE) / (CAST(n_g AS DOUBLE)'
+               f' * CAST(n AS DOUBLE) * {float(TC_BUCKETS - 1)!r})')}
+               AS emd,
+           CAST(CASE WHEN {sql_stable_round4(
+               f'CAST(ssum AS DOUBLE) / (CAST(n_g AS DOUBLE)'
+               f' * CAST(n AS DOUBLE) * {float(TC_BUCKETS - 1)!r})')}
+               > {TC_THRESHOLD} THEN 1 ELSE 0 END AS INT) AS t_violation
+    FROM emd
+    ORDER BY o_orderpriority, o_orderstatus
+    """,
+)
+def dq_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """t-closeness audit (Li et al., ICDE 2007) over the quasi-identifier
+    (o_orderpriority, o_orderstatus) with o_totalprice as the ordered
+    sensitive attribute: per equivalence class, the Earth Mover's Distance
+    between the class's bucketed price distribution and the global one,
+    EMD = (1/(m-1)) * sum_i |cumQ_i - cumP_i| over the first m-1 buckets.
+
+    Completes this module's dq_k_anonymity / dq_l_diversity family — k and
+    l bound re-identification and attribute diversity, t bounds attribute
+    DISCLOSURE (a class whose salary distribution mirrors the global one
+    reveals nothing even at l=1).
+
+    Determinism: cumulative fractions are rationals, so the |cumQ - cumP|
+    terms are computed cross-multiplied in integers (|cq*n - cp*n_g|) and
+    summed exactly; one double division at the end, then stable_round4.
+    The violation flag compares the ROUNDED value so both engines flag
+    identically at the boundary. Scale shape: two grouped counts + a
+    (groups x m) densify cross join (m=10 constant) + an m-row window per
+    group — cost is O(|groups| * m) after the counts, nothing rescans the
+    fact table.
+    """
+    o = load(spark, sf_dir, "orders")
+    base = o.select(
+        "o_orderpriority",
+        "o_orderstatus",
+        F.least(
+            F.floor(F.col("o_totalprice") / F.lit(TC_WIDTH)),
+            F.lit(TC_BUCKETS - 1),
+        )
+        .cast("int")
+        .alias("b"),
+    )
+    gcnt = base.groupBy("o_orderpriority", "o_orderstatus", "b").agg(
+        F.count("*").alias("c")
+    )
+    grp = base.groupBy("o_orderpriority", "o_orderstatus").agg(
+        F.count("*").alias("n_g")
+    )
+    glob = base.groupBy("b").agg(F.count("*").alias("cg"))
+    tot = base.agg(F.count("*").alias("n"))
+    dense = grp.select(
+        "o_orderpriority",
+        "o_orderstatus",
+        "n_g",
+        F.explode(F.sequence(F.lit(0), F.lit(TC_BUCKETS - 1))).alias("b"),
+    )
+    filled = (
+        dense.join(gcnt, ["o_orderpriority", "o_orderstatus", "b"], "left")
+        .join(F.broadcast(glob), "b", "left")
+        .select(
+            "o_orderpriority",
+            "o_orderstatus",
+            "n_g",
+            "b",
+            F.coalesce("c", F.lit(0)).alias("c"),
+            F.coalesce("cg", F.lit(0)).alias("cg"),
+        )
+    )
+    wcum = (
+        W.partitionBy("o_orderpriority", "o_orderstatus")
+        .orderBy("b")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    cum = filled.withColumn("cq", F.sum("c").over(wcum)).withColumn(
+        "cp", F.sum("cg").over(wcum)
+    )
+    emd = (
+        cum.crossJoin(F.broadcast(tot))
+        .filter(F.col("b") < TC_BUCKETS - 1)
+        .groupBy("o_orderpriority", "o_orderstatus", "n_g", "n")
+        .agg(
+            F.sum(
+                F.abs(F.col("cq") * F.col("n") - F.col("cp") * F.col("n_g"))
+            ).alias("ssum")
+        )
+    )
+    emd_val = stable_round4(
+        F.col("ssum").cast("double")
+        / (
+            F.col("n_g").cast("double")
+            * F.col("n").cast("double")
+            * F.lit(float(TC_BUCKETS - 1))
+        )
+    )
+    return emd.select(
+        "o_orderpriority",
+        "o_orderstatus",
+        F.col("n_g").cast("long").alias("n_rows"),
+        emd_val.alias("emd"),
+        F.when(emd_val > TC_THRESHOLD, F.lit(1))
+        .otherwise(F.lit(0))
+        .cast("int")
+        .alias("t_violation"),
+    ).orderBy("o_orderpriority", "o_orderstatus")

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..registry import register
+from ..registry import ORACLE, register
 from ..tables import load
 from .dedup import sql_stable_round4, stable_round4
 
@@ -389,8 +389,6 @@ EPOCH_CAP = 4.0  # max repeats per source (public rule of thumb: ~4 epochs)
 
 
 def _epoch_schedule_oracle() -> str:
-    from ..registry import ORACLE
-
     hash_ep = sql_hash_bucket("CAST(doc_id AS VARCHAR) || '#ep'", 10000)
     return f"""
     WITH w AS ({ORACLE["mix_temperature_weights"]}),
@@ -926,8 +924,6 @@ _BLEND = (
 
 
 def _annealing_oracle() -> str:
-    from ..registry import ORACLE
-
     return f"""
     WITH q AS ({ORACLE["text_quality_score"]}),
     j AS (
@@ -1203,11 +1199,10 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # splice the registered components oracle in (decoration-time f-strings
-# can't nest the brace-heavy recursive CTE — the llm_hybrid_rrf pattern)
-from ..registry import ORACLE as _ORACLE  # noqa: E402
-
-_ORACLE["split_leakage_safe"] = _ORACLE["split_leakage_safe"].replace(
-    "__COMPONENTS__", _ORACLE["dedup_components"]
+# can't nest the brace-heavy recursive CTE — the llm_hybrid_rrf pattern);
+# dedup_components is registered by the .dedup import at the top
+ORACLE["split_leakage_safe"] = ORACLE["split_leakage_safe"].replace(
+    "__COMPONENTS__", ORACLE["dedup_components"]
 )
 
 
@@ -1323,6 +1318,6 @@ def dq_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE["dq_split_contamination"] = _ORACLE["dq_split_contamination"].replace(
-    "__COMPONENTS__", _ORACLE["dedup_components"]
+ORACLE["dq_split_contamination"] = ORACLE["dq_split_contamination"].replace(
+    "__COMPONENTS__", ORACLE["dedup_components"]
 )

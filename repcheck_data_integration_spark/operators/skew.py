@@ -20,8 +20,13 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..registry import register
+from ..functions.exact import scaled_long
+from ..tables import load
+from .aggregates import SQL_SCALED
 
 
 def salted(df: DataFrame, n_salts: int, salt_col: str = "__salt") -> DataFrame:
@@ -89,13 +94,6 @@ def write_bucketed(
 # ---------------------------------------------------------------------------
 # Registered demo queries (oracle-backed): the levers as first-class ops
 # ---------------------------------------------------------------------------
-
-from pyspark.sql import SparkSession  # noqa: E402
-
-from ..registry import register  # noqa: E402
-from ..functions.exact import scaled_long
-from ..tables import load  # noqa: E402
-from .aggregates import SQL_SCALED  # noqa: E402
 
 
 @register(

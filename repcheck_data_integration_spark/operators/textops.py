@@ -30,7 +30,14 @@ from ..functions.top1 import ASC, DESC, Top1
 from ..registry import register
 from ..tables import literal_frame, load
 from .ckpt import pin
-from .dedup import TOKEN_RE, sql_stable_round4, stable_round4, tokens
+from .dedup import (
+    SQL_SHINGLES,
+    TOKEN_RE,
+    shingles_from_tokens,
+    sql_stable_round4,
+    stable_round4,
+    tokens,
+)
 
 EMAIL_RE = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
 PHONE_RE = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
@@ -2736,8 +2743,6 @@ def text_watermark_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # text_source_overlap_matrix — pairwise source-level shingle containment
 # --------------------------------------------------------------------------
-
-from .dedup import SQL_SHINGLES, shingles_from_tokens  # noqa: E402
 
 
 @register(

@@ -151,12 +151,11 @@ def load_all_modules() -> None:
         textops,
         skew,
         sampling,
-        statsml,
-        statsml2,
-        statsml3,
-        statsml4,
-        statsml5,
-        statsml6,
+        models,
+        evaluation,
+        hypothesis,
+        timeseries,
+        privacy,
     )
     from .functions import scalar_queries  # noqa: F401
     from .sources import file_sources, pyds  # noqa: F401

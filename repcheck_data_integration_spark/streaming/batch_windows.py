@@ -20,7 +20,9 @@ from pyspark.sql.window import Window as W
 from ..registry import register
 from ..functions.exact import scaled_long
 from ..functions.top1 import ASC, DESC, Top1
-from ..tables import load
+from ..operators.ckpt import pin
+from ..operators.dedup import sql_stable_round4
+from ..tables import literal_frame, load
 
 TUMBLE_S = 600
 SLIDE_S = 300
@@ -2450,3 +2452,556 @@ def events_sequence_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("longest_view_run"),
     ).orderBy("user_id")
+
+
+# --------------------------------------------------------------------------
+# events_entropy_rate — Markov conditional entropy of the event stream
+# --------------------------------------------------------------------------
+
+ER_SCALE = 1_000_000
+
+
+@register(
+    "events_entropy_rate",
+    oracle=f"""
+    WITH seq AS (
+        SELECT user_id, event_type,
+               lag(event_type) OVER (
+                   PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
+        FROM events),
+    tr AS (SELECT prev_type, event_type AS next_type FROM seq
+           WHERE prev_type IS NOT NULL),
+    pc AS (SELECT prev_type, next_type, count(*) AS n
+           FROM tr GROUP BY 1, 2),
+    sc AS (SELECT prev_type, sum(n) AS ns,
+                  CAST(floor(sum(n) * ln(sum(n)) * {ER_SCALE}) AS BIGINT)
+                      AS q1,
+                  sum(CAST(floor(n * ln(n) * {ER_SCALE}) AS BIGINT)) AS q2,
+                  count(*) AS n_pairs
+           FROM pc GROUP BY prev_type),
+    t AS (SELECT sum(ns) AS big_n, count(*) AS n_states,
+                 sum(n_pairs) AS n_pairs,
+                 sum(q1) AS q1, sum(q2) AS q2
+          FROM sc)
+    SELECT CAST(big_n AS BIGINT) AS n_transitions,
+           CAST(n_states AS BIGINT) AS n_states,
+           CAST(n_pairs AS BIGINT) AS n_pairs,
+           floor(((q1 - q2) * 1.0 / {ER_SCALE} / big_n / ln(2))
+                 * 10000.0 + 0.5) / 10000.0 AS entropy_rate_bits,
+           floor((ln(n_states) / ln(2)) * 10000.0 + 0.5) / 10000.0
+               AS max_bits,
+           floor((1.0 - ((q1 - q2) * 1.0 / {ER_SCALE} / big_n)
+                        / nullif(ln(n_states), 0.0))
+                 * 10000.0 + 0.5) / 10000.0
+               AS predictability
+    FROM t
+    """,
+)
+def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Empirical entropy rate of the event stream as a first-order Markov
+    chain: H(next | prev) = (Σ_s n_s·ln n_s − Σ_st n_st·ln n_st) / N in
+    nats, reported in bits with the predictability index 1 − H/ln|S| —
+    the single-number summary of events_markov_transitions (how
+    predictable is user behavior overall?), used to decide whether a
+    sequence model is worth training on the stream at all (Song et al.,
+    Science 2010 popularized the same limit for mobility traces).
+
+    Determinism: the events_type_entropy discipline on the transition
+    alphabet — every float term is floor(c·ln c·1e6) quantized to an
+    integer per (prev,next) or per prev BEFORE summation, so shuffles
+    cannot reorder float adds; ln of identical integers is bit-identical
+    across engines; three final IEEE divisions through stable_round4
+    form.
+
+    Scale shape: one user-keyed shuffle for the lag, one hash aggregate
+    to the |S|² alphabet, then |S|-row and 1-row rollups — output is a
+    single row regardless of input size.
+    """
+    e = load(spark, sf_dir, "events")
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    tr = (
+        e.select(
+            "user_id",
+            "ts",
+            "event_id",
+            F.col("event_type").alias("next_type"),
+        )
+        .withColumn("prev_type", F.lag("next_type").over(w))
+        .filter(F.col("prev_type").isNotNull())
+    )
+    pc = tr.groupBy("prev_type", "next_type").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    qint = lambda c: F.floor(  # noqa: E731
+        c * F.log(c) * F.lit(ER_SCALE)
+    ).cast("long")
+    sc = pc.groupBy("prev_type").agg(
+        F.sum("n").alias("ns"),
+        F.sum(qint(F.col("n"))).alias("q2"),
+        F.count(F.lit(1)).alias("n_pairs"),
+    ).select(
+        "prev_type", "ns", qint(F.col("ns")).alias("q1"), "q2", "n_pairs"
+    )
+    t = sc.agg(
+        F.sum("ns").alias("big_n"),
+        F.count(F.lit(1)).alias("n_states"),
+        F.sum("n_pairs").alias("n_pairs"),
+        F.sum("q1").alias("q1"),
+        F.sum("q2").alias("q2"),
+    )
+    h_nats = (
+        (F.col("q1") - F.col("q2"))
+        * 1.0
+        / F.lit(ER_SCALE)
+        / F.col("big_n")
+    )
+    r4 = lambda c: F.floor(c * 10000.0 + 0.5) / 10000.0  # noqa: E731
+    return t.select(
+        F.col("big_n").cast("long").alias("n_transitions"),
+        F.col("n_states").cast("long").alias("n_states"),
+        F.col("n_pairs").cast("long").alias("n_pairs"),
+        r4(h_nats / F.log(F.lit(2.0))).alias("entropy_rate_bits"),
+        r4(F.log(F.col("n_states").cast("double")) / F.log(F.lit(2.0))).alias(
+            "max_bits"
+        ),
+        r4(
+            F.lit(1.0)
+            - h_nats
+            / F.expr("nullif(ln(CAST(n_states AS DOUBLE)), 0.0)")
+        ).alias("predictability"),
+    )
+
+
+# --------------------------------------------------------------------------
+# events_markov_stationary — fixed-point power iteration to pi
+# --------------------------------------------------------------------------
+
+MS_SCALE = 1_000_000
+
+
+@register(
+    "events_markov_stationary",
+    oracle=f"""
+    WITH seq AS (
+        SELECT user_id, event_type,
+               lag(event_type) OVER (
+                   PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
+        FROM events),
+    tr AS (SELECT prev_type, event_type AS next_type FROM seq
+           WHERE prev_type IS NOT NULL),
+    pc AS (SELECT prev_type, next_type, count(*) AS n
+           FROM tr GROUP BY 1, 2),
+    rs AS (SELECT prev_type, sum(n) AS ns FROM pc GROUP BY prev_type),
+    states AS (SELECT prev_type AS s FROM rs),
+    ns AS (SELECT count(*) AS k FROM states),
+    p0 AS (SELECT s AS node, CAST({MS_SCALE} AS BIGINT) // k AS r
+           FROM states CROSS JOIN ns),
+    p1 AS (
+        SELECT pc.next_type AS node,
+               sum((p0.r * pc.n) // rs.ns) AS r
+        FROM pc JOIN rs ON rs.prev_type = pc.prev_type
+                JOIN p0 ON p0.node = pc.prev_type
+        GROUP BY 1),
+    p2 AS (
+        SELECT pc.next_type AS node,
+               sum((p1.r * pc.n) // rs.ns) AS r
+        FROM pc JOIN rs ON rs.prev_type = pc.prev_type
+                JOIN p1 ON p1.node = pc.prev_type
+        GROUP BY 1),
+    emp AS (
+        SELECT next_type AS node, sum(n) AS cnt FROM pc GROUP BY 1),
+    tot AS (SELECT sum(cnt) AS t FROM emp)
+    SELECT p2.node AS state,
+           CAST(p2.r AS BIGINT) AS stationary_q,
+           CAST((emp.cnt * {MS_SCALE}) // tot.t AS BIGINT)
+               AS empirical_q
+    FROM p2 JOIN emp ON emp.node = p2.node CROSS JOIN tot
+    ORDER BY state
+    """,
+)
+def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stationary distribution of the event-type Markov chain: two exact
+    fixed-point power iterations π' = πP from the uniform start over the
+    transition matrix of events_markov_transitions, next to each state's
+    EMPIRICAL share — how far the chain's long-run behavior sits from
+    today's observed mix (the load-forecasting question: if users keep
+    behaving like this, what does steady-state traffic look like?).
+    Completes the Markov family: transitions (the matrix), entropy rate
+    (its information content), stationary (its fixed point).
+
+    Determinism: the graph_pagerank/graph_hits integer discipline —
+    probabilities in millionths, every update term the floor-divided
+    integer (π(s)·n_st) div n_s·, summed exactly; the oracle unrolls the
+    same two iterations as CTEs.
+
+    Scale shape: one user-keyed lag shuffle collapses the stream to the
+    |S|² alphabet; both iterations are joins over that tiny matrix —
+    cost is alphabet-, not event-, sized after the first aggregate.
+    """
+    e = load(spark, sf_dir, "events")
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    tr = (
+        e.select(
+            "user_id", "ts", "event_id",
+            F.col("event_type").alias("next_type"),
+        )
+        .withColumn("prev_type", F.lag("next_type").over(w))
+        .filter(F.col("prev_type").isNotNull())
+    )
+    pc = tr.groupBy("prev_type", "next_type").agg(
+        F.count(F.lit(1)).alias("n")
+    ).persist()  # both iterations + the row sums + empirical read it
+    rs = pc.groupBy("prev_type").agg(F.sum("n").alias("ns"))
+    k = rs.count()  # |S| — singleton driver scalar (house-allowed)
+    ranks = rs.select(
+        F.col("prev_type").alias("node"),
+        F.lit(MS_SCALE // k).cast("long").alias("r"),
+    )
+    for _ in range(2):
+        ranks = (
+            pc.join(rs, "prev_type")
+            .join(
+                F.broadcast(ranks.select(F.col("node").alias("prev_type"), "r")),
+                "prev_type",
+            )
+            .groupBy(F.col("next_type").alias("node"))
+            .agg(F.sum(F.expr("(r * n) div ns")).alias("r"))
+            .transform(pin)
+        )
+    emp = pc.groupBy(F.col("next_type").alias("node")).agg(
+        F.sum("n").alias("cnt")
+    )
+    tot = emp.agg(F.sum("cnt").alias("t"))
+    return (
+        ranks.join(emp, "node")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            F.col("node").alias("state"),
+            F.col("r").cast("long").alias("stationary_q"),
+            # DECIMAL before the multiply (round-10 overflow sweep):
+            # cnt*1e6 wraps LONG at ~9.2e12 transitions of one type —
+            # posture-adjacent for the events fact; the quotient is a
+            # millionth-share <= 1e6 so the DIV result always fits.
+            F.expr(f"(CAST(cnt AS DECIMAL(19,0)) * {MS_SCALE}) div t")
+            .cast("long")
+            .alias("empirical_q"),
+        )
+        .orderBy("state")
+    )
+
+
+# --------------------------------------------------------------------------
+# events_gesd_outliers — generalized ESD outlier screen (3 rounds)
+# --------------------------------------------------------------------------
+
+GESD_ROUNDS = 3
+
+# studentized deviation of the removed point, over the EXACT integer
+# sufficient statistics of the round's remaining set: dev = |n*x - sx|,
+# cxx = n*sxx - sx^2, R = dev/n / sqrt(cxx/(n(n-1))) = dev/sqrt(n*cxx/(n-1))
+# cxx is EXACTLY zero when the remaining set is constant — R is
+# undefined there; guard or ANSI mode throws on degenerate data:
+_GESD_R = ("(CASE WHEN cxx > 0 THEN dev / sqrt(n * cxx / (n - 1.0)) ELSE NULL END)")
+
+_GESD_SERIES_SQL = """
+    daily AS (
+        SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS d, count(*) AS c
+        FROM events GROUP BY 1),
+    bounds AS (SELECT min(d) AS d0, max(d) AS d1 FROM daily),
+    grid AS (
+        SELECT unnest(generate_series(
+                   0, CAST(date_diff('day', d0, d1) AS INT))) AS idx
+        FROM bounds),
+    di AS (
+        SELECT CAST(date_diff('day', b.d0, daily.d) AS INT) AS idx, daily.c
+        FROM daily CROSS JOIN bounds b),
+    series AS (
+        SELECT g.idx, CAST(COALESCE(di.c, 0) AS HUGEINT) AS x
+        FROM grid g LEFT JOIN di ON di.idx = g.idx)
+"""
+
+
+def _gesd_round_sql(k: int, src: str) -> str:
+    """One unrolled ESD round: stats over ``src``, argmax |n*x - sx|
+    (exact integer, idx tie-break), and the survivor set."""
+    return f"""
+    s{k} AS (SELECT CAST(count(*) AS HUGEINT) AS n,
+                    CAST(sum(x) AS HUGEINT) AS sx,
+                    CAST(sum(x * x) AS HUGEINT) AS sxx FROM {src}),
+    m{k} AS (SELECT idx, x,
+                    CAST(abs(n * x - sx) AS DOUBLE) AS dev,
+                    CAST(n AS DOUBLE) AS n,
+                    CAST(n * sxx - sx * sx AS DOUBLE) AS cxx
+             FROM {src} CROSS JOIN s{k}
+             ORDER BY abs(n * x - sx) DESC, idx LIMIT 1),
+    ser{k + 1} AS (SELECT * FROM {src}
+                   WHERE idx <> (SELECT idx FROM m{k}))"""
+
+
+@register(
+    "events_gesd_outliers",
+    oracle=f"""
+    WITH {_GESD_SERIES_SQL},
+    ser1 AS (SELECT * FROM series),
+    {",".join(_gesd_round_sql(k, f"ser{k}") for k in range(1, GESD_ROUNDS + 1))}
+    SELECT * FROM (
+        {" UNION ALL ".join(
+            f'''SELECT {k} AS round, CAST(idx AS BIGINT) AS day_index,
+                CAST(x AS BIGINT) AS day_count,
+                {sql_stable_round4(_GESD_R)} AS r_stat FROM m{k}'''
+            for k in range(1, GESD_ROUNDS + 1)
+        )}
+    ) ORDER BY round
+    """,
+)
+def events_gesd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Generalized extreme studentized deviate screen (Rosner 1983) on
+    the daily event-count series, {GESD_ROUNDS} rounds unrolled: each
+    round removes the most-deviant remaining day and reports its
+    studentized R — the ITERATIVE outlier procedure that stays valid
+    when outliers mask each other (a single z-score pass, dq_outliers
+    style, underestimates sigma in the presence of a second outlier;
+    ESD re-estimates after every removal). Critical-value lookup
+    (t-quantiles) is deliberately out of the relational contract, as
+    with agg_ab_ttest.
+
+    Determinism: each round's argmax compares the EXACT integer
+    |n*x - sx| with an idx tie-break (n is constant within the round,
+    so this IS the |x - mean| argmax) — the selection can never flip on
+    a float; R is one expression over exact-integer casts,
+    stable_round4.
+
+    Scale shape: the fact stream collapses once to |days| rows; each
+    round is a scalar aggregate + a 1-row broadcast anti-join on the
+    bounded series. Rounds are fixed (no data-dependent iteration
+    count), so the plan is static.
+    """
+    e = load(spark, sf_dir, "events")
+    daily = e.groupBy(F.date_trunc("day", F.col("ts")).alias("d")).agg(
+        F.count("*").alias("c")
+    )
+    bounds = daily.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
+    grid = bounds.select(
+        F.explode(
+            F.sequence(F.lit(0), F.datediff(F.col("d1"), F.col("d0")))
+        ).alias("idx")
+    )
+    di = daily.crossJoin(F.broadcast(bounds)).select(
+        F.datediff(F.col("d"), F.col("d0")).cast("int").alias("idx"), "c"
+    )
+    remaining = (
+        grid.join(di, "idx", "left")
+        .select("idx", F.coalesce("c", F.lit(0)).cast("decimal(38,0)").alias("x"))
+        .persist()  # all three rounds walk this bounded frame
+    )
+    picked = []
+    for k in range(1, GESD_ROUNDS + 1):
+        st = remaining.agg(
+            F.count("*").cast("decimal(38,0)").alias("n"),
+            F.sum("x").alias("sx"),
+            F.sum(F.col("x") * F.col("x")).alias("sxx"),
+        )
+        m = (
+            remaining.crossJoin(F.broadcast(st))
+            .withColumn(
+                "adev", F.abs(F.col("n") * F.col("x") - F.col("sx"))
+            )
+            .withColumn(
+                "rn",
+                F.row_number().over(
+                    W.orderBy(F.col("adev").desc(), F.col("idx"))
+                ),
+            )
+            .filter(F.col("rn") == 1)
+            .select(
+                F.lit(k).alias("round"),
+                F.col("idx"),
+                F.col("x"),
+                F.col("adev").cast("double").alias("dev"),
+                F.col("n").cast("double").alias("n"),
+                (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
+                .cast("double")
+                .alias("cxx"),
+            )
+        )
+        picked.append(m)
+        remaining = remaining.join(
+            F.broadcast(m.select("idx")), "idx", "left_anti"
+        )
+    out = picked[0]
+    for m in picked[1:]:
+        out = out.unionByName(m)
+    return out.selectExpr(
+        "round",
+        "CAST(idx AS BIGINT) AS day_index",
+        "CAST(x AS BIGINT) AS day_count",
+        f"CAST({sql_stable_round4(_GESD_R)} AS DOUBLE) AS r_stat",
+    ).orderBy("round")
+
+
+# --------------------------------------------------------------------------
+# events_attribution_shapley — exact Shapley-value channel attribution
+# --------------------------------------------------------------------------
+
+# channels and their coalition bits (purchase is the CONVERSION, not a
+# channel); n = 4, so Shapley runs EXACTLY over the 16 coalitions
+SHAP_CHANNELS = [("click", 1), ("error", 2), ("signup", 4), ("view", 8)]
+SHAP_N = 4
+# |S|! * (n-1-|S|)! for every coalition mask S with channel i absent —
+# precomputed per MASK as integer literals so neither engine needs a
+# popcount/factorial at runtime; sum of weights over S = n!/n = 6
+_SHAP_W = {0: 6, 1: 2, 2: 2, 3: 2, 4: 2, 5: 2, 6: 2, 7: 6,
+           8: 2, 9: 2, 10: 2, 11: 6, 12: 2, 13: 6, 14: 6}
+def _shap_w_case(col: str) -> str:
+    return (
+        f"CASE {col} "
+        + " ".join(f"WHEN {m} THEN {w}" for m, w in sorted(_SHAP_W.items()))
+        + " END"
+    )
+_SHAP_MASK = " + ".join(
+    f"max(CASE WHEN event_type = '{c}' THEN {b} ELSE 0 END)"
+    for c, b in SHAP_CHANNELS
+)
+_SHAP_CH_CASE = (
+    "CASE bit "
+    + " ".join(f"WHEN {b} THEN '{c}'" for c, b in SHAP_CHANNELS)
+    + " END"
+)
+
+
+@register(
+    "events_attribution_shapley",
+    oracle=f"""
+    WITH per_user AS (
+        SELECT user_id,
+               {_SHAP_MASK} AS t_mask,
+               max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+                   AS conv
+        FROM events GROUP BY user_id),
+    observed AS (
+        SELECT t_mask, CAST(sum(conv) AS BIGINT) AS conv_cnt
+        FROM per_user GROUP BY 1),
+    smasks AS (SELECT unnest(generate_series(0, 15)) AS s_mask),
+    v AS (
+        SELECT s_mask,
+               CAST(coalesce(sum(CASE WHEN (t_mask & s_mask) = t_mask
+                                      THEN conv_cnt END), 0) AS BIGINT)
+                   AS v_s
+        FROM smasks LEFT JOIN observed ON true
+        GROUP BY 1),
+    chans AS (SELECT unnest([1, 2, 4, 8]) AS bit),
+    terms AS (
+        SELECT c.bit,
+               ({_shap_w_case("vo.s_mask")})
+                   * (vw.v_s - vo.v_s) AS term
+        FROM chans c
+        JOIN v vo ON (vo.s_mask & c.bit) = 0
+        JOIN v vw ON vw.s_mask = (vo.s_mask | c.bit)),
+    phi AS (
+        SELECT bit, CAST(sum(term) AS BIGINT) AS phi_x24
+        FROM terms GROUP BY 1),
+    tot AS (SELECT sum(phi_x24) AS t24 FROM phi)
+    SELECT {_SHAP_CH_CASE} AS channel,
+           phi_x24,
+           floor(phi_x24 / 24.0 * 10000.0 + 0.5) / 10000.0 AS phi,
+           floor(CAST(phi_x24 AS DOUBLE) / nullif(t24, 0) * 10000.0
+                 + 0.5) / 10000.0 AS share
+    FROM phi CROSS JOIN tot
+    ORDER BY channel
+    """,
+)
+def events_attribution_shapley(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """EXACT Shapley-value channel attribution (Shapley 1953; the
+    data-driven attribution model behind ad platforms — completes the
+    family next to events_attribution_last_touch / _linear): each user
+    contributes their touched-channel set (a 4-bit mask over
+    click/error/signup/view) and a conversion bit (purchased); the
+    coalition value v(S) = conversions of users whose touch set is
+    CONTAINED in S; channel i's credit is the Shapley average marginal
+    phi_i = sum_S |S|!(n-1-|S|)!/n! * (v(S+i) - v(S)). With n=4 the sum
+    runs exactly over all 16 coalitions — no sampling, no permutation
+    Monte Carlo. Efficiency holds by construction: sum phi = v(all) -
+    v(empty), certified by the share column.
+
+    Determinism: masks and conversion counts are exact integers; the
+    factorial weights are PRECOMPUTED integer literals per coalition
+    mask (no runtime popcount/factorial); phi is kept x24 (= n!) as a
+    BIGINT and descaled once through the stable-round4 form.
+
+    Scale shape: one user-keyed conditional aggregate over events (the
+    only pass over the fact table), collapsing to <= 16 observed-mask
+    rows; everything after — the subset-sum closure, the 4 x 8 marginal
+    grid, the rollup — is constant-size lattice algebra on broadcast
+    frames, independent of input volume.
+    """
+    e = load(spark, sf_dir, "events")
+    per_user = e.groupBy("user_id").agg(
+        F.expr(_SHAP_MASK).alias("t_mask"),
+        F.expr(
+            "max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)"
+        ).alias("conv"),
+    )
+    observed = per_user.groupBy("t_mask").agg(
+        F.sum("conv").alias("conv_cnt")
+    )
+    smasks = spark.range(16).select(F.col("id").cast("int").alias("s_mask"))
+    v = (
+        smasks.join(F.broadcast(observed), F.lit(True), "left")
+        .groupBy("s_mask")
+        .agg(
+            F.coalesce(
+                F.sum(
+                    F.when(
+                        F.expr("(t_mask & s_mask) = t_mask"),
+                        F.col("conv_cnt"),
+                    )
+                ),
+                F.lit(0),
+            )
+            .cast("long")
+            .alias("v_s")
+        )
+        # the 16-row lattice frame is reused by both marginal sides and
+        # the rollup: localCheckpoint it so events is scanned ONCE (the
+        # label-frame discipline from graph.py — without it every reuse
+        # recomputes the full lineage). Eager pin, matching the pre-r9
+        # bare .localCheckpoint() (ADVICE r9: the r9 reroute through
+        # lazy_pin silently moved the events scan from build time into
+        # the first action — a behavior change, not a pure refactor)
+        .transform(pin)
+    )
+    chans = literal_frame(
+        spark, [(b,) for _, b in SHAP_CHANNELS], "bit int"
+    )
+    vo = v.select(F.col("s_mask"), F.col("v_s").alias("v_without"))
+    vw = v.select(
+        F.col("s_mask").alias("w_mask"), F.col("v_s").alias("v_with")
+    )
+    terms = (
+        chans.join(F.broadcast(vo), F.expr("(s_mask & bit) = 0"))
+        .join(F.broadcast(vw), F.expr("w_mask = (s_mask | bit)"))
+        .selectExpr(
+            "bit",
+            f"({_shap_w_case('s_mask')}) * (v_with - v_without)"
+            " AS term",
+        )
+    )
+    phi = terms.groupBy("bit").agg(
+        F.sum("term").cast("long").alias("phi_x24")
+    )
+    return (
+        phi.withColumn(
+            "t24", F.sum("phi_x24").over(W.partitionBy())
+        )
+        .selectExpr(
+            f"{_SHAP_CH_CASE} AS channel",
+            "phi_x24",
+            "CAST(floor(CAST(phi_x24 AS DOUBLE) / 24.0 * 10000.0 + 0.5)"
+            " / 10000.0 AS DOUBLE) AS phi",
+            "CAST(floor(CAST(phi_x24 AS DOUBLE) / nullif(t24, 0)"
+            " * 10000.0 + 0.5) / 10000.0 AS DOUBLE) AS share",
+        )
+        .orderBy("channel")
+    )

@@ -20,6 +20,7 @@ with a memory sink.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -84,36 +85,41 @@ def run_to_memory(df: DataFrame, name: str) -> StreamingQuery:
 # Epoch-fold sink: the one guard → prior → fold → commit of every maintainer
 # ---------------------------------------------------------------------------
 
+def _version_name(epoch_id: int, run_id: str | None) -> str:
+    """Version dir name of one committed epoch: ``epoch=<020d>``, plus
+    ``,run=<12 hex of sha256(run_id)>`` when the fold is run-scoped."""
+    name = f"epoch={epoch_id:020d}"
+    if run_id is not None:
+        name += ",run=" + hashlib.sha256(run_id.encode()).hexdigest()[:12]
+    return name
+
+
 def rollup_applied_epoch(target_path: str, run_id: str | None = None) -> int:
     """Last epoch applied to the rollup at ``target_path`` (-1 if none).
-    The symlink's target name carries the epoch — the marker and the data
-    commit in the same atomic rename, so they can never disagree.
+    The symlink's target name carries the epoch and the run — both commit
+    in the same atomic rename, so they can never disagree with the data.
 
     ``run_id`` guards against a REUSED target dir with a FRESH checkpoint:
     epoch ids are monotonic only per checkpoint, so after a checkpoint
     reset epochs restart at 0 and a bare epoch compare would silently skip
-    every early batch as a "replay". When the recorded run id differs from
-    the caller's, nothing from THIS run has been applied → -1 (the batch
-    folds into the existing state and re-stamps the run id)."""
-    if run_id is not None:
-        marker = os.path.join(target_path + ".versions", "_run_id")
-        try:
-            with open(marker) as fh:
-                if fh.read().strip() != run_id:
-                    return -1
-        except OSError:
-            return -1
-    if os.path.islink(target_path):
-        base = os.path.basename(os.readlink(target_path))
-        if base.startswith("epoch="):
-            return int(base.split("=", 1)[1])
-    return -1
+    every early batch as a "replay". When the committed version's run
+    differs from the caller's, nothing from THIS run has been applied → -1
+    (the batch folds into the existing state under the new run)."""
+    if not os.path.islink(target_path):
+        return -1
+    base = os.path.basename(os.readlink(target_path))
+    epoch = int(base[len("epoch="):].split(",", 1)[0])
+    if run_id is not None and base != _version_name(epoch, run_id):
+        return -1
+    return epoch
 
 
 # superseded versions kept per target: one epoch of grace so a concurrent
 # reader mid-scan on the just-superseded version doesn't lose files under
 # it (the single-writer foreachBatch itself never needs more than 0).
 KEEP_SUPERSEDED_VERSIONS = 1
+# where fold_epoch moves a plain-directory seed before folding it
+SEED_VERSION = "seed"
 
 
 def commit_epoch_version(
@@ -123,35 +129,31 @@ def commit_epoch_version(
     run_id: str | None = None,
 ) -> None:
     """Write ``df`` as the new state of ``target_path``, stamped with
-    ``epoch_id``: parquet into a fresh version dir, atomic symlink swap
-    (the commit point — a crash leaves old or new state, never partial),
-    then GC of all but the newest ``KEEP_SUPERSEDED_VERSIONS`` superseded
-    dirs — readers racing the swap get one full epoch to finish their
-    scan. Called only through fold_epoch."""
+    ``epoch_id`` and ``run_id``: parquet into a fresh version dir, atomic
+    symlink swap (the commit point — a crash leaves old or new state,
+    never partial), then GC of a retired seed and of all but the newest
+    ``KEEP_SUPERSEDED_VERSIONS`` superseded dirs — readers racing the swap
+    get one full epoch to finish their scan. Called only through
+    fold_epoch."""
     import shutil
 
     versions_root = target_path + ".versions"
-    ver_dir = os.path.join(versions_root, f"epoch={epoch_id:020d}")
+    current = _version_name(epoch_id, run_id)
+    ver_dir = os.path.join(versions_root, current)
     df.write.mode("overwrite").parquet(ver_dir)
-    if run_id is not None:
-        os.makedirs(versions_root, exist_ok=True)
-        with open(os.path.join(versions_root, "_run_id"), "w") as fh:
-            fh.write(run_id)
-    if os.path.exists(target_path) and not os.path.islink(target_path):
-        # a plain seed dir: fold_epoch read it as the prior, so its rows
-        # are in ver_dir by now
-        shutil.rmtree(target_path)
     tmp_link = target_path + ".lnk"
     if os.path.lexists(tmp_link):
         os.remove(tmp_link)
     os.symlink(ver_dir, tmp_link)
     os.replace(tmp_link, target_path)  # atomic swap = commit point
-    current = f"epoch={epoch_id:020d}"
+    shutil.rmtree(os.path.join(versions_root, SEED_VERSION), ignore_errors=True)
+    # commit order, not name order: a later run restarts at epoch 0
     superseded = sorted(
-        d for d in os.listdir(versions_root)
+        (os.path.getmtime(os.path.join(versions_root, d)), d)
+        for d in os.listdir(versions_root)
         if d.startswith("epoch=") and d != current
     )
-    for old in superseded[: max(0, len(superseded) - KEEP_SUPERSEDED_VERSIONS)]:
+    for _, old in superseded[: max(0, len(superseded) - KEEP_SUPERSEDED_VERSIONS)]:
         shutil.rmtree(os.path.join(versions_root, old), ignore_errors=True)
 
 
@@ -167,27 +169,35 @@ def fold_epoch(
 
     1. Replay guard: an epoch ≤ the state's applied epoch for this run
        (rollup_applied_epoch) is already in the state — skip it.
-    2. Prior state: ``spark.read.parquet(target_path)`` when the path
-       exists (a previous epoch's symlink or a plain seed directory), else
-       None.
+    2. Prior state: a plain seed directory at ``target_path`` is first
+       renamed to ``<target>.versions/seed``; the prior is then the
+       committed epoch behind the ``target_path`` symlink, else the
+       retired seed, else None.
     3. ``fold(batch, prior)`` returns the new state.
-    4. commit_epoch_version writes it and swaps the symlink.
+    4. commit_epoch_version writes it, swaps the symlink and drops the
+       retired seed.
 
     Exactly-once under retries: foreachBatch delivers at least once — a
     micro-batch that fails between the state commit and the checkpoint
     commit is REPLAYED with the same epoch_id, and an additive fold would
     apply its delta twice. The applied epoch rides the state's physical
-    layout: each epoch writes ``<target>.versions/epoch=<id>`` and then
-    atomically repoints the ``target_path`` symlink (os.replace of a
-    symlink is atomic on POSIX — a crash leaves the old or the new state,
-    never a partial one), so the marker and the data commit together. A
-    plain seed directory is replaced only after the version holding its
-    folded rows is written."""
+    layout: each epoch writes ``<target>.versions/epoch=<id>[,run=<h>]``
+    and then atomically repoints the ``target_path`` symlink (os.replace
+    of a symlink is atomic on POSIX — a crash leaves the old or the new
+    state, never a partial one), so the marker and the data commit
+    together. Nothing before the swap destroys state: the seed's rename is
+    itself atomic, and a crash after it leaves the seed where the replay
+    reads it."""
     if epoch_id <= rollup_applied_epoch(target_path, run_id):
         return  # replayed epoch: already folded in
+    seed = os.path.join(target_path + ".versions", SEED_VERSION)
+    if os.path.isdir(target_path) and not os.path.islink(target_path):
+        os.makedirs(target_path + ".versions", exist_ok=True)
+        os.rename(target_path, seed)
+    source = target_path if os.path.islink(target_path) else seed
     prior = (
-        batch.sparkSession.read.parquet(target_path)
-        if os.path.exists(target_path)
+        batch.sparkSession.read.parquet(source)
+        if os.path.exists(source)
         else None
     )
     commit_epoch_version(target_path, epoch_id, fold(batch, prior), run_id)

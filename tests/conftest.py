@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import hashlib
+import math
 import os
 import sys
 
@@ -11,6 +13,20 @@ from repcheck_data_integration_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+# the documents table's columns, for write_table
+DOCUMENTS_DDL = (
+    "doc_id long, text string, lang string, source string, n_chars long"
+)
+
+
+def round4(x: float) -> float:
+    """Half-up rounding to 4 decimals, the python twin of stable_round4."""
+    return math.floor(x * 10000 + 0.5) / 10000
+
+
+def md5_bucket(s: str, mod: int) -> int:
+    """The python twin of sampling.hash_bucket's md5 bucket."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16) % mod
 
 
 @pytest.fixture(scope="session")
@@ -23,6 +39,53 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def write_table(spark, tmp_path):
+    """``write_table(name, rows, cols)`` writes ``rows`` as the one-file
+    parquet table ``<tmp_path>/<name>.parquet``, so ``str(tmp_path)`` is an
+    sf dir for ``tables.load``. ``cols`` is a column-name list or a DDL
+    schema string."""
+
+    def write(name, rows, cols):
+        spark.createDataFrame(rows, cols).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(str(tmp_path), f"{name}.parquet"))
+
+    return write
+
+
+@pytest.fixture
+def events_daily(spark, tmp_path):
+    """``events_daily(counts, user_id=1)`` writes an events table under
+    ``tmp_path`` with ``counts[d]`` rows on day d of 2024-03."""
+    from pyspark.sql import functions as F
+
+    def write(counts, user_id=1):
+        rows, eid = [], 0
+        for d, n in enumerate(counts):
+            for _ in range(n):
+                rows.append(
+                    (eid, f"2024-03-{d + 1:02d} 12:00:00", user_id, "t", 1.0,
+                     "{}")
+                )
+                eid += 1
+        df = spark.createDataFrame(
+            rows, ["event_id", "ts_s", "user_id", "event_type", "value", "props"]
+        ).select(
+            "event_id",
+            F.col("ts_s").cast("timestamp").alias("ts"),
+            "user_id",
+            "event_type",
+            "value",
+            "props",
+        )
+        df.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(str(tmp_path), "events.parquet")
+        )
+
+    return write
 
 
 @pytest.fixture(scope="session")

@@ -261,15 +261,17 @@ def test_quantized_stat_terms_no_bigint_wrap(spark):
     Each compares against exact python arithmetic."""
     import math
 
-    from repcheck_data_integration_spark.operators.statsml5 import (
-        _LR_E1,
-        LR_SCALE,
+    from repcheck_data_integration_spark.operators.aggregates import (
+        _THEIL_TERM,
+        THEIL_SCALE,
+    )
+    from repcheck_data_integration_spark.operators.evaluation import (
         _BR_REL_T,
         BRIER_SCALE,
     )
-    from repcheck_data_integration_spark.operators.statsml2 import (
-        _THEIL_TERM,
-        THEIL_SCALE,
+    from repcheck_data_integration_spark.operators.hypothesis import (
+        _LR_E1,
+        LR_SCALE,
     )
     from repcheck_data_integration_spark.operators.textops import _PMI_Q
 

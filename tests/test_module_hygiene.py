@@ -1,15 +1,18 @@
 """Module hygiene: no operator module may assign the same module-level
-ALL_CAPS constant twice. Oracle SQL strings bake constants at decoration
-time but Spark function bodies read module globals at CALL time, so a
-later re-assignment silently desynchronizes every earlier op that used
-the name (round-5 incident: a second PMI_TOPK at the bottom of textops.py
-flipped text_pmi_pairs' LIMIT from 50 to 20 while its oracle kept 50)."""
+ALL_CAPS constant, or define the same top-level function or class, twice.
+Oracle SQL strings bake constants at decoration time but Spark function
+bodies read module globals at CALL time, so a later re-binding silently
+desynchronizes every earlier op that used the name (round-5 incident: a
+second PMI_TOPK at the bottom of textops.py flipped text_pmi_pairs' LIMIT
+from 50 to 20 while its oracle kept 50). Modules are named for their
+subject, and their imports come before their code."""
 
 from __future__ import annotations
 
 import ast
 import glob
 import os
+import re
 
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -18,6 +21,8 @@ PKG = os.path.join(
 
 
 def _toplevel_constant_assignments(path: str) -> dict[str, int]:
+    """Binding count of each module-level ALL_CAPS constant and each
+    top-level ``def`` / ``class`` name."""
     tree = ast.parse(open(path).read())
     seen: dict[str, int] = {}
     for node in tree.body:
@@ -26,9 +31,13 @@ def _toplevel_constant_assignments(path: str) -> dict[str, int]:
             targets = node.targets
         elif isinstance(node, ast.AnnAssign) and node.value is not None:
             targets = [node.target]
-        for t in targets:
-            if isinstance(t, ast.Name) and t.id.isupper():
-                seen[t.id] = seen.get(t.id, 0) + 1
+        names = [
+            t.id for t in targets if isinstance(t, ast.Name) and t.id.isupper()
+        ]
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names = [node.name]
+        for n in names:
+            seen[n] = seen.get(n, 0) + 1
     return seen
 
 
@@ -39,10 +48,56 @@ def test_no_duplicate_module_constants():
             if n > 1:
                 offenders.append(f"{os.path.relpath(path, PKG)}:{name} x{n}")
     assert not offenders, (
-        "module-level constants assigned more than once (later assignment"
-        " shadows every earlier op's call-time read): " + ", ".join(offenders)
+        "module-level constants, functions or classes bound more than once"
+        " (the later binding shadows every earlier op's call-time read): "
+        + ", ".join(offenders)
     )
 
+
+def _imports_after_code(path: str) -> list[int]:
+    """Lines of module-level imports that follow the first statement that
+    is neither an import nor the module docstring."""
+    body = ast.parse(open(path).read()).body
+    if body and isinstance(body[0], ast.Expr) and isinstance(
+        body[0].value, ast.Constant
+    ):
+        body = body[1:]
+    imports = (ast.Import, ast.ImportFrom)
+    code = [i for i, n in enumerate(body) if not isinstance(n, imports)]
+    after = body[code[0]:] if code else []
+    return [n.lineno for n in after if isinstance(n, imports)]
+
+
+def test_imports_precede_code():
+    """A module-level import after code hides a dependency in the middle of
+    a module and makes its binding depend on how far the module has run;
+    every package module imports at the top."""
+    offenders = [
+        f"{os.path.relpath(path, PKG)}:{line}"
+        for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+        for line in _imports_after_code(path)
+    ]
+    assert not offenders, "module-level import after code: " + ", ".join(
+        offenders
+    )
+
+
+def test_modules_named_by_subject():
+    """Operator modules and test files are named for their subject, not for
+    the round that added them."""
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    offenders = [
+        os.path.relpath(path, PKG)
+        for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+        if re.fullmatch(r"statsml\d*\.py", os.path.basename(path))
+    ] + [
+        os.path.basename(path)
+        for pattern in ("test_round*.py", "test_statsml*.py")
+        for path in glob.glob(os.path.join(tests_dir, pattern))
+    ]
+    assert not offenders, "round-named module or test file: " + ", ".join(
+        offenders
+    )
 
 def _struct_argmaxes(path: str) -> list[int]:
     """Lines of ``F.min``/``F.max`` calls over an ``F.struct(...)`` call or
