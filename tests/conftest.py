@@ -6,6 +6,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -60,7 +61,6 @@ def write_table(spark, tmp_path):
 def events_daily(spark, tmp_path):
     """``events_daily(counts, user_id=1)`` writes an events table under
     ``tmp_path`` with ``counts[d]`` rows on day d of 2024-03."""
-    from pyspark.sql import functions as F
 
     def write(counts, user_id=1):
         rows, eid = [], 0

@@ -95,11 +95,13 @@ def test_penny_allocation_largest_remainder(spark, tmp_path, write_table):
     """Order 1: rebate 10c over equal thirds -> 4/3/3 (tie broken by
     linenumber). Order 2: weights 1:2 -> bases 3/6, the leftover penny
     goes to the larger remainder (line 2) -> 3/7."""
-    write_table("orders",
+    write_table(
+        "orders",
         [(1, 10.0), (2, 10.0)],
         ["o_orderkey", "o_totalprice"],
     )
-    write_table("lineitem",
+    write_table(
+        "lineitem",
         [(1, 1, 1.0), (1, 2, 1.0), (1, 3, 1.0), (2, 1, 1.0), (2, 2, 2.0)],
         ["l_orderkey", "l_linenumber", "l_extendedprice"],
     )
@@ -200,7 +202,8 @@ def test_theil_zero_for_equal_and_positive_for_skew(spark, tmp_path, write_table
     """Equal per-customer revenue -> T = 0 (each term ln(1)); moving all
     revenue to one customer pushes T toward ln(n)."""
     rows = [(i, i % 4, "O", 100.0, "1-URGENT") for i in range(8)]
-    write_table("orders",
+    write_table(
+        "orders",
         [(r[0], r[1], r[2], r[3], r[4]) for r in rows],
         ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
          "o_orderpriority"],
@@ -212,7 +215,8 @@ def test_theil_zero_for_equal_and_positive_for_skew(spark, tmp_path, write_table
     rows2 = [(0, 0, "O", 1000.0, "x")] + [
         (i, i, "O", 0.01, "x") for i in range(1, 4)
     ]
-    write_table("orders",
+    write_table(
+        "orders",
         [(r[0], r[1], r[2], r[3], "1-URGENT") for r in rows2],
         ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
          "o_orderpriority"],

@@ -146,7 +146,8 @@ def test_auc_pr_brute_force_mixed(spark, tmp_path, write_table):
     """AP on a mixed ranking must equal the reference per-level loop."""
     labels_scores = [(1, 9.0), (0, 8.0), (1, 7.0), (1, 7.0), (0, 6.0),
                      (1, 5.0), (0, 5.0), (0, 4.0), (1, 3.0), (0, 2.0)]
-    write_table("orders",
+    write_table(
+        "orders",
         [(i, i, "F" if y else "O", s, "P")
          for i, (y, s) in enumerate(labels_scores)],
         ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
@@ -175,7 +176,8 @@ def test_brier_murphy_identity_and_uncertainty(spark, tmp_path, write_table):
         [(i, i, "O", 10.0 + i, "P") for i in range(10)]
         + [(20 + i, i, "F", 100.0 + i, "P") for i in range(10)]
     )
-    write_table("orders", rows,
+    write_table(
+        "orders", rows,
         ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
          "o_orderpriority"],
     )

@@ -75,7 +75,8 @@ def _copurchase_fixture(write_table, cust_suppliers):
         for s in supps
     ]
     write_table("orders", orders, ["o_orderkey", "o_custkey"])
-    write_table("lineitem", li,
+    write_table(
+        "lineitem", li,
         ["l_orderkey", "l_suppkey", "l_quantity"],
     )
 

@@ -125,7 +125,8 @@ def test_stump_finds_planted_separating_threshold(spark, tmp_path, write_table):
             disc = 0.01 if k % 2 == 0 else 0.05  # uninformative
             rows.append((k, k, k, 1, float(q), 10.0, disc, 0.0, flag, "O"))
             k += 1
-    write_table("lineitem", rows,
+    write_table(
+        "lineitem", rows,
         ["l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
          "l_quantity", "l_extendedprice", "l_discount", "l_tax",
          "l_returnflag", "l_linestatus"],
@@ -158,7 +159,8 @@ def test_item_item_cosine_known_baskets(spark, tmp_path, write_table):
         for it in items:
             rows.append((ok, pk[it], 1, ln, 1.0, 1.0, 0.0, 0.0, "N", "O"))
             ln += 1
-    write_table("lineitem", rows,
+    write_table(
+        "lineitem", rows,
         ["l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
          "l_quantity", "l_extendedprice", "l_discount", "l_tax",
          "l_returnflag", "l_linestatus"],

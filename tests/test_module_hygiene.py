@@ -99,6 +99,7 @@ def test_modules_named_by_subject():
         offenders
     )
 
+
 def _struct_argmaxes(path: str) -> list[int]:
     """Lines of ``F.min``/``F.max`` calls over an ``F.struct(...)`` call or
     over a name the module binds to one."""

@@ -498,7 +498,8 @@ def test_kneser_ney_python_reference(spark, tmp_path, write_table):
         (1, "b c b c a", "en", "s", 9),
         (2, "a b c a b", "en", "s", 9),
     ]
-    write_table("documents", docs,
+    write_table(
+        "documents", docs,
         ["doc_id", "text", "lang", "source", "n_chars"],
     )
     out = {r["doc_id"]: r for r in

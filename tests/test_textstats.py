@@ -50,7 +50,8 @@ def test_code_detect_thresholds(spark, tmp_path, write_table):
         (1, "apple banana cherry date egg", "en", "s", 5),
         (2, "scan apple banana cherry date", "en", "s", 5),
     ]
-    write_table("documents", docs,
+    write_table(
+        "documents", docs,
         ["doc_id", "text", "lang", "source", "n_chars"],
     )
     out = {r["doc_id"]: r for r in
@@ -68,7 +69,8 @@ def test_cohen_kappa_perfect_agreement(spark, tmp_path, write_table):
         (2, "le la les et", "fr", "s", 10),
         (3, "el los las y", "es", "s", 10),
     ]
-    write_table("documents", docs,
+    write_table(
+        "documents", docs,
         ["doc_id", "text", "lang", "source", "n_chars"],
     )
     row = ml_cohen_kappa(spark, str(tmp_path)).collect()[0]

@@ -12,7 +12,8 @@ def test_cdc_delta_classification(spark, tmp_path, write_table):
     """Keys 1..15 -> old = not%3, new = not%5 with even-key price bumps
     and %7-key status flips: I={3,6,9,12}, D={5,10}, U={2,4,7,8,14}."""
     d = dt.datetime(1995, 1, 1)
-    write_table("orders",
+    write_table(
+        "orders",
         [(k, "O", 100.0, d) for k in range(1, 16)],
         ["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"],
     )

@@ -41,7 +41,8 @@ def test_max_concurrency_sweep(spark, tmp_path, write_table):
     """qty=1 -> 3-day transit [d, d+2]. Shipments on Jan 1 and Jan 2
     overlap (peak 2, first on Jan 2); the Jan 10 shipment is disjoint."""
     day = lambda d: dt.datetime(2024, 1, d)
-    write_table("lineitem",
+    write_table(
+        "lineitem",
         [(7, day(1), 1.0), (7, day(2), 1.0), (7, day(10), 1.0)],
         ["l_suppkey", "l_shipdate", "l_quantity"],
     )
@@ -58,7 +59,8 @@ def test_max_concurrency_same_day_handoff_nets_out(spark, tmp_path, write_table)
     overlap), and concurrency returns to 1 after."""
     day = lambda d: dt.datetime(2024, 1, d)
     # qty=1 -> [1,3]; second ships on day 3 -> [3,5]; overlap only day 3
-    write_table("lineitem",
+    write_table(
+        "lineitem",
         [(7, day(1), 1.0), (7, day(3), 1.0)],
         ["l_suppkey", "l_shipdate", "l_quantity"],
     )
