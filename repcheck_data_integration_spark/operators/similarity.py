@@ -1149,7 +1149,7 @@ def sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors are never re-read at query time. All distances are exact
     scaled-integer sums (same construction as emb_pq_encode), making even
     the approximate search bit-deterministic. Recall vs exact L2 is
-    asserted in tests/test_similarity.py.
+    asserted in tests/test_round3_ops.py.
 
     Plan shape: codebook, LUT, and probe list are tiny → broadcast; the
     only data-sized operations are the encode groupBy (amortizable across

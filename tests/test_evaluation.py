@@ -5,21 +5,13 @@ DuckDB oracle twin can't state, since the twin runs the same formula."""
 from __future__ import annotations
 
 import math
-from collections import defaultdict
 
-from repcheck_data_integration_spark import registry
 from repcheck_data_integration_spark.operators.evaluation import (
-    ml_auc_pr,
     ml_auc_roc,
-    ml_brier_decomposition,
     ml_calibration_bins,
     ml_ks_statistic,
     ml_lift_gains,
 )
-
-from conftest import round4
-
-registry.load_all_modules()
 
 
 def _orders(write_table, rows):
@@ -121,118 +113,3 @@ def test_calibration_percentile_identity(spark, tmp_path, write_table):
         assert r["confidence"] == math.floor(
             srk / ((n - 1) * nb) * 10000 + 0.5
         ) / 10000
-
-
-def test_auc_pr_perfect_and_prevalence(spark, tmp_path, write_table):
-    """Perfect ranker -> AP = 1. All-tied scores -> AP = prevalence."""
-    rows = (
-        [(i, i, "F", 100.0 + i, "1-URGENT") for i in range(4)]
-        + [(10 + i, i, "O", 1.0 + i, "1-URGENT") for i in range(6)]
-        + [(20 + i, i, "F", 50.0, "5-LOW") for i in range(3)]
-        + [(30 + i, i, "O", 50.0, "5-LOW") for i in range(9)]
-    )
-    write_table(
-        "orders",
-        rows,
-        ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-         "o_orderpriority"],
-    )
-    out = {r["segment"]: r for r in ml_auc_pr(spark, str(tmp_path)).collect()}
-    assert out["1-URGENT"]["avg_precision"] == 1.0
-    assert out["5-LOW"]["avg_precision"] == round4(3 / 12)
-
-
-def test_auc_pr_brute_force_mixed(spark, tmp_path, write_table):
-    """AP on a mixed ranking must equal the reference per-level loop."""
-    labels_scores = [(1, 9.0), (0, 8.0), (1, 7.0), (1, 7.0), (0, 6.0),
-                     (1, 5.0), (0, 5.0), (0, 4.0), (1, 3.0), (0, 2.0)]
-    write_table(
-        "orders",
-        [(i, i, "F" if y else "O", s, "P")
-         for i, (y, s) in enumerate(labels_scores)],
-        ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-         "o_orderpriority"],
-    )
-    out = {r["segment"]: r for r in ml_auc_pr(spark, str(tmp_path)).collect()}
-    # reference: iterate distinct scores descending
-    by_score = defaultdict(lambda: [0, 0])
-    for y, s in labels_scores:
-        by_score[s][y] += 1
-    P = sum(y for y, _ in labels_scores)
-    tp = fp = 0
-    ap_q = 0
-    for s in sorted(by_score, reverse=True):
-        neg, pos = by_score[s]
-        tp += pos
-        fp += neg
-        ap_q += math.floor(1e12 * (pos * tp) / (P * (tp + fp)))
-    assert out["P"]["avg_precision"] == round4(ap_q / 1e12)
-
-
-def test_brier_murphy_identity_and_uncertainty(spark, tmp_path, write_table):
-    """Separable data: binned Murphy identity rel - res + unc tracks the
-    Brier score; a balanced base rate pins uncertainty at exactly 0.25."""
-    rows = (
-        [(i, i, "O", 10.0 + i, "P") for i in range(10)]
-        + [(20 + i, i, "F", 100.0 + i, "P") for i in range(10)]
-    )
-    write_table(
-        "orders", rows,
-        ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-         "o_orderpriority"],
-    )
-    r = ml_brier_decomposition(spark, str(tmp_path)).collect()[0]
-    assert r["uncertainty"] == 0.25
-    # perfect separation: rank-calibrated forecast => tiny Brier, high res
-    assert r["brier_score"] < 0.12
-    assert abs(r["reliability"] - r["resolution"] + r["uncertainty"]
-               - r["brier_score"]) < 0.02
-
-
-def test_isotonic_monotone_and_mean_preserving(spark, sf_dir):
-    """PAV output is non-decreasing in bin, bounded in [0, 1], and
-    preserves the count-weighted mean rate (the PAV fixed-point
-    property), up to the 1e-12 quantize + round4."""
-    rows = registry.QUERIES["ml_isotonic_calibration"](
-        spark, sf_dir
-    ).collect()
-    assert len(rows) == 10
-    iso = [r["iso_rate"] for r in rows]
-    assert iso == sorted(iso)
-    assert all(0.0 <= v <= 1.0 for v in iso)
-    w_raw = sum(r["n_bin"] * r["raw_rate"] for r in rows)
-    w_iso = sum(r["n_bin"] * r["iso_rate"] for r in rows)
-    assert abs(w_raw - w_iso) <= 1e-3 * sum(r["n_bin"] for r in rows)
-
-
-def test_conformal_coverage_guarantee(spark, sf_dir):
-    """The rank-picked half-width must cover >= 90% of calibration
-    residuals in every group (the conformal guarantee, certified
-    empirically), and widths are positive."""
-    rows = registry.QUERIES["ml_conformal_interval"](
-        spark, sf_dir
-    ).collect()
-    assert len(rows) == 5
-    for r in rows:
-        assert r["calib_coverage"] >= 0.90
-        assert r["half_width"] > 0.0
-        assert r["n_train"] > 0 and r["n_cal"] > 0
-
-
-def test_qini_curve_properties(spark, sf_dir):
-    """Cumulative exposures and conversions are non-decreasing; the last
-    bin covers every user; qini(last) equals the overall incremental
-    estimate computed directly."""
-    rows = registry.QUERIES["ml_qini_uplift"](spark, sf_dir).collect()
-    assert len(rows) == 10
-    for a, b in zip(rows, rows[1:]):
-        assert b["n_treat"] >= a["n_treat"]
-        assert b["conv_treat"] >= a["conv_treat"]
-    last = rows[-1]
-    direct = last["conv_treat"] - last["conv_ctrl"] * last["n_treat"] / last["n_ctrl"]
-    import math
-    assert math.isclose(
-        last["qini"],
-        math.floor(direct * 10000.0 + 0.5) / 10000.0,
-        abs_tol=1e-9,
-    )

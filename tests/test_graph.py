@@ -1,12 +1,3 @@
-"""Known-answer tests for the graph operators (operators/graph.py) on tiny
-hand-built co-purchase graphs."""
-
-from __future__ import annotations
-
-from repcheck_data_integration_spark.operators.graph import (
-    graph_katz_centrality,
-    graph_modularity,
-)
 
 
 def test_jaccard_neighbors_closed_form(spark, tmp_path):
@@ -47,77 +38,3 @@ def test_jaccard_neighbors_closed_form(spark, tmp_path):
     assert (r["cust1"], r["cust2"]) == (100, 200)
     assert r["n_common"] == 3 and (r["deg1"], r["deg2"]) == (4, 3)
     assert r["jaccard"] == 0.75
-
-
-def test_label_propagation_two_cliques(spark):
-    """Two 4-cliques joined by a single bridge edge must resolve to two
-    communities labeled by each clique's minimum id."""
-    from repcheck_data_integration_spark.operators.graph import label_propagation
-
-    cliques = []
-    for base in (0, 10):
-        ids = [base + i for i in range(4)]
-        cliques += [(a, b) for a in ids for b in ids if a != b]
-    bridge = [(3, 10), (10, 3)]
-    und = spark.createDataFrame(cliques + bridge, ["v", "n"])
-    out = {r["v"]: r["community"] for r in label_propagation(und, rounds=3).collect()}
-    assert all(out[i] == 0 for i in range(4)), out
-    assert all(out[10 + i] == 10 for i in range(4)), out
-
-
-def _copurchase_fixture(write_table, cust_suppliers):
-    """orders+lineitem where customer c buys qty-50 from each supplier in
-    cust_suppliers[c] (one order per customer)."""
-    orders = [(c, c) for c in cust_suppliers]
-    li = [
-        (c, s, 50.0)
-        for c, supps in cust_suppliers.items()
-        for s in supps
-    ]
-    write_table("orders", orders, ["o_orderkey", "o_custkey"])
-    write_table(
-        "lineitem", li,
-        ["l_orderkey", "l_suppkey", "l_quantity"],
-    )
-
-
-def test_katz_triangle_exact(spark, tmp_path, write_table):
-    """K3 (three customers sharing 3 suppliers pairwise): deg 2, w2 = 4,
-    w3 = 8 for every node -> katz = (128 + 32 + 8)/512 = 0.328125,
-    an EXACT binary double."""
-    _copurchase_fixture(
-        write_table, {1: [10, 11, 12], 2: [10, 11, 12], 3: [10, 11, 12]}
-    )
-    rows = graph_katz_centrality(spark, str(tmp_path)).collect()
-    assert len(rows) == 3
-    for r in rows:
-        assert r["degree"] == 2
-        assert r["katz_score"] == 168.0 / 512.0
-
-
-def test_modularity_single_community_zero(spark, tmp_path, write_table):
-    """A single K3 community has Q = e/m - (d/2m)^2 = 1 - 1 = 0."""
-    _copurchase_fixture(
-        write_table, {1: [10, 11, 12], 2: [10, 11, 12], 3: [10, 11, 12]}
-    )
-    row = graph_modularity(spark, str(tmp_path)).collect()[0]
-    assert row["n_nodes"] == 3 and row["n_edges"] == 3
-    assert row["n_communities"] == 1
-    assert row["modularity"] == 0.0
-
-
-def test_ktruss_k4_keeps_clique_drops_pendant(spark, tmp_path, write_table):
-    """K4 on customers 1-4 (every pair shares 3 suppliers) survives a
-    4-truss (each edge in 2 triangles); a pendant edge 4-5 peels away."""
-    k4 = {c: [10, 11, 12] for c in (1, 2, 3, 4)}
-    # customer 5 shares suppliers with 4 ONLY (via a disjoint supplier
-    # trio bought by just 4 and 5)
-    k4[4] = [10, 11, 12, 20, 21, 22]
-    k4[5] = [20, 21, 22]
-    _copurchase_fixture(write_table, k4)
-    from repcheck_data_integration_spark.operators.graph import graph_ktruss
-
-    rows = graph_ktruss(spark, str(tmp_path)).collect()
-    edges = {(r["cust1"], r["cust2"]): r["support"] for r in rows}
-    assert set(edges) == {(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)}
-    assert all(s == 2 for s in edges.values())

@@ -1,214 +1,7 @@
-"""Independent-reference tests for the significance tests
-(operators/hypothesis.py): brute-force and first-principles python
-reimplementations checked against the Spark plans on tiny fixtures."""
+"""Tests for the significance tests and experiment analyses
+(operators/hypothesis.py) on tiny hand-built fixtures."""
 
 from __future__ import annotations
-
-import math
-import os
-from collections import Counter
-
-from pyspark.sql import functions as F
-
-from repcheck_data_integration_spark import registry
-from repcheck_data_integration_spark.operators.hypothesis import (
-    events_logrank_test,
-    ml_cmh_test,
-    ml_kendall_tau,
-)
-
-from conftest import md5_bucket, round4
-
-registry.load_all_modules()
-
-
-def _brute_tau_b(pairs):
-    n = len(pairs)
-    c = d = 0
-    for i in range(n):
-        for j in range(i + 1, n):
-            sx = pairs[i][0] - pairs[j][0]
-            sy = pairs[i][1] - pairs[j][1]
-            p = sx * sy
-            if sx != 0 and sy != 0:
-                if p > 0:
-                    c += 1
-                else:
-                    d += 1
-    from collections import Counter
-
-    tx = sum(t * (t - 1) // 2 for t in Counter(x for x, _ in pairs).values())
-    ty = sum(t * (t - 1) // 2 for t in Counter(y for _, y in pairs).values())
-    n0 = n * (n - 1) // 2
-    return (c - d) / math.sqrt((n0 - tx) * (n0 - ty)), c, d
-
-
-def test_kendall_tau_matches_brute_force(spark, tmp_path, write_table):
-    """Mixed list with ties on both margins: the contingency pair count
-    must equal the O(n^2) brute force exactly (C, D, and tau-b)."""
-    qd = [(1, 0), (1, 1), (2, 1), (2, 3), (3, 2), (3, 2), (4, 5), (5, 4),
-          (5, 5), (2, 0)]
-    write_table(
-        "lineitem",
-        [(float(q), d / 100.0) for q, d in qd],
-        ["l_quantity", "l_discount"],
-    )
-    row = ml_kendall_tau(spark, str(tmp_path)).collect()[0]
-    tau, c, d = _brute_tau_b(qd)
-    assert row["concordant"] == c and row["discordant"] == d
-    assert row["kendall_tau_b"] == round4(tau)
-    assert row["n_rows"] == len(qd)
-
-
-def test_kendall_tau_perfect_orders(spark, tmp_path, write_table):
-    """Strictly increasing pairs -> tau exactly 1."""
-    write_table(
-        "lineitem",
-        [(float(i), i / 100.0) for i in range(1, 7)],
-        ["l_quantity", "l_discount"],
-    )
-    row = ml_kendall_tau(spark, str(tmp_path)).collect()[0]
-    assert row["kendall_tau_b"] == 1.0 and row["discordant"] == 0
-
-
-def test_logrank_first_principles(spark, tmp_path):
-    """Log-rank O/E/V must match a from-scratch python computation over
-    users with known lifetimes, censoring, and hashlib-replayed arms."""
-    # user u: events on day 0 and day dur[u]; corpus max day = 30 so
-    # users with last event <= day 23 are churned (gap > 7 days)
-    dur = {1: 2, 2: 2, 3: 5, 4: 8, 5: 8, 6: 12, 7: 15, 8: 20, 9: 28,
-           10: 30, 11: 3, 12: 10}
-    rows, eid = [], 0
-    for u, d in dur.items():
-        for day in (0, d):
-            rows.append(
-                (eid, f"2024-03-{day + 1:02d} 10:00:00", u, "t", 1.0, "{}")
-            )
-            eid += 1
-    df = spark.createDataFrame(
-        rows, ["event_id", "ts_s", "user_id", "event_type", "value", "props"]
-    ).select(
-        "event_id", F.col("ts_s").cast("timestamp").alias("ts"),
-        "user_id", "event_type", "value", "props",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(str(tmp_path), "events.parquet")
-    )
-    row = events_logrank_test(spark, str(tmp_path)).collect()[0]
-    max_day = max(dur.values())
-    grp = {u: md5_bucket(f"lr-{u}", 2) for u in dur}
-    churned = {u: (max_day - d) * 86400 > 7 * 86400 for u, d in dur.items()}
-    # risk sets on the joint duration grid
-    times = sorted(set(dur.values()))
-    o1 = se = sv = 0.0
-    n_times = 0
-    at_risk = dict(Counter(dur.values()))
-    alive = dict(dur)
-    for t in times:
-        n1 = sum(1 for u, d in alive.items() if d >= t and grp[u] == 0)
-        n2 = sum(1 for u, d in alive.items() if d >= t and grp[u] == 1)
-        d1 = sum(1 for u, d in alive.items()
-                 if d == t and grp[u] == 0 and churned[u])
-        d2 = sum(1 for u, d in alive.items()
-                 if d == t and grp[u] == 1 and churned[u])
-        dt, nt = d1 + d2, n1 + n2
-        if dt > 0 and nt >= 2:
-            n_times += 1
-            o1 += d1
-            se += math.floor(1e12 * (dt * n1 / nt))
-            sv += math.floor(
-                1e12 * (dt * n1 * n2 * (nt - dt) / (nt * nt * (nt - 1.0)))
-            )
-    assert row["n_times"] == n_times
-    assert row["observed_a"] == int(o1)
-    assert row["expected_a"] == round4(se / 1e12)
-    exp_chi2 = (o1 - se / 1e12) ** 2 / (sv / 1e12)
-    assert row["logrank_chi2"] == round4(exp_chi2)
-
-
-def test_cmh_python_reference(spark, tmp_path):
-    """CMH O/E/chi2 must match a from-scratch python computation over
-    two hand-built year strata with opposite margins."""
-    rows = []
-    k = 0
-    # stratum 1993: urgent 6 (4 F), low 4 (1 F); 1995: urgent 3 (1 F),
-    # low 7 (5 F)
-    spec = [("1993", "1-URGENT", 6, 4), ("1993", "5-LOW", 4, 1),
-            ("1995", "1-URGENT", 3, 1), ("1995", "5-LOW", 7, 5)]
-    for year, pri, n, nf in spec:
-        for i in range(n):
-            rows.append(
-                (k, k, "F" if i < nf else "O", 100.0, pri,
-                 f"{year}-06-01")
-            )
-            k += 1
-    df = spark.createDataFrame(
-        rows,
-        ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-         "o_orderpriority", "o_date_s"],
-    ).select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderpriority",
-        F.col("o_date_s").cast("timestamp").alias("o_orderdate"),
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(str(tmp_path), "orders.parquet")
-    )
-    row = ml_cmh_test(spark, str(tmp_path)).collect()[0]
-    o = se = sv = 0.0
-    for (n1, x1), (n2, x2) in [((6, 4), (4, 1)), ((3, 1), (7, 5))]:
-        nt, mt = n1 + n2, x1 + x2
-        o += x1
-        se += math.floor(1e12 * (mt * n1 / nt))
-        sv += math.floor(
-            1e12 * (mt * n1 * n2 * (nt - mt) / (nt * nt * (nt - 1.0)))
-        )
-    assert row["n_strata"] == 2
-    assert row["observed_urgent_final"] == int(o)
-    assert row["expected_urgent_final"] == round4(se / 1e12)
-    assert row["cmh_chi2"] == round4((o - se / 1e12) ** 2 / (sv / 1e12))
-
-
-def test_diff_in_diff_identity(spark, sf_dir):
-    """DiD equals the four cell means combined; SE positive; cells are
-    the parity split of the distinct-user population."""
-    rows = registry.QUERIES["ml_diff_in_diff"](spark, sf_dir).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    did = (r["mean_treat_post"] - r["mean_treat_pre"]) - (
-        r["mean_ctrl_post"] - r["mean_ctrl_pre"]
-    )
-    assert abs(r["did"] - did) < 5e-4  # round4 on each term vs the combo
-    assert r["did_se"] > 0.0
-    assert r["n_treat_post"] > 0 and r["n_ctrl_post"] > 0
-
-
-def test_tost_symmetric_under_identical_arms(spark, tmp_path):
-    """Construct orders where both arms have IDENTICAL value
-    distributions: diff == 0, both t statistics equal, and equivalence
-    must be declared (margin > 0, se small)."""
-    import datetime as dt2
-    t0 = dt2.datetime(2024, 1, 1)
-    rows = []
-    for k in range(200):
-        price = 100.0 + (k % 2) * 0.02  # tiny variance: margin >> se
-        rows.append((2 * k, 2 * k, "F", price, t0, "3-MEDIUM"))      # arm 0
-        rows.append((2 * k + 1, 2 * k + 1, "F", price, t0, "3-MEDIUM"))  # arm 1
-    spark.createDataFrame(
-        rows,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp,"
-        " o_orderpriority string",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "orders.parquet")
-    )
-    r = registry.QUERIES["ml_tost_equivalence"](
-        spark, str(tmp_path)
-    ).collect()[0]
-    assert r["mean_diff"] == 0.0
-    assert r["t_lower"] == r["t_upper"]
-    assert r["equivalent"] is True
-    assert r["margin"] > 0.0
 
 
 def test_bootstrap_ci_brackets_mean_and_reproduces(spark, tmp_path, write_table):

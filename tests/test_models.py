@@ -6,19 +6,13 @@ from __future__ import annotations
 
 import math
 
-from repcheck_data_integration_spark import registry
 from repcheck_data_integration_spark.operators.models import (
     REC_MIN_CO,
     ml_decision_stump,
-    ml_lasso_cd,
     ml_linreg_normal_eq,
     ml_naive_bayes_lang,
     rec_item_item_cosine,
 )
-
-from conftest import round4
-
-registry.load_all_modules()
 
 
 def test_linreg_recovers_planted_coefficients(spark, tmp_path, write_table):
@@ -174,59 +168,3 @@ def test_item_item_cosine_known_baskets(spark, tmp_path, write_table):
     assert got[(200, 100)]["co_count"] == 2
     # A's top neighbor is C (higher cosine), rank order enforced
     assert got[(100, 300)]["rk"] == 1 and got[(100, 200)]["rk"] == 2
-
-
-def test_lasso_cd_python_replica_and_selection(spark, tmp_path, events_daily):
-    """The four CD steps must match a python replica bit-for-bit at
-    round4; on a strict weekly pattern the lag-7 coefficient must carry
-    the signal."""
-    counts = ([50, 4, 6, 8, 5, 7, 9] * 4)[:28]
-    events_daily(counts)
-    row = ml_lasso_cd(spark, str(tmp_path)).collect()[0]
-    rows3 = [
-        (counts[t], counts[t - 1], counts[t - 7])
-        for t in range(7, len(counts))
-    ]
-    s11 = float(sum(x1 * x1 for _, x1, _ in rows3))
-    s77 = float(sum(x7 * x7 for _, _, x7 in rows3))
-    s17 = float(sum(x1 * x7 for _, x1, x7 in rows3))
-    s1y = float(sum(x1 * y for y, x1, _ in rows3))
-    s7y = float(sum(x7 * y for y, _, x7 in rows3))
-
-    def soft(z, t):
-        return z - t if z > t else (z + t if z < -t else 0.0)
-
-    b1 = soft(s1y, s11 / 20.0) / s11
-    b7 = soft(s7y - b1 * s17, s77 / 20.0) / s77
-    b1 = soft(s1y - b7 * s17, s11 / 20.0) / s11
-    b7 = soft(s7y - b1 * s17, s77 / 20.0) / s77
-    assert row["beta_lag1"] == round4(b1)
-    assert row["beta_lag7"] == round4(b7)
-    assert row["beta_lag7"] > 0.5  # weekly signal carried by lag 7
-
-
-def test_ucb_explores_the_rare_arm(spark, tmp_path):
-    """An arm with few pulls and mid rewards must outrank a heavily
-    pulled arm with slightly higher mean — the exploration bonus at
-    work — and exactly the max-ucb rows are flagged chosen."""
-    import datetime as dt2
-    t0 = dt2.datetime(2024, 1, 1)
-    rows, eid = [], 0
-    for _ in range(500):  # heavy arm: mean 1.0
-        rows.append((eid, t0, eid % 7, "heavy", 1.0, "{}")); eid += 1
-    for _ in range(5):    # rare arm: mean 0.9, huge bonus
-        rows.append((eid, t0, eid % 7, "rare", 0.9, "{}")); eid += 1
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "events.parquet")
-    )
-    out = registry.QUERIES["ml_ucb_allocation"](
-        spark, str(tmp_path)
-    ).collect()
-    assert out[0]["event_type"] == "rare"
-    assert out[0]["is_chosen"] == 1
-    assert out[1]["is_chosen"] == 0
-    assert out[0]["mean_value"] < out[1]["mean_value"]  # optimism won

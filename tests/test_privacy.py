@@ -9,75 +9,10 @@ import os
 
 from pyspark.sql import functions as F
 
-from repcheck_data_integration_spark import registry
 from repcheck_data_integration_spark.operators.privacy import (
     DP_EPSILON,
     priv_dp_counts,
-    priv_randomized_response,
 )
-
-from conftest import md5_bucket, round4
-
-registry.load_all_modules()
-
-
-def test_randomized_response_mechanism_replay(spark, tmp_path):
-    """The reported count must equal a hashlib replay of the salted-md5
-    coins — the mechanism is deterministic end to end."""
-    rows, eid = [], 0
-    truth = {}
-    for uid in range(40):
-        has = uid % 3 == 0
-        truth[uid] = 1 if has else 0
-        for et in (["purchase"] if has else ["view"]):
-            rows.append((eid, "2024-03-01 10:00:00", uid, et, 1.0, "{}"))
-            eid += 1
-    df = spark.createDataFrame(
-        rows, ["event_id", "ts_s", "user_id", "event_type", "value", "props"]
-    ).select(
-        "event_id", F.col("ts_s").cast("timestamp").alias("ts"),
-        "user_id", "event_type", "value", "props",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(str(tmp_path), "events.parquet")
-    )
-    row = priv_randomized_response(spark, str(tmp_path)).collect()[0]
-    reported = 0
-    for uid, t in truth.items():
-        c1 = md5_bucket(f"rr1-{uid}", 4)
-        c2 = md5_bucket(f"rr2-{uid}", 2)
-        reported += t if c1 < 3 else c2
-    assert row["n_users"] == 40
-    assert row["true_positives"] == sum(truth.values())
-    assert row["reported_positives"] == reported
-    n, rp = 40, reported
-    assert row["estimated_rate"] == round4((8 * rp - n) / (6 * n))
-
-
-def test_noisy_max_selects_and_replays(spark, sf_dir):
-    """Exactly one selected candidate (max with name tie-break would
-    still mark ties — assert >= 1 and that selected rows carry the max),
-    noise is bounded by the geometric cap, and the mechanism replays
-    bit-identically."""
-    from repcheck_data_integration_spark.tables import load
-    from pyspark.sql import functions as F
-
-    q = registry.QUERIES["priv_noisy_max"]
-    a = q(spark, sf_dir).collect()
-    sel = [r for r in a if r["is_selected"] == 1]
-    assert len(sel) >= 1
-    mx = max(r["noisy_n"] for r in a)
-    assert all(r["noisy_n"] == mx for r in sel)
-    truth = {
-        r["event_type"]: r["cnt"]
-        for r in load(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    for r in a:
-        assert abs(r["noisy_n"] - truth[r["event_type"]]) <= 18
-    assert a == q(spark, sf_dir).collect()
 
 
 def test_dp_counts_reproducible_inverse_cdf(spark, tmp_path):

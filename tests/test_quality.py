@@ -1,32 +1,9 @@
 """Tests for the data-quality and privacy-audit operators
-(operators/quality.py): rater agreement and t-closeness on hand-built
-fixtures."""
+(operators/quality.py): t-closeness on a hand-built fixture."""
 
 from __future__ import annotations
 
-from repcheck_data_integration_spark import registry
 from repcheck_data_integration_spark.operators.quality import dq_t_closeness
-
-from conftest import DOCUMENTS_DDL
-
-registry.load_all_modules()
-
-
-def test_rater_agreement_degenerate_unanimous_is_null(spark, tmp_path, write_table):
-    """All three gates vote keep on every doc -> P_e = 1 and kappa is
-    undefined; the op must NULL-propagate, not crash (CLAUDE.md
-    degenerate-input rule)."""
-    # every gate passes on every doc: 36 all-distinct tokens (length and
-    # distinct-ratio gates), 6 of them stopwords (stopword gate)
-    text = "the a of and to in " + " ".join(f"u{j}" for j in range(30))
-    rows = [(i, text, "en", "src0", len(text)) for i in range(4)]
-    write_table("documents", rows, DOCUMENTS_DDL)
-    out = registry.QUERIES["dq_rater_agreement"](
-        spark, str(tmp_path)
-    ).collect()
-    assert len(out) == 1
-    assert out[0]["p_e"] == 1.0
-    assert out[0]["fleiss_kappa"] is None
 
 
 def test_t_closeness_zero_for_mirror_group_and_flags_skew(spark, tmp_path, write_table):

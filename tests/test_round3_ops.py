@@ -8,14 +8,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from repcheck_data_integration_spark import registry
 
-registry.load_all_modules()
+from conftest import SF_ORACLE as SF_MID, SF_SMOKE as SF
 
-SF = "/root/testdata/sf0.001"
-SF_MID = "/root/testdata/sf0.01"
+registry.load_all_modules()
 
 
 def test_keep_canonical_drops_every_pair_loser(spark):

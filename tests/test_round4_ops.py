@@ -7,9 +7,9 @@ from pyspark.sql import functions as F
 
 from repcheck_data_integration_spark import registry
 
-registry.load_all_modules()
+from conftest import SF_SMOKE as SF
 
-SF = "/root/testdata/sf0.001"
+registry.load_all_modules()
 
 
 def test_fs_score_separates_true_matches(spark):

@@ -11,54 +11,26 @@ import os
 
 from pyspark.sql import functions as F
 
-from repcheck_data_integration_spark.operators.statsml5 import (
+from repcheck_data_integration_spark.operators.aggregates import (
     agg_lorenz_deciles,
     agg_trimmed_mean,
-    events_gesd_outliers,
-    ml_auc_pr,
-    ml_kendall_tau,
-    ts_adf_test,
-    ts_dow_profile,
 )
+from repcheck_data_integration_spark.operators.evaluation import ml_auc_pr
+from repcheck_data_integration_spark.operators.hypothesis import ml_kendall_tau
 from repcheck_data_integration_spark.operators.textstats import (
     ml_cohen_kappa,
     text_code_detect,
 )
+from repcheck_data_integration_spark.operators.timeseries import (
+    ts_adf_test,
+    ts_dow_profile,
+)
 from repcheck_data_integration_spark.operators.windows import win_drawdown
+from repcheck_data_integration_spark.streaming.batch_windows import (
+    events_gesd_outliers,
+)
 
-
-def _write(spark, tmp_path, name, rows, cols):
-    spark.createDataFrame(rows, cols).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(str(tmp_path), f"{name}.parquet"))
-
-
-def _events_daily(spark, tmp_path, counts, user_id=1):
-    """events fixture with `counts[d]` rows on day d of 2024-03."""
-    rows, eid = [], 0
-    for d, n in enumerate(counts):
-        for _ in range(n):
-            rows.append(
-                (eid, f"2024-03-{d + 1:02d} 12:00:00", user_id, "t", 1.0, "{}")
-            )
-            eid += 1
-    df = spark.createDataFrame(
-        rows, ["event_id", "ts_s", "user_id", "event_type", "value", "props"]
-    ).select(
-        "event_id",
-        F.col("ts_s").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(str(tmp_path), "events.parquet")
-    )
-
-
-def _round4(x: float) -> float:
-    return math.floor(x * 10000 + 0.5) / 10000
+from conftest import round4
 
 
 def _brute_tau_b(pairs):
@@ -82,14 +54,12 @@ def _brute_tau_b(pairs):
     return (c - d) / math.sqrt((n0 - tx) * (n0 - ty)), c, d
 
 
-def test_kendall_tau_matches_brute_force(spark, tmp_path):
+def test_kendall_tau_matches_brute_force(spark, tmp_path, write_table):
     """Mixed list with ties on both margins: the contingency pair count
     must equal the O(n^2) brute force exactly (C, D, and tau-b)."""
     qd = [(1, 0), (1, 1), (2, 1), (2, 3), (3, 2), (3, 2), (4, 5), (5, 4),
           (5, 5), (2, 0)]
-    _write(
-        spark,
-        tmp_path,
+    write_table(
         "lineitem",
         [(float(q), d / 100.0) for q, d in qd],
         ["l_quantity", "l_discount"],
@@ -97,15 +67,13 @@ def test_kendall_tau_matches_brute_force(spark, tmp_path):
     row = ml_kendall_tau(spark, str(tmp_path)).collect()[0]
     tau, c, d = _brute_tau_b(qd)
     assert row["concordant"] == c and row["discordant"] == d
-    assert row["kendall_tau_b"] == _round4(tau)
+    assert row["kendall_tau_b"] == round4(tau)
     assert row["n_rows"] == len(qd)
 
 
-def test_kendall_tau_perfect_orders(spark, tmp_path):
+def test_kendall_tau_perfect_orders(spark, tmp_path, write_table):
     """Strictly increasing pairs -> tau exactly 1."""
-    _write(
-        spark,
-        tmp_path,
+    write_table(
         "lineitem",
         [(float(i), i / 100.0) for i in range(1, 7)],
         ["l_quantity", "l_discount"],
@@ -137,7 +105,7 @@ def test_drawdown_known_sequence(spark, tmp_path):
     assert str(row["trough_date"]).startswith("2024-01-05")
 
 
-def test_auc_pr_perfect_and_prevalence(spark, tmp_path):
+def test_auc_pr_perfect_and_prevalence(spark, tmp_path, write_table):
     """Perfect ranker -> AP = 1. All-tied scores -> AP = prevalence."""
     rows = (
         [(i, i, "F", 100.0 + i, "1-URGENT") for i in range(4)]
@@ -145,9 +113,7 @@ def test_auc_pr_perfect_and_prevalence(spark, tmp_path):
         + [(20 + i, i, "F", 50.0, "5-LOW") for i in range(3)]
         + [(30 + i, i, "O", 50.0, "5-LOW") for i in range(9)]
     )
-    _write(
-        spark,
-        tmp_path,
+    write_table(
         "orders",
         rows,
         ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
@@ -155,16 +121,14 @@ def test_auc_pr_perfect_and_prevalence(spark, tmp_path):
     )
     out = {r["segment"]: r for r in ml_auc_pr(spark, str(tmp_path)).collect()}
     assert out["1-URGENT"]["avg_precision"] == 1.0
-    assert out["5-LOW"]["avg_precision"] == _round4(3 / 12)
+    assert out["5-LOW"]["avg_precision"] == round4(3 / 12)
 
 
-def test_trimmed_and_winsorized_known(spark, tmp_path):
+def test_trimmed_and_winsorized_known(spark, tmp_path, write_table):
     """10 values 10..100: k=1, trimmed mean = mean(20..90) = 55,
     winsorized = (20 + 20..90 + 90)/10 = 55."""
     vals = [float(v) for v in range(10, 101, 10)]
-    _write(
-        spark,
-        tmp_path,
+    write_table(
         "orders",
         [(i, i, "F", v, "P") for i, v in enumerate(vals)],
         ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
@@ -176,12 +140,10 @@ def test_trimmed_and_winsorized_known(spark, tmp_path):
     assert row["winsorized_mean"] == 55.0
 
 
-def test_lorenz_deciles_known(spark, tmp_path):
+def test_lorenz_deciles_known(spark, tmp_path, write_table):
     """10 customers with revenue 1..10: decile d holds customer d+1 and
     the cumulative share follows the exact partial sums of 55."""
-    _write(
-        spark,
-        tmp_path,
+    write_table(
         "orders",
         [(i, i, "F", float(i + 1), "P") for i in range(10)],
         ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
@@ -193,14 +155,14 @@ def test_lorenz_deciles_known(spark, tmp_path):
     cum = 0
     for r in rows:
         cum += r["revenue_cents"]
-        assert r["cum_revenue_share"] == _round4(cum / 5500.0)
+        assert r["cum_revenue_share"] == round4(cum / 5500.0)
 
 
-def test_gesd_finds_masking_outliers(spark, tmp_path):
+def test_gesd_finds_masking_outliers(spark, tmp_path, events_daily):
     """Two big outliers that would mask each other under a single z-pass:
     rounds 1 and 2 must pick them (largest first), round 3 a normal day."""
     counts = [20, 21] * 10 + [100, 95]
-    _events_daily(spark, tmp_path, counts)
+    events_daily(counts)
     rows = events_gesd_outliers(spark, str(tmp_path)).collect()
     assert [r["round"] for r in rows] == [1, 2, 3]
     assert rows[0]["day_index"] == 20 and rows[0]["day_count"] == 100
@@ -209,30 +171,30 @@ def test_gesd_finds_masking_outliers(spark, tmp_path):
     assert rows[0]["r_stat"] > rows[2]["r_stat"]
 
 
-def test_gesd_constant_remainder_null_r(spark, tmp_path):
+def test_gesd_constant_remainder_null_r(spark, tmp_path, events_daily):
     """Degenerate: after removing the outliers the set is constant —
     the studentized R is undefined and must surface as NULL, never an
     ANSI divide-by-zero crash."""
-    _events_daily(spark, tmp_path, [20] * 20 + [100])
+    events_daily([20] * 20 + [100])
     rows = events_gesd_outliers(spark, str(tmp_path)).collect()
     assert rows[0]["day_count"] == 100 and rows[0]["r_stat"] is not None
     assert rows[1]["r_stat"] is None and rows[2]["r_stat"] is None
 
 
-def test_adf_alternating_rejects_random_walk_does_not(spark, tmp_path):
+def test_adf_alternating_rejects_random_walk_does_not(spark, tmp_path, events_daily):
     """A strict period-2 series mean-reverts maximally -> unit root
     rejected with a very negative t; a monotone ramp (pure trend, dx
     constant) must NOT reject."""
     # noisy mean reversion (a perfectly alternating series would fit the
     # DF regression EXACTLY -> zero residual variance -> NULL t, so add
     # deterministic jitter to keep the residual alive)
-    _events_daily(spark, tmp_path,
+    events_daily(
                   [(100 + 7 * (d % 3)) if d % 2 == 0 else (2 + 5 * (d % 5))
                    for d in range(24)])
     row = ts_adf_test(spark, str(tmp_path)).collect()[0]
     assert row["rejects_unit_root"] is True
     assert row["df_t_stat"] < -2.86
-    _events_daily(spark, tmp_path, [10 + 5 * d for d in range(20)])
+    events_daily([10 + 5 * d for d in range(20)])
     row = ts_adf_test(spark, str(tmp_path)).collect()[0]
     # dx is CONSTANT: zero residual variance, t undefined -> NULL t,
     # rejects coalesced to False (not an ANSI divide-by-zero crash)
@@ -240,19 +202,19 @@ def test_adf_alternating_rejects_random_walk_does_not(spark, tmp_path):
     assert row["rejects_unit_root"] is False
 
 
-def test_dow_profile_exact_median(spark, tmp_path):
+def test_dow_profile_exact_median(spark, tmp_path, events_daily):
     """2024-03-01 is a Friday (dow 5). Days 1, 8, 15 (all Fridays) get
     counts 5, 11, 7 -> median 7; Saturdays get 4, 6 -> median 5.0."""
     counts = [0] * 15
     counts[0], counts[7], counts[14] = 5, 11, 7  # Fridays
     counts[1], counts[8] = 4, 6  # Saturdays
-    _events_daily(spark, tmp_path, [c if c else 1 for c in counts])
+    events_daily([c if c else 1 for c in counts])
     out = {r["dow"]: r for r in ts_dow_profile(spark, str(tmp_path)).collect()}
     assert out[5]["n_days"] == 3 and out[5]["median_daily"] == 7.0
     assert out[6]["n_days"] == 2 and out[6]["median_daily"] == 5.0
 
 
-def test_code_detect_thresholds(spark, tmp_path):
+def test_code_detect_thresholds(spark, tmp_path, write_table):
     """All-lexicon doc -> ratio 1.0, flagged; no-lexicon doc -> 0.0, not
     flagged; exactly-20% doc -> flagged (>= threshold)."""
     docs = [
@@ -260,8 +222,8 @@ def test_code_detect_thresholds(spark, tmp_path):
         (1, "apple banana cherry date egg", "en", "s", 5),
         (2, "scan apple banana cherry date", "en", "s", 5),
     ]
-    _write(
-        spark, tmp_path, "documents", docs,
+    write_table(
+        "documents", docs,
         ["doc_id", "text", "lang", "source", "n_chars"],
     )
     out = {r["doc_id"]: r for r in
@@ -271,7 +233,7 @@ def test_code_detect_thresholds(spark, tmp_path):
     assert out[2]["code_tokens"] == 1 and out[2]["is_code_like"]
 
 
-def test_cohen_kappa_perfect_agreement(spark, tmp_path):
+def test_cohen_kappa_perfect_agreement(spark, tmp_path, write_table):
     """Labels the marker rule recovers exactly -> po = 1, kappa = 1."""
     docs = [
         (0, "the a of and", "en", "s", 10),
@@ -279,8 +241,8 @@ def test_cohen_kappa_perfect_agreement(spark, tmp_path):
         (2, "le la les et", "fr", "s", 10),
         (3, "el los las y", "es", "s", 10),
     ]
-    _write(
-        spark, tmp_path, "documents", docs,
+    write_table(
+        "documents", docs,
         ["doc_id", "text", "lang", "source", "n_chars"],
     )
     row = ml_cohen_kappa(spark, str(tmp_path)).collect()[0]

@@ -7,7 +7,6 @@ formula-level error."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 import os
 import re
@@ -15,30 +14,32 @@ from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
 
+from repcheck_data_integration_spark.operators.evaluation import (
+    ml_auc_pr,
+    ml_brier_decomposition,
+)
 from repcheck_data_integration_spark.operators.graph import (
     graph_katz_centrality,
     graph_modularity,
 )
-from repcheck_data_integration_spark.operators.statsml5 import (
+from repcheck_data_integration_spark.operators.hypothesis import (
     events_logrank_test,
     ml_cmh_test,
-    ts_seasonal_strength,
-    ml_auc_pr,
-    ml_brier_decomposition,
-    ml_lasso_cd,
+)
+from repcheck_data_integration_spark.operators.models import ml_lasso_cd
+from repcheck_data_integration_spark.operators.privacy import (
     priv_randomized_response,
-    ts_dominant_period,
-    ts_pacf,
 )
 from repcheck_data_integration_spark.operators.textops import (
     text_kneser_ney_xent,
 )
+from repcheck_data_integration_spark.operators.timeseries import (
+    ts_dominant_period,
+    ts_pacf,
+    ts_seasonal_strength,
+)
 
-from tests.test_round4c_ops import _events_daily, _round4, _write
-
-
-def _md5_bucket(s: str, mod: int) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16) % mod
+from conftest import md5_bucket, round4
 
 
 def _acf_ratios(xs, max_lag):
@@ -53,11 +54,11 @@ def _acf_ratios(xs, max_lag):
     return out
 
 
-def test_pacf_durbin_levinson_reference(spark, tmp_path):
+def test_pacf_durbin_levinson_reference(spark, tmp_path, events_daily):
     """PACF lags 1..3 must equal the python Durbin-Levinson closed forms
     over the exact centered ACF of the gap-filled series."""
     counts = [12, 3, 7, 15, 2, 9, 11, 4, 13, 6, 8, 14, 5, 10]
-    _events_daily(spark, tmp_path, counts)
+    events_daily(counts)
     row = ts_pacf(spark, str(tmp_path)).collect()[0]
     r = _acf_ratios(counts, 3)
     p11 = r[1]
@@ -65,31 +66,31 @@ def test_pacf_durbin_levinson_reference(spark, tmp_path):
     p21 = r[1] * (1 - p22)
     p33 = (r[3] - p21 * r[2] - p22 * r[1]) / (1 - p21 * r[1] - p22 * r[2])
     assert row["n_days"] == len(counts)
-    assert row["pacf1"] == _round4(p11)
-    assert row["pacf2"] == _round4(p22)
-    assert row["pacf3"] == _round4(p33)
+    assert row["pacf1"] == round4(p11)
+    assert row["pacf2"] == round4(p22)
+    assert row["pacf3"] == round4(p33)
 
 
-def test_dominant_period_planted_cycle(spark, tmp_path):
+def test_dominant_period_planted_cycle(spark, tmp_path, events_daily):
     """A strict period-3 series: the argmax over quantized ACF must match
     the python replica — and land on 3 (window-length effects make the
     shortest multiple the strict winner on this fixture)."""
     counts = ([30, 5, 10] * 7)[:21]
-    _events_daily(spark, tmp_path, counts)
+    events_daily(counts)
     row = ts_dominant_period(spark, str(tmp_path)).collect()[0]
     r = _acf_ratios(counts, 14)
     quant = {k: math.floor(1e12 * r[k]) for k in range(2, 15)}
     best = min(sorted(quant), key=lambda k: (-quant[k], k))
     assert row["dominant_period"] == best == 3
-    assert row["acf_peak"] == _round4(r[best])
+    assert row["acf_peak"] == round4(r[best])
 
 
-def test_lasso_cd_python_replica_and_selection(spark, tmp_path):
+def test_lasso_cd_python_replica_and_selection(spark, tmp_path, events_daily):
     """The four CD steps must match a python replica bit-for-bit at
     round4; on a strict weekly pattern the lag-7 coefficient must carry
     the signal."""
     counts = ([50, 4, 6, 8, 5, 7, 9] * 4)[:28]
-    _events_daily(spark, tmp_path, counts)
+    events_daily(counts)
     row = ml_lasso_cd(spark, str(tmp_path)).collect()[0]
     rows3 = [
         (counts[t], counts[t - 1], counts[t - 7])
@@ -108,12 +109,12 @@ def test_lasso_cd_python_replica_and_selection(spark, tmp_path):
     b7 = soft(s7y - b1 * s17, s77 / 20.0) / s77
     b1 = soft(s1y - b7 * s17, s11 / 20.0) / s11
     b7 = soft(s7y - b1 * s17, s77 / 20.0) / s77
-    assert row["beta_lag1"] == _round4(b1)
-    assert row["beta_lag7"] == _round4(b7)
+    assert row["beta_lag1"] == round4(b1)
+    assert row["beta_lag7"] == round4(b7)
     assert row["beta_lag7"] > 0.5  # weekly signal carried by lag 7
 
 
-def test_kneser_ney_python_reference(spark, tmp_path):
+def test_kneser_ney_python_reference(spark, tmp_path, write_table):
     """Per-doc KN cross-entropy must equal an independent python KN
     implementation (continuation counts and all)."""
     docs = [
@@ -121,8 +122,8 @@ def test_kneser_ney_python_reference(spark, tmp_path):
         (1, "b c b c a", "en", "s", 9),
         (2, "a b c a b", "en", "s", 9),
     ]
-    _write(
-        spark, tmp_path, "documents", docs,
+    write_table(
+        "documents", docs,
         ["doc_id", "text", "lang", "source", "n_chars"],
     )
     out = {r["doc_id"]: r for r in
@@ -152,10 +153,10 @@ def test_kneser_ney_python_reference(spark, tmp_path):
             )
             ll += cnt * math.log(p)
         assert out[doc_id]["n_bigrams"] == n
-        assert out[doc_id]["kn_xent"] == _round4(-ll / n), doc_id
+        assert out[doc_id]["kn_xent"] == round4(-ll / n), doc_id
 
 
-def _copurchase_fixture(spark, tmp_path, cust_suppliers):
+def _copurchase_fixture(write_table, cust_suppliers):
     """orders+lineitem where customer c buys qty-50 from each supplier in
     cust_suppliers[c] (one order per customer)."""
     orders = [(c, c) for c in cust_suppliers]
@@ -164,19 +165,19 @@ def _copurchase_fixture(spark, tmp_path, cust_suppliers):
         for c, supps in cust_suppliers.items()
         for s in supps
     ]
-    _write(spark, tmp_path, "orders", orders, ["o_orderkey", "o_custkey"])
-    _write(
-        spark, tmp_path, "lineitem", li,
+    write_table("orders", orders, ["o_orderkey", "o_custkey"])
+    write_table(
+        "lineitem", li,
         ["l_orderkey", "l_suppkey", "l_quantity"],
     )
 
 
-def test_katz_triangle_exact(spark, tmp_path):
+def test_katz_triangle_exact(spark, tmp_path, write_table):
     """K3 (three customers sharing 3 suppliers pairwise): deg 2, w2 = 4,
     w3 = 8 for every node -> katz = (128 + 32 + 8)/512 = 0.328125,
     an EXACT binary double."""
     _copurchase_fixture(
-        spark, tmp_path, {1: [10, 11, 12], 2: [10, 11, 12], 3: [10, 11, 12]}
+        write_table, {1: [10, 11, 12], 2: [10, 11, 12], 3: [10, 11, 12]}
     )
     rows = graph_katz_centrality(spark, str(tmp_path)).collect()
     assert len(rows) == 3
@@ -185,10 +186,10 @@ def test_katz_triangle_exact(spark, tmp_path):
         assert r["katz_score"] == 168.0 / 512.0
 
 
-def test_modularity_single_community_zero(spark, tmp_path):
+def test_modularity_single_community_zero(spark, tmp_path, write_table):
     """A single K3 community has Q = e/m - (d/2m)^2 = 1 - 1 = 0."""
     _copurchase_fixture(
-        spark, tmp_path, {1: [10, 11, 12], 2: [10, 11, 12], 3: [10, 11, 12]}
+        write_table, {1: [10, 11, 12], 2: [10, 11, 12], 3: [10, 11, 12]}
     )
     row = graph_modularity(spark, str(tmp_path)).collect()[0]
     assert row["n_nodes"] == 3 and row["n_edges"] == 3
@@ -196,15 +197,15 @@ def test_modularity_single_community_zero(spark, tmp_path):
     assert row["modularity"] == 0.0
 
 
-def test_brier_murphy_identity_and_uncertainty(spark, tmp_path):
+def test_brier_murphy_identity_and_uncertainty(spark, tmp_path, write_table):
     """Separable data: binned Murphy identity rel - res + unc tracks the
     Brier score; a balanced base rate pins uncertainty at exactly 0.25."""
     rows = (
         [(i, i, "O", 10.0 + i, "P") for i in range(10)]
         + [(20 + i, i, "F", 100.0 + i, "P") for i in range(10)]
     )
-    _write(
-        spark, tmp_path, "orders", rows,
+    write_table(
+        "orders", rows,
         ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
          "o_orderpriority"],
     )
@@ -239,14 +240,14 @@ def test_randomized_response_mechanism_replay(spark, tmp_path):
     row = priv_randomized_response(spark, str(tmp_path)).collect()[0]
     reported = 0
     for uid, t in truth.items():
-        c1 = _md5_bucket(f"rr1-{uid}", 4)
-        c2 = _md5_bucket(f"rr2-{uid}", 2)
+        c1 = md5_bucket(f"rr1-{uid}", 4)
+        c2 = md5_bucket(f"rr2-{uid}", 2)
         reported += t if c1 < 3 else c2
     assert row["n_users"] == 40
     assert row["true_positives"] == sum(truth.values())
     assert row["reported_positives"] == reported
     n, rp = 40, reported
-    assert row["estimated_rate"] == _round4((8 * rp - n) / (6 * n))
+    assert row["estimated_rate"] == round4((8 * rp - n) / (6 * n))
 
 
 def test_logrank_first_principles(spark, tmp_path):
@@ -274,7 +275,7 @@ def test_logrank_first_principles(spark, tmp_path):
     )
     row = events_logrank_test(spark, str(tmp_path)).collect()[0]
     max_day = max(dur.values())
-    grp = {u: _md5_bucket(f"lr-{u}", 2) for u in dur}
+    grp = {u: md5_bucket(f"lr-{u}", 2) for u in dur}
     churned = {u: (max_day - d) * 86400 > 7 * 86400 for u, d in dur.items()}
     # risk sets on the joint duration grid
     times = sorted(set(dur.values()))
@@ -299,17 +300,17 @@ def test_logrank_first_principles(spark, tmp_path):
             )
     assert row["n_times"] == n_times
     assert row["observed_a"] == int(o1)
-    assert row["expected_a"] == _round4(se / 1e12)
+    assert row["expected_a"] == round4(se / 1e12)
     exp_chi2 = (o1 - se / 1e12) ** 2 / (sv / 1e12)
-    assert row["logrank_chi2"] == _round4(exp_chi2)
+    assert row["logrank_chi2"] == round4(exp_chi2)
 
 
-def test_auc_pr_brute_force_mixed(spark, tmp_path):
+def test_auc_pr_brute_force_mixed(spark, tmp_path, write_table):
     """AP on a mixed ranking must equal the reference per-level loop."""
     labels_scores = [(1, 9.0), (0, 8.0), (1, 7.0), (1, 7.0), (0, 6.0),
                      (1, 5.0), (0, 5.0), (0, 4.0), (1, 3.0), (0, 2.0)]
-    _write(
-        spark, tmp_path, "orders",
+    write_table(
+        "orders",
         [(i, i, "F" if y else "O", s, "P")
          for i, (y, s) in enumerate(labels_scores)],
         ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
@@ -328,14 +329,14 @@ def test_auc_pr_brute_force_mixed(spark, tmp_path):
         tp += pos
         fp += neg
         ap_q += math.floor(1e12 * (pos * tp) / (P * (tp + fp)))
-    assert out["P"]["avg_precision"] == _round4(ap_q / 1e12)
+    assert out["P"]["avg_precision"] == round4(ap_q / 1e12)
 
 
-def test_seasonal_strength_planted_weekly(spark, tmp_path):
+def test_seasonal_strength_planted_weekly(spark, tmp_path, events_daily):
     """A strict weekly pattern (counts a function of dow only) must give
     seasonal_strength ~ 1; matching python eta-squared exactly."""
     counts = ([40, 4, 6, 8, 10, 12, 14] * 4)[:28]
-    _events_daily(spark, tmp_path, counts)
+    events_daily(counts)
     row = ts_seasonal_strength(spark, str(tmp_path)).collect()[0]
     # python reference with the same quantization
     groups = defaultdict(list)
@@ -348,7 +349,7 @@ def test_seasonal_strength_planted_weekly(spark, tmp_path):
     )
     ssb = sbq / 1e6 - s * s / n
     sst = ss - s * s / n
-    assert row["seasonal_strength"] == _round4(ssb / sst)
+    assert row["seasonal_strength"] == round4(ssb / sst)
     assert row["seasonal_strength"] > 0.99
     # perfect pattern: SSwithin can quantize to <= 0 -> F is NULL, not
     # an ANSI divide-by-zero crash
@@ -394,11 +395,11 @@ def test_cmh_python_reference(spark, tmp_path):
         )
     assert row["n_strata"] == 2
     assert row["observed_urgent_final"] == int(o)
-    assert row["expected_urgent_final"] == _round4(se / 1e12)
-    assert row["cmh_chi2"] == _round4((o - se / 1e12) ** 2 / (sv / 1e12))
+    assert row["expected_urgent_final"] == round4(se / 1e12)
+    assert row["cmh_chi2"] == round4((o - se / 1e12) ** 2 / (sv / 1e12))
 
 
-def test_ktruss_k4_keeps_clique_drops_pendant(spark, tmp_path):
+def test_ktruss_k4_keeps_clique_drops_pendant(spark, tmp_path, write_table):
     """K4 on customers 1-4 (every pair shares 3 suppliers) survives a
     4-truss (each edge in 2 triangles); a pendant edge 4-5 peels away."""
     k4 = {c: [10, 11, 12] for c in (1, 2, 3, 4)}
@@ -406,7 +407,7 @@ def test_ktruss_k4_keeps_clique_drops_pendant(spark, tmp_path):
     # trio bought by just 4 and 5)
     k4[4] = [10, 11, 12, 20, 21, 22]
     k4[5] = [20, 21, 22]
-    _copurchase_fixture(spark, tmp_path, k4)
+    _copurchase_fixture(write_table, k4)
     from repcheck_data_integration_spark.operators.graph import graph_ktruss
 
     rows = graph_ktruss(spark, str(tmp_path)).collect()

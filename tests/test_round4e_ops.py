@@ -7,9 +7,6 @@ arithmetic done on paper, independent of the DuckDB oracle."""
 from __future__ import annotations
 
 import datetime as dt
-import os
-
-import pytest
 
 from repcheck_data_integration_spark.operators.aggregates import (
     agg_penny_allocation,
@@ -23,23 +20,17 @@ from repcheck_data_integration_spark.streaming.batch_windows import (
 )
 
 
-def _write(spark, tmp_path, name, rows, cols):
-    spark.createDataFrame(rows, cols).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(str(tmp_path), f"{name}.parquet"))
-
-
-def test_penny_allocation_largest_remainder(spark, tmp_path):
+def test_penny_allocation_largest_remainder(spark, tmp_path, write_table):
     """Order 1: rebate 10c over equal thirds -> 4/3/3 (tie broken by
     linenumber). Order 2: weights 1:2 -> bases 3/6, the leftover penny
     goes to the larger remainder (line 2) -> 3/7."""
-    _write(
-        spark, tmp_path, "orders",
+    write_table(
+        "orders",
         [(1, 10.0), (2, 10.0)],
         ["o_orderkey", "o_totalprice"],
     )
-    _write(
-        spark, tmp_path, "lineitem",
+    write_table(
+        "lineitem",
         [(1, 1, 1.0), (1, 2, 1.0), (1, 3, 1.0), (2, 1, 1.0), (2, 2, 2.0)],
         ["l_orderkey", "l_linenumber", "l_extendedprice"],
     )
@@ -65,12 +56,12 @@ def test_penny_allocation_sums_match_header_everywhere(spark, sf_dir):
     assert bad == 0
 
 
-def test_max_concurrency_sweep(spark, tmp_path):
+def test_max_concurrency_sweep(spark, tmp_path, write_table):
     """qty=1 -> 3-day transit [d, d+2]. Shipments on Jan 1 and Jan 2
     overlap (peak 2, first on Jan 2); the Jan 10 shipment is disjoint."""
     day = lambda d: dt.datetime(2024, 1, d)
-    _write(
-        spark, tmp_path, "lineitem",
+    write_table(
+        "lineitem",
         [(7, day(1), 1.0), (7, day(2), 1.0), (7, day(10), 1.0)],
         ["l_suppkey", "l_shipdate", "l_quantity"],
     )
@@ -81,14 +72,14 @@ def test_max_concurrency_sweep(spark, tmp_path):
     assert r[0]["first_peak_day"] == epoch_day
 
 
-def test_max_concurrency_same_day_handoff_nets_out(spark, tmp_path):
+def test_max_concurrency_same_day_handoff_nets_out(spark, tmp_path, write_table):
     """A shipment ending the day another starts: +1/-1 collapse BEFORE
     the running sum, so the handoff day counts 2 (inclusive interval
     overlap), and concurrency returns to 1 after."""
     day = lambda d: dt.datetime(2024, 1, d)
     # qty=1 -> [1,3]; second ships on day 3 -> [3,5]; overlap only day 3
-    _write(
-        spark, tmp_path, "lineitem",
+    write_table(
+        "lineitem",
         [(7, day(1), 1.0), (7, day(3), 1.0)],
         ["l_suppkey", "l_shipdate", "l_quantity"],
     )
@@ -97,7 +88,7 @@ def test_max_concurrency_same_day_handoff_nets_out(spark, tmp_path):
     assert r["first_peak_day"] == int(day(3).timestamp()) // 86400
 
 
-def test_growth_accounting_state_machine(spark, tmp_path):
+def test_growth_accounting_state_machine(spark, tmp_path, write_table):
     """u1 active days 1,2,4; u2 active day 2 only. Hand-traced table:
     d1: active 1 = new 1, churn 0; d2: active 2 (retained u1, new u2),
     churn 2 (u1 gaps to d4, u2 never returns); d4: resurrected u1."""
@@ -108,7 +99,7 @@ def test_growth_accounting_state_machine(spark, tmp_path):
         (3, base + dt.timedelta(days=3), 1),
         (4, base + dt.timedelta(days=1), 2),
     ]
-    _write(spark, tmp_path, "events", rows, ["event_id", "ts", "user_id"])
+    write_table("events", rows, ["event_id", "ts", "user_id"])
     out = {
         r["day_id"]: r
         for r in events_growth_accounting(spark, str(tmp_path)).collect()
@@ -126,12 +117,12 @@ def test_growth_accounting_state_machine(spark, tmp_path):
     )
 
 
-def test_cdc_delta_classification(spark, tmp_path):
+def test_cdc_delta_classification(spark, tmp_path, write_table):
     """Keys 1..15 -> old = not%3, new = not%5 with even-key price bumps
     and %7-key status flips: I={3,6,9,12}, D={5,10}, U={2,4,7,8,14}."""
     d = dt.datetime(1995, 1, 1)
-    _write(
-        spark, tmp_path, "orders",
+    write_table(
+        "orders",
         [(k, "O", 100.0, d) for k in range(1, 16)],
         ["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"],
     )

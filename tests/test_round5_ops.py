@@ -3,27 +3,16 @@ RAG retrieval eval — known-answer cases on constructed fixtures."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
-from pyspark.sql import functions as F
 
 from repcheck_data_integration_spark import registry
+
+from conftest import DOCUMENTS_DDL, SF_SMOKE as SF
 
 registry.load_all_modules()
 
 
-def _write_docs(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet")
-    )
-
-
-def test_bradley_terry_orders_by_quality(spark, tmp_path):
+def test_bradley_terry_orders_by_quality(spark, tmp_path, write_table):
     """Blocks of BT_BLOCK docs; source 'good' docs always have a higher
     distinct-token ratio than 'bad' docs, so good beats bad in every
     block and must out-rank it with more wins."""
@@ -42,7 +31,7 @@ def test_bradley_terry_orders_by_quality(spark, tmp_path):
                 text = " ".join(["rep"] * 12)
                 src = "bad"
             rows.append((doc_id, text, "en", src, len(text)))
-    _write_docs(spark, tmp_path, rows)
+    write_table("documents", rows, DOCUMENTS_DDL)
     out = registry.QUERIES["ml_bradley_terry"](spark, str(tmp_path)).collect()
     r = {row["source"]: row for row in out}
     assert set(r) == {"good", "bad"}
@@ -51,7 +40,7 @@ def test_bradley_terry_orders_by_quality(spark, tmp_path):
     assert r["good"]["wins"] > r["bad"]["wins"]
 
 
-def test_edit_rate_known_values(spark, tmp_path):
+def test_edit_rate_known_values(spark, tmp_path, write_table):
     """Identical cand/ref window -> distance 0; a known substitution
     count reproduces levenshtein exactly."""
     # text tokens join to a char stream; CHRF_CAND_CHARS=48,
@@ -59,7 +48,7 @@ def test_edit_rate_known_values(spark, tmp_path):
     base = "abcdefghijkl" * 10  # 120 chars, period 12 -> cand == ref prefix
     rows = [(1, " ".join([base[i:i+6] for i in range(0, len(base), 6)]),
              "en", "src0", len(base))]
-    _write_docs(spark, tmp_path, rows)
+    write_table("documents", rows, DOCUMENTS_DDL)
     out = registry.QUERIES["llm_eval_edit_rate"](
         spark, str(tmp_path)
     ).collect()
@@ -75,7 +64,7 @@ def test_rag_eval_ndcg_bounds(spark):
     """On the real fixture: rr and ndcg in [0, 1]; ndcg = 1 whenever all
     retrieved docs are relevant; rr = 1 whenever rank 1 is relevant."""
     out = registry.QUERIES["llm_rag_eval"](
-        spark, "/root/testdata/sf0.001"
+        spark, SF
     ).collect()
     assert out
     for r in out:
@@ -89,7 +78,7 @@ def test_rag_eval_ndcg_bounds(spark):
 
 def test_embedding_pairs_symmetric_free_and_thresholded(spark):
     out = registry.QUERIES["dedup_embedding_pairs"](
-        spark, "/root/testdata/sf0.001"
+        spark, SF
     ).collect()
     assert out
     pairs = {(r["vec1"], r["vec2"]) for r in out}
@@ -98,14 +87,14 @@ def test_embedding_pairs_symmetric_free_and_thresholded(spark):
     assert all(r["cosine_sim"] >= 0.25 for r in out)
 
 
-def test_boilerplate_sentences_flags_shared_footer(spark, tmp_path):
+def test_boilerplate_sentences_flags_shared_footer(spark, tmp_path, write_table):
     footer = "subscribe to our newsletter today."
     rows = []
     for i in range(6):
         body = f"unique sentence number {i} about topic {i}."
         text = (body + " " + footer) if i < 4 else body
         rows.append((i, text, "en", "src0", len(text)))
-    _write_docs(spark, tmp_path, rows)
+    write_table("documents", rows, DOCUMENTS_DDL)
     out = {
         r["doc_id"]: r
         for r in registry.QUERIES["dedup_boilerplate_sentences"](
@@ -119,14 +108,14 @@ def test_boilerplate_sentences_flags_shared_footer(spark, tmp_path):
         assert out[i]["n_boiler_sents"] == 0
 
 
-def test_ngram_novelty_copy_is_stale(spark, tmp_path):
+def test_ngram_novelty_copy_is_stale(spark, tmp_path, write_table):
     base = " ".join(f"w{j}" for j in range(30))
     rows = [
         (0, base, "en", "src0", len(base)),
         (1, base, "en", "src1", len(base)),          # exact copy -> 0
         (2, " ".join(f"x{j}" for j in range(30)), "en", "src2", 200),
     ]
-    _write_docs(spark, tmp_path, rows)
+    write_table("documents", rows, DOCUMENTS_DDL)
     out = {
         r["doc_id"]: r
         for r in registry.QUERIES["text_ngram_novelty"](
@@ -138,7 +127,7 @@ def test_ngram_novelty_copy_is_stale(spark, tmp_path):
     assert out[2]["novelty"] == 1.0
 
 
-def test_rater_agreement_degenerate_unanimous_is_null(spark, tmp_path):
+def test_rater_agreement_degenerate_unanimous_is_null(spark, tmp_path, write_table):
     """All three gates vote keep on every doc -> P_e = 1 and kappa is
     undefined; the op must NULL-propagate, not crash (CLAUDE.md
     degenerate-input rule)."""
@@ -146,7 +135,7 @@ def test_rater_agreement_degenerate_unanimous_is_null(spark, tmp_path):
     # distinct-ratio gates), 6 of them stopwords (stopword gate)
     text = "the a of and to in " + " ".join(f"u{j}" for j in range(30))
     rows = [(i, text, "en", "src0", len(text)) for i in range(4)]
-    _write_docs(spark, tmp_path, rows)
+    write_table("documents", rows, DOCUMENTS_DDL)
     out = registry.QUERIES["dq_rater_agreement"](
         spark, str(tmp_path)
     ).collect()
@@ -160,7 +149,7 @@ def test_mmr_selects_diverse_over_redundant(spark):
     top hits are mutually similar; invariants: 3 ranks per query, no
     repeats, rank-1 equals the exact top-1, mmr_score <= relevance."""
     out = registry.QUERIES["llm_mmr_select"](
-        spark, "/root/testdata/sf0.001"
+        spark, SF
     ).collect()
     by_q = {}
     for r in out:

@@ -9,6 +9,8 @@ import datetime as dt
 
 from repcheck_data_integration_spark import registry
 
+from conftest import SF_SMOKE as SF
+
 registry.load_all_modules()
 
 
@@ -163,7 +165,7 @@ def test_shapley_attribution_credits_the_causal_channel(spark, tmp_path):
         assert out[c]["phi_x24"] == 0
     # efficiency on the real fixture too
     real = registry.QUERIES["events_attribution_shapley"](
-        spark, "/root/testdata/sf0.001"
+        spark, SF
     ).collect()
     assert abs(sum(r["share"] for r in real) - 1.0) < 5e-4
 

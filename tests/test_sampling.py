@@ -1,34 +1,13 @@
 """Tests for the sampling and split operators (operators/sampling.py):
-epoch schedules and the leakage-safe split invariant."""
+the leakage-safe split invariant."""
 
 from __future__ import annotations
-
-import math
 
 from repcheck_data_integration_spark import registry
 
 from conftest import SF_SMOKE as SF
 
 registry.load_all_modules()
-
-
-def test_epoch_schedule_multiplicity(spark):
-    sched = registry.QUERIES["mix_epoch_schedule"](spark, SF).collect()
-    weights = {
-        r["source"]: min(r["oversample_factor"], 4.0)
-        for r in registry.QUERIES["mix_temperature_weights"](spark, SF).collect()
-    }
-    per_doc: dict[int, int] = {}
-    doc_source: dict[int, str] = {}
-    for r in sched:
-        per_doc[r["doc_id"]] = per_doc.get(r["doc_id"], 0) + 1
-        doc_source[r["doc_id"]] = r["source"]
-    for doc_id, n in per_doc.items():
-        t = weights[doc_source[doc_id]]
-        assert math.floor(t) <= n <= math.ceil(t), (doc_id, n, t)
-    # epoch indexes are dense from 1
-    for r in sched:
-        assert 1 <= r["epoch_idx"] <= 4
 
 
 # --- split_leakage_safe: the no-leakage invariant ---------------------------

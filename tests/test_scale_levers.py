@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from repcheck_data_integration_spark import registry
 from repcheck_data_integration_spark.operators.skew import (
     salted_agg,
     salted_broadcast_join,
@@ -14,8 +13,6 @@ from repcheck_data_integration_spark.operators.skew import (
 from repcheck_data_integration_spark.tables import load
 
 from conftest import SF_SMOKE as SF
-
-registry.load_all_modules()
 
 
 def test_salted_agg_matches_plain(spark):
@@ -304,38 +301,3 @@ def test_lsh_hot_bucket_salted_candidates(spark, tmp_path):
     assert gmax > 2 * D.CAND_BUCKET_CAP
     # generous regression backstop for the 10x-probe wall at this shape
     assert wall < 60, f"hot-bucket LSH took {wall:.1f}s"
-
-
-def test_bloom_prune_equals_plain_semi_join(spark):
-    from repcheck_data_integration_spark.tables import load
-
-    got = {
-        r.l_returnflag: (r.n_items, r.revenue)
-        for r in registry.QUERIES["join_bloom_prune"](spark, SF).collect()
-    }
-    o = load(spark, SF, "orders")
-    li = load(spark, SF, "lineitem")
-    keys = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        F.col("o_orderkey").alias("l_orderkey")
-    )
-    want = {
-        r.l_returnflag: (r.n, r.rev)
-        for r in li.join(keys, "l_orderkey", "left_semi")
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            (
-                F.sum(
-                    F.round(
-                        F.col("l_extendedprice")
-                        * (1 - F.col("l_discount"))
-                        * 100,
-                        0,
-                    ).cast("long")
-                ).cast("double")
-                / 100.0
-            ).alias("rev"),
-        )
-        .collect()
-    }
-    assert got == want

@@ -13,7 +13,7 @@ from repcheck_data_integration_spark.operators.similarity import (
     sim_search_topk,
 )
 
-from conftest import SF_ORACLE as SF_MID, SF_SMOKE as SF
+from conftest import SF_SMOKE as SF
 
 registry.load_all_modules()
 
@@ -187,193 +187,6 @@ def test_vec_norm_factored_cosine_is_bit_identical(spark):
         ).alias("diff")
     ).filter(F.col("diff")).count()
     assert mism == 0
-
-
-def test_label_outliers_are_the_label_minima(spark):
-    """The reported outliers must be exactly the 5 lowest-cosine members of
-    each label under an independent numpy recompute of the exact-integer
-    centroid construction."""
-    import numpy as np
-
-    out: dict[int, list] = {}
-    for r in registry.QUERIES["emb_label_outliers"](spark, SF_MID).collect():
-        out.setdefault(r["label"], []).append(r)
-    emb = (
-        spark.read.parquet(f"{SF_MID}/embeddings.parquet")
-        .select("vec_id", "label", "embedding")
-        .collect()
-    )
-    by_label: dict[int, list] = {}
-    for r in emb:
-        by_label.setdefault(r["label"], []).append(r)
-    for label, members in by_label.items():
-        V = np.array([m["embedding"] for m in members], dtype=np.float64)
-        ids = np.array([m["vec_id"] for m in members])
-        scaled = np.floor(V * 1e6 + 0.5).astype(np.int64)
-        cent = (scaled.sum(axis=0) / 1e6) / len(members)
-        cos = (V @ cent) / (np.linalg.norm(V, axis=1) * np.linalg.norm(cent))
-        order = sorted(range(len(ids)), key=lambda i: (cos[i], ids[i]))
-        expect = {int(ids[i]) for i in order[:5]}
-        got = {r["vec_id"] for r in out[label]}
-        assert got == expect, (label, got, expect)
-
-
-def _numpy_pq(emb_rows, k=16, sub_dim=8):
-    """Exact-integer reimplementation of pq_codebook/pq_encode: seeds are
-    the subvectors of the k smallest vec_ids, one Lloyd assign+recenter
-    step, then final assignment. Returns (codes, per-sub distances)."""
-    import numpy as np
-
-    emb_rows = sorted(emb_rows, key=lambda r: r["vec_id"])
-    ids = [r["vec_id"] for r in emb_rows]
-    V = np.array([r["embedding"] for r in emb_rows], dtype=np.float64)
-    scaled = np.floor(V * 1e6 + 0.5).astype(np.int64)
-    n, d = scaled.shape
-    n_sub = d // sub_dim
-    codes = {}
-    dists = {}
-    for s in range(n_sub):
-        sl = slice(sub_dim * s, sub_dim * (s + 1))
-        X = scaled[:, sl]
-        seeds = X[:k]  # rows already sorted by vec_id
-        a = np.array(
-            [min(range(k), key=lambda j: (int(((x - seeds[j]) ** 2).sum()), j))
-             for x in X]
-        )
-        cb = {}
-        for j in range(k):
-            if (a == j).any():
-                members = X[a == j]
-                cb[j] = np.floor(
-                    members.sum(axis=0) / len(members) + 0.5
-                ).astype(np.int64)
-        for i, x in enumerate(X):
-            best = min(
-                ((int(((x - m) ** 2).sum()), j) for j, m in cb.items())
-            )
-            codes.setdefault(ids[i], []).append(best[1])
-            dists.setdefault(ids[i], []).append(best[0])
-    return codes, dists
-
-
-def test_pq_encode_matches_numpy(spark):
-    """Recompute the whole seeded-Lloyd PQ pipeline in numpy int64 (exact
-    arithmetic) for every vector at sf0.001 and require identical code
-    strings and error totals."""
-    out = {
-        r["vec_id"]: r for r in registry.QUERIES["emb_pq_encode"](spark, SF).collect()
-    }
-    emb = (
-        spark.read.parquet(f"{SF}/embeddings.parquet")
-        .select("vec_id", "label", "embedding")
-        .collect()
-    )
-    codes, dists = _numpy_pq(emb)
-    for vid, cs in codes.items():
-        assert out[vid]["pq_code"] == "-".join(str(c) for c in cs), vid
-        assert out[vid]["total_err_scaled"] == sum(dists[vid]), vid
-
-
-def test_ivfpq_recall_vs_exact_l2(spark):
-    """ADC over the seeded-Lloyd codebook must retrieve a meaningful share
-    of the true L2 top-10 (the probe stage alone caps recall near 0.46 on
-    these weakly-clustered fixtures; the lossy-PQ result must stay well
-    above random)."""
-    import numpy as np
-
-    out: dict[int, list] = {}
-    for r in registry.QUERIES["sim_search_ivfpq"](spark, SF_MID).collect():
-        out.setdefault(r["query_id"], []).append(r["cand_id"])
-    emb = (
-        spark.read.parquet(f"{SF_MID}/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    V = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in emb}
-    recalls = []
-    for q, got in out.items():
-        assert len(got) == 10
-        d = sorted(
-            (float(((V[q] - v) ** 2).sum()), vid)
-            for vid, v in V.items()
-            if vid != q
-        )
-        exact = {vid for _, vid in d[:10]}
-        recalls.append(len(exact & set(got)) / 10)
-    assert sum(recalls) / len(recalls) >= 0.15, recalls
-
-
-def test_knn_classify_one_row_per_probe(spark):
-    from repcheck_data_integration_spark.operators.similarity import (
-        N_QUERIES,
-    )
-
-    rows = registry.QUERIES["ml_knn_classify"](spark, SF).collect()
-    assert len(rows) == N_QUERIES
-    assert all(1 <= r.n_votes <= 5 for r in rows)
-
-
-def test_semantic_contamination_flags_are_consistent(spark):
-    rows = registry.QUERIES["dedup_semantic_contamination"](
-        spark, SF
-    ).collect()
-    assert rows
-    for r in rows:
-        assert r.contaminated == (r.max_cosine >= 0.25 - 1e-9) or (
-            # rounding at the exact boundary may differ from the raw flag
-            abs(r.max_cosine - 0.25) < 1e-4
-        )
-
-
-def test_embedding_pairs_symmetric_free_and_thresholded(spark):
-    out = registry.QUERIES["dedup_embedding_pairs"](
-        spark, SF
-    ).collect()
-    assert out
-    pairs = {(r["vec1"], r["vec2"]) for r in out}
-    assert len(pairs) == len(out)  # no duplicate candidate survives
-    assert all(a < b for a, b in pairs)
-    assert all(r["cosine_sim"] >= 0.25 for r in out)
-
-
-def test_mmr_selects_diverse_over_redundant(spark):
-    """MMR's round-2/3 picks must differ from plain top-3 whenever the
-    top hits are mutually similar; invariants: 3 ranks per query, no
-    repeats, rank-1 equals the exact top-1, mmr_score <= relevance."""
-    out = registry.QUERIES["llm_mmr_select"](
-        spark, SF
-    ).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["query_id"], []).append(r)
-    for qid, rows in by_q.items():
-        rows = sorted(rows, key=lambda r: r["rank"])
-        assert [r["rank"] for r in rows] == [1, 2, 3]
-        ids = [r["vec_id"] for r in rows]
-        assert len(set(ids)) == 3
-        # rank 1 is the pure-relevance pick: mmr == relevance there
-        assert rows[0]["mmr_score"] == rows[0]["relevance"]
-        # later rounds subtract a cosine in [-1, 1]
-        for r in rows[1:]:
-            assert r["relevance"] - 1 - 1e-9 <= r["mmr_score"] <= r["relevance"] + 1 + 1e-9
-
-
-def test_hybrid_rrf_fuses_both_legs(spark, sf_dir):
-    """The fused top list is ordered by the exact integer RRF score;
-    every row carries at least one leg rank; a doc present in both legs
-    outscores a doc with one equal-rank leg only."""
-    rows = registry.QUERIES["llm_hybrid_rrf"](spark, sf_dir).collect()
-    assert 0 < len(rows) <= 20
-    scores = [r["rrf_q"] for r in rows]
-    assert scores == sorted(scores, reverse=True)
-    for r in rows:
-        assert r["r_lex"] > 0 or r["r_dense"] > 0
-        expected = 0
-        if r["r_lex"] > 0:
-            expected += 10**12 // (60 + r["r_lex"])
-        if r["r_dense"] > 0:
-            expected += 10**12 // (60 + r["r_dense"])
-        assert r["rrf_q"] == expected
 
 
 def test_set_similarity_matches_bruteforce_exactly(spark, tmp_path, write_table):

@@ -4,7 +4,6 @@ known-answer tests for the batch event operators of batch_windows.py."""
 
 from __future__ import annotations
 
-import datetime as dt
 import math
 import os
 import re
@@ -15,8 +14,6 @@ from pyspark.sql import functions as F
 from repcheck_data_integration_spark import registry
 from repcheck_data_integration_spark.streaming import stream_ops
 from repcheck_data_integration_spark.streaming.batch_windows import (
-    events_gesd_outliers,
-    events_growth_accounting,
     stream_tumbling_window,
 )
 from repcheck_data_integration_spark.tables import load
@@ -1188,137 +1185,6 @@ def test_stream_attribution_incremental_equals_batch(spark, tmp_path):
         for r in spark.read.parquet(target + "_rollup").collect()
     )
     assert after == [(k, v) for k, v in before]
-
-
-def test_markov_transition_rows_normalize(spark):
-    rows = registry.QUERIES["events_markov_transitions"](spark, SF).collect()
-    assert rows
-    by_prev: dict[str, float] = {}
-    for r in rows:
-        assert r["n_transitions"] > 0
-        by_prev[r["prev_type"]] = by_prev.get(r["prev_type"], 0.0) + r["p_transition"]
-    for prev, total in by_prev.items():
-        # each row is round4'd, so allow |alphabet| * 0.5e-4 slack
-        assert abs(total - 1.0) < 5e-4 * len(rows), (prev, total)
-
-
-def test_attribution_linear_conserves_purchases(spark):
-    """Every purchase appears in exactly one bucket-mix: the per-channel
-    n_purchases sums may double-count (a purchase credits several
-    channels) but organic + attributed distinct purchases must equal the
-    total purchase count, and credited micro-cents must never exceed the
-    exact total (integer division only drops remainders)."""
-    from repcheck_data_integration_spark.tables import load
-
-    out = {
-        r.touch_type: r
-        for r in registry.QUERIES["events_attribution_linear"](
-            spark, SF
-        ).collect()
-    }
-    e = load(spark, SF, "events")
-    p = e.filter(F.col("event_type") == "purchase")
-    n_p = p.count()
-    total_micro = (
-        p.select(
-            F.sum(
-                F.round(F.col("value") * 100, 0).cast("long") * 1000000
-            ).alias("m")
-        ).collect()[0]["m"]
-    )
-    credited = sum(r.credited_microcents for r in out.values())
-    assert credited <= total_micro
-    # each purchase's credits sum to within n_touches of its full value
-    assert total_micro - credited < n_p * 1000000
-
-
-def test_gesd_finds_masking_outliers(spark, tmp_path, events_daily):
-    """Two big outliers that would mask each other under a single z-pass:
-    rounds 1 and 2 must pick them (largest first), round 3 a normal day."""
-    counts = [20, 21] * 10 + [100, 95]
-    events_daily(counts)
-    rows = events_gesd_outliers(spark, str(tmp_path)).collect()
-    assert [r["round"] for r in rows] == [1, 2, 3]
-    assert rows[0]["day_index"] == 20 and rows[0]["day_count"] == 100
-    assert rows[1]["day_index"] == 21 and rows[1]["day_count"] == 95
-    assert rows[2]["day_count"] in (20, 21)
-    assert rows[0]["r_stat"] > rows[2]["r_stat"]
-
-
-def test_gesd_constant_remainder_null_r(spark, tmp_path, events_daily):
-    """Degenerate: after removing the outliers the set is constant —
-    the studentized R is undefined and must surface as NULL, never an
-    ANSI divide-by-zero crash."""
-    events_daily([20] * 20 + [100])
-    rows = events_gesd_outliers(spark, str(tmp_path)).collect()
-    assert rows[0]["day_count"] == 100 and rows[0]["r_stat"] is not None
-    assert rows[1]["r_stat"] is None and rows[2]["r_stat"] is None
-
-
-def test_growth_accounting_state_machine(spark, tmp_path, write_table):
-    """u1 active days 1,2,4; u2 active day 2 only. Hand-traced table:
-    d1: active 1 = new 1, churn 0; d2: active 2 (retained u1, new u2),
-    churn 2 (u1 gaps to d4, u2 never returns); d4: resurrected u1."""
-    base = dt.datetime(2024, 3, 1, 12)
-    rows = [
-        (1, base, 1),
-        (2, base + dt.timedelta(days=1), 1),
-        (3, base + dt.timedelta(days=3), 1),
-        (4, base + dt.timedelta(days=1), 2),
-    ]
-    write_table("events", rows, ["event_id", "ts", "user_id"])
-    out = {
-        r["day_id"]: r
-        for r in events_growth_accounting(spark, str(tmp_path)).collect()
-    }
-    d0 = min(out)
-    assert [
-        (r["active"], r["new_users"], r["retained"], r["resurrected"],
-         r["churned_after"])
-        for r in (out[d0], out[d0 + 1], out[d0 + 3])
-    ] == [(1, 1, 0, 0, 0), (2, 1, 1, 0, 2), (1, 0, 0, 1, 1)]
-    # identity: active = new + retained + resurrected on every day
-    assert all(
-        r["active"] == r["new_users"] + r["retained"] + r["resurrected"]
-        for r in out.values()
-    )
-
-
-def test_shapley_attribution_credits_the_causal_channel(spark, tmp_path):
-    """Constructed corpus: every converter touched ONLY 'click'; every
-    non-converter touched only 'view'. All credit must go to click
-    (phi_click == conversions, others 0), and efficiency must hold:
-    sum(phi_x24) == 24 * (v(all) - v(empty))."""
-    t0 = dt.datetime(2024, 1, 1)
-    rows, eid = [], 0
-    for u in range(10):  # converters: click -> purchase
-        rows.append((eid, t0, u, "click", 1.0, "{}")); eid += 1
-        rows.append((eid, t0, u, "purchase", 1.0, "{}")); eid += 1
-    for u in range(10, 25):  # non-converters: view only
-        rows.append((eid, t0, u, "view", 1.0, "{}")); eid += 1
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "events.parquet")
-    )
-    out = {
-        r["channel"]: r
-        for r in registry.QUERIES["events_attribution_shapley"](
-            spark, str(tmp_path)
-        ).collect()
-    }
-    assert set(out) == {"click", "error", "signup", "view"}
-    assert out["click"]["phi"] == 10.0
-    assert out["click"]["share"] == 1.0
-    for c in ("error", "signup", "view"):
-        assert out[c]["phi_x24"] == 0
-    # efficiency on the real fixture too
-    real = registry.QUERIES["events_attribution_shapley"](
-        spark, SF
-    ).collect()
-    assert abs(sum(r["share"] for r in real) - 1.0) < 5e-4
 
 
 def test_window_funnel_enforces_step_deadline(spark, tmp_path):

@@ -3,24 +3,13 @@ documents where the expected statistics are known by inspection."""
 
 from __future__ import annotations
 
-import math
-import re
-from collections import Counter
-
-import pytest
 from pyspark.sql import functions as F
 
-from repcheck_data_integration_spark import registry
 from repcheck_data_integration_spark.operators.textops import (
     EMAIL_RE,
     PHONE_RE,
     term_counts,
-    text_kneser_ney_xent,
 )
-
-from conftest import DOCUMENTS_DDL, SF_SMOKE as SF, round4
-
-registry.load_all_modules()
 
 
 def test_term_counts_collapses_occurrences(spark):
@@ -416,183 +405,3 @@ def test_token_count_bpe_fertility_and_totals(spark):
         assert r["n_bpe_tokens"] >= r["n_words"]
         want = math.floor(r["n_bpe_tokens"] / r["n_words"] * 10000.0 + 0.5) / 10000.0
         assert r["fertility"] == want
-
-
-def test_bigram_xent_matches_python(spark):
-    """Pure-python bigram LM recompute at sf0.001; exact to the round4."""
-    import re
-    from collections import Counter
-
-    docs = (
-        spark.read.parquet(f"{SF}/documents.parquet")
-        .select("doc_id", "text")
-        .collect()
-    )
-    dc: dict[int, Counter] = {}
-    for r in docs:
-        toks = re.findall("[a-z0-9]+", r["text"])
-        bgs = Counter(
-            f"{a} {b}" for a, b in zip(toks, toks[1:])
-        )
-        if bgs:
-            dc[r["doc_id"]] = bgs
-    corpus: Counter = Counter()
-    for c in dc.values():
-        corpus.update(c)
-    pref: Counter = Counter()
-    for b, n in corpus.items():
-        pref[b.split(" ")[0]] += n
-    out = {
-        r["doc_id"]: r
-        for r in registry.QUERIES["text_bigram_xent"](spark, SF).collect()
-    }
-    assert set(out) == set(dc)
-    for doc_id, c in dc.items():
-        n = sum(c.values())
-        ll = sum(
-            cnt * math.log(corpus[b] / pref[b.split(" ")[0]]) for b, cnt in c.items()
-        )
-        expect = math.floor((-ll / n) * 10000.0 + 0.5) / 10000.0
-        assert abs(out[doc_id]["bigram_xent"] - expect) <= 1e-4, doc_id
-        assert out[doc_id]["n_bigrams"] == n
-
-
-def test_bm25_rare_term_dominates(spark):
-    """'dup' is ~30× rarer than 'spark'/'join' in the fixture vocabulary,
-    so its idf must dominate: every top-5 result must contain 'dup',
-    and the scores must be strictly rank-ordered after the integer
-    quantization (no ties hidden by the doc_id tie-break in the head)."""
-    top = registry.QUERIES["text_bm25_search"](spark, SF).collect()
-    assert len(top) > 0
-    from repcheck_data_integration_spark.tables import load
-
-    docs = {
-        r.doc_id: r.text
-        for r in load(spark, SF, "documents")
-        .select("doc_id", "text")
-        .collect()
-    }
-    for r in top[:5]:
-        assert " dup" in " " + docs[r.doc_id]
-    scores = [r.score_q for r in top]
-    assert scores == sorted(scores, reverse=True)
-
-
-def test_excess_loss_weights_sum_to_one(spark):
-    rows = registry.QUERIES["mix_excess_loss_weights"](spark, SF).collect()
-    assert rows
-    total = sum(r.weight for r in rows)
-    # integer-ratio weights round4'd: sum within rounding slack of 1
-    assert abs(total - 1.0) < 1e-2 or total == 0.0
-    for r in rows:
-        assert r.excess >= 0.0
-        if r.excess == 0.0:
-            assert r.weight == 0.0
-
-
-def test_kneser_ney_python_reference(spark, tmp_path, write_table):
-    """Per-doc KN cross-entropy must equal an independent python KN
-    implementation (continuation counts and all)."""
-    docs = [
-        (0, "a b a b c", "en", "s", 9),
-        (1, "b c b c a", "en", "s", 9),
-        (2, "a b c a b", "en", "s", 9),
-    ]
-    write_table(
-        "documents", docs,
-        ["doc_id", "text", "lang", "source", "n_chars"],
-    )
-    out = {r["doc_id"]: r for r in
-           text_kneser_ney_xent(spark, str(tmp_path)).collect()}
-    doc_bi = {}
-    corpus = Counter()
-    for doc_id, text, *_ in docs:
-        toks = re.findall(r"[a-z0-9]+", text)
-        bg = Counter(zip(toks, toks[1:]))
-        doc_bi[doc_id] = bg
-        corpus.update(bg)
-    c1 = Counter()
-    n1w1 = Counter()
-    n1w2 = Counter()
-    for (w1, w2), c in corpus.items():
-        c1[w1] += c
-        n1w1[w1] += 1
-        n1w2[w2] += 1
-    bb = len(corpus)
-    for doc_id, bg in doc_bi.items():
-        n = sum(bg.values())
-        ll = 0.0
-        for (w1, w2), cnt in bg.items():
-            c12 = corpus[(w1, w2)]
-            p = ((4 * c12 - 3) * bb + 3 * n1w1[w1] * n1w2[w2]) / (
-                4 * c1[w1] * bb
-            )
-            ll += cnt * math.log(p)
-        assert out[doc_id]["n_bigrams"] == n
-        assert out[doc_id]["kn_xent"] == round4(-ll / n), doc_id
-
-
-def test_boilerplate_sentences_flags_shared_footer(spark, tmp_path, write_table):
-    footer = "subscribe to our newsletter today."
-    rows = []
-    for i in range(6):
-        body = f"unique sentence number {i} about topic {i}."
-        text = (body + " " + footer) if i < 4 else body
-        rows.append((i, text, "en", "src0", len(text)))
-    write_table("documents", rows, DOCUMENTS_DDL)
-    out = {
-        r["doc_id"]: r
-        for r in registry.QUERIES["dedup_boilerplate_sentences"](
-            spark, str(tmp_path)
-        ).collect()
-    }
-    for i in range(4):  # footer shared by 4 >= BOILER_MIN_DF docs
-        assert out[i]["n_boiler_sents"] == 1
-        assert out[i]["boiler_frac"] == pytest.approx(0.5)
-    for i in (4, 5):
-        assert out[i]["n_boiler_sents"] == 0
-
-
-def test_ngram_novelty_copy_is_stale(spark, tmp_path, write_table):
-    base = " ".join(f"w{j}" for j in range(30))
-    rows = [
-        (0, base, "en", "src0", len(base)),
-        (1, base, "en", "src1", len(base)),          # exact copy -> 0
-        (2, " ".join(f"x{j}" for j in range(30)), "en", "src2", 200),
-    ]
-    write_table("documents", rows, DOCUMENTS_DDL)
-    out = {
-        r["doc_id"]: r
-        for r in registry.QUERIES["text_ngram_novelty"](
-            spark, str(tmp_path)
-        ).collect()
-    }
-    assert out[0]["novelty"] == 1.0
-    assert out[1]["novelty"] == 0.0
-    assert out[2]["novelty"] == 1.0
-
-
-def test_pmi_collocations_find_planted_phrase(spark, tmp_path):
-    """A phrase pair that always co-occurs adjacently ('zx qv') must
-    out-lift common independent bigrams."""
-    filler = "the data big fast slow table scan merge row key".split()
-    rows = []
-    for i in range(30):
-        words = [filler[(i + j) % len(filler)] for j in range(20)]
-        words.insert(5, "zx")
-        words.insert(6, "qv")  # 'zx qv' adjacent in every doc
-        rows.append((i, " ".join(words), "en", "s", 100))
-    spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet")
-    )
-    out = registry.QUERIES["text_pmi_collocations"](
-        spark, str(tmp_path)
-    ).collect()
-    assert out[0]["w1"] == "zx" and out[0]["w2"] == "qv"
-    assert out[0]["lift"] > 1.0
-    lifts = [r["lift"] for r in out]
-    assert lifts == sorted(lifts, reverse=True)

@@ -1,28 +1,20 @@
 """Known-answer tests for the time-series operators (operators/timeseries.py)
-on tiny hand-built series: planted trends, cycles and lags, python
-replicas of each statistic, and the exact median selection."""
+on tiny hand-built series: planted trends and lags, python replicas of
+each statistic, and the exact median selection."""
 
 from __future__ import annotations
 
 import math
 import os
-from collections import defaultdict
 
 from pyspark.sql import functions as F
 
 from repcheck_data_integration_spark.operators.timeseries import (
-    ts_adf_test,
     ts_autocorr,
     ts_cross_correlation,
-    ts_dominant_period,
-    ts_dow_profile,
-    ts_pacf,
-    ts_seasonal_strength,
     ts_ses_forecast,
     ts_theil_sen,
 )
-
-from conftest import round4
 
 
 def test_autocorr_alternating_series_sign_pattern(spark, tmp_path):
@@ -341,103 +333,3 @@ def test_theil_sen_sampled_recovers_trend_with_outliers(spark, tmp_path):
     assert e["slope"] == 2.0
     assert abs(s["slope"] - 2.0) <= 0.05, s["slope"]
     assert 0 < s["n_pairs_sampled"] < e["n_pairs"]
-
-
-def test_adf_alternating_rejects_random_walk_does_not(spark, tmp_path, events_daily):
-    """A strict period-2 series mean-reverts maximally -> unit root
-    rejected with a very negative t; a monotone ramp (pure trend, dx
-    constant) must NOT reject."""
-    # noisy mean reversion (a perfectly alternating series would fit the
-    # DF regression EXACTLY -> zero residual variance -> NULL t, so add
-    # deterministic jitter to keep the residual alive)
-    events_daily(
-                  [(100 + 7 * (d % 3)) if d % 2 == 0 else (2 + 5 * (d % 5))
-                   for d in range(24)])
-    row = ts_adf_test(spark, str(tmp_path)).collect()[0]
-    assert row["rejects_unit_root"] is True
-    assert row["df_t_stat"] < -2.86
-    events_daily([10 + 5 * d for d in range(20)])
-    row = ts_adf_test(spark, str(tmp_path)).collect()[0]
-    # dx is CONSTANT: zero residual variance, t undefined -> NULL t,
-    # rejects coalesced to False (not an ANSI divide-by-zero crash)
-    assert row["df_t_stat"] is None
-    assert row["rejects_unit_root"] is False
-
-
-def test_dow_profile_exact_median(spark, tmp_path, events_daily):
-    """2024-03-01 is a Friday (dow 5). Days 1, 8, 15 (all Fridays) get
-    counts 5, 11, 7 -> median 7; Saturdays get 4, 6 -> median 5.0."""
-    counts = [0] * 15
-    counts[0], counts[7], counts[14] = 5, 11, 7  # Fridays
-    counts[1], counts[8] = 4, 6  # Saturdays
-    events_daily([c if c else 1 for c in counts])
-    out = {r["dow"]: r for r in ts_dow_profile(spark, str(tmp_path)).collect()}
-    assert out[5]["n_days"] == 3 and out[5]["median_daily"] == 7.0
-    assert out[6]["n_days"] == 2 and out[6]["median_daily"] == 5.0
-
-
-def _acf_ratios(xs, max_lag):
-    n, s = len(xs), sum(xs)
-    den = sum((n * x - s) ** 2 for x in xs)
-    out = {}
-    for k in range(1, max_lag + 1):
-        num = sum(
-            (n * xs[t] - s) * (n * xs[t + k] - s) for t in range(n - k)
-        )
-        out[k] = num / den
-    return out
-
-
-def test_pacf_durbin_levinson_reference(spark, tmp_path, events_daily):
-    """PACF lags 1..3 must equal the python Durbin-Levinson closed forms
-    over the exact centered ACF of the gap-filled series."""
-    counts = [12, 3, 7, 15, 2, 9, 11, 4, 13, 6, 8, 14, 5, 10]
-    events_daily(counts)
-    row = ts_pacf(spark, str(tmp_path)).collect()[0]
-    r = _acf_ratios(counts, 3)
-    p11 = r[1]
-    p22 = (r[2] - r[1] * r[1]) / (1 - r[1] * r[1])
-    p21 = r[1] * (1 - p22)
-    p33 = (r[3] - p21 * r[2] - p22 * r[1]) / (1 - p21 * r[1] - p22 * r[2])
-    assert row["n_days"] == len(counts)
-    assert row["pacf1"] == round4(p11)
-    assert row["pacf2"] == round4(p22)
-    assert row["pacf3"] == round4(p33)
-
-
-def test_dominant_period_planted_cycle(spark, tmp_path, events_daily):
-    """A strict period-3 series: the argmax over quantized ACF must match
-    the python replica — and land on 3 (window-length effects make the
-    shortest multiple the strict winner on this fixture)."""
-    counts = ([30, 5, 10] * 7)[:21]
-    events_daily(counts)
-    row = ts_dominant_period(spark, str(tmp_path)).collect()[0]
-    r = _acf_ratios(counts, 14)
-    quant = {k: math.floor(1e12 * r[k]) for k in range(2, 15)}
-    best = min(sorted(quant), key=lambda k: (-quant[k], k))
-    assert row["dominant_period"] == best == 3
-    assert row["acf_peak"] == round4(r[best])
-
-
-def test_seasonal_strength_planted_weekly(spark, tmp_path, events_daily):
-    """A strict weekly pattern (counts a function of dow only) must give
-    seasonal_strength ~ 1; matching python eta-squared exactly."""
-    counts = ([40, 4, 6, 8, 10, 12, 14] * 4)[:28]
-    events_daily(counts)
-    row = ts_seasonal_strength(spark, str(tmp_path)).collect()[0]
-    # python reference with the same quantization
-    groups = defaultdict(list)
-    for d, c in enumerate(counts):
-        groups[d % 7].append(c)
-    n, s = len(counts), sum(counts)
-    ss = sum(c * c for c in counts)
-    sbq = sum(
-        math.floor(1e6 * (sum(g) ** 2 / len(g))) for g in groups.values()
-    )
-    ssb = sbq / 1e6 - s * s / n
-    sst = ss - s * s / n
-    assert row["seasonal_strength"] == round4(ssb / sst)
-    assert row["seasonal_strength"] > 0.99
-    # perfect pattern: SSwithin can quantize to <= 0 -> F is NULL, not
-    # an ANSI divide-by-zero crash
-    assert row["f_stat"] is None or row["f_stat"] > 100
