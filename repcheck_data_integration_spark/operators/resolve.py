@@ -1,4 +1,4 @@
-"""Two-pass blocked entity resolution (SURVEY.md §2.3 join_fuzzy_topk).
+"""One-pass blocked entity resolution (SURVEY.md §2.3 join_fuzzy_topk).
 
 Reference: /root/reference/scripts/bills/vote_matching.py:106-270 — resolve a
 free-text voter name to a person: (1) block candidates by state + chamber
@@ -6,12 +6,18 @@ free-text voter name to a person: (1) block candidates by state + chamber
 (:124-136), (3) else fuzzy-score all blocked candidates and accept the best
 match with score ≥ 80 (:156-168, threshold :178).
 
-Spark shape: the exact pass is an equi-join (cheap, shuffles on block+name);
-the fuzzy pass runs only on the unmatched remainder — a blocked equi-join on
-the block keys (NOT a cross join; blocking is what keeps the candidate set
-per probe small at scale), a native ``levenshtein``-ratio score, and a top-1
-window with full tie-breaks. Skewed blocks are AQE's problem (skew-join
-splitting); pathological blocks can be salted upstream.
+Spark shape: one blocked equi-join on the block keys (NOT a cross join;
+blocking is what keeps the candidate set per probe small at scale) yields
+every candidate pair once. A case-folded exact pair is flagged ``exact``
+and scored 1.0; any other pair gets the native ``levenshtein``-ratio score.
+Pairs that are exact or reach the threshold feed one
+``functions/top1.Top1`` aggregate per probe, ordered (exact DESC, score
+DESC, cand_id ASC): the reference's short-circuit is the first sort key,
+so an exact match beats any fuzzy score, and exact ties and score ties
+both go to the smallest id. The price of the single join is that a probe
+with an exact match also scores its other block candidates. Skewed blocks
+are AQE's problem (skew-join splitting); pathological blocks can be
+salted upstream.
 
 The scorer here is the SQL-expressible levenshtein ratio so the whole
 operator is oracle-checkable; a RapidFuzz-style WRatio can be slotted in as a
@@ -28,6 +34,7 @@ from pyspark.sql import types as T
 from ..registry import register
 from .dedup import sql_stable_round4, stable_round4
 from ..functions.exact import scaled_long
+from ..functions.top1 import ASC, DESC, Top1
 from ..tables import load
 
 DEFAULT_THRESHOLD = 0.8  # mirrors vote_matching.py:178 (score >= 80)
@@ -76,50 +83,39 @@ def resolve_entities(
 ) -> DataFrame:
     """Returns (probe_id, matched_id, score, method); probes with no
     acceptable candidate are absent (the reference logs-and-skips them,
-    vote_matching.py:266)."""
-    p = probes.alias("p")
-    c = candidates.alias("c")
-    exact = (
-        p.join(
-            c,
-            [
-                *[F.col(f"p.{k}") == F.col(f"c.{k}") for k in block_keys],
-                F.lower(F.col(f"p.{probe_name}")) == F.lower(F.col(f"c.{cand_name}")),
-            ],
-        )
-        .groupBy(F.col(f"p.{probe_id}").alias(probe_id))
-        .agg(F.min(F.col(f"c.{cand_id}")).alias("matched_id"))
-        .select(
-            probe_id,
-            "matched_id",
-            F.lit(1.0).alias("score"),
-            F.lit("exact").alias("method"),
-        )
-    )
+    vote_matching.py:266).
 
-    remainder = p.join(exact.select(probe_id), on=probe_id, how="left_anti").alias("r")
-    scored = remainder.join(
-        c, [F.col(f"r.{k}") == F.col(f"c.{k}") for k in block_keys]
-    ).select(
-        F.col(f"r.{probe_id}").alias(probe_id),
-        F.col(f"c.{cand_id}").alias(cand_id),
-        stable_round4(
-            scorer(F.col(f"r.{probe_name}"), F.col(f"c.{cand_name}"))
-        ).alias("score"),
+    Tie rules: any exact (case-folded equal) candidate beats every fuzzy
+    one, whatever its score; exact ties and fuzzy score ties both go to
+    the smallest ``cand_id``."""
+    p, c = probes.alias("p"), candidates.alias("c")
+    pname, cname = F.col(f"p.{probe_name}"), F.col(f"c.{cand_name}")
+    exact = F.coalesce(F.lower(pname) == F.lower(cname), F.lit(False))
+    pairs = (
+        p.join(c, [F.col(f"p.{k}") == F.col(f"c.{k}") for k in block_keys])
+        .select(
+            F.col(f"p.{probe_id}").alias(probe_id),
+            F.col(f"c.{cand_id}").alias(cand_id),
+            exact.cast("int").alias("exact"),
+            F.when(exact, F.lit(1.0))
+            .otherwise(stable_round4(scorer(pname, cname)))
+            .alias("score"),
+        )
+        .filter((F.col("exact") == 1) | (F.col("score") >= threshold))
     )
-    w = W.partitionBy(probe_id).orderBy(F.col("score").desc(), F.col(cand_id))
-    fuzzy = (
-        scored.filter(F.col("score") >= threshold)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+    best = Top1(pairs, [("exact", DESC), ("score", DESC), (cand_id, ASC)])
+    return (
+        pairs.groupBy(probe_id)
+        .agg(best[cand_id], best["exact"], best["score"])
         .select(
             probe_id,
             F.col(cand_id).alias("matched_id"),
             "score",
-            F.lit("fuzzy").alias("method"),
+            F.when(F.col("exact") == 1, F.lit("exact"))
+            .otherwise(F.lit("fuzzy"))
+            .alias("method"),
         )
     )
-    return exact.unionByName(fuzzy)
 
 
 @register(
@@ -162,8 +158,8 @@ def resolve_entities(
 )
 def join_fuzzy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity-resolution demo: odd supplier names are mangled (lowercased,
-    last char dropped) so the exact pass catches evens and the fuzzy pass
-    must recover odds within their block.
+    last char dropped) so evens resolve as exact matches and odds must be
+    recovered by fuzzy score within their block.
 
     Blocking is COMPOSITE (nation × name-band): nation alone is a
     fixed-cardinality key, so probe and candidate sets inside each block
@@ -204,9 +200,11 @@ def join_fuzzy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("join_fuzzy_wratio")
 def join_fuzzy_wratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same two-pass resolution plan with the WRatio-family pandas_udf
-    scorer slotted in (rows-only: not SQL-expressible). Demonstrates that
-    swapping the Python kernel leaves the blocked-join plan shape intact."""
+    """The same one-pass resolution plan (one blocked join, one Top1 per
+    probe) with the WRatio-family pandas_udf scorer slotted in (rows-only:
+    not SQL-expressible). Demonstrates that swapping the Python kernel
+    leaves the blocked-join plan shape intact; the UDF scores exact pairs
+    too, since Spark evaluates a Python UDF for every row it reaches."""
     s = load(spark, sf_dir, "supplier")
     probes = s.select(
         F.col("s_suppkey").alias("probe_id"),

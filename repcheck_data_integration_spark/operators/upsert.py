@@ -55,7 +55,7 @@ def merge_upsert(
     ``version_cols``: within-batch precedence (highest wins).
 
     Tie-break contract (SURVEY §7 "same-key-twice" edge, pinned by
-    tests/test_operators.py::test_upsert_equal_version_tiebreak):
+    tests/test_operators.py::test_merge_upsert_equal_version_tiebreak):
 
     - WITHIN a batch, rows tied on every version column are resolved by
       the remaining target columns in column order, DESC NULLS LAST —
@@ -71,7 +71,9 @@ def merge_upsert(
       (/root/reference/scripts/database/database.py:52-73).
     """
     cols = target.columns
-    assert set(source.columns) >= set(cols), "source must cover target columns"
+    missing = [c for c in cols if c not in source.columns]
+    if missing:
+        raise ValueError(f"merge_upsert: source lacks target columns {missing}")
     # null merge keys can never match in a join (NULL != NULL), so a null-key
     # row would silently duplicate instead of update — hard fail like the
     # reference's PK constraint would (SURVEY §7 'must handle null-key').

@@ -79,41 +79,32 @@ def resolve_votes(
     1. semi-join: keep vote events whose (session, identifier) was ingested
        this run (:186-188) — and the anti side for the warning branch;
     2. explode the votes array (one row per individual vote);
-    3. two-pass blocked entity resolution voter_name → person id;
-    4. re-nest with resolved voter_ids, preserving vote order.
+    3. one-pass blocked entity resolution voter_name → person id;
+    4. re-nest with resolved voter_ids, preserving vote order, and count
+       votes per option (NULL option included) from the same group.
 
     Returns (resolved_votes, unmatched_vote_events).
     """
     keyed = votes_raw.withColumn(
         "chamber_ref", parse_org_ref(F.col("organization"))
     )
-    kept = keyed.join(
-        bills.select(
-            F.col("legislative_session").alias("ls"),
-            F.col("canonical_id").alias("bid"),
-        ),
-        (keyed.legislative_session == F.col("ls"))
-        & (keyed.identifier == F.col("bid")),
-        "left_semi",
+    bill_keys = bills.select(
+        F.col("legislative_session").alias("ls"),
+        F.col("canonical_id").alias("bid"),
     )
-    dropped = keyed.join(
-        bills.select(
-            F.col("legislative_session").alias("ls"),
-            F.col("canonical_id").alias("bid"),
-        ),
-        (keyed.legislative_session == F.col("ls"))
-        & (keyed.identifier == F.col("bid")),
-        "left_anti",
+    ingested = (keyed.legislative_session == F.col("ls")) & (
+        keyed.identifier == F.col("bid")
     )
+    kept = keyed.join(bill_keys, ingested, "left_semi")
+    dropped = keyed.join(bill_keys, ingested, "left_anti")
 
     exploded = kept.select(
-        "id",
-        "chamber_ref",
-        "state",
-        F.posexplode("votes").alias("vote_pos", "vote"),
+        "id", "chamber_ref", "state", F.posexplode("votes").alias("vote_pos", "vote")
+    ).withColumn(
+        "probe_id", F.concat_ws("#", "id", F.col("vote_pos").cast("string"))
     )
     probes = exploded.select(
-        F.concat_ws("#", "id", F.col("vote_pos").cast("string")).alias("probe_id"),
+        "probe_id",
         F.col("state").alias("block_state"),
         F.col("chamber_ref").alias("block_chamber"),
         F.col("vote.voter_name").alias("pname"),
@@ -131,44 +122,35 @@ def resolve_votes(
         threshold=threshold,
     ).select("probe_id", "matched_id")
 
-    enriched = (
-        exploded.withColumn(
-            "probe_id",
-            F.concat_ws("#", "id", F.col("vote_pos").cast("string")),
-        )
-        .join(matched, "probe_id", "left")
-        .select(
-            "id",
-            "vote_pos",
-            F.struct(
-                F.col("vote.option").alias("option"),
-                F.col("vote.voter_name").alias("voter_name"),
-                F.col("matched_id").alias("voter_id"),
-            ).alias("vote"),
-        )
+    vote = F.struct(
+        F.col("vote.option").alias("option"),
+        F.col("vote.voter_name").alias("voter_name"),
+        F.col("matched_id").alias("voter_id"),
     )
-    renested = (
-        enriched.groupBy("id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("vote_pos", "vote"))
-            ).alias("pv")
-        )
-        .select(
-            "id", F.transform(F.col("pv"), lambda s: s["vote"]).alias("votes")
-        )
-    )
-    counts = (
-        enriched.groupBy("id", F.col("vote.option").alias("option"))
-        .count()
+    pv = (
+        exploded.join(matched, "probe_id", "left")
         .groupBy("id")
         .agg(
             F.array_sort(
-                F.collect_list(F.struct("option", F.col("count").alias("value")))
-            ).alias("counts")
+                F.collect_list(F.struct("vote_pos", vote.alias("vote")))
+            ).alias("pv")
         )
     )
-    resolved = renested.join(counts, "id")
+    option = lambda s: s["vote"]["option"]  # noqa: E731
+    counts = F.transform(
+        F.array_distinct(F.transform("pv", option)),
+        lambda o: F.struct(
+            o.alias("option"),
+            F.size(F.filter("pv", lambda s: option(s).eqNullSafe(o)))
+            .cast("long")
+            .alias("value"),
+        ),
+    )
+    resolved = pv.select(
+        "id",
+        F.transform("pv", lambda s: s["vote"]).alias("votes"),
+        F.array_sort(counts).alias("counts"),
+    )
     return resolved, dropped
 
 

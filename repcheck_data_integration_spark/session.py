@@ -6,6 +6,19 @@ cluster scale the same builder is used with ``master`` unset so the submitter
 decides. AQE is always on: it gives runtime join re-selection, partition
 coalescing and skew-join splitting, which is the behaviour we want at 100 TB
 where static planning can't see skew.
+
+The codegen cache is sized to the working set. Spark keeps every compiled
+generated class in one JVM-wide cache keyed by its source text, and a
+query that finds its classes there skips Janino. At the default 100
+entries nothing survives a pass: one pass of the ``plans.pipelines``
+lifecycle generates ~165 classes and recompiled all of them each time
+(164-169 compiles, ~2 s of compile time per pass on a 4-core host), and
+one gate run over all 439 registered queries generates 6,249 distinct
+classes but compiled 9,288. 8192 entries hold a gate run plus a lifecycle
+pass, with room for the cache's per-segment LRU (Guava splits it into
+four segments that evict apart). The cost is metaspace, ~8 KB per
+retained class: a gate run ended at 256 MB metaspace and 33 MB class
+space against 206 MB and 26 MB at 100 entries.
 """
 
 from __future__ import annotations
@@ -41,6 +54,8 @@ def get_spark(
         # Arrow for pandas_udf / toPandas round trips.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # static: sized from the measured working set (module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         # parquet ns timestamps in the fixtures; read as micros deterministically
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # honor a bucketed table's sortBy metadata on scan (Spark 3.1+

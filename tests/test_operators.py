@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from repcheck_data_integration_spark.operators.spatial import (
@@ -66,6 +67,15 @@ def test_merge_upsert_equal_version_tiebreak(spark):
             ).collect()
             # ver ties → 'val' DESC NULLS LAST → 'z' wins, nulls never win
             assert len(out) == 1 and out[0]["val"] == "z"
+
+
+def test_merge_upsert_rejects_source_missing_target_columns(spark):
+    """A source that lacks target columns fails with a named error (a
+    check that survives ``python -O``), listing what is missing."""
+    target = spark.createDataFrame([("a", 1, 0)], ["id", "val", "ver"])
+    source = spark.createDataFrame([("a",)], ["id"])
+    with pytest.raises(ValueError, match=r"\['val', 'ver'\]"):
+        merge_upsert(target, source, keys=["id"], preserve=())
 
 
 def test_merge_upsert_successive_batches_equal_version(spark):
@@ -176,11 +186,47 @@ def test_fuzzy_golden_votes(spark):
     assert 4 not in out
 
 
+def test_resolve_entities_tie_rules(spark):
+    """The resolver's tie rules: exact (case-folded) beats fuzzy whatever
+    the ids and scores, exact ties and fuzzy score ties go to the smallest
+    cand_id, and a NULL probe name resolves to nothing."""
+    from repcheck_data_integration_spark.operators.resolve import resolve_entities
+
+    probes = spark.createDataFrame(
+        [
+            (1, "a", "Smith"),  # exact twice (ids 10, 11), fuzzy id 8 >= 0.8
+            (2, "a", "smyth"),  # differs from cand 9 only in case
+            (3, "a", None),
+            (4, "b", "jone"),  # 0.8 against both 19 and 21, 0.6 against 20
+        ],
+        "probe_id long, block string, pname string",
+    )
+    cands = spark.createDataFrame(
+        [
+            (10, "a", "SMITH"),
+            (11, "a", "smith"),
+            (9, "a", "Smyth"),
+            (8, "a", "Smithe"),
+            (21, "b", "Jones"),
+            (20, "b", "Jonas"),
+            (19, "b", "Jonee"),
+        ],
+        "cand_id long, block string, cname string",
+    )
+    out = {
+        r["probe_id"]: (r["matched_id"], r["score"], r["method"])
+        for r in resolve_entities(probes, cands, ["block"]).collect()
+    }
+    assert out == {
+        1: (10, 1.0, "exact"),
+        2: (9, 1.0, "exact"),
+        4: (19, 0.8, "fuzzy"),
+    }
+
+
 def test_merge_upsert_rejects_null_keys(spark):
     """NULL merge keys can't match in a join — the engine fails fast like
     the reference's PK constraint instead of silently duplicating."""
-    import pytest
-
     target = spark.createDataFrame([("a", 1)], ["id", "val"])
     source = spark.createDataFrame([(None, 2), ("b", 3)], ["id", "val"])
     # the guard is in-plan (assert_true), so it surfaces at action time as

@@ -1648,8 +1648,6 @@ INT_RANK_WINDOW_WHITELIST = {
     "graph_random_walks": 3,  # [deg]
     "join_fuzzy_multipass": 1,  # [cand]
     "join_fuzzy_tokensort": 1,  # [cand]
-    "join_fuzzy_topk": 1,  # [cand]
-    "join_fuzzy_wratio": 1,  # [cand]
     "join_phonetic_block": 1,  # [cand]
     "join_set_similarity": 2,  # [cand] prefix-filtered candidates
     "join_spatial_knn": 1,  # [cand] radius-capped
@@ -1742,6 +1740,8 @@ SORT_AGGREGATE_WHITELIST = {
     "agg_minmax_by": 2,  # latest order per customer
     "dedup_semantic_contamination": 2,  # nearest eval vector per train row
     "events_longest_streak": 2,  # longest streak per user
+    "join_fuzzy_topk": 2,  # best candidate per probe, exact first
+    "join_fuzzy_wratio": 2,  # the same resolver with the WRatio scorer
     "llm_preference_pairs": 2,  # chosen and rejected in one aggregate
     "ml_kmeans_refine": 2,  # nearest centroid per vector
     "mm_audio_energy": 2,  # peak window per document

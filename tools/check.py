@@ -157,6 +157,17 @@ def type_mismatches(scols, sschema, dcols, dtypes):
     return bad
 
 
+def codegen_counters(spark) -> tuple[int, float]:
+    """(Janino compiles, compile seconds) so far in this JVM."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return (
+        metrics.METRIC_COMPILATION_TIME().getCount(),
+        gen.compileTime() / 1e9,
+    )
+
+
 def main(names):
     from repcheck_data_integration_spark import registry
     from repcheck_data_integration_spark.session import get_spark
@@ -188,6 +199,7 @@ def main(names):
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
+    codegen = codegen_counters(spark)
     n_pass = n_fail = n_rowsonly = 0
     rowsonly_names: list[str] = []
     for name in todo:
@@ -247,6 +259,12 @@ def main(names):
             n_fail += 1
 
     print(f"\n{n_pass} pass, {n_rowsonly} rows-only, {n_fail} fail")
+    # shows whether the codegen cache holds across the run: a class it
+    # evicted compiles again when a later query needs it
+    n_compiles, compile_s = (
+        b - a for a, b in zip(codegen, codegen_counters(spark))
+    )
+    print(f"codegen: {n_compiles} Janino compiles, {compile_s:.1f}s compile time")
     if rowsonly_names:
         # auditable by name (VERDICT r6 #7): each has a why-no-oracle +
         # unit-test row in COVERAGE.md "Rows-only registry"
