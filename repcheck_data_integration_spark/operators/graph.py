@@ -6,6 +6,19 @@ zip_code_overlap.py). The relational engine answers traversal queries with
 self-joins over the edge list — here the canonical 2-hop pattern, plus
 degree statistics. At 100 TB the edge table is bucketed by the join
 endpoint so hops are co-located joins.
+
+Each edge relation has one builder, and the oracles share its SQL twin:
+
+- ``_edges(spark, sf_dir)``: the distinct (cust, supp) purchase edges;
+  ``min_qty=PAIR_MIN_QTY`` gives the thinned high-volume set
+  (``SQL_HV_EDGES``).
+- ``_pr_edges``: the purchase edges in both directions as (src, dst),
+  with string ids ``"c"||cust`` and ``"s"||supp`` (``SQL_PR_EDGES``):
+  PageRank, BFS and assortativity.
+- ``_copurchase_pairs``: customer pairs (cust1 < cust2) sharing at least
+  ``PAIR_MIN_SHARED`` high-volume suppliers (``p`` in ``SQL_PAIRS``).
+- ``_undirected``: those pairs in both directions as (v, n) (the
+  oracles' ``und``): label propagation, modularity, Katz, PPR and k-core.
 """
 
 from __future__ import annotations
@@ -15,15 +28,19 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..functions.exact import scaled_long
-from ..tables import load
+from ..tables import literal_frame, load
 from .dedup import sql_stable_round4
 
 
-def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _edges(spark: SparkSession, sf_dir: str, min_qty: int = 0) -> DataFrame:
     """customer—supplier edges derived from purchases (distinct pairs) —
-    the person_area analogue on the fixture schema."""
+    the person_area analogue on the fixture schema. ``min_qty`` keeps only
+    lines of at least that quantity (``PAIR_MIN_QTY`` gives the thinned
+    high-volume edges)."""
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
+    if min_qty:
+        li = li.filter(F.col("l_quantity") >= min_qty)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
@@ -52,14 +69,17 @@ def graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 PAIR_MIN_QTY = 45     # "high-volume" purchase edge gate
 PAIR_MIN_SHARED = 3   # shared hv-suppliers for a similarity edge
 
+# the oracle twin of _edges(spark, sf_dir, PAIR_MIN_QTY)
+SQL_HV_EDGES = f"""edges AS (
+        SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        WHERE l_quantity >= {PAIR_MIN_QTY})"""
+
 
 @register(
     "graph_two_hop",
     oracle=f"""
-    WITH edges AS (
-        SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE l_quantity >= {PAIR_MIN_QTY})
+    WITH {SQL_HV_EDGES}
     SELECT a.cust AS cust1, b.cust AS cust2,
            count(*) AS n_shared_suppliers
     FROM edges a JOIN edges b ON a.supp = b.supp AND a.cust < b.cust
@@ -84,15 +104,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cust1 < cust2, n_shared_suppliers ≥ {PAIR_MIN_SHARED}) over
     high-volume purchase edges — the projected unipartite similarity
     graph over the (thinned) bipartite purchase edges."""
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_quantity") >= PAIR_MIN_QTY
-    )
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
+    e = _edges(spark, sf_dir, PAIR_MIN_QTY)
     a, b = e.alias("a"), e.alias("b")
     return (
         a.join(
@@ -108,11 +120,17 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-purchase pairs in both directions as ``(v, n)``: every
+    neighbor of v once, so a group by v sees the whole neighborhood."""
+    p = _copurchase_pairs(spark, sf_dir)
+    return p.select(F.col("cust1").alias("v"), F.col("cust2").alias("n")).unionAll(
+        p.select(F.col("cust2").alias("v"), F.col("cust1").alias("n"))
+    )
+
+
 SQL_PAIRS = f"""
-    edges AS (
-        SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE l_quantity >= {PAIR_MIN_QTY}),
+    {SQL_HV_EDGES},
     p AS (
         SELECT a.cust AS c1, b.cust AS c2
         FROM edges a JOIN edges b
@@ -230,6 +248,18 @@ def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fwd.unionAll(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
 
+# the oracle twin of _pr_edges
+SQL_PR_EDGES = """e0 AS (
+        SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+    edges AS (
+        SELECT 'c' || CAST(cust AS VARCHAR) AS src,
+               's' || CAST(supp AS VARCHAR) AS dst FROM e0
+        UNION ALL
+        SELECT 's' || CAST(supp AS VARCHAR), 'c' || CAST(cust AS VARCHAR)
+        FROM e0)"""
+
+
 def pagerank(spark: SparkSession, sf_dir: str, iterations: int = 2) -> DataFrame:
     """PageRank with ALL arithmetic in scaled integers: contributions are
     ``rank div outdegree`` (integer division), the damped update is
@@ -278,15 +308,7 @@ def pagerank(spark: SparkSession, sf_dir: str, iterations: int = 2) -> DataFrame
 @register(
     "graph_pagerank",
     oracle=f"""
-    WITH e0 AS (
-        SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-    edges AS (
-        SELECT 'c' || CAST(cust AS VARCHAR) AS src,
-               's' || CAST(supp AS VARCHAR) AS dst FROM e0
-        UNION ALL
-        SELECT 's' || CAST(supp AS VARCHAR), 'c' || CAST(cust AS VARCHAR)
-        FROM e0),
+    WITH {SQL_PR_EDGES},
     deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
     r0 AS (SELECT src AS node, CAST({PR_SCALE} AS BIGINT) AS r FROM deg),
     c1 AS (
@@ -410,11 +432,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the label key + one (v, lbl) hash aggregate + one top-1 window —
     all key-partitioned shuffles on node id; no driver materialization,
     lineage capped by localCheckpoint."""
-    pairs = _copurchase_pairs(spark, sf_dir).select("cust1", "cust2")
-    und = pairs.select(
-        F.col("cust1").alias("v"), F.col("cust2").alias("n")
-    ).unionAll(pairs.select(F.col("cust2").alias("v"), F.col("cust1").alias("n")))
-    out = label_propagation(und, rounds=2)
+    out = label_propagation(_undirected(spark, sf_dir), rounds=2)
     return out.select(F.col("v").alias("cust"), "community")
 
 
@@ -587,10 +605,7 @@ _AA_SCALE = 1_000_000_000
 @register(
     "graph_adamic_adar",
     oracle=f"""
-    WITH edges AS (
-        SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE l_quantity >= {PAIR_MIN_QTY}),
+    WITH {SQL_HV_EDGES},
     deg AS (SELECT supp, count(*) AS d FROM edges GROUP BY supp),
     w AS (
         SELECT e1.cust AS c1, e2.cust AS c2, deg.d
@@ -624,18 +639,8 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense hop nodes must be gated first), degrees join in on supp — the
     same key the wedge join already shuffles on, so the degree attach is
     co-located, then one hash agg on the pair."""
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_quantity") >= PAIR_MIN_QTY
-    )
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
-        )
-        .distinct()
-        .persist()  # feeds the degree agg AND both wedge sides
-    )
+    # feeds the degree agg AND both wedge sides
+    edges = _edges(spark, sf_dir, PAIR_MIN_QTY).persist()
     deg = edges.groupBy("supp").agg(F.count(F.lit(1)).alias("d"))
     e1 = edges.select(F.col("cust").alias("c1"), "supp")
     e2 = edges.select(F.col("cust").alias("c2"), "supp")
@@ -668,10 +673,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_jaccard_neighbors",
     oracle=f"""
-    WITH edges AS (
-        SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE l_quantity >= {PAIR_MIN_QTY}),
+    WITH {SQL_HV_EDGES},
     degc AS (SELECT cust, count(*) AS d FROM edges GROUP BY cust),
     w AS (
         SELECT e1.cust AS c1, e2.cust AS c2, count(*) AS n_common
@@ -703,18 +705,8 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrees attach by cust key AFTER the pair aggregate, so the join
     input is the (gated) pair list, not the wedge expansion.
     """
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_quantity") >= PAIR_MIN_QTY
-    )
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
-        )
-        .distinct()
-        .persist()  # degree agg + both wedge sides
-    )
+    # feeds the degree agg AND both wedge sides
+    edges = _edges(spark, sf_dir, PAIR_MIN_QTY).persist()
     degc = edges.groupBy("cust").agg(F.count(F.lit(1)).alias("d"))
     e1 = edges.select(F.col("cust").alias("c1"), "supp")
     e2 = edges.select(F.col("cust").alias("c2"), "supp")
@@ -813,16 +805,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted once; nothing driver-side ever exceeds one row per
     normalization constant.
     """
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
-        )
-        .distinct()
-        .persist()  # three score-update joins over the same edge list
-    )
+    # three score-update joins over the same edge list
+    edges = _edges(spark, sf_dir).persist()
     # Prime the cache with one materializing action BEFORE the L1-total
     # broadcast subtrees plan their own jobs: un-primed, each broadcast
     # stage (at1/ht1/at2) raced to recompute the join+distinct — 3
@@ -840,6 +824,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         # caches.
         df = df.persist()
         total = df.agg(F.sum(score)).first()[0]
+        if total is None:  # no edges: the frame is empty, any divisor does
+            total = 1
         return df.select(
             *[c for c in df.columns if c != score],
             F.expr(f"({score} * {HITS_SCALE}L) div {total}L").alias(score),
@@ -975,15 +961,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotonically, so later rounds cost less, and the unionAll'd
     direction doubling is a projection, not a shuffle.
     """
-    p = _copurchase_pairs(spark, sf_dir).select("cust1", "cust2")
-    und = (
-        p.select(F.col("cust1").alias("n"), F.col("cust2").alias("m"))
-        .unionAll(p.select(F.col("cust2").alias("n"), F.col("cust1").alias("m")))
-        .persist()  # four degree passes + three peels read it
-    )
-
-    def degrees(e: DataFrame) -> DataFrame:
-        return kcore_degrees(e)
+    # four degree passes + three peels read it
+    und = _undirected(spark, sf_dir).toDF("n", "m").persist()
 
     def peel(e: DataFrame, deg: DataFrame) -> DataFrame:
         # iterative-op hygiene (the label_propagation lesson): flatten
@@ -997,13 +976,13 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # through operators/audit_hooks.py on LocalRelation stand-ins.
         return kcore_peel_body(e, deg).localCheckpoint(eager=True)
 
-    d0 = degrees(und)
+    d0 = kcore_degrees(und)
     e1 = peel(und, d0)
-    d1 = degrees(e1)
+    d1 = kcore_degrees(e1)
     e2 = peel(e1, d1)
-    d2 = degrees(e2)
+    d2 = kcore_degrees(e2)
     e3 = peel(e2, d2)
-    d3 = degrees(e3)
+    d3 = kcore_degrees(e3)
 
     def side(deg: DataFrame, name: str) -> DataFrame:
         return deg.select("n", F.col("d").alias(name))
@@ -1036,16 +1015,8 @@ BFS_ROUNDS = 3
 
 @register(
     "graph_bfs_distance",
-    oracle="""
-    WITH e0 AS (
-        SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-    edges AS (
-        SELECT 'c' || CAST(cust AS VARCHAR) AS src,
-               's' || CAST(supp AS VARCHAR) AS dst FROM e0
-        UNION ALL
-        SELECT 's' || CAST(supp AS VARCHAR), 'c' || CAST(cust AS VARCHAR)
-        FROM e0),
+    oracle=f"""
+    WITH {SQL_PR_EDGES},
     nodes AS (SELECT DISTINCT src AS node FROM edges),
     d0 AS (SELECT min(node) AS node FROM nodes),
     f1 AS (
@@ -1092,45 +1063,45 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: the seed is min(node) (byte-wise string order on both
     engines), expansion is set-valued (distinct/anti-join, no float, no
-    tie-breaks needed); counts are exact.
+    tie-breaks needed); counts are exact. Every distance 0..{BFS_ROUNDS}
+    and -1 has a row, zero counts included, and distance 0 counts the
+    oracle's one-row seed relation, which is one row on an empty graph
+    too.
 
     Scale shape: the edge list is persisted once (the pagerank lesson);
-    per round, cost is one equi-join shuffle on the frontier keys plus
-    one anti-join on the visited set — both hash-partitioned by node id,
+    the seed is one driver scalar, so no round re-derives it; per round,
+    cost is one equi-join shuffle on the frontier keys plus one
+    anti-join on the visited set — both hash-partitioned by node id,
     never all-pairs. The visited set grows monotonically but stays
     node-, not edge-, sized.
     """
     edges = _pr_edges(spark, sf_dir).persist()
-    nodes = edges.select("src").distinct().persist()
-    seed = nodes.agg(F.min("src").alias("node"))
-    reached = seed.select("node", F.lit(0).alias("dist"))
-    frontier = seed.select("node")
+    nodes = edges.select(F.col("src").alias("node")).distinct().persist()
+    # a singleton first(), like graph_hits' L1 totals: a seed frame is
+    # re-derived inside every round's visited set, each copy a STRING
+    # min() SortAggregate. NULL on an empty graph, whose seed frame is
+    # then empty.
+    seed = nodes.agg(F.min("node")).first()[0]
+    frontier = reached = nodes.filter(F.col("node") == F.lit(seed))
+
+    def count_at(dist: int, df: DataFrame) -> DataFrame:
+        return df.agg(F.count(F.lit(1)).cast("long").alias("n_nodes")).select(
+            F.lit(dist).alias("dist"), "n_nodes"
+        )
+
+    hist = literal_frame(spark, [(0, 1)], "dist int, n_nodes long")
     for k in range(1, BFS_ROUNDS + 1):
-        nxt = (
+        frontier = (
             edges.join(frontier, edges.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
+            .join(reached, "node", "left_anti")
+            .persist()  # read twice: next round's expand + the visited union
         )
-        frontier = nxt.join(
-            reached.select("node"), "node", "left_anti"
-        ).persist()  # read twice: next round's expand + the visited union
-        reached = reached.unionAll(
-            frontier.select("node", F.lit(k).alias("dist"))
-        )
-    hist = reached.groupBy("dist").agg(
-        F.count(F.lit(1)).cast("long").alias("n_nodes")
-    )
-    un = (
-        nodes.withColumnRenamed("src", "node")
-        .join(reached.select("node"), "node", "left_anti")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-        .select(F.lit(-1).alias("dist"), "n_nodes")
-    )
-    return (
-        hist.unionAll(un)
-        .select(F.col("dist").cast("int"), "n_nodes")
-        .orderBy("dist")
-    )
+        reached = reached.unionAll(frontier)
+        hist = hist.unionAll(count_at(k, frontier))
+    unreached = nodes.join(reached, "node", "left_anti")
+    return hist.unionAll(count_at(-1, unreached)).orderBy("dist")
 
 
 # --------------------------------------------------------------------------
@@ -1140,24 +1111,17 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Pearson over the (deg(src), deg(dst)) pairs of the doubled edge list —
 # exactly Newman's assortativity coefficient r for an undirected graph
 # (the doubling supplies both orientations the formula averages over).
+# r is NULL when every degree is equal: both engines divide by NULL, not 0.
 _ASSORT_R = (
     "((m * sxy - sx * sy)"
-    " / sqrt((m * sxx - sx * sx) * (m * syy - sy * sy)))"
+    " / nullif(sqrt((m * sxx - sx * sx) * (m * syy - sy * sy)), 0))"
 )
 
 
 @register(
     "graph_degree_assortativity",
     oracle=f"""
-    WITH e0 AS (
-        SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-    edges AS (
-        SELECT 'c' || CAST(cust AS VARCHAR) AS src,
-               's' || CAST(supp AS VARCHAR) AS dst FROM e0
-        UNION ALL
-        SELECT 's' || CAST(supp AS VARCHAR), 'c' || CAST(cust AS VARCHAR)
-        FROM e0),
+    WITH {SQL_PR_EDGES},
     deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS k
             FROM edges GROUP BY 1),
     st AS (
@@ -1301,16 +1265,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized by the LP loop, so the three references don't re-run
     the rounds; the doubled edge list is persisted once.
     """
-    pairs = _copurchase_pairs(spark, sf_dir).select("cust1", "cust2")
-    und = (
-        pairs.select(F.col("cust1").alias("v"), F.col("cust2").alias("n"))
-        .unionAll(
-            pairs.select(
-                F.col("cust2").alias("v"), F.col("cust1").alias("n")
-            )
-        )
-        .persist()  # degrees + M2 + intra all read it
-    )
+    und = _undirected(spark, sf_dir).persist()  # degrees + M2 + intra
     labels = label_propagation(und, rounds=2)
     deg = und.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("d"))
     mm = und.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("m2"))
@@ -1409,16 +1364,7 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence. At 100 TB the cost is 3 edge-keyed shuffles, exactly
     a 3-step GraphX/Pregel superstep sequence expressed relationally.
     """
-    pairs = _copurchase_pairs(spark, sf_dir).select("cust1", "cust2")
-    und = (
-        pairs.select(F.col("cust1").alias("v"), F.col("cust2").alias("n"))
-        .unionAll(
-            pairs.select(
-                F.col("cust2").alias("v"), F.col("cust1").alias("n")
-            )
-        )
-        .persist()  # degree + both message rounds read it
-    )
+    und = _undirected(spark, sf_dir).persist()  # degree + both rounds
     deg = und.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("w1"))
     w2t = (
         und.join(deg.select(F.col("v").alias("n"), "w1"), "n")
@@ -1624,14 +1570,7 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: {PPR_ROUNDS} node-keyed equi-join + aggregate rounds
     over the persisted doubled edge list — relational Pregel supersteps,
     like graph_katz_centrality but seed-restarted and normalized."""
-    pairs = _copurchase_pairs(spark, sf_dir).select("cust1", "cust2")
-    und = (
-        pairs.select(F.col("cust1").alias("v"), F.col("cust2").alias("n"))
-        .unionAll(
-            pairs.select(F.col("cust2").alias("v"), F.col("cust1").alias("n"))
-        )
-        .persist()
-    )
+    und = _undirected(spark, sf_dir).persist()
     deg = und.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("w1"))
     is_seed = F.col("v") % PPR_SEED_MOD == 0
     r = deg.select(

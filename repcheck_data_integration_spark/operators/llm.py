@@ -14,8 +14,8 @@ tiktoken nor an API client is in this container, so:
   regexes as the reference's cleanup);
 - the "model call" is a deterministic extractive fake (first-k-tokens),
   making the whole pipeline oracle-checkable;
-- the real client/pdf hooks raise NotImplementedError behind import-tries
-  (swap-in points documented).
+- PDF text comes from the pure-python extractor in sources/pdftext.py
+  (summarize_bills_federal.py:136-150 uses pdfminer).
 """
 
 from __future__ import annotations
@@ -51,24 +51,6 @@ def fake_summarize(text: str, k: int = SUMMARY_TOKENS) -> str:
     """Deterministic extractive 'summary': first k word tokens. The real
     chat-API call (stubbed in the reference too) plugs in here."""
     return " ".join(re.findall(r"[a-z0-9]+", text)[:k])
-
-
-def extract_pdf_text(payload: bytes) -> str:
-    """PDF text extraction (summarize_bills_federal.py:136-150). Prefers
-    pdfminer when installed; otherwise the pure-python content-stream
-    extractor in sources/pdftext.py (stdlib zlib + PDF text operators) — a
-    real kernel, not a stub — handles the standard-text-operator PDFs the
-    reference workload consumes."""
-    try:
-        from io import BytesIO
-
-        from pdfminer.high_level import extract_text
-
-        return extract_text(BytesIO(payload))
-    except ImportError:
-        from ..sources.pdftext import extract_pdf_text as _extract
-
-        return _extract(payload)
 
 
 @register(
@@ -157,15 +139,14 @@ def llm_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     One mapInPandas pass, no shuffle; at 100 TB this is the same
     Arrow-batched shape a real pdf corpus scan would use (binary payload
     column in, text out)."""
-    from ..sources.pdftext import extract_pdf_text as _extract
-    from ..sources.pdftext import pdf_from_text
+    from ..sources.pdftext import extract_pdf_text, pdf_from_text
 
     def run_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n_toks, oks = [], []
             for text in pdf["text"]:
                 payload = pdf_from_text(text, wrap=10**9)
-                got = clean_text(_extract(payload))
+                got = clean_text(extract_pdf_text(payload))
                 want = clean_text(
                     text.encode("latin-1", errors="ignore").decode("latin-1")
                 )

@@ -100,17 +100,6 @@ def test_multiline_td_layout():
     assert extract_pdf_text(_mini_pdf(content)) == "line one\nline two"
 
 
-def test_operator_fallback_uses_pure_python(monkeypatch):
-    # operators.llm.extract_pdf_text must fall back to this kernel when
-    # pdfminer is absent (it is, in this container) — not raise.
-    from repcheck_data_integration_spark.operators.llm import (
-        extract_pdf_text as op_extract,
-    )
-
-    payload = pdf_from_text("fallback works")
-    assert op_extract(payload) == "fallback works"
-
-
 def test_escape_projection_is_latin1():
     # latin-1-encodable chars survive; astral/unicode beyond FF dropped.
     text = "café \U0001f600 end"

@@ -1752,7 +1752,6 @@ SORT_AGGREGATE_WHITELIST = {
     # min/max over a STRING column
     "dq_profile": 4,  # one-row profile of string columns
     "fn_collation_group": 2,  # binary min() picks the casing variant
-    "graph_bfs_distance": 82,  # min(node) seed, copied into every round
     "resolve_survivorship": 4,  # golden segment beside a countDistinct
 }
 

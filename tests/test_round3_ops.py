@@ -278,22 +278,6 @@ def test_bigram_xent_matches_python(spark):
         assert out[doc_id]["n_bigrams"] == n
 
 
-def test_label_propagation_two_cliques(spark):
-    """Two 4-cliques joined by a single bridge edge must resolve to two
-    communities labeled by each clique's minimum id."""
-    from repcheck_data_integration_spark.operators.graph import label_propagation
-
-    cliques = []
-    for base in (0, 10):
-        ids = [base + i for i in range(4)]
-        cliques += [(a, b) for a in ids for b in ids if a != b]
-    bridge = [(3, 10), (10, 3)]
-    und = spark.createDataFrame(cliques + bridge, ["v", "n"])
-    out = {r["v"]: r["community"] for r in label_propagation(und, rounds=3).collect()}
-    assert all(out[i] == 0 for i in range(4)), out
-    assert all(out[10 + i] == 10 for i in range(4)), out
-
-
 def test_phash_bands_admit_then_verify_rejects(spark):
     """With the md5 stand-in hash, unrelated payloads collide on a 16-bit
     band with p≈2^-16 — at sf0.01 some candidate pairs must appear, and

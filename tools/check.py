@@ -206,6 +206,10 @@ def main(names):
         if name not in registry.QUERIES:
             print(f"[SKIP] {name}: not registered")
             continue
+        # plan each query against an empty cache, as window_audit does: an
+        # earlier query's persisted subtree would otherwise be substituted
+        # into this plan (the round-8 hazard), and no query releases its own
+        spark.catalog.clearCache()
         t0 = time.time()
         try:
             sdf = registry.QUERIES[name](spark, SF_DIR)
