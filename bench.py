@@ -226,6 +226,11 @@ def main() -> None:
     for name in names:
         trials = []
         for _ in range(2):
+            # plan each trial against an empty cache, as tools/check.py
+            # does: otherwise the second trial can be planned against the
+            # first trial's InMemoryRelation (the round-8 hazard), and
+            # min-of-2 would time a cache hit; untimed
+            spark.catalog.clearCache()
             t0 = time.time()
             df = registry.QUERIES[name](spark, SF_DIR)
             drain(df)

@@ -8,6 +8,12 @@ associative, and identical in Spark and DuckDB; divide once at the end.
 
 The oracle twins in the query registry use the literally-identical SQL
 formula so per-row IEEE arithmetic matches bit-for-bit.
+
+The module has two accumulators. Signed money goes through the scaled LONG
+(:func:`exact_sum` for non-negative columns, :func:`scaled_long` inside
+your own sum otherwise). Integral sums and products go through
+:func:`dec_sum`'s DECIMAL(38,0), which cannot wrap where a LONG sum of
+squares or cross products would pass ``Long.MAX``.
 """
 
 from __future__ import annotations
@@ -94,3 +100,16 @@ def scaled_long(col: Column, scale: int) -> Column:
         F.when(x < 0, F.lit(-1)).otherwise(F.lit(1)).cast("long")
         * F.floor(F.abs(x) + F.lit(0.5))
     ).cast("long")
+
+
+def dec_sum(expr: Column | str, scale: float | None = None) -> Column:
+    """Exact sum of an integral expression as double, divided by ``scale``
+    when given. A ``str`` goes through ``F.expr``. The sum runs in
+    DECIMAL(38,0), so it is order-independent and does not wrap past
+    ``Long.MAX``; widen a product's operand before the multiply
+    (``"CAST(x AS DECIMAL(38,0)) * x"``), since the final cast alone leaves
+    the per-row product in LONG. NULL rows are skipped, and an all-NULL
+    input sums to NULL."""
+    x = F.expr(expr) if isinstance(expr, str) else expr
+    s = F.sum(x.cast("decimal(38,0)")).cast("double")
+    return s if scale is None else s / F.lit(scale)

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from .ckpt import pin
 from ..registry import register
-from ..functions.exact import scaled_long
+from ..functions.exact import dec_sum, scaled_long
 from ..functions.top1 import DESC, Top1
 from ..tables import literal_frame, load, load_bucketed
 from .dedup import sql_stable_round4, stable_round4
@@ -2440,11 +2440,7 @@ def agg_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
         s.join(F.broadcast(prev), F.col("p_dec") <= F.col("decile"))
         .groupBy("decile", "n_customers", "revenue_cents", "tot")
-        .agg(
-            F.sum(F.col("p_rev").cast("decimal(38,0)"))
-            .cast("double")
-            .alias("cum")
-        )
+        .agg(dec_sum("p_rev").alias("cum"))
     )
     return c.selectExpr(
         "CAST(decile AS BIGINT) AS decile",

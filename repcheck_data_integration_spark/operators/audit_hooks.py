@@ -113,12 +113,3 @@ def _pca_step_frames(spark: SparkSession) -> list[DataFrame]:
         "vec_id long, qv array<long>",
     )
     return [pca_step_w(q, [1, 1, 1])]
-
-
-def frames_for_query(spark: SparkSession, name: str) -> list[DataFrame]:
-    """All representative round-body frames covering ``name``'s truncated
-    leaves (empty when the query has no hook)."""
-    out: list[DataFrame] = []
-    for h in QUERY_HOOKS.get(name, []):
-        out.extend(HOOKS[h](spark))
-    return out

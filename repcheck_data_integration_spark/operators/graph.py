@@ -23,11 +23,11 @@ Each edge relation has one builder, and the oracles share its SQL twin:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..functions.exact import scaled_long
+from ..functions.exact import dec_sum, scaled_long
 from ..tables import literal_frame, load
 from .dedup import sql_stable_round4
 
@@ -1168,9 +1168,6 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ds = deg.select(F.col("node").alias("sn"), F.col("k").alias("kx"))
     dd = deg.select(F.col("node").alias("dn"), F.col("k").alias("ky"))
 
-    def dsum(expr: str) -> Column:
-        return F.sum(F.expr(expr).cast("decimal(38,0)")).cast("double")
-
     # degree products are widened BEFORE the multiply: `kx * kx` under a
     # trailing decimal cast still evaluates the product in LONG, which
     # wraps for a hub of degree > ~3e9 (same IntegralDivide/overflow
@@ -1181,11 +1178,11 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(dd, edges.dst == dd.dn)
         .agg(
             F.count(F.lit(1)).cast("double").alias("m"),
-            dsum("kx").alias("sx"),
-            dsum("ky").alias("sy"),
-            dsum("CAST(kx AS DECIMAL(38,0)) * kx").alias("sxx"),
-            dsum("CAST(kx AS DECIMAL(38,0)) * ky").alias("sxy"),
-            dsum("CAST(ky AS DECIMAL(38,0)) * ky").alias("syy"),
+            dec_sum("kx").alias("sx"),
+            dec_sum("ky").alias("sy"),
+            dec_sum("CAST(kx AS DECIMAL(38,0)) * kx").alias("sxx"),
+            dec_sum("CAST(kx AS DECIMAL(38,0)) * ky").alias("sxy"),
+            dec_sum("CAST(ky AS DECIMAL(38,0)) * ky").alias("syy"),
         )
     )
     return st.selectExpr(

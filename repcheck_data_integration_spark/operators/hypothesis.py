@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..functions.exact import scaled_long
+from ..functions.exact import dec_sum, scaled_long
 from ..tables import literal_frame, load
 from .dedup import sql_stable_round4, stable_round4, tokens
 from .models import NB_PRED_SQL, nb_doc_pred
@@ -442,24 +442,18 @@ def agg_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
 
-    def dsum(expr: str, scale: float) -> F.Column:
-        return (
-            F.sum(F.expr(expr).cast("decimal(38,0)")).cast("double")
-            / F.lit(scale)
-        )
-
     pooled = base.agg(
         F.count("*").cast("double").alias("n"),
-        dsum("x", 100.0).alias("sx"),
-        dsum("y", 100.0).alias("sy"),
-        dsum("x * x", 10000.0).alias("sxx"),
-        dsum("x * y", 10000.0).alias("sxy"),
-        dsum("y * y", 10000.0).alias("syy"),
+        dec_sum("x", 100.0).alias("sx"),
+        dec_sum("y", 100.0).alias("sy"),
+        dec_sum("x * x", 10000.0).alias("sxx"),
+        dec_sum("x * y", 10000.0).alias("sxy"),
+        dec_sum("y * y", 10000.0).alias("syy"),
     )
     per_arm = base.groupBy("arm").agg(
         F.count("*").cast("double").alias("na"),
-        dsum("x", 100.0).alias("xa"),
-        dsum("y", 100.0).alias("ya"),
+        dec_sum("x", 100.0).alias("xa"),
+        dec_sum("y", 100.0).alias("ya"),
     )
     return (
         per_arm.crossJoin(F.broadcast(pooled))
@@ -583,19 +577,16 @@ def ml_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def dsum(expr: str) -> F.Column:
-        return F.sum(F.expr(expr).cast("decimal(38,0)")).cast("double")
-
     st = (
         joint.join(F.broadcast(mq), "q")
         .join(F.broadcast(md), "d")
         .agg(
-            dsum("c").alias("n"),
-            dsum("c * rx2").alias("sx"),
-            dsum("c * ry2").alias("sy"),
-            dsum("c * rx2 * rx2").alias("sxx"),
-            dsum("c * rx2 * ry2").alias("sxy"),
-            dsum("c * ry2 * ry2").alias("syy"),
+            dec_sum("c").alias("n"),
+            dec_sum("c * rx2").alias("sx"),
+            dec_sum("c * ry2").alias("sy"),
+            dec_sum("c * rx2 * rx2").alias("sxx"),
+            dec_sum("c * rx2 * ry2").alias("sxy"),
+            dec_sum("c * ry2 * ry2").alias("syy"),
             F.count("*").cast("long").alias("cells"),
         )
     )
@@ -692,15 +683,12 @@ def ml_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    def dsum(expr: str) -> F.Column:
-        return F.sum(F.expr(expr).cast("decimal(38,0)")).cast("double")
-
     st = rk.agg(
-        dsum("c").alias("n"),
-        dsum("c1").alias("n1"),
-        dsum("c - c1").alias("n2"),
-        dsum("c1 * r2").alias("r12"),
-        dsum("c * c * c - c").alias("tie"),
+        dec_sum("c").alias("n"),
+        dec_sum("c1").alias("n1"),
+        dec_sum("c - c1").alias("n2"),
+        dec_sum("c1 * r2").alias("r12"),
+        dec_sum("c * c * c - c").alias("tie"),
     )
     return st.selectExpr(
         "CAST(n1 AS BIGINT) AS n_returned",
@@ -809,20 +797,12 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"(sg * {ANOVA_MEAN_SCALE}) div ng").alias("mg"),
     )
     st = qm.agg(
-        F.sum(F.col("ng").cast("decimal(38,0)"))
-        .cast("double")
-        .alias("n"),
+        dec_sum("ng").alias("n"),
         F.count("*").cast("double").alias("k"),
         F.sum("sg").cast("double").alias("s"),
         F.sum("sg").alias("s_raw"),
         F.sum("svvg").cast("double").alias("svv"),
-        F.sum(
-            F.col("ng").cast("decimal(38,0)")
-            * F.col("mg")
-            * F.col("mg")
-        )
-        .cast("double")
-        .alias("t"),
+        dec_sum("CAST(ng AS DECIMAL(38,0)) * mg * mg").alias("t"),
         F.sum(F.col("ng").cast("decimal(38,0)")).alias("n_raw"),
     )
     fin = st.select(
@@ -1619,17 +1599,13 @@ def agg_delta_method_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
     )
 
-    def dsum(expr: str, scale: float) -> F.Column:
-        col = F.sum(F.expr(expr).cast("decimal(38,0)")).cast("double")
-        return col / F.lit(scale) if scale != 1.0 else col
-
     arms = per_user.groupBy("arm").agg(
         F.count("*").cast("double").alias("k"),
-        dsum("y", 100.0).alias("sy"),
-        dsum("n", 1.0).alias("sn"),
-        dsum("y * y", 10000.0).alias("syy"),
-        dsum("n * n", 1.0).alias("snn"),
-        dsum("y * n", 100.0).alias("syn"),
+        dec_sum("y", 100.0).alias("sy"),
+        dec_sum("n").alias("sn"),
+        dec_sum("y * y", 10000.0).alias("syy"),
+        dec_sum("n * n").alias("snn"),
+        dec_sum("y * n", 100.0).alias("syn"),
     )
     return arms.selectExpr(
         "CAST(arm AS BIGINT) AS arm",
@@ -1716,12 +1692,8 @@ def agg_paired_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = per_cust.agg(
         F.count("*").cast("double").alias("k"),
-        F.sum(F.expr("dd").cast("decimal(38,0)"))
-        .cast("double")
-        .alias("sd"),
-        F.sum(F.expr("dd * dd").cast("decimal(38,0)"))
-        .cast("double")
-        .alias("sdd"),
+        dec_sum("dd").alias("sd"),
+        dec_sum("dd * dd").alias("sdd"),
     )
     return agg.selectExpr(
         "CAST(k AS BIGINT) AS n_customers",
@@ -2018,10 +1990,8 @@ def ml_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = per_up.groupBy("treat", "post").agg(
         F.count("*").cast("double").alias("n"),
-        F.sum(F.col("y").cast("decimal(38,0)")).cast("double").alias("sy"),
-        F.sum(F.expr("CAST(y AS DECIMAL(38,0)) * y"))
-        .cast("double")
-        .alias("syy"),
+        dec_sum("y").alias("sy"),
+        dec_sum("CAST(y AS DECIMAL(38,0)) * y").alias("syy"),
         F.expr(
             "CAST((sum(CAST(y AS DECIMAL(38,0))) * 1000000000)"
             " div count(*) AS BIGINT)"

@@ -23,11 +23,11 @@ output, full tie-break chains.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..functions.exact import scaled_long
+from ..functions.exact import dec_sum, scaled_long
 from ..functions.top1 import packed_min, unpack_id
 from ..tables import load, load_bucketed
 from .dedup import sql_stable_round4, stable_round4, tokens
@@ -119,23 +119,17 @@ def ml_linreg_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
         scaled_long(F.col("l_extendedprice"), 100).alias("p2"),
     )
 
-    def dsum(expr: str, scale: float) -> Column:
-        return (
-            F.sum(F.expr(expr).cast("decimal(38,0)")).cast("double")
-            / F.lit(scale)
-        )
-
     st = li.agg(
         F.count("*").cast("double").alias("n"),
-        dsum("q2", 100.0).alias("sq"),
-        dsum("d2", 100.0).alias("sd"),
-        dsum("p2", 100.0).alias("sp"),
-        dsum("q2 * q2", 10000.0).alias("sqq"),
-        dsum("q2 * d2", 10000.0).alias("sqd"),
-        dsum("d2 * d2", 10000.0).alias("sdd"),
-        dsum("q2 * p2", 10000.0).alias("sqp"),
-        dsum("d2 * p2", 10000.0).alias("sdp"),
-        dsum("p2 * p2", 10000.0).alias("spp"),
+        dec_sum("q2", 100.0).alias("sq"),
+        dec_sum("d2", 100.0).alias("sd"),
+        dec_sum("p2", 100.0).alias("sp"),
+        dec_sum("q2 * q2", 10000.0).alias("sqq"),
+        dec_sum("q2 * d2", 10000.0).alias("sqd"),
+        dec_sum("d2 * d2", 10000.0).alias("sdd"),
+        dec_sum("q2 * p2", 10000.0).alias("sqp"),
+        dec_sum("d2 * p2", 10000.0).alias("sdp"),
+        dec_sum("p2 * p2", 10000.0).alias("spp"),
     )
     # CAST(... AS DOUBLE): Spark parses the 10000.0 literal in
     # stable-round4 as DECIMAL(5,1), so floor()/10000.0 is a DECIMAL
@@ -741,21 +735,17 @@ def ml_logreg_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("u"),
     )
 
-    def dsum(expr: str, scale: float) -> F.Column:
-        s = F.sum(F.expr(expr).cast("decimal(38,0)")).cast("double")
-        return s / F.lit(scale) if scale != 1.0 else s
-
     st = li.agg(
         F.count("*").cast("double").alias("n"),
-        dsum("q2", 100.0).alias("sq"),
-        dsum("d2", 100.0).alias("sd"),
-        dsum("u", 1.0).alias("sp"),
-        dsum("q2 * q2", 10000.0).alias("sqq"),
-        dsum("q2 * d2", 10000.0).alias("sqd"),
-        dsum("d2 * d2", 10000.0).alias("sdd"),
-        dsum("q2 * u", 100.0).alias("sqp"),
-        dsum("d2 * u", 100.0).alias("sdp"),
-        dsum("(u + 1) div 2", 1.0).alias("npos"),
+        dec_sum("q2", 100.0).alias("sq"),
+        dec_sum("d2", 100.0).alias("sd"),
+        dec_sum("u").alias("sp"),
+        dec_sum("q2 * q2", 10000.0).alias("sqq"),
+        dec_sum("q2 * d2", 10000.0).alias("sqd"),
+        dec_sum("d2 * d2", 10000.0).alias("sdd"),
+        dec_sum("q2 * u", 100.0).alias("sqp"),
+        dec_sum("d2 * u", 100.0).alias("sdp"),
+        dec_sum("(u + 1) div 2").alias("npos"),
     )
     return st.selectExpr(
         "CAST(n AS BIGINT) AS n_rows",
@@ -1126,7 +1116,7 @@ def ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     sst = vl.agg(
         F.sum("svv").cast("double").alias("svv"),
         F.sum("sv").cast("double").alias("s"),
-        F.sum(F.col("nv").cast("decimal(38,0)")).cast("double").alias("n"),
+        dec_sum("nv").alias("n"),
     )
     s1r = s1.select(
         F.col("split_v").alias("split1"),

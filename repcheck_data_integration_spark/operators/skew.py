@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..functions.exact import scaled_long
+from ..functions.exact import dec_sum, scaled_long
 from ..tables import load
 from .aggregates import SQL_SCALED
 
@@ -159,9 +159,7 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     scaled = scaled_long(F.col("value"), 100)
     return joined.groupBy("event_type", "n_name").agg(
         F.count(F.lit(1)).alias("n_events"),
-        (
-            F.sum(scaled.cast("decimal(38,0)")).cast("double") / 100.0
-        ).alias("sum_value"),
+        dec_sum(scaled, 100.0).alias("sum_value"),
     )
 
 

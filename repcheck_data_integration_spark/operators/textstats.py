@@ -12,6 +12,7 @@ import hashlib as _hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dec_sum
 from ..registry import register
 from ..tables import load
 from .dedup import sql_stable_round4, stable_round4, tokens
@@ -1357,19 +1358,13 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("qy"),
     )
 
-    def dsum(expr: str, scale: float) -> Column:
-        return (
-            F.sum(F.expr(expr).cast("decimal(38,0)")).cast("double")
-            / F.lit(scale)
-        )
-
     st = pts.agg(
         F.count("*").cast("double").alias("n"),
-        dsum("qx", 1e6).alias("sx"),
-        dsum("qy", 1e6).alias("sy"),
-        dsum("qx * qx", 1e12).alias("sxx"),
-        dsum("qx * qy", 1e12).alias("sxy"),
-        dsum("qy * qy", 1e12).alias("syy"),
+        dec_sum("qx", 1e6).alias("sx"),
+        dec_sum("qy", 1e6).alias("sy"),
+        dec_sum("qx * qx", 1e12).alias("sxx"),
+        dec_sum("qx * qy", 1e12).alias("sxy"),
+        dec_sum("qy * qy", 1e12).alias("syy"),
     )
     return st.selectExpr(
         "CAST(n AS BIGINT) AS n_terms",
@@ -1495,19 +1490,13 @@ def text_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.log(F.col("cv")) * ZIPF_LN_SCALE).cast("long").alias("qy"),
     )
 
-    def dsum(expr: str, scale: float) -> Column:
-        return (
-            F.sum(F.expr(expr).cast("decimal(38,0)")).cast("double")
-            / F.lit(scale)
-        )
-
     st = pts.agg(
         F.count("*").cast("double").alias("n"),
-        dsum("qx", 1e6).alias("sx"),
-        dsum("qy", 1e6).alias("sy"),
-        dsum("qx * qx", 1e12).alias("sxx"),
-        dsum("qx * qy", 1e12).alias("sxy"),
-        dsum("qy * qy", 1e12).alias("syy"),
+        dec_sum("qx", 1e6).alias("sx"),
+        dec_sum("qy", 1e6).alias("sy"),
+        dec_sum("qx * qx", 1e12).alias("sxx"),
+        dec_sum("qx * qy", 1e12).alias("sxy"),
+        dec_sum("qy * qy", 1e12).alias("syy"),
     )
     return st.selectExpr(
         "CAST(n AS BIGINT) AS n_points",
@@ -1590,10 +1579,8 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ts = tc.groupBy("tok").agg(
         F.count("*").cast("double").alias("df"),
-        F.sum(F.col("tf").cast("decimal(38,0)")).cast("double").alias("stf"),
-        F.sum(F.col("tf").cast("decimal(38,0)") * F.col("tf"))
-        .cast("double")
-        .alias("stf2"),
+        dec_sum("tf").alias("stf"),
+        dec_sum("CAST(tf AS DECIMAL(38,0)) * tf").alias("stf2"),
     )
     f = ts.filter(F.col("df") >= BURST_MIN_DF)
     key = F.col("stf") / F.col("df")
@@ -1823,12 +1810,9 @@ def ml_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     pe = (
         rows_m.join(cols_m, "cls")
         .agg(
-            F.sum(
-                F.col("r").cast("decimal(38,0)")
-                * F.col("cl").cast("decimal(38,0)")
-            )
-            .cast("double")
-            .alias("pe_num")
+            dec_sum(
+                "CAST(r AS DECIMAL(38,0)) * CAST(cl AS DECIMAL(38,0))"
+            ).alias("pe_num")
         )
     )
     nl = rows_m.agg(F.count("*").cast("long").alias("n_labeled"))

@@ -10,8 +10,6 @@ violation — evaluated with one aggregate, not per row.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -305,12 +303,6 @@ def upsert_edges(existing: DataFrame, new_edges: DataFrame) -> DataFrame:
         keys=["person_id", "area_id", "relationship_type"],
         preserve=(),
     )
-
-
-def mint_uuid5_namespace(name: str) -> str:
-    """Driver-side uuid5 helper for ids minted outside the plan
-    (nytimes_precincts.py:73)."""
-    return str(uuid.uuid5(uuid.NAMESPACE_OID, name))
 
 
 # --------------------------------------------------------------------------

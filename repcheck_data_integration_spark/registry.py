@@ -9,7 +9,8 @@ insensitive value hash at sf0.01, so:
 - make every result deterministic (full tie-breaks on windows/top-k,
   sort_array on collected sets);
 - keep floating aggregation exact by summing in DECIMAL then casting to
-  DOUBLE (parallel double summation is order-dependent, decimal is not).
+  DOUBLE with ``functions.exact.dec_sum`` (parallel double summation is
+  order-dependent, decimal is not).
 """
 
 from __future__ import annotations

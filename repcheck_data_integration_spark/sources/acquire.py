@@ -10,7 +10,6 @@ mapInPandas, see shapefile.py / file_sources.py)."""
 
 from __future__ import annotations
 
-import gzip
 import os
 import shutil
 import subprocess
@@ -44,13 +43,6 @@ def extract_zip(archive: str, dest_dir: str) -> list[str]:
     with zipfile.ZipFile(archive) as z:
         z.extractall(dest_dir)
         return [os.path.join(dest_dir, n) for n in z.namelist()]
-
-
-def gunzip(src: str, dest: str, chunk_size: int = CHUNK) -> str:
-    """nytimes_precincts.py:41-54 (streamed, not whole-file)."""
-    with gzip.open(src, "rb") as fin, open(dest, "wb") as fout:
-        shutil.copyfileobj(fin, fout, length=chunk_size)
-    return dest
 
 
 def git_clone(repo: str, dest: str, depth: int = 1) -> str:

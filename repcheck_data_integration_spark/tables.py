@@ -11,19 +11,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLE_NAMES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -334,13 +321,3 @@ def _gc_dead_bucket_tables(warehouse: str) -> None:
         # li_bkt_/orders_bkt_ + md5(sf_dir)[:8] tables
         if re.fullmatch(r"(bkt_.*|(li|orders)_bkt_[0-9a-f]{8})", d):
             shutil.rmtree(os.path.join(warehouse, d), ignore_errors=True)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql plans."""
-    for t in TABLE_NAMES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

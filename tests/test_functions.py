@@ -130,6 +130,34 @@ def test_exact_sum_floor_form_is_order_independent(spark):
         assert got == want, (nparts, got, want)
 
 
+def test_dec_sum_no_bigint_wrap(spark):
+    """functions/exact.dec_sum sums in DECIMAL(38,0): a LONG column whose
+    total passes Long.MAX, and a decimal-widened product whose rows pass
+    it, both come back exact; ``scale`` divides once; NULL rows are
+    skipped, and an all-NULL input sums to NULL."""
+    from repcheck_data_integration_spark.functions.exact import dec_sum
+
+    big = 3 * 2**61
+    df = spark.createDataFrame(
+        [(big, 3 * 2**31), (big, 3 * 2**31), (big, None), (None, None)],
+        "v long, x long",
+    )
+    r = df.agg(
+        dec_sum("v").alias("sv"),
+        dec_sum(F.col("v"), 4.0).alias("sv4"),
+        dec_sum("CAST(x AS DECIMAL(38,0)) * x").alias("sxx"),
+        dec_sum("x", 100.0).alias("sx"),
+    ).collect()[0]
+    assert 9 * 2**61 > 2**63 - 1  # the case a LONG sum silently wraps
+    assert r["sv"] == float(9 * 2**61)
+    assert r["sv4"] == float(9 * 2**59)
+    assert (3 * 2**31) ** 2 > 2**63 - 1  # x * x in LONG passes Long.MAX
+    assert r["sxx"] == float(2 * (3 * 2**31) ** 2)
+    assert r["sx"] == 2 * 3 * 2**31 / 100.0
+    empty = df.filter(F.col("x").isNull()).agg(dec_sum("x").alias("s"))
+    assert empty.collect()[0]["s"] is None
+
+
 def test_gini_ranksum_no_bigint_wrap(spark):
     """VERDICT r9 #1: Spark's DIV returns BIGINT even on DECIMAL operands,
     so the round-9 form ``(dec(cnt)*(cnt+1)) DIV 2`` wrapped at cnt≈4.3e9

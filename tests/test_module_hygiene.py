@@ -162,6 +162,59 @@ def test_struct_argmax_only_in_top1():
     )
 
 
+def _local_decimal_sums(path: str) -> list[int]:
+    """Lines of a function named ``dsum`` and of a ``.cast("double")``
+    applied directly to ``F.sum(<arg>.cast("decimal(38,0)"))``. A sum of
+    a product (``F.sum(x.cast(dec) * y)``) is not matched."""
+    def is_cast(node, to) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "cast"
+            and len(node.args) == 1
+            and isinstance(node.args[0], ast.Constant)
+            and str(node.args[0].value).replace(" ", "").lower() == to
+        )
+
+    def is_decimal_sum(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "sum"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+            and len(node.args) == 1
+            and is_cast(node.args[0], "decimal(38,0)")
+        )
+
+    return [
+        n.lineno
+        for n in ast.walk(ast.parse(open(path).read()))
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and n.name == "dsum"
+        or is_cast(n, "double")
+        and is_decimal_sum(n.func.value)
+    ]
+
+
+def test_decimal_sum_only_in_exact():
+    """Every DOUBLE-valued exact integral sum goes through
+    functions/exact.dec_sum, the one place that picks the DECIMAL(38,0)
+    accumulator, so no local copy can drift back to a LONG sum that
+    wraps past Long.MAX."""
+    own = os.path.join(PKG, "functions", "exact.py")
+    offenders = [
+        f"{os.path.relpath(path, PKG)}:{line}"
+        for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+        if path != own
+        for line in _local_decimal_sums(path)
+    ]
+    assert not offenders, (
+        "local DECIMAL(38,0) sum outside functions/exact.py"
+        " (use exact.dec_sum): " + ", ".join(offenders)
+    )
+
+
 # the epoch-fold sink (streaming/stream_ops.py): the only functions that may
 # check the replay guard, commit an epoch or start a foreachBatch query
 EPOCH_FOLD_OWNERS = {"fold_epoch", "start_foreach_batch"}
