@@ -841,9 +841,7 @@ def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup signal; the standard stop-fingerprint filter), and pairs must
     share ≥ {WINNOW_MIN_SHARED} fps. Cost ∝ colliding pairs after the
     frequency cap, never O(n²)."""
-    # the fingerprint subtree feeds three consumers (df-cap, both join
-    # sides) → persist once, same policy as the minhash shingle subtree
-    fps = dedup_winnowing(spark, sf_dir).persist()
+    fps = dedup_winnowing(spark, sf_dir)
     live = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("__df"))
@@ -1459,10 +1457,7 @@ def dedup_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                 k >= 1, F.transform(F.sequence(F.lit(1), k), gram)
             ).otherwise(F.array().cast("array<string>"))
         ).alias("p0", "g"),
-    ).select("doc_id", (F.col("p0") + 1).alias("p"), "g").persist()
-    # ^ the positional gram stream feeds BOTH the corpus doc-frequency
-    # aggregate and the hit join-back; un-cached, the tokenize+gram
-    # projection ran twice (measured 3.3s -> 2.3s at sf0.1)
+    ).select("doc_id", (F.col("p0") + 1).alias("p"), "g")
     rep = (
         grams.groupBy("g")
         .agg(F.countDistinct("doc_id").alias("df"))

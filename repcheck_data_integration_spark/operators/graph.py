@@ -1158,10 +1158,9 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the degree table is node-sized and the enrichment is
     two hash equi-joins of edges->degree on the endpoint keys — the
     standard message-passing join, hash-partitioned by node id, never
-    all-pairs. The persisted doubled edge list is built once; one
-    moment aggregate (map-side combined) finishes the job.
+    all-pairs. One moment aggregate (map-side combined) finishes the job.
     """
-    edges = _pr_edges(spark, sf_dir).persist()
+    edges = _pr_edges(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("k")
     )
@@ -1356,12 +1355,12 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytics op with zero rounding anywhere, no stable_round4 needed.
 
     Scale shape: textbook message passing — each walk order is ONE
-    node-keyed equi-join + hash aggregate over the doubled edge list
-    (persisted once); three bounded rounds, no iteration to
-    convergence. At 100 TB the cost is 3 edge-keyed shuffles, exactly
-    a 3-step GraphX/Pregel superstep sequence expressed relationally.
+    node-keyed equi-join + hash aggregate over the doubled edge list;
+    three bounded rounds, no iteration to convergence. At 100 TB the
+    cost is 3 edge-keyed shuffles, exactly a 3-step GraphX/Pregel
+    superstep sequence expressed relationally.
     """
-    und = _undirected(spark, sf_dir).persist()  # degree + both rounds
+    und = _undirected(spark, sf_dir)
     deg = und.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("w1"))
     w2t = (
         und.join(deg.select(F.col("v").alias("n"), "w1"), "n")

@@ -437,9 +437,6 @@ def agg_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("o_orderdate") >= split, cents).otherwise(0)
             ).alias("y"),
         )
-        # pooled moments + per-arm sums both read it: one shuffle, two
-        # tiny aggregates over the cached per-customer frame
-        .persist()
     )
 
     pooled = base.agg(
@@ -550,7 +547,6 @@ def ml_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             scaled_long(F.col("l_discount"), 100).alias("d"),
         )
         .agg(F.count("*").cast("long").alias("c"))
-        .persist()  # joint + both marginals read it: one fact shuffle
     )
     mq = (
         joint.groupBy("q")
@@ -902,7 +898,6 @@ def ml_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             scaled_long(F.col("l_discount"), 100).alias("d"),
         )
         .agg(F.count("*").cast("decimal(38,0)").alias("c"))
-        .persist()  # pairs + marginals + totals: one fact shuffle
     )
     a = joint.select(
         F.col("q").alias("qa"), F.col("d").alias("da"), F.col("c").alias("ca")

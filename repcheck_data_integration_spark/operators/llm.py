@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.top1 import ASC, DESC, Top1
 from ..registry import register
 from ..tables import load
+from .dedup import tokens
 
 SUMMARY_TOKENS = 12
 
@@ -199,7 +200,6 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     one window; at 100 TB the only shuffle is the content-hash partition."""
     from pyspark.sql import Window as W
 
-    from ..operators.dedup import tokens
     from ..operators.textstats import STOPWORDS
 
     d = load(spark, sf_dir, "documents")
@@ -275,7 +275,7 @@ def llm_eval_rouge(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exactly the thing you DON'T want leaving the JVM at corpus
     scale."""
     d = load(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all("text", F.lit("[a-z0-9]+"), 0)
+    toks = tokens(F.col("text"))
     bigrams = lambda t, lim: F.transform(  # noqa: E731
         F.sequence(
             F.lit(1),
@@ -745,8 +745,6 @@ def _register_preference_pairs() -> None:
         then ONE hash agg on prompt_id computes both extremes map-side;
         no window, no self-join, one small shuffle of per-group partials.
         """
-        from .dedup import tokens
-
         d = load(spark, sf_dir, "documents")
         s = (
             d.withColumn("toks", tokens(F.col("text")))
@@ -868,7 +866,7 @@ def _register_eval_bleu() -> None:
         are exact integers; the single-divide metrics are
         stable-rounded."""
         d = load(spark, sf_dir, "documents")
-        toks = F.regexp_extract_all("text", F.lit(TOKEN_RE), 0)
+        toks = tokens(F.col("text"))
         s = d.select("doc_id", toks.alias("toks")).select(
             "doc_id",
             F.slice("toks", 1, BLEU_CAND_TOKENS).alias("cand"),
@@ -876,7 +874,7 @@ def _register_eval_bleu() -> None:
                 f"slice(toks, {BLEU_REF_START},"
                 " greatest(size(toks) - {0}, 0))".format(BLEU_REF_START - 1)
             ).alias("ref"),
-        ).persist()  # feeds lens + 4 gram relations
+        )
 
         def grams(col_name: str, bigram: bool, cname: str):
             g = (
@@ -998,7 +996,7 @@ def _register_sft_pack() -> None:
         Single scan, zero shuffle, all native string/array expressions —
         formatting belongs in codegen, not a UDF."""
         d = load(spark, sf_dir, "documents")
-        toks = F.regexp_extract_all("text", F.lit(TOKEN_RE), 0)
+        toks = tokens(F.col("text"))
         n_prompt = F.least(F.size("toks"), F.lit(SFT_PROMPT_TOKENS))
         room = F.lit(SFT_BUDGET_TOKENS) - n_prompt
         n_resp = F.least(
@@ -1285,7 +1283,7 @@ def _register_eval_chrf() -> None:
             spark.sparkContext.defaultParallelism, "doc_id"
         )
         cs = F.concat_ws(
-            "", F.regexp_extract_all("text", F.lit(TOKEN_RE), 0)
+            "", tokens(F.col("text"))
         )
         s = d.select("doc_id", cs.alias("cs")).select(
             "doc_id",
@@ -1491,7 +1489,7 @@ def _register_bradley_terry() -> None:
                 "doc_id",
                 "source",
                 F.expr(f"doc_id div {BT_BLOCK}").alias("grp"),
-                F.expr(f"regexp_extract_all(text, '{TOKEN_RE}', 0)").alias(
+                tokens(F.col("text")).alias(
                     "toks"
                 ),
             )
@@ -1682,7 +1680,7 @@ def _register_eval_edit_rate() -> None:
         shuffle, no UDF."""
         d = load(spark, sf_dir, "documents")
         cs = F.concat_ws(
-            "", F.regexp_extract_all("text", F.lit(TOKEN_RE), 0)
+            "", tokens(F.col("text"))
         )
         s = (
             d.select("doc_id", cs.alias("cs"))

@@ -282,12 +282,6 @@ def nb_doc_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "lang", "tok")
         .agg(F.count("*").alias("cnt"))
-        # four consumers (scoring, per-lang totals, vocab, model counts):
-        # without the persist each one re-runs the tokenize+explode scan —
-        # the 10× probe measured 12.1s → this is the narrow (id,lang,tok,
-        # cnt) frame, cheap to cache, unlike the wide-array columns
-        # CLAUDE.md warns about
-        .persist()
     )
     model_c = tc.groupBy("lang", "tok").agg(F.sum("cnt").alias("c"))
     lt = tc.groupBy("lang").agg(F.sum("cnt").alias("t_l"))
@@ -376,7 +370,7 @@ def nb_doc_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final idx→lang unpack join), so it is pin()ned — but derived from
     # PRIORS (one documents groupBy(lang)), NOT from the tc-based
     # lang_consts tower: an eager pin over lt/vsize would materialize
-    # the full tokenize+persist at BUILD time, serializing it against
+    # the full tokenize at BUILD time, serializing it against
     # the consumer's independent stages (ml_mcnemar_test's marker tower
     # overlapped tc's build inside one job — pinning the tc path cost it
     # 2× at the 10× probe). priors' lang set ⊇ lt's (every lt lang has
@@ -609,16 +603,9 @@ def rec_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the per-item top-k window.
     """
     li = load(spark, sf_dir, "lineitem")
-    # The binary incidence table feeds FOUR plan references (both sides
-    # of the basket self-join and both c_i lookups) — persist it once or
-    # the distinct-shuffle over the fact table executes four times.
-    bi = (
-        li.select(
-            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-        )
-        .distinct()
-        .persist()
-    )
+    bi = li.select(
+        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
+    ).distinct()
     ci = bi.groupBy("pk").agg(F.count("*").alias("c"))
     a, b = bi.alias("a"), bi.alias("b")
     pr = (
@@ -850,9 +837,7 @@ def rec_slope_one(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # ratings feed three plan references (both self-join sides + the
-    # anti-join) — persist the narrow (u, pk, rt) frame once. ONE
-    # user-keyed exchange up front: hash(u) satisfies the (u, pk)
+    # ONE user-keyed exchange up front: hash(u) satisfies the (u, pk)
     # aggregate's clustering AND both sides of the user-keyed deviation
     # self-join, which the old plan re-exchanged on u twice (Exchange
     # 18/23 in the before plan)
@@ -860,7 +845,6 @@ def rec_slope_one(spark: SparkSession, sf_dir: str) -> DataFrame:
         bi.repartition(F.col("u"))
         .groupBy("u", "pk")
         .agg(F.count("*").cast("long").alias("rt"))
-        .persist()
     )
     probe = r.filter(F.col("u") <= SLOPE1_PROBE_MAX_CUST)
     # Scoring-set pushdown (bench-measured 9.5s -> the deviation matrix
@@ -1046,7 +1030,6 @@ def ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents.cast("decimal(38,0)")).alias("sv"),
             F.sum(cents.cast("decimal(38,0)") * cents).alias("svv"),
         )
-        .persist()  # both boosting rounds + SST read it
     )
 
     def stage(src: DataFrame, val: str) -> DataFrame:

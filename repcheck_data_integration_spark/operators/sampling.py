@@ -23,10 +23,7 @@ from pyspark.sql.window import Window as W
 
 from ..registry import ORACLE, register
 from ..tables import load
-from .dedup import sql_stable_round4, stable_round4
-
-#: word-token regex shared with textstats (same on both engines)
-TOK_RE = "[a-z0-9]+"
+from .dedup import TOKEN_RE, sql_stable_round4, stable_round4, tokens
 
 SPLIT_PCT = (90, 5)  # train < 90, valid < 95, else test
 DOMAIN_CAP = 15  # max docs kept per source
@@ -60,7 +57,7 @@ def sql_hash_bucket(expr: str, mod: int) -> str:
                 WHEN {sql_hash_bucket("CAST(doc_id AS VARCHAR)", 100)}
                      < {SPLIT_PCT[0] + SPLIT_PCT[1]} THEN 'valid'
                 ELSE 'test' END AS split,
-           CAST(len(regexp_extract_all(text, '{TOK_RE}')) AS BIGINT)
+           CAST(len(regexp_extract_all(text, '{TOKEN_RE}')) AS BIGINT)
                AS n_tokens
     FROM documents
     """,
@@ -83,7 +80,7 @@ def split_train_valid_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(b < SPLIT_PCT[0] + SPLIT_PCT[1], "valid")
         .otherwise("test")
         .alias("split"),
-        F.size(F.regexp_extract_all("text", F.lit(TOK_RE), 0))
+        F.size(tokens(F.col("text")))
         .cast("long")
         .alias("n_tokens"),
     )
@@ -143,7 +140,7 @@ def sample_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH per_source AS (
         SELECT source,
                count(*) AS n_docs,
-               sum(len(regexp_extract_all(text, '{TOK_RE}'))) AS n_tokens
+               sum(len(regexp_extract_all(text, '{TOKEN_RE}'))) AS n_tokens
         FROM documents GROUP BY source),
     tot AS (SELECT sum(n_tokens) AS tot_tokens FROM per_source),
     w AS (
@@ -173,7 +170,7 @@ def mix_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     per_source = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size(F.regexp_extract_all("text", F.lit(TOK_RE), 0)))
+        F.sum(F.size(tokens(F.col("text"))))
         .cast("long")
         .alias("n_tokens"),
     )
@@ -196,7 +193,7 @@ def mix_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
         SELECT doc_id, source,
-               len(regexp_extract_all(text, '{TOK_RE}')) AS n_tokens
+               len(regexp_extract_all(text, '{TOKEN_RE}')) AS n_tokens
         FROM documents),
     c AS (
         SELECT doc_id, source, n_tokens,
@@ -236,7 +233,7 @@ def pack_token_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = d.select(
         "doc_id",
         "source",
-        F.size(F.regexp_extract_all("text", F.lit(TOK_RE), 0)).alias("n_tokens"),
+        F.size(tokens(F.col("text"))).alias("n_tokens"),
     )
     cum_before = F.coalesce(
         F.sum("n_tokens").over(
@@ -280,9 +277,9 @@ def _pipe_sql() -> str:
     return f"""
     WITH gated AS (
         SELECT doc_id, source, text,
-               regexp_extract_all(text, '{TOK_RE}') AS toks
+               regexp_extract_all(text, '{TOKEN_RE}') AS toks
         FROM documents
-        WHERE len(regexp_extract_all(text, '{TOK_RE}'))
+        WHERE len(regexp_extract_all(text, '{TOKEN_RE}'))
               BETWEEN {PIPE_MIN_TOKENS} AND {PIPE_MAX_TOKENS}),
     ok AS (
         SELECT doc_id, source, text, len(toks) AS n_tokens
@@ -331,7 +328,7 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textstats import STOPWORDS
 
     d = load(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all("text", F.lit(TOK_RE), 0)
+    toks = tokens(F.col("text"))
     g = d.select("doc_id", "source", "text", toks.alias("__toks")).filter(
         F.size("__toks").between(PIPE_MIN_TOKENS, PIPE_MAX_TOKENS)
     )
@@ -629,7 +626,7 @@ def pipeline_web_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    toks = F.regexp_extract_all("text", F.lit("[a-z0-9]+"), 0)
+    toks = tokens(F.col("text"))
     gated = (
         d.join(url_keep, "doc_id", "semi")
         .select("doc_id", "text", F.size(toks).alias("n_tokens"))
@@ -728,7 +725,7 @@ def pack_best_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = d.select(
         "doc_id",
         "source",
-        F.size(F.regexp_extract_all("text", F.lit(TOK_RE), 0))
+        F.size(tokens(F.col("text")))
         .cast("long")
         .alias("n_tokens"),
     )
@@ -758,7 +755,7 @@ DSIR_TARGET_LANG = "en"
         SELECT doc_id, lang,
                {sql_hash_bucket("tok", DSIR_BUCKETS)} AS b
         FROM (SELECT doc_id, lang,
-                     unnest(regexp_extract_all(text, '{TOK_RE}')) AS tok
+                     unnest(regexp_extract_all(text, '{TOKEN_RE}')) AS tok
               FROM documents)),
     dc AS (SELECT doc_id, b, count(*) AS cnt FROM tb GROUP BY 1, 2),
     rc AS (SELECT b, count(*) AS cr FROM tb GROUP BY 1),
@@ -826,13 +823,7 @@ def text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side all reaggregate this narrow cached frame instead of re-running
     # the corpus scan four times (the ml_naive_bayes_lang lesson)
     dcl = (
-        d.select(
-            "doc_id",
-            "lang",
-            F.explode(F.regexp_extract_all("text", F.lit(TOK_RE), 0)).alias(
-                "tok"
-            ),
-        )
+        d.select("doc_id", "lang", F.explode(tokens(F.col("text"))).alias("tok"))
         .select(
             "doc_id",
             "lang",
@@ -1032,7 +1023,7 @@ BUDGET_W_SCALE = 1_000_000  # weight quantization scale
     oracle=f"""
     WITH per_source AS (
         SELECT source,
-               CAST(sum(len(regexp_extract_all(text, '{TOK_RE}')))
+               CAST(sum(len(regexp_extract_all(text, '{TOKEN_RE}')))
                     AS BIGINT) AS n_tokens
         FROM documents GROUP BY source),
     wq AS (
@@ -1080,7 +1071,7 @@ def mix_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     wq = (
         d.groupBy("source")
         .agg(
-            F.sum(F.size(F.regexp_extract_all("text", F.lit(TOK_RE), 0)))
+            F.sum(F.size(tokens(F.col("text"))))
             .cast("long")
             .alias("n_tokens")
         )

@@ -1077,7 +1077,7 @@ def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     blowup is ×{PQ_K} per element, the standard PQ-encode cost, and never
     materializes pairwise vector joins."""
     e = load(spark, sf_dir, "embeddings")
-    pos = pq_pos(e).persist()
+    pos = pq_pos(e)
     cb = pq_codebook(e, pos)
     enc = pq_encode(pos, cb)
     codes = F.transform(
@@ -1155,8 +1155,8 @@ def sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     only data-sized operations are the encode groupBy (amortizable across
     all queries — it IS the stored index) and the per-query top-k."""
     e = load(spark, sf_dir, "embeddings")
-    pos = pq_pos(e).persist()
-    cb = pq_codebook(e, pos).persist()
+    pos = pq_pos(e)
+    cb = pq_codebook(e, pos)
     enc = pq_encode(pos, cb)
     cents = cell_centroids(e)
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
@@ -2344,8 +2344,6 @@ def llm_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid", "cid", "cemb",
             cosine(F.col("qemb"), F.col("cemb")).alias("rel"),
         )
-        # three greedy rounds re-read it; the relevance fold runs once
-        .persist()
     )
 
     def argmax(df, score, keep):

@@ -186,9 +186,7 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     and emitted value can never disagree. The df join shuffles on term —
     the natural co-location key for inverted-index workloads."""
     d = load(spark, sf_dir, "documents")
-    # tc feeds both the tf side and the document-frequency aggregate —
-    # persist so the explode+agg subtree runs once, not per consumer
-    tc = term_counts(d).persist()
+    tc = term_counts(d)
     df = tc.groupBy("tok").agg(F.count(F.lit(1)).alias("doc_freq"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -303,9 +301,7 @@ def pipeline_corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     df groupBy on term, the per-doc keyword window, and the content-hash
     window — each on its natural key."""
     d = load(spark, sf_dir, "documents")
-    # tc feeds the repetition gates, the df aggregate AND the keyword
-    # scoring — one persist, three consumers
-    tc = term_counts(d).persist()
+    tc = term_counts(d)
     rep = tc.groupBy("doc_id").agg(
         F.sum("cnt").alias("n_tokens"),
         F.count(F.lit(1)).alias("n_distinct"),
@@ -386,7 +382,7 @@ def text_unigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum is far below the 4-decimal rounding granularity's sensitivity
     (verified by the oracle hash)."""
     d = load(spark, sf_dir, "documents")
-    tc = term_counts(d).persist()
+    tc = term_counts(d)
     corpus = tc.groupBy("tok").agg(F.sum("cnt").alias("ccount"))
     total = corpus.agg(F.sum("ccount").alias("ctotal"))
     per_doc = (
@@ -926,11 +922,11 @@ def text_bigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the corpus aggregate (sum(cb) OVER (PARTITION BY w1)) instead of
     a second aggregate + join-back, halving the model-side job count
     (VERDICT r3: the query was floor-dominated at ~6 jobs) — then one
-    join back to the persisted (doc,bigram) subtree, tfidf's profile.
+    join back to the (doc,bigram) subtree, tfidf's profile.
     Float note: the per-doc log-sum shares text_unigram_xent's documented
     rounding-margin rationale."""
     d = load(spark, sf_dir, "documents")
-    t = F.regexp_extract_all("text", F.lit(TOKEN_RE), 0)
+    t = tokens(F.col("text"))
     bg = F.when(
         F.size(F.col("toks")) >= 2,
         F.transform(
@@ -947,7 +943,6 @@ def text_bigram_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode(bg).alias("b"))
         .groupBy("doc_id", "b")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
     )
     from pyspark.sql import Window as W
 
@@ -1524,9 +1519,7 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cell cnt = Σ exact_count over colliding words, identical arithmetic
     # to incrementing per occurrence (additivity), at vocab cost. The 10x
     # probe dropped from 13.9s to the re-aggregation floor after this.
-    exact = words.groupBy("word").agg(
-        F.count(F.lit(1)).alias("exact_count")
-    ).persist()
+    exact = words.groupBy("word").agg(F.count(F.lit(1)).alias("exact_count"))
     hashed = exact.select("word", "exact_count", j_col)
     bucketed = hashed.select(
         "j",
@@ -1639,7 +1632,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     padded = F.concat(
         F.lit(" "),
-        F.array_join(F.regexp_extract_all("text", F.lit(TOKEN_RE), 0), "  "),
+        F.array_join(tokens(F.col("text")), "  "),
         F.lit(" "),
     )
     barred = F.regexp_replace(padded, f" {_RAKE_SW} ", " | ")
@@ -1734,7 +1727,7 @@ def text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load(spark, sf_dir, "documents")
-    tc = term_counts(d).persist()
+    tc = term_counts(d)
     corpus = tc.groupBy("tok").agg(F.sum("cnt").alias("ccount"))
     total = corpus.agg(F.sum("ccount").alias("ctotal"))
     per_doc = (
@@ -1823,7 +1816,7 @@ def pipeline_corpus_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textstats import qc_weight
 
     d = load(spark, sf_dir, "documents")
-    tc = term_counts(d).persist()
+    tc = term_counts(d)
     # round-10: the classifier weight is a pure function of the TOKEN, so
     # evaluate it once per DISTINCT corpus token on the vocabulary frame
     # and let it ride the existing tc⋈corpus join — the per-doc logit is
@@ -1934,7 +1927,7 @@ def corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "source",
         F.md5("text").alias("h"),
-        F.size(F.regexp_extract_all("text", F.lit(TOKEN_RE), 0)).alias(
+        F.size(tokens(F.col("text"))).alias(
             "n_tokens"
         ),
     )
@@ -2019,14 +2012,14 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break. dl/avgdl is written `dl * n_docs / total_dl` on both
     engines so the float op order is identical.
 
-    Scale shape: tc persisted once; document lengths are one hash agg of
+    Scale shape: document lengths are one hash agg of
     it; the query-term df table and the 1-row corpus stats both broadcast
     (a query touches ~|Q| vocab rows, never the full df relation); the
     only shuffles are tc's (doc,term) collapse and the dl co-location
     join on doc_id. Top-k is TakeOrderedAndProject — no global sort, no
     single-partition window."""
     d = load(spark, sf_dir, "documents")
-    tc = term_counts(d).persist()
+    tc = term_counts(d)
     # Document length = sum(cnt) over tc = size of the raw occurrence
     # array — a map-only projection of the documents scan (docs with no
     # tokens are absent from tc, hence the dl > 0 filter; NULL text gives
@@ -2162,7 +2155,6 @@ def mix_excess_loss_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("source", F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
     )
     corpus = tc.groupBy("tok").agg(F.sum("cnt").alias("ccount"))
     total = corpus.agg(F.sum("ccount").alias("ctotal"))
@@ -2586,7 +2578,7 @@ def text_kneser_ney_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     the start).
     """
     d = load(spark, sf_dir, "documents")
-    t = F.regexp_extract_all("text", F.lit(TOKEN_RE), 0)
+    t = tokens(F.col("text"))
     bg = F.when(
         F.size(F.col("toks")) >= 2,
         F.transform(
@@ -2696,7 +2688,7 @@ def text_watermark_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     model side at all.
     """
     d = load(spark, sf_dir, "documents")
-    t = F.regexp_extract_all("text", F.lit(TOKEN_RE), 0)
+    t = tokens(F.col("text"))
     bg = F.when(
         F.size(F.col("toks")) >= 2,
         F.transform(
@@ -2786,9 +2778,9 @@ def text_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     real corpus needs it.
     """
     d = load(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all("text", F.lit(TOKEN_RE), 0)
     sg = (
-        d.select("source", F.explode(shingles_from_tokens(toks)).alias("g"))
+        d.select("source", tokens(F.col("text")).alias("t"))
+        .select("source", F.explode(shingles_from_tokens(F.col("t"))).alias("g"))
         .distinct()
         .persist()  # sizes + self-join both read it
     )
@@ -3165,7 +3157,7 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load(spark, sf_dir, "documents")
     toked = d.select(
-        F.expr("regexp_extract_all(text, '[a-z0-9]+', 0)").alias("t")
+        tokens(F.col("text")).alias("t")
     )
     # round-8 (SCALE.md 5.0x row): uni feeds THREE branches (corpus
     # total + both sides of the lift join) and all_big feeds two — left

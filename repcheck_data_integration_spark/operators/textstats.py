@@ -487,7 +487,7 @@ def corpus_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.length(F.bin(F.greatest(F.col("n_chars"), F.lit(1)))).cast("long")
         .alias("len_bucket"),
-        F.size(F.regexp_extract_all("text", F.lit("[a-z0-9]+"), 0))
+        F.size(tokens(F.col("text")))
         .cast("long")
         .alias("toks"),
     )

@@ -849,9 +849,6 @@ def ts_ses_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         e.groupBy(F.date_trunc("day", F.col("ts")).alias("d"))
         .agg(F.count("*").alias("c"))
-        # |days|-row frame read by bounds, the grid join and the series:
-        # without the cache each consumer re-scans the fact table
-        .persist()
     )
     bounds = daily.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
     grid = bounds.select(
@@ -1049,9 +1046,6 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         e.groupBy(F.date_trunc("day", F.col("ts")).alias("d"))
         .agg(F.count("*").alias("c"))
-        # |days|-row frame read by bounds, the grid join and the series:
-        # without the cache each consumer re-scans the fact table
-        .persist()
     )
     bounds = daily.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
     grid = bounds.select(
@@ -1226,9 +1220,6 @@ def ts_decompose_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         e.groupBy(F.date_trunc("day", F.col("ts")).alias("d"))
         .agg(F.count("*").alias("c"))
-        # |days|-row frame read by bounds, the grid join and the series:
-        # without the cache each consumer re-scans the fact table
-        .persist()
     )
     bounds = daily.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
     grid = bounds.select(
@@ -1598,7 +1589,7 @@ def ts_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(scaled_long(F.col("o_totalprice"), 100))
         .cast("long")
         .alias("v")
-    ).persist()  # prefix scan + totals both read it: one fact shuffle
+    )
     tot = daily.agg(
         F.count("*").cast("long").alias("n"),
         F.sum(F.col("v").cast("decimal(38,0)")).alias("s"),
@@ -2389,9 +2380,7 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy(F.date_trunc("day", F.col("ts")).alias("d")).agg(
         F.count("*").cast("long").alias("c")
     )
-    dw = daily.select(
-        (F.dayofweek("d").cast("long") - 1).alias("dow"), "c"
-    ).persist()  # group masses + totals both read the |days| frame
+    dw = daily.select((F.dayofweek("d").cast("long") - 1).alias("dow"), "c")
     g = dw.groupBy("dow").agg(
         F.count("*").cast("long").alias("ng"),
         F.sum("c").cast("long").alias("sg"),

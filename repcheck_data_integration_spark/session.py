@@ -19,6 +19,11 @@ pass, with room for the cache's per-segment LRU (Guava splits it into
 four segments that evict apart). The cost is metaspace, ~8 KB per
 retained class: a gate run ended at 256 MB metaspace and 33 MB class
 space against 206 MB and 26 MB at 100 entries.
+
+The local driver heap defaults to a quarter of the host's physical memory
+(``default_driver_memory``): a fixed 24g exceeded a 15 GB host, and two
+gates run side by side got one JVM OOM-killed. ``SPARK_GRAFT_DRIVER_MEM``
+overrides it.
 """
 
 from __future__ import annotations
@@ -26,6 +31,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` for a local session: a quarter of physical
+    memory in whole GB, clamped to [1g, 24g]."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24, max(1, phys // 4 // 2**30))}g"
 
 
 def get_spark(
@@ -92,7 +104,10 @@ def get_spark(
     )
     if master:
         b = b.master(master)
-        b = b.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        b = b.config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # autoBroadcastJoinThreshold stays at the 10m DEFAULT: measured
         # both ways at the sf1/sf10 probes — 64m helped q5 marginally
         # (5.87s -> 5.42s at sf10) but regressed q3 2x at sf1 (0.70s ->

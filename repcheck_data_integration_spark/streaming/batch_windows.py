@@ -1578,7 +1578,7 @@ def events_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     xy = e.groupBy(
         "event_type", F.hour("ts").cast("long").alias("hr")
-    ).agg(F.count(F.lit(1)).alias("n_xy")).persist()
+    ).agg(F.count(F.lit(1)).alias("n_xy"))
     x = xy.groupBy("event_type").agg(F.sum("n_xy").alias("n_x"))
     y = xy.groupBy("hr").agg(F.sum("n_xy").alias("n_y"))
     t = xy.agg(F.sum("n_xy").alias("tot"))
@@ -2792,7 +2792,6 @@ def events_gesd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining = (
         grid.join(di, "idx", "left")
         .select("idx", F.coalesce("c", F.lit(0)).cast("decimal(38,0)").alias("x"))
-        .persist()  # all three rounds walk this bounded frame
     )
     picked = []
     for k in range(1, GESD_ROUNDS + 1):

@@ -267,3 +267,95 @@ def test_epoch_fold_only_in_shared_sink():
         " stream_ops.fold_epoch and start_foreach_batch: "
         + ", ".join(offenders)
     )
+
+
+WORD_RES = {"TOKEN_RE", "TOK_RE", "[a-z0-9]+"}
+
+
+def _word_regex_calls(path: str) -> list[tuple[str | None, int]]:
+    """(enclosing top-level function, line) of every Spark-side word
+    tokenization spelled out: ``F.regexp_extract_all`` whose pattern is
+    the word regex (by name or literal), and ``F.expr`` / ``selectExpr``
+    text that calls ``regexp_extract_all`` with it. Oracle SQL is not an
+    argument of either call and is left alone."""
+    src = open(path).read()
+    found = []
+
+    def names_word_re(node) -> bool:
+        return any(
+            isinstance(n, ast.Name) and n.id in WORD_RES
+            or isinstance(n, ast.Constant) and n.value in WORD_RES
+            for n in ast.walk(node)
+        )
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            if owner is None and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Call) and isinstance(
+                child.func, ast.Attribute
+            ):
+                attr = child.func.attr
+                if attr == "regexp_extract_all" and any(
+                    names_word_re(a) for a in child.args[1:2]
+                ):
+                    found.append((owner, child.lineno))
+                elif attr in ("expr", "selectExpr") and any(
+                    "regexp_extract_all" in seg
+                    and any(w in seg for w in WORD_RES)
+                    for a in child.args
+                    for seg in [ast.get_source_segment(src, a) or ""]
+                ):
+                    found.append((owner, child.lineno))
+            visit(child, owner)
+
+    visit(ast.parse(src), None)
+    return found
+
+
+def test_word_tokenizer_only_in_dedup_tokens():
+    """Every Spark-side word tokenization goes through dedup.tokens, the
+    one home of the word regex, so no copy can drift from TOKEN_RE."""
+    own = os.path.join(PKG, "operators", "dedup.py")
+    offenders = [
+        f"{os.path.relpath(path, PKG)}:{line}"
+        for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+        for owner, line in _word_regex_calls(path)
+        if path != own or owner != "tokens"
+    ]
+    assert not offenders, (
+        "word regex outside dedup.tokens (use tokens(F.col(...))): "
+        + ", ".join(offenders)
+    )
+
+
+def test_shingles_take_a_column_reference():
+    """``shingles_from_tokens`` reads its token array once per lambda
+    element, so its argument must be a projected column (``F.col``): an
+    inlined tokenizer expression re-runs the regex per element (the
+    source-overlap shingle set took ~9 s instead of ~1 s at sf0.1)."""
+    offenders = []
+    for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True):
+        for n in ast.walk(ast.parse(open(path).read())):
+            if not (
+                isinstance(n, ast.Call)
+                and getattr(n.func, "id", getattr(n.func, "attr", None))
+                == "shingles_from_tokens"
+            ):
+                continue
+            arg = n.args[0] if n.args else None
+            if not (
+                isinstance(arg, ast.Call)
+                and isinstance(arg.func, ast.Attribute)
+                and arg.func.attr == "col"
+                and isinstance(arg.func.value, ast.Name)
+                and arg.func.value.id == "F"
+            ):
+                offenders.append(f"{os.path.relpath(path, PKG)}:{n.lineno}")
+    assert not offenders, (
+        "shingles_from_tokens given an expression, not F.col(...): "
+        + ", ".join(offenders)
+    )

@@ -301,3 +301,20 @@ def test_lsh_hot_bucket_salted_candidates(spark, tmp_path):
     assert gmax > 2 * D.CAND_BUCKET_CAP
     # generous regression backstop for the 10x-probe wall at this shape
     assert wall < 60, f"hot-bucket LSH took {wall:.1f}s"
+
+
+def test_default_driver_memory_is_quarter_of_host_clamped(monkeypatch):
+    """The local driver heap is a quarter of physical memory in whole GB,
+    clamped to [1g, 24g]; sizing it starts no JVM."""
+    from repcheck_data_integration_spark import session
+
+    gib = 2**30
+    for phys, want in [
+        (15 * gib + gib // 2, "3g"),  # 15.5 GB host: floor(3.875)
+        (16 * gib, "4g"),
+        (2 * gib, "1g"),  # a quarter is 0.5 GB: clamped up
+        (512 * gib, "24g"),  # a quarter is 128 GB: clamped down
+    ]:
+        sizes = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys // 4096}
+        monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+        assert session.default_driver_memory() == want, phys

@@ -92,6 +92,8 @@ def main() -> None:
         drain(registry.QUERIES[name](spark, sf_dir))
         trials = []
         for _ in range(2):
+            # empty cache per trial, outside the timed span (as bench.py)
+            spark.catalog.clearCache()
             t0 = time.time()
             # noop-sink drain (not .count()): DuckDB's fetchall
             # materializes every value, so the Spark side must evaluate

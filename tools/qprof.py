@@ -6,8 +6,10 @@ Usage:
 
 Per CLAUDE.md measurement traps: the DataFrame is REBUILT per trial (a
 re-collected DataFrame object reuses materialized shuffle map outputs and
-reports fiction), and each query gets a labeled job description. The plan
-is captured from a fresh build (pre-execution, AQE initial plan).
+reports fiction), the cache is cleared before each trial (a prior trial's
+persisted relation would otherwise be read), and each query gets a labeled
+job description. The plan is captured from a fresh build (pre-execution,
+AQE initial plan).
 """
 
 from __future__ import annotations
@@ -62,6 +64,7 @@ def main() -> None:
             print(f"# warmup {name} skipped: {e}", file=sys.stderr)
         trials = []
         for _ in range(args.trials):
+            spark.catalog.clearCache()  # outside the timed span, as bench.py
             spark.sparkContext.setJobDescription(f"qprof:{name}")
             t0 = time.time()
             drain(fn(spark, SF_DIR))
