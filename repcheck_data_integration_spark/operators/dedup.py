@@ -71,7 +71,10 @@ def with_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFram
       and re-evaluates the entire shingle expression per row (measured 5×
       slower end-to-end).
 
-    Every emitted row has a non-empty ``sh``.
+    Every emitted row has a non-empty ``sh``, so callers explode it with
+    ``explode_outer``: a plain ``explode`` infers ``size(sh) > 0`` and
+    pushes that filter below both projections, where it inlines the
+    tokenizer regex at every element_at of the shingle lambda.
     """
     return (
         df.withColumn("__toks", tokens(F.col(text_col)))
@@ -183,6 +186,30 @@ def minhash_mins(ex: DataFrame) -> DataFrame:
             F.lpad(F.lower(F.hex(F.col(f"mh{j}"))), 4, "0").alias(f"mh{j}")
             for j in range(N_MINHASH)
         ],
+    )
+
+
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh{N_MINHASH-1}) from a (doc_id, sh) shingle frame
+    built by with_shingles: one md5 per shingle, then minhash_mins. The
+    one shingle → signature step of the batch family and the streaming
+    maintainer.
+
+    Explode + hash aggregate rather than per-array lambdas: expressions
+    inside higher-order functions run interpreted, while the exploded
+    md5/substring/min pipeline stays in whole-stage codegen with map-side
+    partial mins (one shuffle keyed on doc_id carrying 8 fixed-width
+    mins). ``explode_outer``, not ``explode``: see with_shingles."""
+    ex = sh.select("doc_id", F.explode_outer("sh").alias("s")).select(
+        "doc_id", F.md5("s").alias("h")
+    )
+    return minhash_mins(ex)
+
+
+def signature_bands(mh: DataFrame) -> DataFrame:
+    """(doc_id, band_idx, band_hash) from a signature frame."""
+    return mh.select(
+        "doc_id", F.posexplode(_bands_spark()).alias("band_idx", "band_hash")
     )
 
 
@@ -302,25 +329,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-jaccard verify. The shape that scales: candidates come from a hash
     join on band buckets, never an n² compare."""
     d = load(spark, sf_dir, "documents")
-    # the shingle frame feeds three consumers (minhash explode + both verify
-    # sides) → persist once; with the pre-filtered two-stage shingle build
-    # the materialization is cheap
-    sh = (
-        with_shingles(d.select("doc_id", "text")).select("doc_id", "sh").persist()
-    )
-    # minhash via explode + hash aggregate rather than per-array lambdas:
-    # expressions inside higher-order functions run interpreted, while the
-    # exploded md5/substring/min pipeline stays in whole-stage codegen with
-    # map-side partial mins — measurably faster and the shape that scales
-    # (one shuffle keyed on doc_id carrying 8 fixed-width mins)
-    ex = sh.select("doc_id", F.explode("sh").alias("s")).select(
-        "doc_id", F.md5("s").alias("h")
-    )
-    mh = minhash_mins(ex)
-    bands = mh.select(
-        "doc_id", F.posexplode(_bands_spark()).alias("band_idx", "band_hash")
-    )
-    cand = banded_candidates(bands)
+    sh = with_shingles(d.select("doc_id", "text")).select("doc_id", "sh")
+    cand = banded_candidates(signature_bands(minhash_signatures(sh)))
     x = sh.select(F.col("doc_id").alias("doc1"), F.col("sh").alias("sh1"))
     y = sh.select(F.col("doc_id").alias("doc2"), F.col("sh").alias("sh2"))
     scored = (
@@ -361,6 +371,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (lang, length-bucket) follows vote_matching.py:196-206. The oracle
     states the same computation in its naive array form."""
     d = load(spark, sf_dir, "documents")
+    # persisted: the sizes branch and the explode both read sh, and
+    # without the cache the final jaccard filter's inferred
+    # isnotnull(n1/n2) is pushed under the shingle projection, inlining
+    # the tokenizer regex into the shingle lambda (sf0.1: 1.75 → 11.64 s
+    # without, median of 3 alternating pairs)
     sh = (
         with_shingles(d.select("doc_id", "lang", "n_chars", "text"))
         .select(
@@ -372,7 +387,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     sizes = sh.select("doc_id", F.size("sh").alias("n"))
-    ex = sh.select("doc_id", "lang", "len_bucket", F.explode("sh").alias("s"))
+    ex = sh.select(
+        "doc_id", "lang", "len_bucket", F.explode_outer("sh").alias("s")
+    )
     a, b = ex.alias("a"), ex.alias("b")
     counts = (
         a.join(
@@ -901,24 +918,22 @@ def dedup_contamination_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     are MBs, the corpus is the 100 TB side), so the distinct benchmark
     n-gram set is broadcast and the corpus stays put — explode → broadcast
     LEFT join → per-doc count, no shuffle of document text, zero-hit docs
-    kept by the left join. The shingle frame is computed ONCE and
-    persisted before the bench/corpus branch: without the persist
-    barrier, explode's inferred ``size(sh) > 0`` filter is pushed below
-    the shingle projection and re-evaluates the whole shingle expression
-    per row at the scan (measured 18s → 1.5s at sf0.1 — the CLAUDE.md
-    pushdown trap via InferFiltersFromGenerate). Reference seed:
+    kept by the left join. The shingle frame is persisted before the
+    bench/corpus branch because both branches read it: without the cache
+    each builds the shingles (sf0.1, median of 7 alternating pairs:
+    1.18 → 1.24 s here, 1.48 → 1.87 s in pipeline_dpo_prep). Reference seed:
     the text-cleanup path summarize_bills_federal.py:67-82 (same shingle
     machinery as dedup_minhash_lsh)."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     sh = with_shingles(docs).select("doc_id", "sh").persist()
     bench = (
         sh.filter(F.col("doc_id") % BENCH_MOD == 0)
-        .select(F.explode("sh").alias("g"))
+        .select(F.explode_outer("sh").alias("g"))
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
     ex = sh.filter(F.col("doc_id") % BENCH_MOD != 0).select(
-        "doc_id", F.size("sh").alias("n_grams"), F.explode("sh").alias("g")
+        "doc_id", F.size("sh").alias("n_grams"), F.explode_outer("sh").alias("g")
     )
     ratio = F.col("n_overlap") * 1.0 / F.col("n_grams")
     return (
@@ -1052,20 +1067,12 @@ def dedup_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     retuning — computed with one extra join over the same persisted
     minhash relation, no new scans of documents."""
     d = load(spark, sf_dir, "documents")
-    sh = (
-        with_shingles(d.select("doc_id", "text")).select("doc_id", "sh").persist()
-    )
-    ex = sh.select("doc_id", F.explode("sh").alias("s")).select(
-        "doc_id", F.md5("s").alias("h")
-    )
+    sh = with_shingles(d.select("doc_id", "text")).select("doc_id", "sh")
     # mh feeds both the band explode and both sides of the scoring join —
     # persist it so the shingle explode + min-aggregate runs once
-    mh = minhash_mins(ex).persist()
+    mh = minhash_signatures(sh).persist()
     mhs = mh.join(sh, "doc_id")
-    bands = mh.select(
-        "doc_id", F.posexplode(_bands_spark()).alias("band_idx", "band_hash")
-    )
-    cand = banded_candidates(bands)
+    cand = banded_candidates(signature_bands(mh))
     x = mhs.select(
         F.col("doc_id").alias("doc1"),
         F.col("sh").alias("sh1"),
@@ -1312,27 +1319,16 @@ def text_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     original resemblance/containment pair). Pairs whose max containment
     clears {CONTAIN_THRESHOLD} are flagged.
 
-    Scale shape is dedup_minhash_lsh's verbatim — shingle frame persisted
-    once, minhash via the codegen'd explode+min-agg pipeline, candidates
+    Scale shape is dedup_minhash_lsh's verbatim — minhash_signatures over
+    the shingle frame (which the verify sides recompute), candidates
     from the banded bucket equi-join (cost ∝ colliding pairs, never n²) —
     with only the verify formula swapped; the known LSH caveat that
     banding recall tracks JACCARD (a containment-high/jaccard-low pair
     needs more bands or a suffix-like index to always collide) is the
     documented trade."""
     d = load(spark, sf_dir, "documents")
-    sh = (
-        with_shingles(d.select("doc_id", "text"))
-        .select("doc_id", "sh")
-        .persist()
-    )
-    ex = sh.select("doc_id", F.explode("sh").alias("s")).select(
-        "doc_id", F.md5("s").alias("h")
-    )
-    mh = minhash_mins(ex)
-    bands = mh.select(
-        "doc_id", F.posexplode(_bands_spark()).alias("band_idx", "band_hash")
-    )
-    cand = banded_candidates(bands)
+    sh = with_shingles(d.select("doc_id", "text")).select("doc_id", "sh")
+    cand = banded_candidates(signature_bands(minhash_signatures(sh)))
     x = sh.select(F.col("doc_id").alias("doc1"), F.col("sh").alias("sh1"))
     y = sh.select(F.col("doc_id").alias("doc2"), F.col("sh").alias("sh2"))
     inter = F.size(F.array_intersect(F.col("sh1"), F.col("sh2"))).cast(

@@ -2493,19 +2493,19 @@ def join_set_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import with_shingles
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    # Two deliberate materialization boundaries. (1) (doc_id, sh) BEFORE
-    # the explode: a Generate whose input is the un-materialized shingle
-    # projection re-evaluates the whole 3-gram lambda per OUTPUT shingle,
-    # not per doc (measured 16s vs 1.4s at sf0.1; a repartition boundary
-    # does NOT break the inlining — only materialization does). (2) the
-    # exploded (doc_id, tok) rows, which feed three consumers (df counts,
-    # the prefix ranking, and both verify sides) — narrow rows, cheap to
-    # cache, expensive to recompute.
-    sh_df = with_shingles(d).select("doc_id", "sh").persist()
+    # The exploded (doc_id, tok) rows are persisted: they feed three
+    # consumers (df counts, the prefix ranking, and both verify sides) —
+    # narrow rows, cheap to cache, expensive to recompute. explode_outer
+    # (sh is never empty) keeps the shingle lambda from being re-run under
+    # an inferred size(sh) > 0 filter, so the shingle frame needs no
+    # persist of its own.
+    sh_df = with_shingles(d).select("doc_id", "sh")
     # n = |set| comes free from size(sh) (sh is array_distinct'd), saving
     # the count(*)-over-doc window the old form paid beside row_number.
     toks = sh_df.select(
-        "doc_id", F.size("sh").cast("long").alias("n"), F.explode("sh").alias("tok")
+        "doc_id",
+        F.size("sh").cast("long").alias("n"),
+        F.explode_outer("sh").alias("tok"),
     ).persist()
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
     tw = toks.join(dfreq, "tok")
@@ -2540,7 +2540,7 @@ def join_set_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # against the probe side, and AQE stage reuse does not collapse the
     # two shuffle towers either (verified on the final adaptive plan:
     # two identical 7.5 MiB ShuffleQueryStages, zero ReusedExchange).
-    # Same persist discipline as sh_df/toks above; prefix is ~half of
+    # Same persist discipline as toks above; prefix is ~half of
     # toks, so the cache cost class is unchanged.
     prefix = prefix.persist()
     a, b = prefix.alias("a"), prefix.alias("b")

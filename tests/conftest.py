@@ -99,7 +99,8 @@ def registry_sweep(spark):
     truncated-leaf inventories, the analyzed schemas, and any builder
     failures in a single per-query clearCache pass (the round-8 audit
     discipline is per QUERY, so sharing across TESTS loses nothing). It
-    also collects each query's physical node-class counts."""
+    also collects each query's physical node-class counts and its count
+    of regex, hash and Python-UDF expressions under a lambda."""
     import sys
     from pathlib import Path
 
@@ -111,6 +112,7 @@ def registry_sweep(spark):
     schemas: dict[str, object] = {}
     fails: dict[str, str] = {}
     nodes: dict[str, object] = {}
+    traps: dict[str, int] = {}
     found = audit(
         spark,
         SF_SMOKE,
@@ -119,6 +121,7 @@ def registry_sweep(spark):
         schema_out=schemas,
         fail_out=fails,
         nodes_out=nodes,
+        lambda_out=traps,
     )
     return {
         "windows": found,
@@ -127,4 +130,5 @@ def registry_sweep(spark):
         "schemas": schemas,
         "fails": fails,
         "nodes": nodes,
+        "lambda_traps": traps,
     }

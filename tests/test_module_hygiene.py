@@ -223,30 +223,36 @@ EPOCH_FOLD_CALLS = {
 }
 
 
-def _epoch_fold_calls(path: str) -> list[tuple[str | None, int]]:
-    """(enclosing top-level function, line) of every call to the replay
-    guard, the epoch commit or ``.foreachBatch``."""
-    found = []
-
+def _owned_calls(src: str):
+    """Yield (enclosing top-level function or None, call node) for every
+    call in a module's source."""
     def visit(node, owner):
         for child in ast.iter_child_nodes(node):
             if owner is None and isinstance(
                 child, (ast.FunctionDef, ast.AsyncFunctionDef)
             ):
-                visit(child, child.name)
+                yield from visit(child, child.name)
                 continue
             if isinstance(child, ast.Call):
-                f = child.func
-                name = (
-                    f.id if isinstance(f, ast.Name)
-                    else f.attr if isinstance(f, ast.Attribute)
-                    else None
-                )
-                if name in EPOCH_FOLD_CALLS:
-                    found.append((owner, child.lineno))
-            visit(child, owner)
+                yield owner, child
+            yield from visit(child, owner)
 
-    visit(ast.parse(open(path).read()), None)
+    yield from visit(ast.parse(src), None)
+
+
+def _epoch_fold_calls(path: str) -> list[tuple[str | None, int]]:
+    """(enclosing top-level function, line) of every call to the replay
+    guard, the epoch commit or ``.foreachBatch``."""
+    found = []
+    for owner, call in _owned_calls(open(path).read()):
+        f = call.func
+        name = (
+            f.id if isinstance(f, ast.Name)
+            else f.attr if isinstance(f, ast.Attribute)
+            else None
+        )
+        if name in EPOCH_FOLD_CALLS:
+            found.append((owner, call.lineno))
     return found
 
 
@@ -288,31 +294,20 @@ def _word_regex_calls(path: str) -> list[tuple[str | None, int]]:
             for n in ast.walk(node)
         )
 
-    def visit(node, owner):
-        for child in ast.iter_child_nodes(node):
-            if owner is None and isinstance(
-                child, (ast.FunctionDef, ast.AsyncFunctionDef)
-            ):
-                visit(child, child.name)
-                continue
-            if isinstance(child, ast.Call) and isinstance(
-                child.func, ast.Attribute
-            ):
-                attr = child.func.attr
-                if attr == "regexp_extract_all" and any(
-                    names_word_re(a) for a in child.args[1:2]
-                ):
-                    found.append((owner, child.lineno))
-                elif attr in ("expr", "selectExpr") and any(
-                    "regexp_extract_all" in seg
-                    and any(w in seg for w in WORD_RES)
-                    for a in child.args
-                    for seg in [ast.get_source_segment(src, a) or ""]
-                ):
-                    found.append((owner, child.lineno))
-            visit(child, owner)
-
-    visit(ast.parse(src), None)
+    for owner, call in _owned_calls(src):
+        if not isinstance(call.func, ast.Attribute):
+            continue
+        attr = call.func.attr
+        if attr == "regexp_extract_all" and any(
+            names_word_re(a) for a in call.args[1:2]
+        ):
+            found.append((owner, call.lineno))
+        elif attr in ("expr", "selectExpr") and any(
+            "regexp_extract_all" in seg and any(w in seg for w in WORD_RES)
+            for a in call.args
+            for seg in [ast.get_source_segment(src, a) or ""]
+        ):
+            found.append((owner, call.lineno))
     return found
 
 
@@ -358,4 +353,47 @@ def test_shingles_take_a_column_reference():
     assert not offenders, (
         "shingles_from_tokens given an expression, not F.col(...): "
         + ", ".join(offenders)
+    )
+
+
+def _shingle_explodes(path: str) -> list[tuple[str | None, int, str]]:
+    """(enclosing top-level function, line, call) of every ``explode`` /
+    ``posexplode`` of the shingle column (``"sh"`` or ``F.col("sh")``) and
+    every ``minhash_mins`` call."""
+    def is_sh(node) -> bool:
+        return isinstance(node, ast.Constant) and node.value == "sh" or (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "col"
+            and len(node.args) == 1
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == "sh"
+        )
+
+    found = []
+    for owner, call in _owned_calls(open(path).read()):
+        name = getattr(call.func, "attr", getattr(call.func, "id", None))
+        if name == "minhash_mins" or (
+            name in ("explode", "posexplode") and call.args and is_sh(call.args[0])
+        ):
+            found.append((owner, call.lineno, name))
+    return found
+
+
+def test_shingle_arrays_explode_outer_and_sign_once():
+    """A with_shingles array is exploded with ``explode_outer``: a plain
+    ``explode`` infers ``size(sh) > 0`` and pushes that filter below the
+    shingle projection, where the shingle lambda re-runs the tokenizer
+    regex at every element (the streaming minhash build took 26.9 s
+    instead of 5.9 s at sf0.1). Shingles become signatures only in
+    dedup.minhash_signatures, the one shingle → minhash step."""
+    own = os.path.join(PKG, "operators", "dedup.py")
+    offenders = [
+        f"{os.path.relpath(path, PKG)}:{line} {call}"
+        for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+        for owner, line, call in _shingle_explodes(path)
+        if call != "minhash_mins" or path != own or owner != "minhash_signatures"
+    ]
+    assert not offenders, (
+        "explode of a shingle array (use F.explode_outer) or minhash_mins"
+        " outside dedup.minhash_signatures: " + ", ".join(offenders)
     )

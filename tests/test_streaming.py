@@ -957,6 +957,9 @@ def test_stream_minhash_dedup_collapsed_corpus_salted(spark, tmp_path):
     from repcheck_data_integration_spark.operators.dedup import (
         CAND_BUCKET_CAP,
         banded_candidates,
+        minhash_signatures,
+        signature_bands,
+        with_shingles,
     )
 
     n = CAND_BUCKET_CAP * 2 + 22  # decisively above the salting threshold
@@ -964,8 +967,8 @@ def test_stream_minhash_dedup_collapsed_corpus_salted(spark, tmp_path):
     docs = spark.createDataFrame(
         [(i, text) for i in range(1, n + 1)], ["doc_id", "text"]
     )
-    sigs = stream_ops.minhash_signatures(docs)
-    bands = stream_ops._sig_bands(sigs)
+    sigs = minhash_signatures(with_shingles(docs).select("doc_id", "sh"))
+    bands = signature_bands(sigs)
 
     # exact pair set despite salting: all n-choose-2 pairs, each once
     pairs = banded_candidates(bands)

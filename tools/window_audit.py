@@ -31,7 +31,7 @@ def count_unpartitioned_windows(df) -> int:
     """Number of Window logical nodes with an empty partitionSpec in the
     optimized plan (optimized, not analyzed: optimizer-collapsed windows
     shouldn't count, and column pruning can't remove a window it needs)."""
-    n, _, _ = _walk_plan(df)
+    n, _, _, _ = _walk_plan(df)
     return n
 
 
@@ -48,8 +48,19 @@ def count_int_rank_windows(df) -> int:
     spelling and operators/grouped_prefix.py are the LONG-safe
     alternatives; every remaining int-rank window is pinned with a
     partition-boundedness justification in tests/test_plan_shapes.py."""
-    _, _, r = _walk_plan(df)
+    _, _, r, _ = _walk_plan(df)
     return r
+
+
+def lambda_traps(df) -> Counter:
+    """{expression class: count} of the regex, hash and Python-UDF
+    expressions that sit under a LambdaFunction in the optimized plan,
+    cached subtrees included. Such an expression runs once per lambda
+    element, and one the optimizer inlined there from a projection below
+    (a tokenizer regex under ``element_at`` of a shingle lambda) runs once
+    per reference — the CLAUDE.md higher-order-function trap."""
+    _, _, _, found = _walk_plan(df)
+    return found
 
 
 def count_unauditable_nodes(df) -> int:
@@ -61,7 +72,7 @@ def count_unauditable_nodes(df) -> int:
     checkpointing query builds it inside operators.ckpt.plan_only()
     (audit() does) so this returns 0; a non-zero count means the pin
     `count_unpartitioned_windows(df) == 0` is partially vacuous."""
-    _, u, _ = _walk_plan(df)
+    _, u, _, _ = _walk_plan(df)
     return u
 
 
@@ -98,11 +109,42 @@ def _nodes(root):
         stack += [ch.apply(i) for i in range(ch.size())]
 
 
-def _walk_plan(df) -> tuple[int, int, int]:
+# catalyst expression classes counted by lambda_traps
+_LAMBDA_TRAP_CLASSES = frozenset({
+    "RegExpExtractAll", "RegExpExtract", "RegExpReplace", "RLike",
+    "RegExpCount", "RegExpSubStr", "RegExpInStr", "StringSplit",
+    "Md5", "Sha1", "Sha2", "Crc32", "Murmur3Hash", "XxHash64", "HiveHash",
+    "PythonUDF",
+})
+
+
+def _node_lambda_traps(node, found: Counter) -> None:
+    """Add to ``found`` the _LAMBDA_TRAP_CLASSES expressions under a
+    LambdaFunction in one plan node's expressions (walked over py4j)."""
+    es = node.expressions()
+    stack = [(es.apply(i), False) for i in range(es.size())]
+    while stack:
+        e, under = stack.pop()
+        cls = e.getClass().getSimpleName()
+        if under and cls in _LAMBDA_TRAP_CLASSES:
+            found[cls] += 1
+        under = under or cls == "LambdaFunction"
+        ch = e.children()
+        stack += [(ch.apply(i), under) for i in range(ch.size())]
+
+
+def _walk_plan(df) -> tuple[int, int, int, Counter]:
     """(unpartitioned window count, unauditable truncated-leaf count,
-    int-rank window count)."""
+    int-rank window count, lambda traps by expression class)."""
     n = unauditable = int_rank = 0
-    for cls, node in _nodes(df._jdf.queryExecution().optimizedPlan()):
+    traps: Counter = Counter()
+    plan = df._jdf.queryExecution().optimizedPlan()
+    # an expression walk over py4j costs ~100x a node visit, so only the
+    # nodes that print a lambda are walked, and only in plans that do
+    has_lambda = "lambdafunction" in plan.toString()
+    for cls, node in _nodes(plan):
+        if has_lambda and "lambdafunction" in node.simpleString(10_000):
+            _node_lambda_traps(node, traps)
         # logical Window (pre-substitution) and physical WindowExec (inside
         # a cached plan) both carry partitionSpec
         if cls in ("Window", "WindowExec"):
@@ -118,7 +160,7 @@ def _walk_plan(df) -> tuple[int, int, int]:
             # a localCheckpoint (or any RDD-backed leaf) severs lineage:
             # whatever plan produced the RDD is gone from this tree
             unauditable += 1
-    return n, unauditable, int_rank
+    return n, unauditable, int_rank, traps
 
 
 def count_physical_nodes(df) -> Counter:
@@ -140,6 +182,7 @@ def audit(
     schema_out: dict[str, object] | None = None,
     fail_out: dict[str, str] | None = None,
     nodes_out: dict[str, Counter] | None = None,
+    lambda_out: dict[str, int] | None = None,
 ) -> dict[str, int]:
     """{query_name: unpartitioned_window_count} for every registered query
     that has at least one. Queries whose builder fails (env-gated stubs)
@@ -161,7 +204,8 @@ def audit(
     registry pass instead of re-building all 439 query frames — the
     pytest suite paid three full sweeps (~450 s) for what is one.
     ``nodes_out`` collects each query's physical node-class counts
-    (count_physical_nodes) in the same sweep.
+    (count_physical_nodes) in the same sweep, and ``lambda_out`` the
+    per-query count of lambda_traps.
     Iterative loops are the documented
     exception (ADVICE r9): their convergence probes (connected
     components, PageRank, BPE) still execute jobs at CONSTRUCTION time
@@ -175,9 +219,11 @@ def audit(
     for name, df in plan_only_frames(spark, sf_dir, names, fail_out):
         if schema_out is not None:
             schema_out[name] = df.schema
-        c, u, r = _walk_plan(df)
+        c, u, r, traps = _walk_plan(df)
         if c:
             out[name] = c
+        if traps and lambda_out is not None:
+            lambda_out[name] = sum(traps.values())
         if u and unauditable_out is not None:
             unauditable_out[name] = u
         if r and rank_out is not None:
@@ -231,7 +277,7 @@ def audit_hooks(spark) -> dict[str, tuple[int, int]]:
     for name, builder in sorted(ah.HOOKS.items()):
         n = u = 0
         for df in builder(spark):
-            dn, du, _ = _walk_plan(df)
+            dn, du, _, _ = _walk_plan(df)
             n += dn
             u += du
         out[name] = (n, u)
