@@ -965,7 +965,9 @@ def agg_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     vals = vals.withColumn(
         "vsum", F.col("cnt").cast("decimal(38,0)") * F.col("rev_cents")
     )
-    offs = prefix_offsets(vals, "rev_cents", ["cnt", "vsum"], ascending=False)
+    offs = prefix_offsets(
+        vals, [], "rev_cents", ["cnt", "vsum"], ascending=False
+    )
     ranked = (
         rev.join(offs.select("rev_cents", "off_cnt", "off_vsum"), "rev_cents")
         .withColumn(
@@ -1067,7 +1069,7 @@ def agg_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     vals = rev.groupBy("cents").agg(F.count(F.lit(1)).alias("cnt"))
-    offs = prefix_offsets(vals, "cents", ["cnt"], ascending=True)
+    offs = prefix_offsets(vals, [], "cents", ["cnt"], ascending=True)
     return _gini_pivot(offs)
 
 
@@ -1158,13 +1160,13 @@ def agg_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit cannot see (the window IS partitioned), with row_number's
     IntegerType counter silently wrapping past 2^31 rows per priority
     while the BIGINT oracle keeps counting. Now: one map-side-combining
-    aggregate to the distinct-value stats, then grouped_prefix_offsets
-    (operators/grouped_prefix.py — every window partitioned by
+    aggregate to the distinct-value stats, then prefix_offsets keyed by
+    priority (operators/prefix.py — every window partitioned by
     (priority, value bucket), broadcast theta top) and a near-empty
     straddle filter. Integer rank bounds use DIV, never /, per the
     round-9 trap. Contrast agg_approx_percentile (GK sketch) for the
     single-pass approximate path."""
-    from .grouped_prefix import grouped_prefix_offsets
+    from .prefix import prefix_offsets
 
     o = load(spark, sf_dir, "orders")
     v = o.select(
@@ -1174,7 +1176,7 @@ def agg_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     vg = v.groupBy("o_orderpriority", "cents").agg(
         F.count(F.lit(1)).alias("c")
     )
-    offs = grouped_prefix_offsets(vg, ["o_orderpriority"], "cents", ["c"])
+    offs = prefix_offsets(vg, ["o_orderpriority"], "cents", ["c"])
     sel = (
         offs.withColumn("lo", F.expr("(tot_c + 1) DIV 2"))
         .withColumn("hi", F.expr("tot_c DIV 2 + 1"))
@@ -1859,7 +1861,7 @@ def agg_percentile_exact_distributed(
     vals = o.groupBy(
         scaled_long(F.col("o_totalprice"), 100).alias("cents")
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    offs = prefix_offsets(vals, "cents", ["cnt"], ascending=True)
+    offs = prefix_offsets(vals, [], "cents", ["cnt"], ascending=True)
     targets = (
         offs.select(F.col("tot_cnt").alias("n"))
         .limit(1)
@@ -2397,7 +2399,7 @@ def agg_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents")
     ).transform(pin)
     vals = cr.groupBy("cents").agg(F.count(F.lit(1)).alias("cnt"))
-    offs = prefix_offsets(vals, "cents", ["cnt"], ascending=True)
+    offs = prefix_offsets(vals, [], "cents", ["cnt"], ascending=True)
     nt = cr.agg(
         F.count("*").alias("n"),
         F.sum(F.col("cents").cast("decimal(38,0)")).alias("tot"),

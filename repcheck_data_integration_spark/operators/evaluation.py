@@ -193,14 +193,14 @@ def ml_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the BIGINT oracle keeps counting. Now: one map-side-combining
     aggregate to the distinct (segment, cents) stats, the pooled row
     derived at the DISTINCT level (no second fact pass), and per-segment
-    offsets from grouped_prefix_offsets — every window partitioned by
-    (segment, value bucket), no int rank anywhere. s2r ~ 2*P*N exceeds
-    LONG at posture (the round-10 overflow class), so the positive count
-    is DECIMAL(19,0)-widened before the multiply; DuckDB's BIGINT sum
-    promotes to HUGEINT, exact on both sides, and both convert to DOUBLE
-    once inside the shared AUC formula.
+    offsets from prefix_offsets keyed by segment — every window
+    partitioned by (segment, value bucket), no int rank anywhere.
+    s2r ~ 2*P*N exceeds LONG at posture (the round-10 overflow class),
+    so the positive count is DECIMAL(19,0)-widened before the multiply;
+    DuckDB's BIGINT sum promotes to HUGEINT, exact on both sides, and
+    both convert to DOUBLE once inside the shared AUC formula.
     """
-    from .grouped_prefix import grouped_prefix_offsets
+    from .prefix import prefix_offsets
 
     o = load(spark, sf_dir, "orders")
     base = o.select(
@@ -218,7 +218,7 @@ def ml_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("c").alias("c"), F.sum("pc").alias("pc"))
         .select(F.lit("__all__").alias("segment"), "cents", "c", "pc")
     )
-    offs = grouped_prefix_offsets(pooled, ["segment"], "cents", ["c"])
+    offs = prefix_offsets(pooled, ["segment"], "cents", ["c"])
     s = (
         offs.groupBy("segment")
         .agg(
@@ -319,7 +319,9 @@ def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     vals = base.groupBy("cents").agg(
         F.count("*").alias("cnt"), F.sum("pos").alias("pos_c")
     )
-    offs = prefix_offsets(vals, "cents", ["cnt", "pos_c"], ascending=False)
+    offs = prefix_offsets(
+        vals, [], "cents", ["cnt", "pos_c"], ascending=False
+    )
     r = (
         base.join(
             offs.select(
@@ -454,7 +456,7 @@ def ml_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = base.groupBy("cents").agg(
         F.sum("pos").alias("p_c"), F.sum(1 - F.col("pos")).alias("q_c")
     )
-    offs = prefix_offsets(g, "cents", ["p_c", "q_c"], ascending=True)
+    offs = prefix_offsets(g, [], "cents", ["p_c", "q_c"], ascending=True)
     c = offs.select(
         "cents",
         F.col("tot_p_c").alias("p"),
@@ -574,7 +576,7 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     vg = base.groupBy("cents").agg(
         F.count("*").alias("cnt"), F.sum("pos").alias("pos_c")
     )
-    offs = prefix_offsets(vg, "cents", ["cnt"], ascending=True)
+    offs = prefix_offsets(vg, [], "cents", ["cnt"], ascending=True)
     b = offs.select(
         F.least(
             F.expr(f"CAST(off_cnt * {CAL_BINS} DIV (tot_cnt - 1) AS INT)"),
@@ -865,7 +867,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vg = base.groupBy("cents", "pos").agg(F.count("*").alias("cnt"))
     cg = vg.groupBy("cents").agg(F.sum("cnt").alias("vc"))
-    offs = prefix_offsets(cg, "cents", ["vc"], ascending=True)
+    offs = prefix_offsets(cg, [], "cents", ["vc"], ascending=True)
     r = vg.join(
         offs.select(
             "cents",
@@ -1023,7 +1025,7 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     vg = base.groupBy("cents").agg(
         F.count("*").alias("cnt"), F.sum("pos").alias("pos_c")
     )
-    offs = prefix_offsets(vg, "cents", ["cnt"], ascending=True)
+    offs = prefix_offsets(vg, [], "cents", ["cnt"], ascending=True)
     b = offs.select(
         F.least(
             F.expr(f"CAST(off_cnt * {ISO_BINS} DIV (tot_cnt - 1) AS INT)"),
@@ -1164,12 +1166,12 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-scaled single-task sort per priority, invisible to the
     unpartitioned-window audit, with row_number's IntegerType counter
     wrapping past 2^31 rows per priority. Now: a map-side-combining
-    aggregate to distinct (grp, resid) counts, grouped_prefix_offsets
-    (every window partitioned by (grp, value bucket)), and the rank-k
+    aggregate to distinct (grp, resid) counts, prefix_offsets keyed by
+    grp (every window partitioned by (grp, value bucket)), and the rank-k
     pick is the value group with off < k <= off + c. Integer rank
     bounds via DIV/ceil kept textually identical to the oracle.
     """
-    from .grouped_prefix import grouped_prefix_offsets
+    from .prefix import prefix_offsets
     o = load(spark, sf_dir, "orders")
     base = o.select(
         "o_orderkey",
@@ -1206,7 +1208,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     vg = calib.groupBy("grp", "resid_micro").agg(
         F.count(F.lit(1)).alias("c")
     )
-    offs = grouped_prefix_offsets(vg, ["grp"], "resid_micro", ["c"])
+    offs = prefix_offsets(vg, ["grp"], "resid_micro", ["c"])
     qhat = (
         offs.withColumn(
             "rk_t",

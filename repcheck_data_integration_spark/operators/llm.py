@@ -396,6 +396,73 @@ def _rag_oracle_sql() -> str:
     """
 
 
+def _rag_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Chunks of every document with their RAG embedding and coarse cell:
+    ``(doc_id, chunk_idx, chunk_md5, emb, cell, dist_sq)``. Overlapping
+    chunks (text_chunk_windows' construction) → md5 per chunk →
+    ``RAG_DIMS`` md5-derived INTEGER components in ±``RAG_W`` (standing
+    in for the model call — a real encoder slots into the same
+    mapInPandas seam llm_summarize uses) → exact integer argmin over the
+    centroid codebook, ties to the lowest cell (sim_search_ivf's cell
+    step). One shuffle-free map pass with the codebook inlined; both the
+    index build and the retrieval read it."""
+    from .textops import CHUNK_SIZE, CHUNK_STEP
+
+    d = load(spark, sf_dir, "documents")
+    n_last = F.expr(f"greatest(length(text) - 1, 0) div {CHUNK_STEP}")
+    chunk = F.expr(
+        f"substr(text, chunk_idx * {CHUNK_STEP} + 1, {CHUNK_SIZE})"
+    )
+    chunks = d.select(
+        "doc_id",
+        "text",
+        F.explode(F.sequence(F.lit(0), n_last)).alias("chunk_idx"),
+    ).select("doc_id", "chunk_idx", F.md5(chunk).alias("chunk_md5"))
+    emb = F.transform(
+        F.sequence(F.lit(0), F.lit(RAG_DIMS - 1)),
+        lambda j: (
+            F.conv(
+                F.substring(
+                    F.md5(
+                        F.concat(
+                            F.col("chunk_md5"), F.lit("_"), j.cast("string")
+                        )
+                    ),
+                    1,
+                    8,
+                ),
+                16,
+                10,
+            ).cast("long")
+            % (2 * RAG_W + 1)
+            - RAG_W
+        ),
+    )
+    embedded = chunks.select(
+        "doc_id", "chunk_idx", "chunk_md5", emb.alias("emb")
+    )
+    dist_cols = []
+    for k, c in enumerate(_rag_centroids()):
+        dexpr = None
+        for j in range(RAG_DIMS):
+            t = (F.element_at("emb", j + 1) - F.lit(c[j])) * (
+                F.element_at("emb", j + 1) - F.lit(c[j])
+            )
+            dexpr = t if dexpr is None else dexpr + t
+        dist_cols.append(F.struct(dexpr.alias("dist"), F.lit(k).alias("cell")))
+    # argmin with lowest-cell tie-break = lexicographic min of
+    # (dist, cell) structs — one array_min, no window
+    best = F.array_min(F.array(*dist_cols))
+    return embedded.select(
+        "doc_id",
+        "chunk_idx",
+        "chunk_md5",
+        "emb",
+        best["cell"].cast("int").alias("cell"),
+        best["dist"].cast("long").alias("dist_sq"),
+    )
+
+
 def _register_rag() -> None:
     @register("pipeline_rag_index", oracle=_rag_oracle_sql())
     def pipeline_rag_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -414,70 +481,9 @@ def _register_rag() -> None:
         over the tiny cell key. The cell column IS the partition key a
         real deployment writes the index by (partitionBy(cell)), giving
         query-time cell pruning."""
-        from .textops import CHUNK_SIZE, CHUNK_STEP
-
-        d = load(spark, sf_dir, "documents")
-        n_last = F.expr(f"greatest(length(text) - 1, 0) div {CHUNK_STEP}")
-        chunk = F.expr(
-            f"substr(text, chunk_idx * {CHUNK_STEP} + 1, {CHUNK_SIZE})"
-        )
-        chunks = d.select(
-            "doc_id",
-            "text",
-            F.explode(F.sequence(F.lit(0), n_last)).alias("chunk_idx"),
-        ).select("doc_id", "chunk_idx", F.md5(chunk).alias("chunk_md5"))
-        emb = F.transform(
-            F.sequence(F.lit(0), F.lit(RAG_DIMS - 1)),
-            lambda j: (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.col("chunk_md5"),
-                                F.lit("_"),
-                                j.cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % (2 * RAG_W + 1)
-                - RAG_W
-            ),
-        )
-        cents = _rag_centroids()
-        embedded = chunks.select(
-            "doc_id", "chunk_idx", "chunk_md5", emb.alias("emb")
-        )
-        dist_cols = []
-        for k, c in enumerate(cents):
-            dexpr = None
-            for j in range(RAG_DIMS):
-                t = (F.element_at("emb", j + 1) - F.lit(c[j])) * (
-                    F.element_at("emb", j + 1) - F.lit(c[j])
-                )
-                dexpr = t if dexpr is None else dexpr + t
-            dist_cols.append(
-                F.struct(
-                    dexpr.alias("dist"), F.lit(k).alias("cell")
-                )
-            )
-        # argmin with lowest-cell tie-break = lexicographic min of
-        # (dist, cell) structs — one array_min, no window
-        best = F.array_min(F.array(*dist_cols))
-        assigned = embedded.select(
-            "doc_id",
-            "chunk_idx",
-            "chunk_md5",
-            best["cell"].cast("int").alias("cell"),
-            best["dist"].cast("long").alias("dist_sq"),
-        )
         from pyspark.sql import Window as PW
 
-        return assigned.withColumn(
+        return _rag_assigned(spark, sf_dir).withColumn(
             "n_in_cell",
             F.count(F.lit(1)).over(PW.partitionBy("cell")).cast("long"),
         ).select(
@@ -574,61 +580,14 @@ def _register_rag_query() -> None:
         Scale: one equi-join on cell + one rank window keyed by query
         chunk. Recall/latency trades by probing more cells — the
         sim_search_lsh_multiprobe extension applies verbatim."""
-        from .textops import CHUNK_SIZE, CHUNK_STEP
-
-        d = load(spark, sf_dir, "documents")
-        n_last = F.expr(f"greatest(length(text) - 1, 0) div {CHUNK_STEP}")
-        chunk = F.expr(
-            f"substr(text, chunk_idx * {CHUNK_STEP} + 1, {CHUNK_SIZE})"
+        # chunk_md5 stays in the persisted output: once dropped, the
+        # optimizer inlines md5(chunk) into the embedding lambda and
+        # recomputes it once per dimension
+        assigned = (
+            _rag_assigned(spark, sf_dir)
+            .select("doc_id", "chunk_idx", "chunk_md5", "emb", "cell")
+            .persist()
         )
-        chunks = d.select(
-            "doc_id",
-            "text",
-            F.explode(F.sequence(F.lit(0), n_last)).alias("chunk_idx"),
-        ).select("doc_id", "chunk_idx", F.md5(chunk).alias("chunk_md5"))
-        emb = F.transform(
-            F.sequence(F.lit(0), F.lit(RAG_DIMS - 1)),
-            lambda j: (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.col("chunk_md5"),
-                                F.lit("_"),
-                                j.cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % (2 * RAG_W + 1)
-                - RAG_W
-            ),
-        )
-        embedded = chunks.select(
-            "doc_id", "chunk_idx", "chunk_md5", emb.alias("emb")
-        )
-        cents = _rag_centroids()
-        dist_cols = []
-        for k, c in enumerate(cents):
-            dexpr = None
-            for j in range(RAG_DIMS):
-                t = (F.element_at("emb", j + 1) - F.lit(c[j])) * (
-                    F.element_at("emb", j + 1) - F.lit(c[j])
-                )
-                dexpr = t if dexpr is None else dexpr + t
-            dist_cols.append(
-                F.struct(dexpr.alias("dist"), F.lit(k).alias("cell"))
-            )
-        assigned = embedded.select(
-            "doc_id",
-            "chunk_idx",
-            "emb",
-            F.array_min(F.array(*dist_cols))["cell"].alias("cell"),
-        ).persist()
         q = assigned.filter(F.col("doc_id") < RAG_N_QUERYDOCS).select(
             F.col("doc_id").alias("q_doc"),
             F.col("chunk_idx").alias("q_chunk"),

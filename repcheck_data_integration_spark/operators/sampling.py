@@ -117,7 +117,7 @@ def sample_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank. This IS the old docstring's 'pre-thin then rank the
     survivors' two-phase plan, derived from the offsets instead of a
     guessed rate."""
-    from .grouped_prefix import grouped_bucket_rank
+    from .prefix import grouped_bucket_rank
 
     d = load(spark, sf_dir, "documents")
     h = hash_bucket(F.col("doc_id").cast("string"), 1_000_000)
@@ -487,7 +487,7 @@ def sample_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     min_n; windows partition by (label, bucket), rank is LONG. min_n
     rides in as a broadcast constant column so the [1, min_n] range is
     a per-row expression."""
-    from .grouped_prefix import grouped_bucket_rank
+    from .prefix import grouped_bucket_rank
 
     e = load(spark, sf_dir, "embeddings")
     counts = e.groupBy("label").agg(F.count(F.lit(1)).alias("n"))

@@ -897,7 +897,7 @@ def emb_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("__en") * F.col("__cn"))
         ).alias("cos"),
     )
-    from .grouped_prefix import grouped_bucket_rank
+    from .prefix import grouped_bucket_rank
 
     sel = grouped_bucket_rank(
         scored, ["label"], "cos", ["vec_id"], lo="1", hi=str(N_OUTLIERS)
@@ -1427,7 +1427,7 @@ def emb_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     window partitions by (dim, value bucket) and the rank is a LONG
     count-over-frame; degenerate all-one-value dims degrade to one
     bucket, never worse than the old shape."""
-    from .grouped_prefix import grouped_bucket_rank
+    from .prefix import grouped_bucket_rank
 
     e = load(spark, sf_dir, "embeddings")
     x = e.select(

@@ -545,7 +545,7 @@ def text_quality_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast offsets: LONG rank in (lang, bucket)-partitioned windows,
     percent_rank reconstructed from (rn, m); the gate cross-checks the
     closed form against DuckDB's native percent_rank."""
-    from .grouped_prefix import grouped_bucket_rank
+    from .prefix import grouped_bucket_rank
 
     q = text_quality_score(spark, sf_dir)
     d = load(spark, sf_dir, "documents").select("doc_id", "lang")

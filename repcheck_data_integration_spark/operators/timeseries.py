@@ -15,9 +15,9 @@ oracle twin:
 - ts_changepoint_binseg, a single binary-segmentation split.
 
 _median_center_avg is the exact bucketed-selection median
-(grouped_prefix.py holds its grouped form); _order_week_series is the
-dense weekly order-count series both Theil-Sen forms read, with an
-optional span cap.
+(prefix.grouped_bucket_rank holds its grouped form); _order_week_series
+is the dense weekly order-count series both Theil-Sen forms read, with
+an optional span cap.
 
 Determinism follows the house rules (CLAUDE.md): integer arithmetic until
 one final division per output column, identical expression strings
@@ -32,8 +32,10 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..functions.exact import scaled_long
 from ..tables import load
+from .ckpt import pin
 from .dedup import sql_stable_round4, stable_round4
 from .models import CRAMER_DET, CRAMER_DET0, CRAMER_DET1, CRAMER_DET2
+from .prefix import _long_rn, _value_buckets
 
 
 # --------------------------------------------------------------------------
@@ -170,6 +172,9 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+MEDIAN_BUCKETS = 256  # value buckets of the median's histogram
+
+
 def _median_center_avg(vals: DataFrame, col: str, *ties: str) -> DataFrame:
     """1-row frame ``avg`` = mean of the middle one/two values of the
     ``col`` multiset — the even/odd median as avg(rows with global rank
@@ -182,11 +187,12 @@ def _median_center_avg(vals: DataFrame, col: str, *ties: str) -> DataFrame:
     depend only on the sorted MULTISET of values, never on how ties are
     ordered, so no global tie-broken row_number is needed. Three bounded
     passes: (1) min/max/count (broadcast 1-row); (2) per-bucket counts
-    over <= {B} equal-width value buckets with cumulative offsets via a
-    broadcast theta join over the <= {B}-row histogram (the prefix.py
-    level-3 shape); (3) a row_number PARTITIONED by bucket inside only
-    the bucket(s) straddling the target ranks — every window is
-    partitioned and every post-fact relation is bounded by construction.
+    over <= MEDIAN_BUCKETS equal-width value buckets (operators/prefix.py's
+    bucket) with cumulative offsets via one broadcast theta join over
+    the <= MEDIAN_BUCKETS-row histogram; (3) a LONG row number
+    PARTITIONED by bucket inside only the bucket(s) straddling the target
+    ranks — every window is partitioned and every post-fact relation is
+    bounded by construction.
     Degenerate skew (all values inside one float bucket) degrades to one
     window task over that bucket — exactly the old global sort, never
     worse. Float bucket arithmetic is deterministic IEEE and affects
@@ -198,38 +204,9 @@ def _median_center_avg(vals: DataFrame, col: str, *ties: str) -> DataFrame:
     DAG per pass — for ts_theil_sen that upstream is the quadratic pair
     theta join, which unpinned re-ran three times per median (measured
     6.4 s vs 1.2 s at sf0.1)."""
-    from .ckpt import pin
-
     vals = pin(vals)
-    B = 256
-    mm = vals.agg(
-        F.min(col).alias("_mn"),
-        F.max(col).alias("_mx"),
-        F.count(F.lit(1)).alias("_m"),
-    )
-    width = (F.col("_mx") - F.col("_mn")) / F.lit(float(B))
-    # Degenerate-width guard (ADVICE r9): the old `_mx <= _mn` test missed
-    # widths that are 0.0 by subnormal underflow (_mx > _mn but the /B
-    # quotient flushes to zero) or non-finite (±inf endpoints make the
-    # span inf, all-inf inputs make it NaN — and Spark's NaN compares
-    # GREATER than 0, so `width > 0` alone would not catch it). Any such
-    # width would turn (v - mn)/width into inf/NaN, wrap the int cast
-    # negative, and break the bucket-order-follows-value-order invariant
-    # the rank offsets rely on. Route ALL rows to bucket 0 instead — the
-    # documented single-window degradation, never wrong.
-    degenerate = (
-        F.isnan(width)
-        | (width <= F.lit(0.0))
-        | (width == F.lit(float("inf")))
-    )
-    j = vals.join(F.broadcast(mm)).withColumn(
-        "_bkt",
-        F.when(degenerate, F.lit(0)).otherwise(
-            F.least(
-                F.floor((F.col(col) - F.col("_mn")) / width).cast("int"),
-                F.lit(B - 1),
-            )
-        ),
+    j = _value_buckets(
+        vals, [], col, MEDIAN_BUCKETS, "_bkt", F.count(F.lit(1)).alias("_m")
     )
     cnts = j.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_c"))
     prev = cnts.select(
@@ -253,11 +230,7 @@ def _median_center_avg(vals: DataFrame, col: str, *ties: str) -> DataFrame:
         .withColumn(
             "_rn",
             F.col("_off")
-            + F.count(F.lit(1)).over(
-                W.partitionBy("_bkt")
-                .orderBy(col, *ties)
-                .rowsBetween(W.unboundedPreceding, W.currentRow)
-            ),
+            + _long_rn(["_bkt"], [F.col(c).asc() for c in (col, *ties)]),
         )
         .filter(
             (F.col("_rn") >= F.col("_lo")) & (F.col("_rn") <= F.col("_hi"))
@@ -294,8 +267,6 @@ def _order_week_series(
     an assert_true into the needed wmax column (never an eager .count()
     guard — that would double the source scan, CLAUDE.md perf trap) so
     the exact form fails fast past its documented O(span²) bound."""
-    from .ckpt import pin
-
     o = load(spark, sf_dir, "orders")
     d0 = o.agg(F.min("o_orderdate").alias("d0"))
     wk = (

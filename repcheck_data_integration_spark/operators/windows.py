@@ -158,7 +158,7 @@ def win_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     that wraps past 2^31 customers per nation; round-10
     partitioned-window sweep). The gate cross-checks the offset
     formulas against DuckDB's native rank functions."""
-    from .grouped_prefix import grouped_prefix_offsets
+    from .prefix import prefix_offsets
 
     c = load(spark, sf_dir, "customer")
     vg = (
@@ -166,7 +166,7 @@ def win_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .withColumn("one", F.lit(1))
     )
-    offs = grouped_prefix_offsets(
+    offs = prefix_offsets(
         vg, ["c_nationkey"], "c_acctbal", ["c", "one"], ascending=False
     ).select("c_nationkey", "c_acctbal", "off_c", "off_one")
     return c.join(offs, ["c_nationkey", "c_acctbal"]).select(
@@ -338,7 +338,7 @@ def win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     it, equal balances would land in different quartiles per engine. The
     rational ranks are stable-rounded for the cross-engine hash."""
     from .dedup import stable_round4
-    from .grouped_prefix import grouped_bucket_rank
+    from .prefix import grouped_bucket_rank
 
     c = load(spark, sf_dir, "customer")
     base = c.select(

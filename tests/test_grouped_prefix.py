@@ -1,4 +1,4 @@
-"""operators/grouped_prefix.py — per-group prefix offsets and LONG-safe
+"""operators/prefix.py — per-group prefix offsets and LONG-safe
 bucketed ranks (round-10 fact-scaled-partitioned-window sweep).
 
 Ground truth is the plain window formulation on small frames: the
@@ -16,9 +16,9 @@ import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from repcheck_data_integration_spark.operators.grouped_prefix import (
+from repcheck_data_integration_spark.operators.prefix import (
     grouped_bucket_rank,
-    grouped_prefix_offsets,
+    prefix_offsets,
 )
 
 
@@ -39,7 +39,7 @@ def test_offsets_match_window_rank(spark):
     on a distinct-value relation with heavy duplication."""
     rows = _rows(1, 400, 3, 0, 25)
     vals = _df(spark, rows).groupBy("grp", "v").agg(F.count("*").alias("c"))
-    got = grouped_prefix_offsets(vals, ["grp"], "v", ["c"], nbuckets=8)
+    got = prefix_offsets(vals, ["grp"], "v", ["c"], nbuckets=8)
     chk = got.withColumn(
         "rk_true",
         F.rank().over(W.partitionBy("grp").orderBy("v")),
@@ -66,7 +66,7 @@ def test_offsets_match_window_rank(spark):
 def test_offsets_descending(spark):
     rows = _rows(2, 300, 2, -40, 40)
     vals = _df(spark, rows).groupBy("grp", "v").agg(F.count("*").alias("c"))
-    got = grouped_prefix_offsets(
+    got = prefix_offsets(
         vals, ["grp"], "v", ["c"], ascending=False, nbuckets=16
     )
     base = _df(spark, rows).withColumn(

@@ -397,3 +397,60 @@ def test_shingle_arrays_explode_outer_and_sign_once():
         "explode of a shingle array (use F.explode_outer) or minhash_mins"
         " outside dedup.minhash_signatures: " + ", ".join(offenders)
     )
+
+
+BUCKET_BOUNDS = {"_mn", "_mx"}
+
+
+def _bucket_arithmetic(path: str) -> list[int]:
+    """Lines of arithmetic over the ``"_mn"``/``"_mx"`` min/max probe
+    columns — a binary operation with one of the names as a string
+    operand below it (``F.col("_mx") - F.col("_mn")``), or SQL text that
+    adds, subtracts, multiplies or divides one of them — and of every
+    import of the deleted ``grouped_prefix`` module."""
+    sql = re.compile(r"\b_m[nx]\b\s*[-+*/]|[-+*/]\s*\b_m[nx]\b")
+    found = []
+    for n in ast.walk(ast.parse(open(path).read())):
+        if isinstance(n, ast.BinOp) and any(
+            isinstance(c, ast.Constant) and c.value in BUCKET_BOUNDS
+            for c in ast.walk(n)
+        ):
+            found.append(n.lineno)
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and (
+            sql.search(n.value)
+        ):
+            found.append(n.lineno)
+        elif isinstance(n, ast.ImportFrom) and (
+            "grouped_prefix" in (n.module or "")
+        ) or isinstance(n, ast.Import) and any(
+            "grouped_prefix" in a.name for a in n.names
+        ):
+            found.append(n.lineno)
+    return sorted(set(found))
+
+
+def test_value_buckets_only_in_prefix():
+    """Every equal-width value bucket over a min/max probe goes through
+    operators/prefix.py (``_bucket_expr``), the one place that owns the
+    degenerate-width guard and the DOUBLE arithmetic that cannot wrap
+    (the round-10 LONG-wrap class); the prefix scan, the grouped rank and
+    the Theil-Sen median all call it, and the old grouped_prefix module
+    stays gone."""
+    root = os.path.dirname(PKG)
+    own = os.path.join(PKG, "operators", "prefix.py")
+    paths = [
+        path
+        for d in (PKG, os.path.join(root, "tests"), os.path.join(root, "tools"))
+        for path in glob.glob(os.path.join(d, "**", "*.py"), recursive=True)
+    ]
+    offenders = [
+        f"{os.path.relpath(path, root)}:{line}"
+        for path in paths
+        if path != own
+        for line in _bucket_arithmetic(path)
+    ]
+    assert not offenders, (
+        "min/max bucket arithmetic or a grouped_prefix import outside"
+        " operators/prefix.py (use prefix._value_buckets): "
+        + ", ".join(offenders)
+    )

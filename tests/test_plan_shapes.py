@@ -1616,7 +1616,7 @@ UNPARTITIONED_WINDOW_WHITELIST = {
 # ntile silently wrap past 2^31 rows per partition while DuckDB's BIGINT
 # twins keep counting (tools/rank_wrap_probe.py grounds the behavior
 # empirically). The true offenders were migrated to
-# operators/grouped_prefix.py (distinct-value offsets / bucketed LONG
+# operators/prefix.py (grouped distinct-value offsets / bucketed LONG
 # ranks): ml_auc_roc, agg_median_exact, ml_conformal_interval,
 # emb_quantile_normalize, sample_domain_cap, sample_class_balance,
 # tpch_q2_min_supplier, win_rank_dense, win_distribution,
@@ -1734,7 +1734,7 @@ def test_unpartitioned_window_inventory_pinned(registry_sweep):
     }
     assert not rnew, (
         f"NEW int-rank windows (classify the partition's boundedness or "
-        f"use grouped_prefix / count-over-frame): {rnew}"
+        f"use prefix.prefix_offsets / count-over-frame): {rnew}"
     )
     assert not rchanged, f"int-rank count drift (re-audit): {rchanged}"
     assert not rgone, f"stale int-rank whitelist rows (remove): {rgone}"
@@ -1928,7 +1928,9 @@ LAMBDA_TRAP_WHITELIST = {
     "dedup_embedding_pairs_star": (2, "md5(id, dim) per synthetic vector dim"),
     "dedup_winnowing": (1, "md5 of each positional 3-gram"),
     "dedup_winnowing_pairs": (3, "md5 of each positional 3-gram"),
+    "llm_rag_eval": (2, "rag_query's md5(chunk_md5, dim), two cached scans"),
     "pipeline_rag_index": (1, "md5(chunk_md5, dim) per projection dim"),
+    "pipeline_rag_query": (2, "md5(chunk_md5, dim), two cached scans"),
     "sim_search_lsh": (2, "md5(id, dim) per synthetic vector dim"),
     "sim_search_lsh_multiprobe": (2, "md5(id, dim) per synthetic vector dim"),
     "stream_curation_pipeline": (1, "md5 of each token (hashed features)"),
@@ -1938,10 +1940,6 @@ LAMBDA_TRAP_WHITELIST = {
     "pipeline_pretrain_corpus": (1, "rlike over each token (gopher rule)"),
     "text_gopher_filter": (1, "rlike over each token"),
     "text_quality_logreg": (1, "rlike over each token (gopher rule)"),
-    # half inlined: per dim, md5(concat(md5(chunk text), dim)) recomputes
-    # the chunk-text md5 (see the CHANGES.md FOUND line)
-    "llm_rag_eval": (4, "rag_query's chunk md5 inlined per projection dim"),
-    "pipeline_rag_query": (4, "chunk md5 inlined per projection dim"),
 }
 
 

@@ -28,7 +28,7 @@ def test_prefix_offsets_matches_bruteforce(spark, asc):
     vals = rng.sample(range(100000), 500)
     rows = [{"v": v, "cnt": (v % 7) + 1, "s": v * 3} for v in vals]
     df = spark.createDataFrame(rows)
-    out = prefix_offsets(df, "v", ["cnt", "s"], ascending=asc, nbuckets=8)
+    out = prefix_offsets(df, [], "v", ["cnt", "s"], ascending=asc, nbuckets=8)
     got = {r["v"]: r.asDict() for r in out.collect()}
     exp = _brute(rows, asc, ["cnt", "s"])
     assert set(got) == set(exp)
@@ -42,7 +42,8 @@ def test_prefix_offsets_matches_bruteforce(spark, asc):
 def test_prefix_offsets_more_partitions_than_rows(spark):
     rows = [{"v": 5, "cnt": 2}, {"v": 3, "cnt": 4}, {"v": 9, "cnt": 1}]
     out = prefix_offsets(
-        spark.createDataFrame(rows), "v", ["cnt"], ascending=True, nbuckets=16
+        spark.createDataFrame(rows), [], "v", ["cnt"], ascending=True,
+        nbuckets=16,
     )
     got = {r["v"]: r["off_cnt"] for r in out.collect()}
     assert got == {3: 0, 5: 4, 9: 6}
@@ -50,20 +51,20 @@ def test_prefix_offsets_more_partitions_than_rows(spark):
 
 def test_prefix_offsets_single_row(spark):
     df = spark.createDataFrame([{"v": 7, "cnt": 3}])
-    row = prefix_offsets(df, "v", ["cnt"], nbuckets=4).collect()[0]
+    row = prefix_offsets(df, [], "v", ["cnt"], nbuckets=4).collect()[0]
     assert row["off_cnt"] == 0 and row["cnt"] == 3
 
 
 def test_prefix_offsets_clustered_and_negative_values(spark):
     """Degenerate domains: all values inside one bucket width (the skew
     worst case collapses to a single within-bucket window — still
-    correct), and negative values (bucket id = (v - min) DIV width must
-    stay non-negative)."""
+    correct), and negative values (bucket id = floor((v - min) / width)
+    must stay non-negative)."""
     rows = [{"v": 1000000 + i, "cnt": i + 1} for i in range(50)]
     got = {
         r["v"]: r["off_cnt"]
         for r in prefix_offsets(
-            spark.createDataFrame(rows), "v", ["cnt"], nbuckets=4096
+            spark.createDataFrame(rows), [], "v", ["cnt"], nbuckets=4096
         ).collect()
     }
     exp = _brute(rows, True, ["cnt"])
@@ -73,20 +74,26 @@ def test_prefix_offsets_clustered_and_negative_values(spark):
     got = {
         r["v"]: r["off_cnt"]
         for r in prefix_offsets(
-            spark.createDataFrame(rows), "v", ["cnt"], ascending=False,
+            spark.createDataFrame(rows), [], "v", ["cnt"], ascending=False,
             nbuckets=8,
         ).collect()
     }
     assert got == {250: 0, 7: 1, 0: 2, -3: 3, -100: 4}
 
 
-def test_prefix_offsets_range_overflow_fails_loudly(spark):
-    """A value range wider than the LONG domain wraps (max - min)
-    negative; the woven assert_true must raise, never bucket garbage."""
-    rows = [{"v": -(2**62), "cnt": 1}, {"v": 2**62, "cnt": 1}]
-    df = spark.createDataFrame(rows)
-    # ANSI mode already throws ARITHMETIC_OVERFLOW on (max - min); the
-    # woven assert_true is the belt for non-ANSI sessions — either way
-    # the failure is loud, never silent garbage buckets
-    with pytest.raises(Exception, match="(?i)overflow|assert|LONG domain"):
-        prefix_offsets(df, "v", ["cnt"], nbuckets=8).collect()
+def test_prefix_offsets_full_long_range_exact(spark):
+    """Values spanning the whole LONG domain (-2^63 .. 2^63-1, a range
+    that wraps (max - min) in LONG arithmetic) get exact offsets and
+    totals in both directions: the DOUBLE bucket only merges neighbors
+    whose cast rounds together, never reorders them."""
+    rng = random.Random(63)
+    vals = {-(2**63), -(2**62), 2**62, 2**63 - 1, 2**63 - 2, 0, -1, 1}
+    vals |= {rng.randrange(-(2**63), 2**63) for _ in range(40)}
+    rows = [{"v": v, "cnt": (i % 5) + 1} for i, v in enumerate(sorted(vals))]
+    df = spark.createDataFrame(rows, "v long, cnt long")
+    for asc in (True, False):
+        out = prefix_offsets(df, [], "v", ["cnt"], ascending=asc, nbuckets=8)
+        got = {r["v"]: (r["off_cnt"], r["tot_cnt"]) for r in out.collect()}
+        exp = _brute(rows, asc, ["cnt"])
+        tot = sum(r["cnt"] for r in rows)
+        assert got == {v: (e["off_cnt"], tot) for v, e in exp.items()}, asc

@@ -45,7 +45,7 @@ def count_int_rank_windows(df) -> int:
     (priority, source, a pooled constant) makes the partition
     fact-scaled while remaining invisible to the unpartitioned-window
     count (round-10 partitioned-window sweep). The count-over-ROWS-frame
-    spelling and operators/grouped_prefix.py are the LONG-safe
+    spelling and operators/prefix.py's grouped scan are the LONG-safe
     alternatives; every remaining int-rank window is pinned with a
     partition-boundedness justification in tests/test_plan_shapes.py."""
     _, _, r, _ = _walk_plan(df)
