@@ -185,6 +185,25 @@ def drain(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def time_drains(spark, build, trials: int) -> list[float]:
+    """Wall seconds of ``trials`` fresh builds-and-drains of ``build()``.
+
+    Every trial calls ``build()`` for a NEW frame: re-draining one
+    DataFrame object reuses its materialized shuffle outputs and times
+    fiction. Before each trial, outside the timed span, ``clearCache()``
+    drops what earlier trials persisted, so no trial is planned against
+    another's InMemoryRelation and min-of-N never times a cache hit. The
+    timed span is the build (with its construction-time jobs) plus the
+    drain."""
+    out = []
+    for _ in range(trials):
+        spark.catalog.clearCache()
+        t0 = time.time()
+        drain(build())
+        out.append(time.time() - t0)
+    return out
+
+
 def main() -> None:
     registry.load_all_modules()
     names = [n for n in HEADLINE if n in registry.QUERIES]
@@ -224,17 +243,8 @@ def main() -> None:
     # number the plans actually deliver.
     per_query: dict[str, float] = {}
     for name in names:
-        trials = []
-        for _ in range(2):
-            # plan each trial against an empty cache, as tools/check.py
-            # does: otherwise the second trial can be planned against the
-            # first trial's InMemoryRelation (the round-8 hazard), and
-            # min-of-2 would time a cache hit; untimed
-            spark.catalog.clearCache()
-            t0 = time.time()
-            df = registry.QUERIES[name](spark, SF_DIR)
-            drain(df)
-            trials.append(time.time() - t0)
+        fn = registry.QUERIES[name]
+        trials = time_drains(spark, lambda: fn(spark, SF_DIR), 2)
         per_query[name] = round(min(trials), 3)
         print(
             f"# {name}: drained in {per_query[name]}s"

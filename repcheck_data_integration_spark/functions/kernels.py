@@ -69,6 +69,35 @@ def surrogate_key_md5(*cols: Column, sep: str = "_") -> Column:
     return F.md5(F.concat_ws(sep, *cols))
 
 
+def md5_long(col, digits: int = 8) -> Column:
+    """The leading ``digits`` hex digits of md5(col) read as a LONG — the
+    engine's deterministic stand-in for rand(). Splits, samples, sketches,
+    random walks and synthetic embeddings draw from it, so Spark and
+    DuckDB (``CAST('0x' || substr(md5(x), 1, d) AS BIGINT)``) pick the same
+    values at any parallelism. NULL in, NULL out."""
+    return F.conv(F.substring(F.md5(col), 1, digits), 16, 10).cast("long")
+
+
+def spark_sql_md5_long(expr: str, digits: int = 8) -> str:
+    """``md5_long`` as Spark SQL text, for callers that build an ``F.expr``.
+    It parses to the same expression, but plans print it as ``substr``
+    where ``md5_long`` prints ``substring``."""
+    return f"CAST(conv(substr(md5({expr}), 1, {digits}), 16, 10) AS BIGINT)"
+
+
+def hash_bucket(col, mod) -> Column:
+    """Deterministic uniform bucket in [0, mod) from md5 of a string
+    column; ``mod`` is an int or a Column."""
+    return md5_long(col) % mod
+
+
+def sql_hash_bucket(expr: str, mod: int) -> str:
+    """The DuckDB oracle text of ``hash_bucket``."""
+    return (
+        f"CAST(('0x' || substr(md5({expr}), 1, 8)) AS BIGINT) % {mod}"
+    )
+
+
 def uuid5(name: Column, namespace: uuid.UUID = uuid.NAMESPACE_OID) -> Column:
     """RFC-4122-exact UUIDv5 as a native expression (no Python UDF):
     sha1(namespace_bytes ‖ name) with version/variant bits spliced into the

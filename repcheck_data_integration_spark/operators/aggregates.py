@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from .ckpt import pin
 from ..registry import register
 from ..functions.exact import dec_sum, scaled_long
+from ..functions.kernels import md5_long
 from ..functions.top1 import DESC, Top1
 from ..tables import literal_frame, load, load_bucketed
 from .dedup import sql_stable_round4, stable_round4
@@ -1988,9 +1989,7 @@ def agg_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hv = du.withColumn(
         "hv",
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 12), 16, 10
-        ).cast("long"),
+        md5_long(F.col("user_id").cast("string"), 12),
     )
     # Two-level bottom-k: a single window per event_type serializes the
     # whole type's membership through one sort task (measured 32x at a

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.kernels import md5_long
 from ..functions.top1 import packed
 from ..registry import register
 from ..tables import load
@@ -777,22 +778,14 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.posexplode(
                 F.transform(
                     F.sequence(F.lit(1), k),
-                    lambda i: F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws(
-                                    " ",
-                                    F.element_at(F.col("t"), i),
-                                    F.element_at(F.col("t"), i + 1),
-                                    F.element_at(F.col("t"), i + 2),
-                                )
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("long"),
+                    lambda i: md5_long(
+                        F.concat_ws(
+                            " ",
+                            F.element_at(F.col("t"), i),
+                            F.element_at(F.col("t"), i + 1),
+                            F.element_at(F.col("t"), i + 2),
+                        )
+                    ),
                 )
             ).alias("pos0", "h"),
         )

@@ -21,11 +21,11 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..functions.kernels import hash_bucket, sql_hash_bucket
 from ..tables import load
 from .ckpt import pin
 from .dedup import sql_stable_round4, stable_round4
 from .models import NB_ORACLE, ml_naive_bayes_lang
-from .sampling import hash_bucket, sql_hash_bucket
 
 
 # --------------------------------------------------------------------------

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..functions.exact import dec_sum, scaled_long
+from ..functions.kernels import hash_bucket
 from ..tables import literal_frame, load
 from .dedup import sql_stable_round4
 
@@ -575,18 +576,10 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk = deg.select(F.col("node").alias("start"), F.col("node").alias("cur"))
     for i in range(WALK_STEPS):
         pick = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("cur").cast("string"), F.lit(f"#w{i}")
-                        )
-                    ),
-                    1, 8,
-                ),
-                16, 10,
-            ).cast("long")
-            % F.col("degree")
+            hash_bucket(
+                F.concat(F.col("cur").cast("string"), F.lit(f"#w{i}")),
+                F.col("degree"),
+            )
             + 1
         )
         walk = (

@@ -27,10 +27,10 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..functions.exact import dec_sum, scaled_long
+from ..functions.kernels import hash_bucket, md5_long
 from ..tables import literal_frame, load
 from .dedup import sql_stable_round4, stable_round4, tokens
 from .models import NB_PRED_SQL, nb_doc_pred
-from .sampling import hash_bucket
 from .textstats import LANG_MARKERS, _marker_count_sql
 
 
@@ -143,24 +143,15 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "segment",
         "cents",
         "b",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.col("o_orderkey").cast("string"),
-                        F.col("b").cast("string"),
-                        F.lit("bs1"),
-                    )
-                ),
-                1,
-                12,
+        md5_long(
+            F.concat_ws(
+                "|",
+                F.col("o_orderkey").cast("string"),
+                F.col("b").cast("string"),
+                F.lit("bs1"),
             ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("hv"),
+            12,
+        ).alias("hv"),
     )
     wtd = reps.withColumn("w", F.expr(_BOOT_W))
     bm = wtd.groupBy("segment", "b").agg(

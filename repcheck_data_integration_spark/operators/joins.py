@@ -12,8 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..functions.kernels import hash_bucket, sql_hash_bucket
 from ..tables import load
-from .sampling import hash_bucket, sql_hash_bucket
 
 
 @register(

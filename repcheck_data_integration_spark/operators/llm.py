@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.kernels import hash_bucket, sql_hash_bucket
 from ..functions.top1 import ASC, DESC, Top1
 from ..registry import register
 from ..tables import load
@@ -421,20 +422,10 @@ def _rag_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = F.transform(
         F.sequence(F.lit(0), F.lit(RAG_DIMS - 1)),
         lambda j: (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("chunk_md5"), F.lit("_"), j.cast("string")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % (2 * RAG_W + 1)
+            hash_bucket(
+                F.concat(F.col("chunk_md5"), F.lit("_"), j.cast("string")),
+                2 * RAG_W + 1,
+            )
             - RAG_W
         ),
     )
@@ -1013,7 +1004,6 @@ DPO_TRAIN_PCT = 90  # per-PROMPT split: whole groups go to one side
 
 def _register_dpo_prep() -> None:
     from .dedup import BENCH_MOD, CONTAM_THRESHOLD, SQL_SHINGLES, TOKEN_RE
-    from .sampling import hash_bucket, sql_hash_bucket
 
     toks_sql = f"regexp_extract_all(text, '{TOKEN_RE}')"
     bkt = sql_hash_bucket("CAST(prompt_id AS VARCHAR)", 100)

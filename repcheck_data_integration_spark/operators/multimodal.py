@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.kernels import hash_bucket, md5_long
 from ..functions.top1 import ASC, DESC, Top1
 from ..registry import register
 from ..tables import load
@@ -453,9 +454,7 @@ def mm_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id",
         "frame_idx",
-        F.conv(F.substring(F.md5(chunk), 1, 8), 16, 10)
-        .cast("long")
-        .alias("sig"),
+        md5_long(chunk).alias("sig"),
     )
     from pyspark.sql import Window as PW
 
@@ -538,10 +537,7 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").filter(F.length("text") > 0)
     n_last = F.expr(f"greatest((length(text) - 1) div {CHUNK}, 0)")
     chunk = F.expr(f"substr(text, frame_idx * {CHUNK} + 1, {CHUNK})")
-    s = (
-        F.conv(F.substring(F.md5(chunk), 1, 8), 16, 10).cast("long") % 65536
-        - 32768
-    )
+    s = hash_bucket(chunk, 65536) - 32768
     frames = d.select(
         "doc_id",
         "text",

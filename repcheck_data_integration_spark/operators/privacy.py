@@ -19,9 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..functions.kernels import hash_bucket, md5_long, sql_hash_bucket
 from ..tables import load
 from .dedup import sql_stable_round4, stable_round4
-from .sampling import hash_bucket, sql_hash_bucket
 
 
 # --------------------------------------------------------------------------
@@ -93,13 +93,7 @@ def priv_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.groupBy("event_type").agg(F.count("*").alias("true_count"))
     u = c.withColumn(
         "u",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("event_type"), F.lit("|dp1"))), 1, 12
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_long(F.concat(F.col("event_type"), F.lit("|dp1")), 12)
         .cast("double")
         / F.lit(DP_DOMAIN)
         - 0.5,

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..functions.exact import scaled_long
+from ..functions.kernels import hash_bucket
 from ..tables import load
 from .dedup import sql_stable_round4, stable_round4
 
@@ -226,11 +227,7 @@ def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample() and DuckDB's USING SAMPLE are both engine-local RNGs and can
     never agree."""
     o = load(spark, sf_dir, "orders")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = hash_bucket(F.col("o_orderkey").cast("string"), 100)
     return o.filter(bucket < 10).select("o_orderkey", "o_custkey", "o_totalprice")
 
 
@@ -258,23 +255,13 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism-independent. Spark's sampleBy() is RNG-based and can never
     reproduce across engines."""
     li = load(spark, sf_dir, "lineitem")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "_",
-                        F.col("l_orderkey").cast("string"),
-                        F.col("l_linenumber").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
+    bucket = hash_bucket(
+        F.concat_ws(
+            "_",
+            F.col("l_orderkey").cast("string"),
+            F.col("l_linenumber").cast("string"),
+        ),
+        100,
     )
     rate = (
         F.when(F.col("l_returnflag") == "R", STRATA_PCT["R"])

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..functions.kernels import hash_bucket, md5_long, sql_hash_bucket
 from ..registry import ORACLE, register
 from ..tables import load
 from .dedup import TOKEN_RE, sql_stable_round4, stable_round4, tokens
@@ -29,21 +30,6 @@ SPLIT_PCT = (90, 5)  # train < 90, valid < 95, else test
 DOMAIN_CAP = 15  # max docs kept per source
 MIX_ALPHA = 0.3  # temperature exponent (w ∝ share^alpha)
 PACK_BUDGET = 256  # tokens per packed training sequence
-
-
-def hash_bucket(col, mod: int):
-    """Deterministic uniform bucket in [0, mod) from md5 of a string column
-    — the cross-engine substitute for rand() (same mechanism as
-    sample_deterministic, quality.py:228)."""
-    return (
-        F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % mod
-    )
-
-
-def sql_hash_bucket(expr: str, mod: int) -> str:
-    return (
-        f"CAST(('0x' || substr(md5({expr}), 1, 8)) AS BIGINT) % {mod}"
-    )
 
 
 @register(
@@ -546,13 +532,7 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the now-astronomically-unlikely residual ties)."""
     d = load(spark, sf_dir, "documents")
     w = F.greatest(F.col("n_chars"), F.lit(1))
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("#wt"))),
-            1, 8,
-        ),
-        16, 10,
-    ).cast("long")
+    h = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit("#wt")))
     u = (h + F.lit(0.5)) / F.lit(4294967296.0)
     keyed = d.select(
         "doc_id",

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.exact import scaled_long
+from ..functions.kernels import hash_bucket, spark_sql_md5_long
 from ..functions.top1 import (
     ASC,
     DESC,
@@ -467,17 +468,7 @@ def _lsh_bands(spark: SparkSession, e: DataFrame) -> DataFrame:
         F.transform(
             F.sequence(F.lit(1), F.lit(EMB_DIM)),
             lambda i: (
-                (
-                    F.conv(
-                        F.substring(
-                            F.md5(F.concat_ws("_", F.col("id"), i)), 1, 8
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % 2001
-                )
-                - 1000
+                hash_bucket(F.concat_ws("_", F.col("id"), i), 2001) - 1000
             )
             / 1000.0,
         ).alias("w"),
@@ -2671,12 +2662,12 @@ def emb_pair_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load(spark, sf_dir, "embeddings")
     bs = emb.groupBy("label").agg(F.count("*").cast("long").alias("m"))
+    keep_hash = spark_sql_md5_long("concat('coshist-', CAST(vec_id AS STRING))")
     kept = (
         emb.join(F.broadcast(bs), "label")
         .filter(
             F.expr(
-                "pmod(CAST(conv(substr(md5(concat('coshist-',"
-                " CAST(vec_id AS STRING))), 1, 8), 16, 10) AS BIGINT),"
+                f"pmod({keep_hash},"
                 f" greatest(1, m div {COS_HIST_EXACT_BLOCK})) = 0"
             )
         )

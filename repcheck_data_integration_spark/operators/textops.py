@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.kernels import hash_bucket, spark_sql_md5_long
 from ..functions.top1 import ASC, DESC, Top1
 from ..registry import register
 from ..tables import literal_frame, load
@@ -426,10 +427,7 @@ def text_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivot to a dense vector at the consumer if needed. Same md5-rational
     trick as the LSH hyperplanes keeps both engines identical."""
     tc = term_counts(load(spark, sf_dir, "documents"))
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long")
-        % N_HASH_FEATURES
-    )
+    bucket = hash_bucket(F.col("tok"), N_HASH_FEATURES)
     return tc.groupBy("doc_id", bucket.alias("bucket")).agg(
         F.sum("cnt").cast("long").alias("n")
     )
@@ -1500,15 +1498,7 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = d.select(F.explode(tokens(F.col("text"))).alias("word"))
 
     def bucket(word_col, j: int):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(word_col, F.lit(f"#cms{j}"))), 1, 8
-                ),
-                16, 10,
-            ).cast("long")
-            % CMS_WIDTH
-        )
+        return hash_bucket(F.concat(word_col, F.lit(f"#cms{j}")), CMS_WIDTH)
 
     j_col = F.explode(
         F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))
@@ -2706,11 +2696,9 @@ def text_watermark_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "b")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
+    green_hash = spark_sql_md5_long("'wm-' || b")
     green = F.when(
-        F.expr(
-            "pmod(CAST(conv(substr(md5('wm-' || b), 1, 8), 16, 10)"
-            " AS BIGINT), 2) = 0"
-        ),
+        F.expr(f"pmod({green_hash}, 2) = 0"),
         F.col("cnt"),
     ).otherwise(F.lit(0))
     s = dc.select("doc_id", "cnt", green.alias("green")).groupBy(

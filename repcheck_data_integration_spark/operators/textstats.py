@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import dec_sum
+from ..functions.kernels import hash_bucket
 from ..registry import register
 from ..tables import load
 from .dedup import sql_stable_round4, stable_round4, tokens
@@ -800,13 +801,6 @@ QC_BUCKETS = 4096      # feature-hash space for unigrams
 QC_W_SPAN = 1000       # weights are integers in [-QC_W_SPAN, +QC_W_SPAN]
 
 
-def qc_bucket(t):
-    """Feature-hash a token column into [0, QC_BUCKETS)."""
-    return (
-        F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long") % QC_BUCKETS
-    )
-
-
 # The bucket -> weight table, materialized ONCE in Python with the same
 # md5 derivation the oracle SQL spells out inline (hashlib.md5 == Spark
 # md5 == DuckDB md5 on UTF-8 input, so values are bit-identical). Scoring
@@ -828,7 +822,7 @@ def qc_weight(t):
     """Deterministic integer bucket weight in ±QC_W_SPAN (md5-derived
     table lookup; see QC_WEIGHTS)."""
     return F.element_at(
-        F.lit(list(QC_WEIGHTS)), (qc_bucket(t) + 1).cast("int")
+        F.lit(list(QC_WEIGHTS)), (hash_bucket(t, QC_BUCKETS) + 1).cast("int")
     )
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..functions.exact import scaled_long
+from ..functions.kernels import hash_bucket
 from ..tables import load
 from .ckpt import pin
 from .dedup import sql_stable_round4, stable_round4
@@ -484,8 +485,8 @@ def ts_theil_sen_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Theil-Sen's all-pairs median is O(span²) work by algorithm, so a
     100× calendar axis means 10,000× pairs no matter how the join
     distributes. Here each week proposes TS_SEN_K deterministic partners
-    (md5 of "w#k#tsen" mod |weeks| — the engine-exact hash_bucket
-    mechanism from sampling.py, never rand()), giving O(span·K) draws,
+    (md5 of "w#k#tsen" mod |weeks| — the engine-exact
+    functions/kernels.hash_bucket, never rand()), giving O(span·K) draws,
     deduped to unique (lo, hi) pairs; the slope median and the median-
     residual intercept then run on the sample through the same
     _median_center_avg partitioned selection as the exact form.
@@ -511,24 +512,14 @@ def ts_theil_sen_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(nw))
         .select(
             "w",
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.col("w").cast("string"),
-                                F.lit("#"),
-                                F.col("k").cast("string"),
-                                F.lit("#tsen"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % F.col("nw")
+            hash_bucket(
+                F.concat(
+                    F.col("w").cast("string"),
+                    F.lit("#"),
+                    F.col("k").cast("string"),
+                    F.lit("#tsen"),
+                ),
+                F.col("nw"),
             ).alias("p"),
         )
     )

@@ -1,4 +1,43 @@
-"""Flagship end-to-end query plans (TPC-H-shaped).
+"""TPC-H-shaped flagship query plans: all 22 classic decision-support
+shapes, adapted to the fixture schema, plus one composed §3.1 lifecycle.
+
+The fixtures have no partsupp, shipmode, phone or comment columns, so the
+joins run through lineitem, priorities stand in for shipmodes, and cost
+proxies or key-derived predicates replace the missing columns. The PLAN
+SHAPES, the point of the exercise, are unchanged (COVERAGE.md maps them):
+
+- q1: single-scan grouped aggregate with exact sums and averages;
+- q2: correlated minimum (cheapest supplier per brand) as a top-1;
+- q3: customer ⋈ orders ⋈ lineitem → filter → agg → top-k, on the
+  bucketed orderkey layout;
+- q4: EXISTS semi-join;
+- q5: 6-way join, all dims broadcast, zero-exchange fact join;
+- q6: single-scan selective aggregate;
+- q7: two aliased dimension joins of the SAME table (nation as supplier
+  nation and customer nation) with a disjunctive pair filter;
+- q8: conditional market-share ratio (numerator = CASE inside the same
+  aggregate as the denominator);
+- q9: multi-fact profit expression with negative partial sums;
+- q10: group-by-many-columns + deterministic top-20
+  (TakeOrderedAndProject);
+- q11: HAVING against a broadcast scalar (group value > fraction of
+  total);
+- q12: conditional aggregation;
+- q13: LEFT OUTER join + two-level aggregation (distribution of counts);
+- q14: conditional ratio;
+- q15: argmax over an aggregated relation (max revenue supplier,
+  tie-safe);
+- q16: count-distinct over a dedup'd link with NOT-IN exclusion;
+- q17: correlated scalar subquery decorrelated into aggregate + join;
+- q18: HAVING over a grouped fact;
+- q19: disjunctive multi-column pushdown;
+- q20: two-level semi-join chain (suppliers shipping enough of the
+  target parts);
+- q21: EXISTS and NOT-EXISTS on the same fact with different predicates
+  (the only-late-supplier-in-a-multi-supplier-order query);
+- q22: scalar global aggregate feeding a filter + anti join;
+- pipeline_enrich_merge: the §3.1 lifecycle as one plan (semi-join,
+  per-bill aggregate, surrogate key mint, MERGE).
 
 These exercise the §3.2 lifecycle in miniature (SURVEY.md §7 step 1):
 parquet scan → filter (pushed down) → broadcast/shuffle joins → hash
@@ -18,9 +57,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.exact import exact_avg, exact_sum, sql_exact_avg, sql_exact_sum
+from ..functions.exact import (
+    exact_avg,
+    exact_sum,
+    scaled_long,
+    sql_exact_avg,
+    sql_exact_sum,
+)
+from ..functions.top1 import ASC, Top1
 from ..registry import register
 from ..tables import load, load_bucketed
+
 
 Q1_CUTOFF = "2000-12-01"
 
@@ -327,3 +374,773 @@ def pipeline_enrich_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0).alias("revenue"),
     )
     return merge_upsert(base, enriched, keys=["o_orderkey"], preserve=())
+
+
+@register(
+    "tpch_q2_min_supplier",
+    oracle="""
+    WITH link AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+    ranked AS (
+        SELECT p.p_brand, s.s_suppkey, s.s_name, s.s_acctbal,
+               row_number() OVER (PARTITION BY p.p_brand
+                                  ORDER BY s.s_acctbal, s.s_suppkey) AS rn
+        FROM link JOIN part p ON link.l_partkey = p.p_partkey
+                  JOIN supplier s ON link.l_suppkey = s.s_suppkey)
+    SELECT p_brand, s_suppkey, s_name, s_acctbal
+    FROM ranked WHERE rn = 1
+    """,
+)
+def q2_min_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q2 shape: correlated minimum — cheapest supplier per brand over the
+    shipped part-supplier link. The oracle keeps the rank-window form;
+    the Spark side computes the identical argmin as a top-1 aggregate by
+    (s_acctbal, s_suppkey) — a map-side-combining aggregate instead of a
+    ``PARTITION BY p_brand`` rank window whose ~25 brand partitions each
+    sort a partsupp-scaled slice in one task and overflow the int rank
+    counter past 2^31 link rows per brand (round-10 partitioned-window
+    sweep)."""
+    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
+    p = load(spark, sf_dir, "part")
+    s = load(spark, sf_dir, "supplier")
+    link = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).join(
+        F.broadcast(s), li.l_suppkey == s.s_suppkey
+    )
+    m = Top1(link, [("s_acctbal", ASC), ("s_suppkey", ASC)], carry=["s_name"])
+    return link.groupBy("p_brand").agg(
+        m["s_suppkey"], m["s_name"], m["s_acctbal"]
+    )
+
+
+@register(
+    "tpch_q4_order_priority",
+    oracle="""
+    SELECT o_orderpriority, count(*) AS order_count
+    FROM orders
+    WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
+      AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
+      AND o_orderkey IN (
+          SELECT l_orderkey FROM lineitem WHERE l_shipdate > TIMESTAMP '1996-07-01 00:00:00')
+    GROUP BY o_orderpriority
+    """,
+)
+def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q4 shape: EXISTS → left-semi join, then a tiny group count."""
+    o = load(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= F.lit("1996-07-01 00:00:00").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1996-10-01 00:00:00").cast("timestamp"))
+    )
+    li = load(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") > F.lit("1996-07-01 00:00:00").cast("timestamp")
+    )
+    return (
+        o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
+        .groupBy("o_orderpriority")
+        .agg(F.count(F.lit(1)).alias("order_count"))
+    )
+
+
+@register(
+    "tpch_q6_forecast_revenue",
+    oracle=f"""
+    SELECT {sql_exact_sum('l_extendedprice * l_discount', 4)} AS revenue
+    FROM lineitem
+    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+      AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+      AND l_discount BETWEEN 0.05 AND 0.07
+      AND l_quantity < 24
+    """,
+)
+def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q6 shape: single scan, every predicate pushed, one global aggregate
+    (scale 4: 2-decimal price × 2-decimal discount is exact in 4)."""
+    li = load(spark, sf_dir, "lineitem")
+    return li.filter(
+        (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
+        & F.col("l_discount").between(0.05, 0.07)
+        & (F.col("l_quantity") < 24)
+    ).agg(
+        exact_sum(F.col("l_extendedprice") * F.col("l_discount"), 4).alias("revenue")
+    )
+
+
+@register(
+    "tpch_q12_priority_counts",
+    oracle="""
+    SELECT l_linestatus,
+           CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+           CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                    THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+      AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+    GROUP BY l_linestatus
+    """,
+)
+def q12_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q12 shape: join + conditional aggregation (sum-of-CASE)."""
+    o = load(spark, sf_dir, "orders")
+    li = load(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
+    )
+    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy("l_linestatus")
+        .agg(
+            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
+            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
+        )
+    )
+
+
+@register(
+    "tpch_q14_promo_ratio",
+    oracle=f"""
+    SELECT CAST(100.0 * ({sql_exact_sum(
+        "CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount)"
+        " ELSE 0.0 END")})
+           / ({sql_exact_sum("l_extendedprice * (1 - l_discount)")})
+           AS DOUBLE) AS promo_revenue_pct
+    FROM lineitem JOIN part ON l_partkey = p_partkey
+    WHERE l_shipdate >= TIMESTAMP '1997-03-01 00:00:00'
+      AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
+    """,
+)
+def q14_promo_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q14 shape: ratio of two conditional aggregates in one pass (both
+    exact-scaled, divided once at the end)."""
+    li = load(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= F.lit("1997-03-01 00:00:00").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
+    )
+    p = load(spark, sf_dir, "part")
+    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    promo = F.when(F.col("p_type") == "PROMO", disc).otherwise(F.lit(0.0))
+    return (
+        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .agg(
+            (100.0 * exact_sum(promo) / exact_sum(disc))
+            .cast("double")
+            .alias("promo_revenue_pct")
+        )
+    )
+
+
+@register(
+    "tpch_q18_large_orders",
+    oracle=f"""
+    SELECT c_name, o_orderkey, o_orderdate, o_totalprice,
+           {sql_exact_sum('l_quantity')} AS total_qty
+    FROM customer
+    JOIN orders ON c_custkey = o_custkey
+    JOIN lineitem ON o_orderkey = l_orderkey
+    WHERE o_orderkey IN (
+        SELECT l_orderkey FROM lineitem
+        GROUP BY l_orderkey
+        HAVING sum(CAST(round(l_quantity * 100, 0) AS BIGINT)) > 15000)
+    GROUP BY c_name, o_orderkey, o_orderdate, o_totalprice
+    ORDER BY o_totalprice DESC, o_orderkey
+    LIMIT 100
+    """,
+)
+def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q18 shape: HAVING over a grouped fact feeding a semi-join, then the
+    3-way join + re-aggregate + top-k."""
+    c = load(spark, sf_dir, "customer")
+    o = load(spark, sf_dir, "orders")
+    li = load(spark, sf_dir, "lineitem")
+    big = (
+        li.groupBy("l_orderkey")
+        .agg(F.sum(scaled_long(F.col("l_quantity"), 100)).alias("sq"))
+        .filter(F.col("sq") > 15000)
+        .select("l_orderkey")
+    )
+    return (
+        o.join(big.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey", "left_semi")
+        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(li, F.col("o_orderkey") == li.l_orderkey)
+        .groupBy("c_name", "o_orderkey", "o_orderdate", "o_totalprice")
+        .agg(exact_sum(F.col("l_quantity")).alias("total_qty"))
+        .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
+        .limit(100)
+    )
+
+
+@register(
+    "tpch_q19_disjunctive",
+    oracle=f"""
+    SELECT {sql_exact_sum('l_extendedprice * (1 - l_discount)')} AS revenue
+    FROM lineitem JOIN part ON p_partkey = l_partkey
+    WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
+           AND l_quantity BETWEEN 1 AND 21)
+       OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
+           AND l_quantity BETWEEN 10 AND 30)
+       OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
+           AND l_quantity BETWEEN 20 AND 40)
+    """,
+)
+def q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q19 shape: disjunction of conjunctive predicates across both join
+    sides — the classic test that the optimizer extracts the common join key
+    and pushes the residual disjunction."""
+    li = load(spark, sf_dir, "lineitem")
+    p = load(spark, sf_dir, "part")
+    j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+    branch = lambda brand, smax, qlo, qhi: (  # noqa: E731
+        (F.col("p_brand") == brand)
+        & F.col("p_size").between(1, smax)
+        & F.col("l_quantity").between(qlo, qhi)
+    )
+    return j.filter(
+        branch("Brand#12", 15, 1, 21)
+        | branch("Brand#23", 25, 10, 30)
+        | branch("Brand#34", 35, 20, 40)
+    ).agg(
+        exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            "revenue"
+        )
+    )
+
+
+@register(
+    "tpch_q17_small_quantity",
+    oracle=f"""
+    WITH avgq AS (
+        SELECT l_partkey AS pk, avg(l_quantity) AS aq
+        FROM lineitem GROUP BY l_partkey)
+    SELECT {sql_exact_sum('l_extendedprice')} AS total_price,
+           count(*) AS n_small
+    FROM lineitem JOIN avgq ON l_partkey = pk
+    WHERE l_quantity < 0.5 * aq
+    """,
+)
+def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q17 shape: correlated scalar subquery (per-part average) decorrelated
+    into an aggregate + self-join — the rewrite Catalyst itself performs for
+    correlated scalars, stated explicitly."""
+    li = load(spark, sf_dir, "lineitem")
+    avgq = li.groupBy(F.col("l_partkey").alias("pk")).agg(
+        F.avg("l_quantity").alias("aq")
+    )
+    return (
+        li.join(avgq, li.l_partkey == avgq.pk)
+        .filter(F.col("l_quantity") < 0.5 * F.col("aq"))
+        .agg(
+            exact_sum(F.col("l_extendedprice")).alias("total_price"),
+            F.count(F.lit(1)).alias("n_small"),
+        )
+    )
+
+
+@register(
+    "tpch_q7_volume_shipping",
+    oracle=f"""
+    SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+           CAST(year(l.l_shipdate) AS BIGINT) AS l_year,
+           {sql_exact_sum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
+    FROM lineitem l
+    JOIN supplier s ON s.s_suppkey = l.l_suppkey
+    JOIN orders o ON o.o_orderkey = l.l_orderkey
+    JOIN customer c ON c.c_custkey = o.o_custkey
+    JOIN nation n1 ON n1.n_nationkey = s.s_nationkey
+    JOIN nation n2 ON n2.n_nationkey = c.c_nationkey
+    WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+       OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
+    GROUP BY 1, 2, 3
+    """,
+)
+def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q7 shape: the same dimension joined twice under different roles
+    (supplier nation vs customer nation) with a symmetric pair predicate;
+    both nation sides broadcast, lineitem never shuffles before the agg."""
+    li = load(spark, sf_dir, "lineitem")
+    s = load(spark, sf_dir, "supplier")
+    o = load(spark, sf_dir, "orders")
+    c = load(spark, sf_dir, "customer")
+    n = load(spark, sf_dir, "nation")
+    n1 = n.select(
+        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
+    )
+    n2 = n.select(
+        F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
+    )
+    pair = (
+        (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
+    ) | (
+        (F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1")
+    )
+    return (
+        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
+        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
+        .filter(pair)
+        .groupBy(
+            "supp_nation",
+            "cust_nation",
+            F.year("l_shipdate").cast("long").alias("l_year"),
+        )
+        .agg(
+            exact_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            ).alias("revenue")
+        )
+    )
+
+
+@register(
+    "tpch_q9_product_profit",
+    oracle=f"""
+    SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
+           {sql_exact_sum(
+               'l.l_extendedprice * (1 - l.l_discount)'
+               ' - 0.1 * p.p_retailprice * l.l_quantity')} AS sum_profit
+    FROM lineitem l
+    JOIN part p ON p.p_partkey = l.l_partkey
+    JOIN supplier s ON s.s_suppkey = l.l_suppkey
+    JOIN orders o ON o.o_orderkey = l.l_orderkey
+    JOIN nation n ON n.n_nationkey = s.s_nationkey
+    WHERE contains(p.p_name, 'red')
+    GROUP BY 1, 2
+    """,
+)
+def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q9 shape: profit per nation-year. No partsupp table in the fixture,
+    so supply cost is proxied as 10% of p_retailprice and the name filter uses 'red' — keeping the
+    signature feature: a signed expression whose partial sums can be
+    NEGATIVE (exercises the scaled-integer path's sign handling). The
+    part-name filter prunes before any join."""
+    li = load(spark, sf_dir, "lineitem")
+    p = load(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
+    s = load(spark, sf_dir, "supplier")
+    o = load(spark, sf_dir, "orders")
+    n = load(spark, sf_dir, "nation")
+    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - 0.1 * F.col(
+        "p_retailprice"
+    ) * F.col("l_quantity")
+    return (
+        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .groupBy(
+            F.col("n_name").alias("nation"),
+            F.year("o_orderdate").cast("long").alias("o_year"),
+        )
+        .agg(exact_sum(profit).alias("sum_profit"))
+    )
+
+
+@register(
+    "tpch_q10_returned_items",
+    oracle=f"""
+    SELECT c.c_custkey, c.c_name, n.n_name,
+           {sql_exact_sum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
+    FROM lineitem l
+    JOIN orders o ON o.o_orderkey = l.l_orderkey
+    JOIN customer c ON c.c_custkey = o.o_custkey
+    JOIN nation n ON n.n_nationkey = c.c_nationkey
+    WHERE l.l_returnflag = 'R'
+    GROUP BY 1, 2, 3
+    ORDER BY revenue DESC, c.c_custkey
+    LIMIT 20
+    """,
+)
+def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q10 shape: revenue lost to returns, top-20 customers. orderBy+limit
+    compiles to TakeOrderedAndProject (per-partition top-20, single-row
+    merge — no global sort); the revenue is an exact sum so the DESC
+    ordering is engine-identical, with c_custkey breaking ties."""
+    li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    o = load(spark, sf_dir, "orders")
+    c = load(spark, sf_dir, "customer")
+    n = load(spark, sf_dir, "nation")
+    return (
+        li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .groupBy("c_custkey", "c_name", "n_name")
+        .agg(
+            exact_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            ).alias("revenue")
+        )
+        .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
+        .limit(20)
+    )
+
+
+@register(
+    "tpch_q13_cust_distribution",
+    oracle="""
+    SELECT c_count, count(*) AS custdist
+    FROM (
+        SELECT c.c_custkey, count(o.o_orderkey) AS c_count
+        FROM customer c
+        LEFT JOIN orders o ON o.o_custkey = c.c_custkey
+                          AND o.o_orderpriority <> '1-URGENT'
+        GROUP BY c.c_custkey)
+    GROUP BY c_count
+    """,
+)
+def q13_cust_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q13 shape: distribution of per-customer order counts including the
+    zero bucket — the LEFT OUTER join keeps order-less customers, and the
+    join-side predicate (NOT the WHERE) keeps customers whose only orders
+    are urgent. Two-level aggregation: the second groupBy is over an
+    already-tiny relation."""
+    c = load(spark, sf_dir, "customer")
+    o = load(spark, sf_dir, "orders").filter(
+        F.col("o_orderpriority") != "1-URGENT"
+    )
+    per_cust = (
+        c.join(o, c.c_custkey == o.o_custkey, "left_outer")
+        .groupBy(c.c_custkey)
+        .agg(F.count("o_orderkey").alias("c_count"))
+    )
+    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
+
+
+@register(
+    "tpch_q16_supplier_cnt",
+    oracle="""
+    SELECT p.p_brand, p.p_size,
+           count(DISTINCT link.l_suppkey) AS supplier_cnt
+    FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) link
+    JOIN part p ON p.p_partkey = link.l_partkey
+    WHERE p.p_brand <> 'Brand#1' AND p.p_size IN (2, 5, 11, 28, 37)
+    GROUP BY 1, 2
+    """,
+)
+def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q16 shape: how many distinct suppliers can ship each (brand, size):
+    dedup'd part-supplier link (partsupp stand-in), NOT-equal + IN-list
+    pruning pushed to the part scan, count-distinct over the join."""
+    link = (
+        load(spark, sf_dir, "lineitem")
+        .select("l_partkey", "l_suppkey")
+        .distinct()
+    )
+    p = load(spark, sf_dir, "part").filter(
+        (F.col("p_brand") != "Brand#1")
+        & F.col("p_size").isin(2, 5, 11, 28, 37)
+    )
+    return (
+        link.join(F.broadcast(p), link.l_partkey == p.p_partkey)
+        .groupBy("p_brand", "p_size")
+        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
+    )
+
+
+@register(
+    "tpch_q22_global_sales_opportunity",
+    oracle=f"""
+    WITH avg_bal AS (
+        SELECT {sql_exact_avg('c_acctbal')} AS a
+        FROM customer WHERE c_acctbal > 0.0),
+    eligible AS (
+        SELECT c.c_custkey, c.c_nationkey, c.c_acctbal
+        FROM customer c, avg_bal
+        WHERE c.c_acctbal > avg_bal.a
+          AND NOT EXISTS (SELECT 1 FROM orders o
+                          WHERE o.o_custkey = c.c_custkey
+                            AND o.o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'))
+    SELECT CAST(c_nationkey AS BIGINT) AS cntry, count(*) AS numcust,
+           {sql_exact_sum('c_acctbal')} AS totacctbal
+    FROM eligible GROUP BY 1
+    """,
+)
+def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q22 shape: a scalar global aggregate (avg positive balance, computed
+    exactly and broadcast as a 1-row frame) filters customers, an ANTI join
+    drops those with RECENT orders (the fixture's customers almost all have
+    old orders, so the recency predicate keeps the result non-trivial),
+    then group-by-nation totals. The anti join is
+    the scalable NOT EXISTS: no correlated per-row subquery."""
+    c = load(spark, sf_dir, "customer")
+    o = load(spark, sf_dir, "orders")
+    avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(
+        exact_avg(F.col("c_acctbal")).alias("a")
+    )
+    return (
+        c.join(F.broadcast(avg_bal))
+        .filter(F.col("c_acctbal") > F.col("a"))
+        .join(
+            o.filter(F.col("o_orderdate") >= "1998-01-01"),
+            c.c_custkey == o.o_custkey,
+            "left_anti",
+        )
+        .groupBy(F.col("c_nationkey").cast("long").alias("cntry"))
+        .agg(
+            F.count(F.lit(1)).alias("numcust"),
+            exact_sum(F.col("c_acctbal")).alias("totacctbal"),
+        )
+    )
+
+
+@register(
+    "tpch_q8_market_share",
+    oracle=f"""
+    WITH flat AS (
+        SELECT CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
+               l.l_extendedprice * (1 - l.l_discount) AS vol,
+               n.n_name AS supp_nation
+        FROM lineitem l
+        JOIN orders o ON o.o_orderkey = l.l_orderkey
+        JOIN supplier s ON s.s_suppkey = l.l_suppkey
+        JOIN nation n ON n.n_nationkey = s.s_nationkey
+        JOIN region r ON r.r_regionkey = n.n_regionkey
+        WHERE r.r_name = 'ASIA')
+    SELECT o_year,
+           floor({sql_exact_sum(
+               "CASE WHEN supp_nation = 'NATION_1' THEN vol ELSE 0.0 END")}
+               / {sql_exact_sum('vol')} * 10000.0 + 0.5) / 10000.0
+               AS mkt_share
+    FROM flat GROUP BY o_year
+    """,
+)
+def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q8 shape: NATION_1's share of ASIA order volume per year — the
+    numerator is a CASE branch of the SAME exact-sum aggregate as the
+    denominator (one pass, no self-join), ratio stable-rounded."""
+    li = load(spark, sf_dir, "lineitem")
+    o = load(spark, sf_dir, "orders")
+    s = load(spark, sf_dir, "supplier")
+    n = load(spark, sf_dir, "nation")
+    r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    flat = (
+        li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .select(
+            F.year("o_orderdate").cast("long").alias("o_year"),
+            vol.alias("vol"),
+            F.col("n_name").alias("supp_nation"),
+        )
+    )
+    num = exact_sum(
+        F.when(F.col("supp_nation") == "NATION_1", F.col("vol")).otherwise(0.0)
+    )
+    den = exact_sum(F.col("vol"))
+    return flat.groupBy("o_year").agg(
+        (F.floor(num / den * 10000.0 + 0.5) / 10000.0).alias("mkt_share")
+    )
+
+
+@register(
+    "tpch_q11_important_stock",
+    oracle=f"""
+    WITH pv AS (
+        SELECT l.l_partkey,
+               CAST(sum(CAST(round((l.l_quantity * p.p_retailprice) * 100, 0)
+                             AS BIGINT)) AS BIGINT) AS pv_c
+        FROM lineitem l
+        JOIN part p ON p.p_partkey = l.l_partkey
+        GROUP BY l.l_partkey),
+    total AS (SELECT CAST(sum(pv_c) AS BIGINT) AS tv_c FROM pv)
+    SELECT pv.l_partkey, CAST(pv_c / 100.0 AS DOUBLE) AS part_value
+    FROM pv, total
+    WHERE CAST(pv_c AS DOUBLE) > CAST(tv_c AS DOUBLE) * 0.0005
+    """,
+)
+def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q11 shape: per-part shipped value, keeping parts above a FRACTION of
+    the grand total — the scalar total re-aggregates the grouped relation
+    (tiny) and broadcasts back as a 1-row frame; no second scan of the
+    fact. Both the per-part value AND the grand total stay in scaled
+    integer cents until the very end (a float re-sum of part_value would be
+    order/partition-dependent and could flip the borderline threshold
+    compare across engines); the fraction compare is int-exact cast to
+    double once, identically on both sides."""
+    li = load(spark, sf_dir, "lineitem")
+    p = load(spark, sf_dir, "part")
+    pv = (
+        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .groupBy("l_partkey")
+        .agg(
+            F.sum(
+                scaled_long(
+                    F.col("l_quantity") * F.col("p_retailprice"), 100
+                )
+            ).alias("pv_c")
+        )
+    )
+    total = pv.agg(F.sum("pv_c").alias("tv_c"))
+    return (
+        pv.join(F.broadcast(total))
+        .filter(
+            F.col("pv_c").cast("double") > F.col("tv_c").cast("double") * 0.0005
+        )
+        .select(
+            "l_partkey",
+            (F.col("pv_c") / 100.0).cast("double").alias("part_value"),
+        )
+    )
+
+
+@register(
+    "tpch_q15_top_supplier",
+    oracle=f"""
+    WITH rev AS (
+        SELECT l_suppkey,
+               {sql_exact_sum('l_extendedprice * (1 - l_discount)')}
+                   AS total_revenue
+        FROM lineitem
+        WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+          AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
+        GROUP BY l_suppkey)
+    SELECT s.s_suppkey, s.s_name, r.total_revenue
+    FROM rev r JOIN supplier s ON s.s_suppkey = r.l_suppkey
+    WHERE r.total_revenue = (SELECT max(total_revenue) FROM rev)
+    """,
+)
+def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q15 shape: the supplier(s) with maximum quarterly revenue — argmax
+    over an AGGREGATED relation. The engine form reuses the grouped frame
+    for both the max (re-aggregated, broadcast) and the probe side; exact
+    revenue makes the equality compare safe, and genuine ties all surface
+    (same as the SQL)."""
+    li = load(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= "1997-01-01")
+        & (F.col("l_shipdate") < "1997-04-01")
+    )
+    s = load(spark, sf_dir, "supplier")
+    rev = li.groupBy("l_suppkey").agg(
+        exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            "total_revenue"
+        )
+    )
+    mx = rev.agg(F.max("total_revenue").alias("mx"))
+    return (
+        rev.join(F.broadcast(mx))
+        .filter(F.col("total_revenue") == F.col("mx"))
+        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        .select("s_suppkey", "s_name", "total_revenue")
+    )
+
+
+@register(
+    "tpch_q20_part_availability",
+    oracle="""
+    WITH red_parts AS (
+        SELECT p_partkey FROM part WHERE contains(p_name, 'red')),
+    heavy AS (
+        SELECT l_suppkey
+        FROM lineitem
+        WHERE l_partkey IN (SELECT p_partkey FROM red_parts)
+          AND l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+        GROUP BY l_suppkey
+        HAVING sum(l_quantity) > 100.0)
+    SELECT s.s_suppkey, s.s_name
+    FROM supplier s
+    WHERE s.s_suppkey IN (SELECT l_suppkey FROM heavy)
+    """,
+)
+def q20_part_availability(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q20 shape: two-level semi-join chain — parts filtered by name feed a
+    quantity-threshold aggregation over lineitem, whose survivors semi-join
+    suppliers. Every IN becomes a left-semi hash join; nothing widens."""
+    li = load(spark, sf_dir, "lineitem")
+    p = load(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
+    s = load(spark, sf_dir, "supplier")
+    heavy = (
+        li.filter(F.col("l_shipdate") >= "1997-01-01")
+        .join(
+            F.broadcast(p.select("p_partkey")),
+            li.l_partkey == F.col("p_partkey"),
+            "left_semi",
+        )
+        .groupBy("l_suppkey")
+        .agg(F.sum("l_quantity").alias("q"))
+        .filter(F.col("q") > 100.0)
+        .select("l_suppkey")
+    )
+    return s.join(
+        heavy, s.s_suppkey == heavy.l_suppkey, "left_semi"
+    ).select("s_suppkey", "s_name")
+
+
+LATE_DAYS = 60
+
+
+@register(
+    "tpch_q21_waiting_supplier",
+    oracle=f"""
+    WITH ol AS (
+        SELECT l.l_orderkey, l.l_suppkey,
+               max(CASE WHEN l.l_shipdate >
+                        o.o_orderdate + {LATE_DAYS} * INTERVAL 1 DAY
+                        THEN 1 ELSE 0 END) AS is_late
+        FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+        GROUP BY l.l_orderkey, l.l_suppkey)
+    SELECT s.s_name, count(*) AS numwait
+    FROM ol late
+    JOIN supplier s ON s.s_suppkey = late.l_suppkey
+    WHERE late.is_late = 1
+      AND EXISTS (SELECT 1 FROM ol o2
+                  WHERE o2.l_orderkey = late.l_orderkey
+                    AND o2.l_suppkey <> late.l_suppkey)
+      AND NOT EXISTS (SELECT 1 FROM ol o3
+                      WHERE o3.l_orderkey = late.l_orderkey
+                        AND o3.l_suppkey <> late.l_suppkey
+                        AND o3.is_late = 1)
+    GROUP BY s.s_name
+    """,
+)
+def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q21 shape: suppliers who were the ONLY late shipper on multi-supplier
+    orders. The per-(order, supplier) lateness flag is aggregated once,
+    then the EXISTS becomes a left-semi join and the NOT EXISTS a
+    left-anti join against two filtered views of that SAME relation —
+    three passes over a small aggregate instead of correlated subqueries
+    per row. Late = shipped more than {LATE_DAYS} days after order date
+    (receipt/commit columns don't exist in the fixture)."""
+    li = load(spark, sf_dir, "lineitem")
+    o = load(spark, sf_dir, "orders")
+    s = load(spark, sf_dir, "supplier")
+    ol = (
+        li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
+        .groupBy("l_orderkey", "l_suppkey")
+        .agg(
+            F.max(
+                F.when(
+                    F.col("l_shipdate")
+                    > F.col("o_orderdate")
+                    + F.expr(f"make_dt_interval({LATE_DAYS})"),
+                    1,
+                ).otherwise(0)
+            ).alias("is_late")
+        )
+    )
+    late = ol.filter(F.col("is_late") == 1).select("l_orderkey", "l_suppkey")
+    others = ol.select(
+        F.col("l_orderkey").alias("o_ok"), F.col("l_suppkey").alias("o_sk")
+    )
+    late_others = ol.filter(F.col("is_late") == 1).select(
+        F.col("l_orderkey").alias("o_ok"), F.col("l_suppkey").alias("o_sk")
+    )
+    waiting = (
+        late.join(
+            others,
+            (F.col("l_orderkey") == F.col("o_ok"))
+            & (F.col("l_suppkey") != F.col("o_sk")),
+            "left_semi",
+        )
+        .join(
+            late_others,
+            (F.col("l_orderkey") == F.col("o_ok"))
+            & (F.col("l_suppkey") != F.col("o_sk")),
+            "left_anti",
+        )
+    )
+    return (
+        waiting.join(F.broadcast(s), waiting.l_suppkey == s.s_suppkey)
+        .groupBy("s_name")
+        .agg(F.count(F.lit(1)).alias("numwait"))
+    )

@@ -130,10 +130,12 @@ def ordered_queries() -> dict[str, QueryFn]:
 
 
 def load_all_modules() -> None:
-    """Import every module that registers queries (idempotent)."""
-    from .plans import tpch, tpch_more, tpch_rest, tpch_final  # noqa: F401
+    """Import every module that registers queries (idempotent). The import
+    order is the registration order that ``ordered_queries`` keeps."""
+    from .plans import tpch  # noqa: F401
     from .operators import (  # noqa: F401
         filters,
+        sampling,
         joins,
         aggregates,
         windows,
@@ -151,7 +153,6 @@ def load_all_modules() -> None:
         graph,
         textops,
         skew,
-        sampling,
         models,
         evaluation,
         hypothesis,

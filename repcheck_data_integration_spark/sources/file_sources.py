@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import tables
 from ..registry import register
 from ..functions.exact import scaled_long
 from ..tables import literal_frame, load
@@ -28,8 +29,13 @@ FIXTURE_ROOT = "/tmp/repcheck_spark_fixtures"
 
 
 def _fixture_dir(sf_dir: str, kind: str) -> str:
+    """Where the ``kind`` files derived from ``sf_dir`` are staged. The key
+    carries the layout salt and the content fingerprint (as
+    ``tables.load_bucketed`` does), so a fixture regenerated in place, or
+    impersonated at another scale by a harness, is staged afresh."""
     tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(FIXTURE_ROOT, tag, kind)
+    key = f"{tag}_{tables.LAYOUT_SALT}{tables._content_fingerprint(sf_dir)}"
+    return os.path.join(FIXTURE_ROOT, key, kind)
 
 
 def _done(path: str) -> bool:

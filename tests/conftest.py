@@ -26,7 +26,7 @@ def round4(x: float) -> float:
 
 
 def md5_bucket(s: str, mod: int) -> int:
-    """The python twin of sampling.hash_bucket's md5 bucket."""
+    """The python twin of functions/kernels.hash_bucket's md5 bucket."""
     return int(hashlib.md5(s.encode()).hexdigest()[:8], 16) % mod
 
 

@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
+import hashlib
 import uuid
 
 from pyspark.sql import functions as F
 
 from repcheck_data_integration_spark.functions.kernels import (
+    hash_bucket,
+    md5_long,
     multi_format_timestamp,
     normalize_division_id,
     unaccent,
@@ -23,6 +26,54 @@ def test_uuid5_matches_stdlib(spark):
     }
     for n in names:
         assert got[n] == str(uuid.uuid5(uuid.NAMESPACE_OID, n)), n
+
+
+def _hex_prefix(s: str, digits: int) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:digits], 16)
+
+
+# "k15991078" hashes to a digest that leads with six f digits: a prefix
+# near the top of its range, whose high bit a signed read would flip
+MD5_KEYS = ["k15991078", "", "doc_1#wt", "héllo", "42|7|bs1"]
+
+
+def test_md5_long_matches_hashlib_prefix(spark):
+    assert hashlib.md5(b"k15991078").hexdigest()[:6] == "ffffff"
+    df = spark.createDataFrame([(k,) for k in MD5_KEYS], ["k"])
+    for digits in (8, 12, 15):
+        got = {
+            r["k"]: r["h"]
+            for r in df.select(
+                "k", md5_long(F.col("k"), digits).alias("h")
+            ).collect()
+        }
+        assert got == {k: _hex_prefix(k, digits) for k in MD5_KEYS}, digits
+        assert got["k15991078"] >= 16**digits - 16 ** (digits - 6)
+
+
+def test_hash_bucket_int_and_column_modulus(spark):
+    df = spark.createDataFrame(
+        [(k, m) for k, m in zip(MD5_KEYS, (7, 3, 100, 2, 13))], ["k", "m"]
+    )
+    rows = df.select(
+        "k",
+        "m",
+        hash_bucket(F.col("k"), 97).alias("b_int"),
+        hash_bucket(F.col("k"), F.col("m")).alias("b_col"),
+    ).collect()
+    for r in rows:
+        assert r["b_int"] == _hex_prefix(r["k"], 8) % 97, r["k"]
+        assert r["b_col"] == _hex_prefix(r["k"], 8) % r["m"], r["k"]
+
+
+def test_md5_hash_null_in_null_out(spark):
+    df = spark.createDataFrame([(None,)], "k string")
+    r = df.select(
+        md5_long(F.col("k")).alias("h"),
+        md5_long(F.col("k"), 12).alias("h12"),
+        hash_bucket(F.col("k"), 10).alias("b"),
+    ).collect()[0]
+    assert (r["h"], r["h12"], r["b"]) == (None, None, None)
 
 
 def test_unaccent(spark):

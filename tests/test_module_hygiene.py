@@ -454,3 +454,91 @@ def test_value_buckets_only_in_prefix():
         " operators/prefix.py (use prefix._value_buckets): "
         + ", ".join(offenders)
     )
+
+
+HASH_HELPERS = {"md5_long", "hash_bucket", "sql_hash_bucket", "spark_sql_md5_long"}
+MD5_PREFIX_SQL = re.compile(
+    r"conv\(\s*substr(?:ing)?\(\s*md5\(.*?\)\s*,\s*1\s*,", re.I | re.S
+)
+
+
+def _md5_prefix_hashes(path: str) -> list[int]:
+    """Lines of an ``F.conv(F.substring(F.md5(...)))`` chain, of Spark SQL
+    text that converts a leading md5 hex slice (``conv`` over
+    ``substr(md5(x), 1, d)``), of a hash helper imported from ``sampling``
+    and of a module-level definition of one of the helper names."""
+    def is_f(node, name) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == name
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+            and bool(node.args)
+        )
+
+    def text(node) -> str | None:
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        if isinstance(node, ast.JoinedStr):
+            return "".join(
+                v.value if isinstance(v, ast.Constant) else "{}"
+                for v in node.values
+            )
+        return None
+
+    tree = ast.parse(open(path).read())
+    found = [
+        n.lineno
+        for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name in HASH_HELPERS
+    ]
+    for n in ast.walk(tree):
+        if (
+            is_f(n, "conv")
+            and is_f(n.args[0], "substring")
+            and is_f(n.args[0].args[0], "md5")
+        ):
+            found.append(n.lineno)
+        elif (s := text(n)) is not None and MD5_PREFIX_SQL.search(s):
+            found.append(n.lineno)
+        elif isinstance(n, ast.ImportFrom) and (n.module or "").endswith(
+            "sampling"
+        ) and any(a.name in HASH_HELPERS for a in n.names):
+            found.append(n.lineno)
+    return sorted(set(found))
+
+
+def test_md5_prefix_hash_only_in_kernels():
+    """Every md5-prefix hash (the engine's deterministic stand-in for
+    rand()) goes through functions/kernels.py (``md5_long``,
+    ``hash_bucket``), so splits, samples, sketches and walks all draw the
+    same values; DuckDB oracle text (``'0x' || substr(md5(...))``) and
+    slices of a digest the query keeps as a column are not matched."""
+    root = os.path.dirname(PKG)
+    own = os.path.join(PKG, "functions", "kernels.py")
+    paths = [
+        path
+        for d in (PKG, os.path.join(root, "tests"), os.path.join(root, "tools"))
+        for path in glob.glob(os.path.join(d, "**", "*.py"), recursive=True)
+    ]
+    offenders = [
+        f"{os.path.relpath(path, root)}:{line}"
+        for path in paths
+        if path != own
+        for line in _md5_prefix_hashes(path)
+    ]
+    assert not offenders, (
+        "md5-prefix hash or hash helper outside functions/kernels.py"
+        " (use kernels.md5_long / kernels.hash_bucket): "
+        + ", ".join(offenders)
+    )
+
+
+def test_tpch_plans_in_one_module():
+    """The TPC-H shapes live in plans/tpch.py, one topic module, not in
+    modules named for the tranche that added them."""
+    extra = glob.glob(os.path.join(PKG, "plans", "tpch_*.py"))
+    assert not extra, "TPC-H module outside plans/tpch.py: " + ", ".join(
+        os.path.relpath(p, PKG) for p in extra
+    )

@@ -532,3 +532,37 @@ def test_bucket_table_gc_scope(tmp_path):
     assert old_dead not in left
     assert legacy_nopid not in left
     assert legacy_probe not in left
+
+
+def test_staged_source_follows_regenerated_fixture(spark, write_table, tmp_path):
+    """A scan source stages its input files once per fixture CONTENT: an
+    sf dir whose table is rewritten in place is staged afresh, so the
+    scan returns the new rows, not the files staged from the old ones."""
+    import shutil
+
+    from repcheck_data_integration_spark.sources.file_sources import (
+        _fixture_dir,
+        src_csv_scan,
+    )
+
+    cols = (
+        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
+        " c_mktsegment string"
+    )
+
+    def rows(n, seg):
+        return [(k, f"Customer#{k}", k % 5, k * 1.5, seg) for k in range(n)]
+
+    sf, staged = str(tmp_path), []
+    try:
+        write_table("customer", rows(3, "OLD"), cols)
+        staged.append(os.path.dirname(_fixture_dir(sf, "csv")))
+        first = sorted(map(tuple, src_csv_scan(spark, sf).collect()))
+        assert first == rows(3, "OLD")
+        write_table("customer", rows(5, "NEW"), cols)
+        staged.append(os.path.dirname(_fixture_dir(sf, "csv")))
+        second = sorted(map(tuple, src_csv_scan(spark, sf).collect()))
+        assert second == rows(5, "NEW")
+    finally:
+        for d in staged:
+            shutil.rmtree(d, ignore_errors=True)

@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
-from bench import HEADLINE, drain  # noqa: E402
+from bench import HEADLINE, drain, time_drains  # noqa: E402
 from repcheck_data_integration_spark import registry  # noqa: E402
 from repcheck_data_integration_spark.session import get_spark  # noqa: E402
 
@@ -89,18 +89,12 @@ def main() -> None:
         # without it the Spark trials read cold files against a warmed
         # DuckDB (measured: q3 at sf10 3.9 s cold-vs-warm, 1.2 s
         # warm-vs-warm).
-        drain(registry.QUERIES[name](spark, sf_dir))
-        trials = []
-        for _ in range(2):
-            # empty cache per trial, outside the timed span (as bench.py)
-            spark.catalog.clearCache()
-            t0 = time.time()
-            # noop-sink drain (not .count()): DuckDB's fetchall
-            # materializes every value, so the Spark side must evaluate
-            # every projected column too or projection-heavy ratios
-            # flatter Spark.
-            drain(registry.QUERIES[name](spark, sf_dir))
-            trials.append(time.time() - t0)
+        fn = registry.QUERIES[name]
+        drain(fn(spark, sf_dir))
+        # noop-sink drain (not .count()): DuckDB's fetchall materializes
+        # every value, so the Spark side must evaluate every projected
+        # column too or projection-heavy ratios flatter Spark.
+        trials = time_drains(spark, lambda: fn(spark, sf_dir), 2)
         sparkt[name] = round(min(trials), 3)
     spark.stop()
 

@@ -12,13 +12,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import drain  # noqa: E402
+from bench import drain, time_drains  # noqa: E402
 from repcheck_data_integration_spark.session import get_spark  # noqa: E402
 from repcheck_data_integration_spark.tables import load  # noqa: E402
 
@@ -27,16 +26,20 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/repcheck_sf10"
     n_buckets = int(sys.argv[2]) if len(sys.argv) > 2 else 32
     spark = get_spark("bucketed-probe")
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    orders = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
+
+    def li():
+        return load(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
+        )
+
+    def orders():
+        return load(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_orderdate"
+        )
 
     for name, df, key in (
-        ("li_bkt", li, "l_orderkey"),
-        ("orders_bkt", orders, "o_orderkey"),
+        ("li_bkt", li(), "l_orderkey"),
+        ("orders_bkt", orders(), "o_orderkey"),
     ):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         (
@@ -51,19 +54,17 @@ def main() -> None:
             "l_orderkey", "o_custkey", "l_extendedprice"
         )
 
-    plain = join_of(li, orders)
-    bli, bo = spark.table("li_bkt"), spark.table("orders_bkt")
-    bucketed = join_of(bli, bo)
+    def plain():
+        return join_of(li(), orders())
 
-    for label, df in (("shuffle join", plain), ("bucketed join", bucketed)):
-        drain(df)
-        trials = []
-        for _ in range(2):
-            t0 = time.time()
-            drain(df)
-            trials.append(time.time() - t0)
-        p = df._sc._jvm.PythonSQLUtils if False else None  # noqa: F841
-        plan = df._jdf.queryExecution().executedPlan().toString()
+    def bucketed():
+        return join_of(spark.table("li_bkt"), spark.table("orders_bkt"))
+
+    for label, build in (("shuffle join", plain), ("bucketed join", bucketed)):
+        warm = build()
+        drain(warm)  # untimed: codegen and the file cache
+        trials = time_drains(spark, build, 2)
+        plan = warm._jdf.queryExecution().executedPlan().toString()
         n_exch = plan.count("Exchange")
         print(f"{label}: {round(min(trials), 2)}s  exchanges-in-plan={n_exch}")
 

@@ -19,13 +19,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from bench import drain
+from bench import drain, time_drains
 from repcheck_data_integration_spark import registry
 from repcheck_data_integration_spark.session import get_spark
 from repcheck_data_integration_spark.tables import load, load_bucketed
@@ -99,12 +98,15 @@ def main() -> None:
     drain(q5(spark, SF_DIR))
     out = {}
     for stage in ("scan", "probe", "bcast", "full"):
-        trials = []
-        for _ in range(TRIALS):
-            t0 = time.time()
-            df = q5(spark, SF_DIR) if stage == "full" else build(spark, stage)
-            drain(df)
-            trials.append(round(time.time() - t0, 3))
+        trials = [
+            round(t, 3)
+            for t in time_drains(
+                spark,
+                lambda: q5(spark, SF_DIR) if stage == "full"
+                else build(spark, stage),
+                TRIALS,
+            )
+        ]
         out[stage] = {"min": min(trials), "trials": trials}
         print(f"# {stage}: {out[stage]}", file=sys.stderr)
     print(json.dumps({"sf_dir": SF_DIR, "stages": out}))

@@ -18,11 +18,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import drain  # noqa: E402
+from bench import drain, time_drains  # noqa: E402
 from repcheck_data_integration_spark import registry  # noqa: E402
 from repcheck_data_integration_spark.session import get_spark  # noqa: E402
 
@@ -62,13 +61,11 @@ def main() -> None:
             drain(fn(spark, "/root/testdata/sf0.001"))
         except Exception as e:
             print(f"# warmup {name} skipped: {e}", file=sys.stderr)
-        trials = []
-        for _ in range(args.trials):
-            spark.catalog.clearCache()  # outside the timed span, as bench.py
-            spark.sparkContext.setJobDescription(f"qprof:{name}")
-            t0 = time.time()
-            drain(fn(spark, SF_DIR))
-            trials.append(round(time.time() - t0, 3))
+        spark.sparkContext.setJobDescription(f"qprof:{name}")
+        trials = [
+            round(t, 3)
+            for t in time_drains(spark, lambda: fn(spark, SF_DIR), args.trials)
+        ]
         spark.sparkContext.setJobDescription(None)
         results[name] = min(trials)
         print(f"# {name}: min {min(trials)}s trials {trials}", file=sys.stderr)

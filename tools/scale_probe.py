@@ -6,19 +6,21 @@ broadcast overflow, skew collapse).
 
 Usage: python tools/scale_probe.py [factor]   (default 10)
 Writes SCALE.md with the measured 1×→N× ratios.
+       python tools/scale_probe.py factor op ...
+Probes only the named ops and replaces their SCALE.md rows in place
+(appending a row for an op the table does not list yet).
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
-from bench import drain  # noqa: E402
+from bench import time_drains  # noqa: E402
 from repcheck_data_integration_spark import registry  # noqa: E402
 from repcheck_data_integration_spark.session import get_spark  # noqa: E402
 from repcheck_data_integration_spark import tables  # noqa: E402
@@ -290,15 +292,9 @@ def run(factor: int) -> dict[str, tuple[float, int]]:
         # probe scale turns a 1.3s query into a fake 4s "superlinear" row
         # timed with the noop-sink drain: a bare .count() lets Catalyst
         # prune the output projections
-        trials = []
-        for _ in range(2):
-            t0 = time.time()
-            drain(registry.QUERIES[name](spark, SF_DIR))
-            trials.append(time.time() - t0)
-            # per-query isolation: drop cached/persisted/checkpointed
-            # blocks so one trial's leftovers don't feed the next
-            spark.catalog.clearCache()
-        n = registry.QUERIES[name](spark, SF_DIR).count()
+        fn = registry.QUERIES[name]
+        trials = time_drains(spark, lambda: fn(spark, SF_DIR), 2)
+        n = fn(spark, SF_DIR).count()
         spark.catalog.clearCache()
         out[name] = (round(min(trials), 2), n)
         print(f"  {factor}x {name}: {n} rows in {out[name][0]}s", file=sys.stderr)
@@ -309,27 +305,35 @@ def run(factor: int) -> dict[str, tuple[float, int]]:
     return out
 
 
+def _row(name: str, t1: dict, tn: dict) -> str:
+    (s1, n1), (sn, nn) = t1[name], tn[name]
+    return f"| {name} | {s1} ({n1}) | {sn} ({nn}) | {sn / max(s1, 0.01):.1f}× |"
+
+
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     registry.load_all_modules()
     subset = sys.argv[2:]
     if subset:
-        # subset+append mode: probe only the named ops and append their
-        # rows to SCALE.md (new ops get scale evidence without re-running
-        # the whole battery)
+        # subset mode: probe only the named ops and update their SCALE.md
+        # rows (an op's existing row is replaced in place, a new op's row
+        # is appended) without re-running the whole battery
         global PROBES
         PROBES = subset
         t1 = run(1)
         tn = run(factor)
+        rows = {name: _row(name, t1, tn) for name in PROBES}
         path = os.path.join(os.path.dirname(__file__), "..", "SCALE.md")
-        with open(path, "a") as f:
-            for name in PROBES:
-                (s1, n1), (sn, nn) = t1[name], tn[name]
-                f.write(
-                    f"| {name} | {s1} ({n1}) | {sn} ({nn}) |"
-                    f" {sn / max(s1, 0.01):.1f}× |\n"
-                )
-        print(f"appended {len(PROBES)} rows to SCALE.md")
+        with open(path) as f:
+            lines = [
+                rows.pop(line.split("|")[1].strip(), line)
+                if line.startswith("| ")
+                else line
+                for line in f.read().splitlines()
+            ]
+        with open(path, "w") as f:
+            f.write("\n".join([*lines, *rows.values()]) + "\n")
+        print(f"updated {len(PROBES)} rows in SCALE.md")
         return
     t1 = run(1)
     tn = run(factor)
@@ -357,11 +361,7 @@ def main() -> None:
         f"| query | 1× sec (rows) | {factor}× sec (rows) | time ratio |",
         "|---|---|---|---|",
     ]
-    for name in PROBES:
-        (s1, n1), (sn, nn) = t1[name], tn[name]
-        lines.append(
-            f"| {name} | {s1} ({n1}) | {sn} ({nn}) | {sn / max(s1, 0.01):.1f}× |"
-        )
+    lines += [_row(name, t1, tn) for name in PROBES]
     with open(os.path.join(os.path.dirname(__file__), "..", "SCALE.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("wrote SCALE.md")
