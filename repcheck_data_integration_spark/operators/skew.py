@@ -11,9 +11,10 @@ can't see:
   algebraic aggregate (sum/count/min/max).
 - **salted broadcast-side replication** for joins: replicate the small side
   per salt so the big side's hot key spreads across tasks.
-- **bucketed co-located joins**: pre-bucket both tables on the join key at
-  write time → joins read bucket-aligned files with NO exchange (proved by
-  plan assertion in tests/test_scale_levers.py).
+
+Bucketed co-located joins have one writer, ``tables.load_bucketed``
+(single-file buckets, one per session shuffle partition; the no-exchange
+plan is asserted in tests/test_scale_levers.py).
 """
 
 from __future__ import annotations
@@ -75,20 +76,6 @@ def salted_broadcast_join(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     )
     return big_s.join(F.broadcast(small_r), [key, "__salt"]).drop("__salt")
-
-
-def write_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int = 8
-) -> None:
-    """Persist hash-bucketed by the join key: later joins/aggs on ``key``
-    between same-bucketed tables run exchange-free."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -26,6 +26,8 @@ from ..functions.exact import scaled_long
 from ..tables import literal_frame, load
 
 FIXTURE_ROOT = "/tmp/repcheck_spark_fixtures"
+# fixture keys whose stale siblings this process has already swept
+_SWEPT: set[str] = set()
 
 
 def _fixture_dir(sf_dir: str, kind: str) -> str:
@@ -34,8 +36,32 @@ def _fixture_dir(sf_dir: str, kind: str) -> str:
     ``tables.load_bucketed`` does), so a fixture regenerated in place, or
     impersonated at another scale by a harness, is staged afresh."""
     tag = os.path.basename(os.path.normpath(sf_dir))
-    key = f"{tag}_{tables.LAYOUT_SALT}{tables._content_fingerprint(sf_dir)}"
+    prefix = f"{tag}_{tables.LAYOUT_SALT}"
+    key = prefix + tables._content_fingerprint(sf_dir)
+    if key not in _SWEPT:
+        _SWEPT.add(key)
+        _reap_stale_fixtures(tag, prefix, key)
     return os.path.join(FIXTURE_ROOT, key, kind)
+
+
+def _reap_stale_fixtures(tag: str, prefix: str, key: str) -> None:
+    """Delete what was staged from an earlier content of the same sf dir
+    and salt (its fingerprint is no longer ``key``'s) and the legacy
+    basename-only ``tag`` key. No current key can name them again, so
+    without the sweep every regenerated fixture or probe run leaves a full
+    copy behind. Runs once per key and process, like
+    ``tables._gc_dead_bucket_tables``."""
+    import re
+    import shutil
+
+    try:
+        entries = os.listdir(FIXTURE_ROOT)
+    except OSError:
+        return
+    stale = re.compile(re.escape(prefix) + r"[0-9a-f]{10}")
+    for d in entries:
+        if d == tag or (d != key and stale.fullmatch(d)):
+            shutil.rmtree(os.path.join(FIXTURE_ROOT, d), ignore_errors=True)
 
 
 def _done(path: str) -> bool:

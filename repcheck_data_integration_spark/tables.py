@@ -49,11 +49,6 @@ def _ntz_to_ltz(df: DataFrame) -> DataFrame:
     return df
 
 
-# Bucket count for the co-located fact layout. 32 matches the local test
-# parallelism; on a real cluster this is table DDL (Hive bucketing /
-# Iceberg-Delta clustering) and the count is sized to executors.
-BUCKETS_N = int(os.environ.get("SPARK_GRAFT_BUCKETS", "32"))
-
 # Harnesses that monkeypatch load() (tools/scale_probe.py feeds scaled
 # unions through the same sf_dir) must set this so the bucketed-table
 # cache key reflects the IMPERSONATED content, not just the raw file
@@ -171,24 +166,40 @@ def _content_fingerprint(path: str) -> str:
     return h.hexdigest()[:10]
 
 
+def _bucket_count(spark: SparkSession) -> int:
+    """Buckets of the co-located fact layout: the number of partitions the
+    session shuffles to (``SQLConf.numShufflePartitions``, the value
+    EnsureRequirements compares a child's partitioning against). With
+    ``N == shuffle partitions`` the bucketed scan's HashPartitioning
+    satisfies the join's distribution without an exchange, and a
+    non-bucketed join side is shuffled to N partitions, not to a larger
+    layout-fixed count; each bucketed scan runs one task per shuffle
+    partition. On a cluster this is table DDL (Hive bucketing /
+    Iceberg-Delta clustering) sized to the executors the same way."""
+    return int(
+        spark._jsparkSession.sessionState().conf().numShufflePartitions()
+    )
+
+
 def load_bucketed(
     spark: SparkSession, sf_dir: str, name: str, key: str
 ) -> DataFrame:
     """``load()`` through a bucketed+sorted warehouse materialization.
 
-    The table is written ONCE per (session, source content) bucketed by
-    ``key`` into ``BUCKETS_N`` buckets; subsequent reads report
-    ``outputPartitioning = HashPartitioning(key)`` so orderkey-aligned
-    fact-fact joins and key-clustered aggregates run with ZERO shuffle
-    exchanges (tools/bucketed_probe.py: the q5 join kernel 9.05 s ->
-    1.62 s at sf10 with Exchange 1 -> 0). Content-neutral: all columns,
-    all rows — the DuckDB oracle twins keep reading the raw parquet.
+    The table is written ONCE per (session, source content, bucket count)
+    bucketed by ``key`` into ``_bucket_count(spark)`` buckets; subsequent
+    reads report ``outputPartitioning = HashPartitioning(key)`` so
+    orderkey-aligned fact-fact joins and key-clustered aggregates run with
+    ZERO shuffle exchanges (tools/bucketed_probe.py: the q5 join kernel
+    9.05 s -> 1.62 s at sf10 with Exchange 1 -> 0). Content-neutral: all
+    columns, all rows — the DuckDB oracle twins keep reading the raw
+    parquet.
 
     The write repartitions by the bucket key FIRST so every bucket is
     exactly ONE file: Spark only trusts a bucketed table's sortBy
     metadata (outputOrdering) when each selected bucket maps to a single
     file — with the naive write every input task emits its own file per
-    bucket (32 tasks x 32 buckets), the reader sees multi-file buckets,
+    bucket (N tasks x N buckets), the reader sees multi-file buckets,
     discards the sort, and re-sorts both sides inside every SMJ task.
     Measured at sf10: that per-task sort ate most of the exchange win
     (q3 2.9 s multi-file vs 2.0 s single-file; the repartitioned write
@@ -205,15 +216,18 @@ def load_bucketed(
 
     path = os.path.join(sf_dir, f"{name}.parquet")
     # the table name carries (a) a CONTENT fingerprint so in-place fixture
-    # regeneration never reuses stale buckets, and (b) the PID so two
-    # concurrent processes sharing a warehouse dir never rmtree/overwrite
-    # a location the other is mid-read (measured race: a parallel pytest +
-    # gate run threw FAILED_READ_FILE when both claimed the same location;
-    # a live concurrent process can never hold OUR pid)
+    # regeneration never reuses stale buckets, (b) the bucket count so a
+    # session (or conf) with another shuffle partition count writes its
+    # own layout instead of reading mismatched buckets, and (c) the PID so
+    # two concurrent processes sharing a warehouse dir never
+    # rmtree/overwrite a location the other is mid-read (measured race: a
+    # parallel pytest + gate run threw FAILED_READ_FILE when both claimed
+    # the same location; a live concurrent process can never hold OUR pid)
+    n = _bucket_count(spark)
     try:
         tbl = (
             f"bkt_{name}_{key}_{LAYOUT_SALT}{_content_fingerprint(path)}"
-            f"_h{_host_tag()}_p{os.getpid()}"
+            f"_n{n}_h{_host_tag()}_p{os.getpid()}"
         ).lower()
     except OSError:
         # no physical parquet at that path (e.g. a probe harness feeding
@@ -238,8 +252,8 @@ def load_bucketed(
                 # the reader honors sortBy (see docstring); repartition's
                 # hash is the same murmur3-pmod the bucket spec uses, so
                 # task i holds exactly bucket i
-                .repartition(BUCKETS_N, F.col(key))
-                .write.bucketBy(BUCKETS_N, key)
+                .repartition(n, F.col(key))
+                .write.bucketBy(n, key)
                 .sortBy(key)
                 .mode("overwrite")
                 .saveAsTable(tbl)

@@ -2075,6 +2075,18 @@ def _final_shuffle_exchanges(spark, name: str) -> tuple[str, int]:
     return p, len(re.findall(r"\bExchange\b", final))
 
 
+def _assert_session_sized_buckets(spark, p: str) -> None:
+    """Every bucketed scan in ``p`` reads a layout with exactly as many
+    buckets as the session shuffles to (tables.load_bucketed), all of
+    them selected."""
+    import re
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    counts = re.findall(r"SelectedBucketsCount: (\d+) out of (\d+)", p)
+    assert counts, p[:2000]
+    assert set(counts) == {(str(n), str(n))}, counts
+
+
 def test_q3_bucketed_path_zero_exchanges(spark):
     """Round-7 registered path (VERDICT r6 #1): tpch_q3 reads orders and
     lineitem through tables.load_bucketed, so the fact-fact join AND the
@@ -2090,6 +2102,7 @@ def test_q3_bucketed_path_zero_exchanges(spark):
 
     p, n = _final_shuffle_exchanges(spark, "tpch_q3_shipping_priority")
     assert p.count("Bucketed: true") >= 2, p[:2000]
+    _assert_session_sized_buckets(spark, p)
     assert "SortMergeJoin" in p
     assert n == 0, p[:2500]
     final = p.split("== Initial Plan ==")[0]
@@ -2105,6 +2118,7 @@ def test_q5_bucketed_path_two_exchanges(spark):
     sf10 — the zero-exchange property is unchanged."""
     p, n = _final_shuffle_exchanges(spark, "tpch_q5_local_supplier_volume")
     assert p.count("Bucketed: true") >= 2, p[:2000]
+    _assert_session_sized_buckets(spark, p)
     assert "ShuffledHashJoin" in p
     assert n == 2, p[:2500]
 

@@ -8,9 +8,8 @@ from pyspark.sql import functions as F
 from repcheck_data_integration_spark.operators.skew import (
     salted_agg,
     salted_broadcast_join,
-    write_bucketed,
 )
-from repcheck_data_integration_spark.tables import load
+from repcheck_data_integration_spark.tables import load, load_bucketed
 
 from conftest import SF_SMOKE as SF
 
@@ -69,27 +68,24 @@ def test_salted_broadcast_join_matches_plain(spark):
     assert got == plain
 
 
-def test_bucketed_join_eliminates_exchange(spark, tmp_path):
+def test_bucketed_join_eliminates_exchange(spark):
+    """Two tables.load_bucketed layouts on the join key meet in a
+    co-located join: no shuffle on either side, and every lineitem row
+    finds its order."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        orders = load(spark, SF, "orders")
-        lineitem = load(spark, SF, "lineitem").withColumnRenamed(
-            "l_orderkey", "o_orderkey"
-        )
-        write_bucketed(orders, "b_orders", "o_orderkey", n_buckets=4)
-        write_bucketed(lineitem, "b_lineitem", "o_orderkey", n_buckets=4)
-        j = spark.table("b_orders").join(spark.table("b_lineitem"), "o_orderkey")
+        orders = load_bucketed(spark, SF, "orders", "o_orderkey")
+        lineitem = load_bucketed(spark, SF, "lineitem", "l_orderkey")
+        j = orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
         jvm = spark._jvm
         plan = jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
             j._jdf.queryExecution(), "formatted"
         )
         # bucket-aligned scan: the sort-merge join needs no shuffle
         assert "Exchange" not in plan, plan
-        assert j.count() == lineitem.count()
+        assert j.count() == load(spark, SF, "lineitem").count()
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_partitioned_write_prunes(spark, tmp_path):

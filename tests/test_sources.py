@@ -438,44 +438,64 @@ def test_load_bucketed_contract(spark):
     """tables.load_bucketed (round 7): content-neutral vs load(); exactly
     ONE file per bucket (the property that lets the sorted-scan session
     flag skip the SMJ sorts — multi-file buckets would silently void
-    it); falls back to the raw scan when the sf_dir has no physical
-    parquet (probe harnesses patch load() with synthetic frames)."""
+    it), and exactly as many buckets as the session shuffles to, so a
+    session with another partition count writes its own layout; falls
+    back to the raw scan when the sf_dir has no physical parquet (probe
+    harnesses patch load() with synthetic frames)."""
     import os as _os
     from urllib.parse import urlparse
 
-    from repcheck_data_integration_spark.tables import (
-        BUCKETS_N,
-        load,
-        load_bucketed,
-    )
+    import repcheck_data_integration_spark.tables as T
+    from repcheck_data_integration_spark.tables import load, load_bucketed
 
     sf = "/root/testdata/sf0.001"
-    b = load_bucketed(spark, sf, "nation", "n_nationkey")
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+
+    def layout_buckets(n):
+        """{bucket id: files} of this process's n-bucket nation layout."""
+        tdirs = [
+            d
+            for d in _os.listdir(wh)
+            if d.startswith("bkt_nation_n_nationkey_")
+            and d.endswith(f"_n{n}_h{T._host_tag()}_p{_os.getpid()}")
+        ]
+        assert len(tdirs) == 1, tdirs
+        buckets = {}
+        for f in _os.listdir(_os.path.join(wh, tdirs[0])):
+            if f.endswith(".parquet"):
+                bucket_id = f.split("_")[1].split(".")[0]
+                buckets.setdefault(bucket_id, []).append(f)
+        return buckets
+
     raw = load(spark, sf, "nation")
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    b = load_bucketed(spark, sf, "nation", "n_nationkey")
     assert sorted(map(tuple, b.collect())) == sorted(
         map(tuple, raw.collect())
     )
-    # one file per bucket: part-000NN_000NN pairing, no duplicates
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    tdirs = [
-        d
-        for d in _os.listdir(wh)
-        if d.startswith("bkt_nation_n_nationkey_")
-        and d.endswith(f"_p{_os.getpid()}")
-    ]
-    assert len(tdirs) == 1, tdirs
-    buckets = {}
-    for f in _os.listdir(_os.path.join(wh, tdirs[0])):
-        if f.endswith(".parquet"):
-            bucket_id = f.split("_")[1].split(".")[0]
-            buckets.setdefault(bucket_id, []).append(f)
+    # one file per bucket (part-000NN_000NN pairing, no duplicates), and
+    # every one of the session's n buckets written: nation's 25 keys
+    # cover them all
+    buckets = layout_buckets(n)
     assert all(len(v) == 1 for v in buckets.values()), buckets
-    assert len(buckets) <= BUCKETS_N
+    assert len(buckets) == n, sorted(buckets)
+    # another partition count -> a separate table with that many buckets
+    other = n + 2
+    spark.conf.set("spark.sql.shuffle.partitions", str(other))
+    try:
+        b2 = load_bucketed(spark, sf, "nation", "n_nationkey")
+        assert sorted(map(tuple, b2.collect())) == sorted(
+            map(tuple, raw.collect())
+        )
+        buckets2 = layout_buckets(other)
+        assert all(len(v) == 1 for v in buckets2.values()), buckets2
+        assert len(buckets2) == other, sorted(buckets2)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    assert len(layout_buckets(n)) == n
     # missing physical parquet + patched load() (the scale_probe
     # harness shape) -> raw-path fallback through the patch, not a
     # crash on the fingerprint stat
-    import repcheck_data_integration_spark.tables as T
-
     orig = T.load
     try:
         T.load = lambda s, d, n: raw.limit(3)
@@ -498,9 +518,11 @@ def test_bucket_table_gc_scope(tmp_path):
 
     wh = str(tmp_path)
     h = T._host_tag()
-    mine = f"bkt_lineitem_l_orderkey_abc123_h{h}_p{_os.getpid()}"
-    live = f"bkt_orders_o_orderkey_def456_h{h}_p1"  # pid 1 = always alive
-    dead = f"bkt_orders_o_orderkey_def456_h{h}_p999999999"
+    mine = f"bkt_lineitem_l_orderkey_abc123_n4_h{h}_p{_os.getpid()}"
+    live = f"bkt_orders_o_orderkey_def456_n4_h{h}_p1"  # pid 1 = always alive
+    dead = f"bkt_orders_o_orderkey_def456_n4_h{h}_p999999999"
+    # names from before the bucket count joined the key: same pid rule
+    dead_unsized = f"bkt_orders_o_orderkey_def456_h{h}_p999999997"
     # ADVICE r7: another HOST's entries are never reaped, even with a pid
     # that is dead here — /proc liveness is host-local
     other_host = "bkt_orders_o_orderkey_def456_habcdef_p999999998"
@@ -512,8 +534,9 @@ def test_bucket_table_gc_scope(tmp_path):
     legacy_probe = "li_bkt_0123abcd"
     unrelated = "some_other_table"
     probe_own = "li_bkt"  # bucketed_probe's live session tables: no sweep
-    for d in (mine, live, dead, other_host, old_mine, old_live, old_dead,
-              legacy_nopid, legacy_probe, unrelated, probe_own):
+    for d in (mine, live, dead, dead_unsized, other_host, old_mine,
+              old_live, old_dead, legacy_nopid, legacy_probe, unrelated,
+              probe_own):
         _os.makedirs(_os.path.join(wh, d))
     T._GC_DONE = False
     try:
@@ -529,6 +552,7 @@ def test_bucket_table_gc_scope(tmp_path):
     assert unrelated in left
     assert probe_own in left
     assert dead not in left
+    assert dead_unsized not in left
     assert old_dead not in left
     assert legacy_nopid not in left
     assert legacy_probe not in left
@@ -563,6 +587,51 @@ def test_staged_source_follows_regenerated_fixture(spark, write_table, tmp_path)
         staged.append(os.path.dirname(_fixture_dir(sf, "csv")))
         second = sorted(map(tuple, src_csv_scan(spark, sf).collect()))
         assert second == rows(5, "NEW")
+    finally:
+        for d in staged:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def test_regenerated_fixture_reaps_old_staging(spark, write_table, tmp_path):
+    """Staging a regenerated fixture removes what the old content staged
+    and the legacy basename-only key of the same sf dir, and leaves keys
+    under another layout salt (another scale's impersonation) alone."""
+    import shutil
+
+    from repcheck_data_integration_spark.sources.file_sources import (
+        FIXTURE_ROOT,
+        _fixture_dir,
+        src_csv_scan,
+    )
+
+    cols = (
+        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
+        " c_mktsegment string"
+    )
+    sf = str(tmp_path)
+    tag = os.path.basename(sf)
+    legacy = os.path.join(FIXTURE_ROOT, tag)
+    other_salt = os.path.join(FIXTURE_ROOT, f"{tag}_x100123456789")
+    staged = [legacy, other_salt]
+    try:
+        write_table("customer", [(1, "Customer#1", 1, 1.5, "OLD")], cols)
+        old = os.path.dirname(_fixture_dir(sf, "csv"))
+        staged.append(old)
+        assert src_csv_scan(spark, sf).count() == 1
+        assert os.path.isdir(old)
+        for d in (legacy, other_salt):
+            os.makedirs(d, exist_ok=True)
+        write_table("customer", [(2, "Customer#2", 2, 3.0, "NEW")], cols)
+        new = os.path.dirname(_fixture_dir(sf, "csv"))
+        staged.append(new)
+        assert new != old
+        assert [r.c_mktsegment for r in src_csv_scan(spark, sf).collect()] == [
+            "NEW"
+        ]
+        assert not os.path.exists(old)
+        assert not os.path.exists(legacy)
+        assert os.path.isdir(other_salt)
+        assert os.path.isdir(new)
     finally:
         for d in staged:
             shutil.rmtree(d, ignore_errors=True)

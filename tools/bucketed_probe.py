@@ -6,6 +6,9 @@ tool materializes both tables bucketed into spark-warehouse once, then
 times the join kernel both ways so the claim is measured, not asserted.
 
 Usage: python tools/bucketed_probe.py [sf_dir] [n_buckets]
+
+``n_buckets`` defaults to the session's shuffle partition count, the
+count tables.load_bucketed writes.
 """
 
 from __future__ import annotations
@@ -19,13 +22,16 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from bench import drain, time_drains  # noqa: E402
 from repcheck_data_integration_spark.session import get_spark  # noqa: E402
-from repcheck_data_integration_spark.tables import load  # noqa: E402
+from repcheck_data_integration_spark.tables import (  # noqa: E402
+    _bucket_count,
+    load,
+)
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/repcheck_sf10"
-    n_buckets = int(sys.argv[2]) if len(sys.argv) > 2 else 32
     spark = get_spark("bucketed-probe")
+    n_buckets = int(sys.argv[2]) if len(sys.argv) > 2 else _bucket_count(spark)
 
     def li():
         return load(spark, sf_dir, "lineitem").select(
